@@ -9,7 +9,11 @@ Physical design (SURVEY.md §2.5/§7.1 M4; reference analogue:
   (docsim.py:480-503) as a Spark scan.
 - **Packed runs**: within a shard, one row per term: sorted doc_ids
   delta+varint packed + float32 weights + block-max skip metadata
-  (``packing.py``). Parquet (partitioned by shard_id) stands in for the
+  (``packing.py``). One pack task per shard sorts its postings by (term,
+  doc) and packs them an Arrow batch at a time (``packing.pack_runs``, one
+  set of numpy calls per batch, not one Python call per run). Every packed
+  writer — build and append, plain and Iceberg — runs that one plan
+  (``_pack_write``). Parquet (partitioned by shard_id) stands in for the
   Iceberg shard tables — same layout, same pruning, no extra runtime dep;
   min/max stats on ``term_id`` give run-level pruning inside each shard file.
 - **Term-bucketed plain postings** (``write_postings_bucketed``): the
@@ -20,7 +24,10 @@ Physical design (SURVEY.md §2.5/§7.1 M4; reference analogue:
   part of the layout, queries just aggregate across salts).
 - **Checkpoint manifest**: the build commits shard-groups one at a time and
   records lineage + metrics per group in ``manifest.json``; a re-run skips
-  committed groups (resume-from-checkpoint).
+  committed groups (resume-from-checkpoint). One aggregate up front finds
+  the groups that hold postings; an empty group (any corpus with fewer
+  shards than groups has some) is committed with zero metrics, no data
+  directory and no Spark job.
 """
 
 from __future__ import annotations
@@ -30,7 +37,6 @@ import os
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,73 +49,151 @@ PACKED_SCHEMA = (
 )
 
 
-def _pack_partition_fn(docs_acc=None):
-    """Build the mapInPandas function: Arrow batches of (shard_id, term_id,
+def _pack_partition_fn(docs_acc, docs_per_shard: int):
+    """Build the mapInArrow function: Arrow batches of (shard_id, term_id,
     doc_id, weight), sorted by (shard_id, term_id, doc_id) within the
-    partition → packed run rows. Handles run spans across batch boundaries
-    with a carry buffer. ``docs_acc`` (optional LongAccumulator) receives
-    the partition's distinct-doc count per shard — the build metric rides
-    the write job instead of a second scan of the raw postings."""
+    partition → packed run rows, one :func:`packing.pack_runs` call per
+    batch. Only the batch's last run can continue into the next batch, so
+    it is the one carried; a run spanning many batches is kept as a list of
+    pieces and joined once, when it completes. ``docs_acc`` (a
+    LongAccumulator) receives the partition's distinct-doc count per shard
+    (a bitmap over the shard's doc-id range) — the build metric rides the
+    write job instead of a second scan of the raw postings."""
+    import pyarrow as pa
 
-    def gen(pdf_iter):
-        carry = None  # (shard_id, term_id, doc_ids list, weights list)
-        shard_docs: dict[int, set] = {}
+    names = [f.split()[0] for f in PACKED_SCHEMA.split(",")]
 
-        def flush(shard_id, term_id, docs, weights):
-            run = packing.pack_run(np.asarray(docs), np.asarray(weights))
-            return {
-                "shard_id": shard_id, "term_id": term_id, "n": run["n"],
-                "doc_blob": run["doc_blob"], "weight_blob": run["weight_blob"],
-                "block_max": run["block_max"],
-                "block_last_doc": run["block_last_doc"],
-                "block_first_doc": run["block_first_doc"],
-                "block_offset": run["block_offset"],
-            }
+    def emit(sids, tids, docs, ws, starts):
+        cols = packing.pack_runs(docs, ws, starts)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(sids, pa.int64()), pa.array(tids, pa.int64()),
+             pa.array(cols["n"], pa.int64())]
+            + [cols[c] for c in names[3:]], names=names)
 
-        for pdf in pdf_iter:
-            if pdf.empty:
+    def gen(batches):
+        carry_key = None   # (shard_id, term_id) of the unfinished run
+        carry_docs, carry_ws = [], []
+        # distinct docs of the current shard: rows arrive sorted by shard,
+        # so a new shard id means the previous shard is complete. ``div``
+        # truncates toward zero, so doc - shard * docs_per_shard lies in
+        # (-docs_per_shard, docs_per_shard).
+        cur_sid, seen = None, None
+
+        def count_docs(sids, docs):
+            nonlocal cur_sid, seen
+            cuts = np.flatnonzero(sids[1:] != sids[:-1]) + 1
+            for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, sids.size]):
+                sid = int(sids[lo])
+                if sid != cur_sid:
+                    if seen is not None:
+                        docs_acc.add(int(seen.sum()))
+                    cur_sid = sid
+                    seen = np.zeros(2 * docs_per_shard, dtype=bool)
+                seen[docs[lo:hi] - (sid - 1) * docs_per_shard] = True
+
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            out = []
-            keys = pdf[["shard_id", "term_id"]].to_numpy()
-            docs = pdf["doc_id"].to_numpy()
-            ws = pdf["weight"].to_numpy()
-            if docs_acc is not None:
-                for sid_any in np.unique(keys[:, 0]):
-                    mask = keys[:, 0] == sid_any
-                    shard_docs.setdefault(int(sid_any), set()).update(
-                        docs[mask].tolist()
-                    )
-            # boundaries where (shard, term) changes
-            change = np.nonzero(
-                (keys[1:, 0] != keys[:-1, 0]) | (keys[1:, 1] != keys[:-1, 1])
-            )[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(pdf)]))
-            for s, e in zip(starts, ends):
-                sid, tid = int(keys[s, 0]), int(keys[s, 1])
-                if carry is not None and carry[0] == sid and carry[1] == tid:
-                    carry = (sid, tid,
-                             np.concatenate((carry[2], docs[s:e])),
-                             np.concatenate((carry[3], ws[s:e])))
-                else:
-                    if carry is not None:
-                        out.append(flush(*carry))
-                    carry = (sid, tid, docs[s:e].copy(), ws[s:e].copy())
-            # all groups except the (possibly continuing) last are final, but
-            # we cannot know the last ends here — keep it in carry
-            if out:
-                yield pd.DataFrame(out)
-        if carry is not None:
-            yield pd.DataFrame([flush(*carry)])
-        if docs_acc is not None:
-            for s in shard_docs.values():
-                docs_acc.add(len(s))
+            sids = rb.column("shard_id").to_numpy()
+            tids = rb.column("term_id").to_numpy()
+            docs = rb.column("doc_id").to_numpy()
+            ws = rb.column("weight").to_numpy()
+            count_docs(sids, docs)
+            starts = np.r_[0, np.flatnonzero(
+                (sids[1:] != sids[:-1]) | (tids[1:] != tids[:-1])) + 1]
+            cut = int(starts[-1])  # the last run may continue next batch
+            done = starts[:-1]
+            keys_s, keys_t = sids[done], tids[done]
+            if carry_key is not None:
+                if carry_key == (sids[0], tids[0]):
+                    if cut == 0:  # the whole batch continues the carry
+                        carry_docs.append(docs)
+                        carry_ws.append(ws)
+                        continue
+                    # the batch's first run completes the carried one
+                    done, keys_s, keys_t = done[1:], keys_s[1:], keys_t[1:]
+                lead = sum(d.size for d in carry_docs)
+                done = np.r_[0, done + lead]
+                keys_s = np.r_[carry_key[0], keys_s]
+                keys_t = np.r_[carry_key[1], keys_t]
+            if done.size:
+                yield emit(keys_s, keys_t,
+                           np.concatenate(carry_docs + [docs[:cut]]),
+                           np.concatenate(carry_ws + [ws[:cut]]), done)
+            carry_key = (sids[cut], tids[cut])
+            carry_docs, carry_ws = [docs[cut:]], [ws[cut:]]
+        if carry_key is not None:
+            yield emit([carry_key[0]], [carry_key[1]],
+                       np.concatenate(carry_docs), np.concatenate(carry_ws),
+                       np.zeros(1, dtype=np.int64))
+        if seen is not None:
+            docs_acc.add(int(seen.sum()))
 
     return gen
 
 
-# backward-compatible name (no accumulator)
-_pack_partition = _pack_partition_fn()
+def _with_shard(weighted: DataFrame, docs_per_shard: int) -> DataFrame:
+    return weighted.withColumn(
+        "shard_id", F.expr(f"doc_id div {int(docs_per_shard)}"))
+
+
+def _pack_write(base: DataFrame, docs_per_shard: int, write) -> tuple:
+    """The one pack plan every packed writer runs: ``base`` (doc_id,
+    term_id, weight, shard_id) → every shard packed whole by one task
+    (repartition by shard, sort by (shard, term, doc), batch-pack) →
+    ``write(packed)``, which returns ``(dir_written, handle)``. Metrics come
+    from the PACKED output (column-pruned: term_id + n only), not a second
+    shuffle of the raw postings; docs ride the write job via the
+    accumulator (shards are doc-disjoint, so per-shard counts sum exactly).
+    Returns (metrics, handle)."""
+    spark = base.sparkSession
+    docs_acc = spark.sparkContext.accumulator(0)
+    packed = (
+        base.repartition("shard_id")
+        .sortWithinPartitions("shard_id", "term_id", "doc_id")
+        .mapInArrow(_pack_partition_fn(docs_acc, docs_per_shard),
+                    schema=PACKED_SCHEMA)
+    )
+    written, handle = write(packed)
+    agg = (
+        spark.read.schema(PACKED_SCHEMA).parquet(written)
+        .select("term_id", "n")
+        .agg(F.countDistinct("term_id").alias("terms"),
+             F.sum("n").alias("postings"))
+        .collect()[0]
+    )
+    return {"docs": docs_acc.value, "terms": int(agg["terms"]),
+            "postings": int(agg["postings"] or 0)}, handle
+
+
+def _parquet_writer(path: str):
+    def write(packed: DataFrame) -> tuple:
+        packed.write.mode("overwrite").partitionBy("shard_id").parquet(path)
+        return path, None
+
+    return write
+
+
+def _staged_writer(table):
+    """Iceberg-semantics write: stage the files (committed by the caller
+    together with the group's metrics)."""
+    def write(packed: DataFrame) -> tuple:
+        write_uuid, staging, files = table.stage_write(packed)
+        return staging, (write_uuid, files)
+
+    return write
+
+
+def _nonempty_groups(base: DataFrame, num_groups: int) -> set[int]:
+    """Shard groups that hold any postings — one aggregate, so empty
+    groups (every corpus with fewer shards than groups has some) launch no
+    pack job at all."""
+    rows = (base.select(F.pmod(F.col("shard_id"), F.lit(num_groups))
+                        .alias("g")).distinct().collect())
+    return {int(r["g"]) for r in rows}
+
+
+_EMPTY_GROUP_METRICS = {"docs": 0, "terms": 0, "postings": 0}
 
 
 def write_packed_shards(weighted: DataFrame, out_dir: str,
@@ -120,14 +204,19 @@ def write_packed_shards(weighted: DataFrame, out_dir: str,
     ``out_dir`` with a per-group checkpoint manifest.
 
     Shards are built in ``num_groups`` commit units (group = shard_id %
-    num_groups). Each unit is one Spark job: filter → repartition by shard →
-    sort within partitions by (term, doc) → pack (mapInPandas) → append
-    parquet partitioned by shard_id. A killed build resumes by skipping
-    committed groups recorded in ``manifest.json`` (lineage + metrics).
+    num_groups). One aggregate up front finds the groups that hold
+    postings; each of those is one pack plan: filter → repartition by shard
+    → sort within partitions by (term, doc) → batch-pack (mapInArrow) →
+    write parquet partitioned by shard_id. An empty group launches no Spark
+    job: it is recorded as committed with zero docs/terms/postings and has
+    no data directory. A killed build resumes by skipping committed groups
+    recorded in ``manifest.json`` (lineage + metrics).
 
     docs_per_shard default mirrors the reference shardsize 32768
     (docsim.py:305).
     """
+    import shutil
+
     os.makedirs(out_dir, exist_ok=True)
     manifest_path = os.path.join(out_dir, "manifest.json")
     manifest = {"params": {"docs_per_shard": docs_per_shard,
@@ -139,48 +228,28 @@ def write_packed_shards(weighted: DataFrame, out_dir: str,
         if manifest["params"]["docs_per_shard"] != docs_per_shard:
             raise ValueError("resume with different docs_per_shard")
 
-    base = weighted.withColumn(
-        "shard_id", F.expr(f"doc_id div {int(docs_per_shard)}")
-    )
+    base = _with_shard(weighted, docs_per_shard)
     data_dir = os.path.join(out_dir, "data")
-    for g in range(num_groups):
-        key = str(g)
-        if manifest["groups"].get(key, {}).get("committed"):
-            continue
+    todo = [g for g in range(num_groups)
+            if not manifest["groups"].get(str(g), {}).get("committed")]
+    nonempty = _nonempty_groups(base, num_groups) if todo else set()
+    for g in todo:
         t0 = time.perf_counter()
         # exactly-once resume: each group owns its subdirectory; an
         # uncommitted (crashed mid-write) group is wiped before rewriting,
         # so re-running after any failure never duplicates rows.
         group_dir = os.path.join(data_dir, f"group={g}")
         if os.path.exists(group_dir):
-            import shutil
-
             shutil.rmtree(group_dir)
-        part = base.filter(F.pmod(F.col("shard_id"), F.lit(num_groups)) == g)
-        spark = weighted.sparkSession
-        docs_acc = spark.sparkContext.accumulator(0)
-        packed = (
-            part.repartition("shard_id")
-            .sortWithinPartitions("shard_id", "term_id", "doc_id")
-            .mapInPandas(_pack_partition_fn(docs_acc), schema=PACKED_SCHEMA)
-        )
-        (packed.write.mode("overwrite").partitionBy("shard_id")
-         .parquet(group_dir))
-        # metrics from the PACKED output (column-pruned: term_id + n only),
-        # not a second shuffle of the raw postings; docs ride the write job
-        # via the accumulator (shards are doc-disjoint, so per-shard counts
-        # sum exactly).
-        agg = (
-            spark.read.schema(PACKED_SCHEMA).parquet(group_dir)
-            .select("term_id", "n")
-            .agg(F.countDistinct("term_id").alias("terms"),
-                 F.sum("n").alias("postings"))
-            .collect()[0]
-        )
-        manifest["groups"][key] = {
-            "committed": True,
-            "docs": docs_acc.value, "terms": int(agg["terms"]),
-            "postings": int(agg["postings"] or 0),
+        if g in nonempty:
+            part = base.filter(
+                F.pmod(F.col("shard_id"), F.lit(num_groups)) == g)
+            metrics, _ = _pack_write(part, docs_per_shard,
+                                     _parquet_writer(group_dir))
+        else:
+            metrics = _EMPTY_GROUP_METRICS
+        manifest["groups"][str(g)] = {
+            "committed": True, **metrics,
             "wall_sec": round(time.perf_counter() - t0, 2),
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
@@ -287,23 +356,10 @@ def append_packed_shards(weighted_new: DataFrame, out_dir: str,
     if os.path.exists(group_dir):
         _shutil.rmtree(group_dir)
     t0 = time.perf_counter()
-    spark = weighted_new.sparkSession
-    base = weighted_new.withColumn(
-        "shard_id", F.expr(f"doc_id div {dps}"))
-    docs_acc = spark.sparkContext.accumulator(0)
-    packed = (base.repartition("shard_id")
-              .sortWithinPartitions("shard_id", "term_id", "doc_id")
-              .mapInPandas(_pack_partition_fn(docs_acc),
-                           schema=PACKED_SCHEMA))
-    packed.write.mode("overwrite").partitionBy("shard_id").parquet(group_dir)
-    agg = (spark.read.schema(PACKED_SCHEMA).parquet(group_dir)
-           .select("term_id", "n")
-           .agg(F.countDistinct("term_id").alias("terms"),
-                F.sum("n").alias("postings")).collect()[0])
+    metrics, _ = _pack_write(_with_shard(weighted_new, dps), dps,
+                             _parquet_writer(group_dir))
     manifest["groups"][str(g)] = {
-        "committed": True, "append": True,
-        "docs": docs_acc.value, "terms": int(agg["terms"]),
-        "postings": int(agg["postings"] or 0),
+        "committed": True, "append": True, **metrics,
         "wall_sec": round(time.perf_counter() - t0, 2),
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
@@ -448,7 +504,6 @@ def write_packed_shards_iceberg(weighted: DataFrame, table_loc: str,
     files (no wipe-before-rewrite needed — commits are atomic)."""
     from gensim_spark.index.icetable import IceTable, PartitionField
 
-    spark = weighted.sparkSession
     try:
         table = IceTable.load(table_loc)
         props = table.meta["properties"]
@@ -469,35 +524,24 @@ def write_packed_shards_iceberg(weighted: DataFrame, table_loc: str,
         int(s.summary["group"]) for s in table.snapshots
         if s.operation == "append" and "group" in s.summary
     }
-    base = weighted.withColumn(
-        "shard_id", F.expr(f"doc_id div {int(docs_per_shard)}")
-    )
-    for g in range(num_groups):
-        if g in committed:
-            continue
+    base = _with_shard(weighted, docs_per_shard)
+    todo = [g for g in range(num_groups) if g not in committed]
+    nonempty = _nonempty_groups(base, num_groups) if todo else set()
+    for g in todo:
         t0 = time.perf_counter()
-        part = base.filter(F.pmod(F.col("shard_id"), F.lit(num_groups)) == g)
-        docs_acc = spark.sparkContext.accumulator(0)
-        packed = (
-            part.repartition("shard_id")
-            .sortWithinPartitions("shard_id", "term_id", "doc_id")
-            .mapInPandas(_pack_partition_fn(docs_acc), schema=PACKED_SCHEMA)
-        )
-        write_uuid, staging, files = table.stage_write(packed)
-        # metrics from the staged packed files (column-pruned scan), then the
-        # snapshot publishes data + lineage metrics atomically together
-        agg = (
-            spark.read.schema(PACKED_SCHEMA).parquet(staging)
-            .select("term_id", "n")
-            .agg(F.countDistinct("term_id").alias("terms"),
-                 F.sum("n").alias("postings"))
-            .collect()[0]
-        )
+        if g in nonempty:
+            part = base.filter(
+                F.pmod(F.col("shard_id"), F.lit(num_groups)) == g)
+            metrics, (write_uuid, files) = _pack_write(
+                part, docs_per_shard, _staged_writer(table))
+        else:
+            # an empty group commits a snapshot with no files, so resume
+            # and appenders see every group of the build as committed
+            metrics, write_uuid, files = (_EMPTY_GROUP_METRICS,
+                                          f"empty-{g}", [])
+        # the snapshot publishes data + lineage metrics atomically together
         table.commit_staged(files, write_uuid, summary={
-            "group": g,
-            "docs": docs_acc.value,
-            "terms": int(agg["terms"]),
-            "postings": int(agg["postings"] or 0),
+            "group": g, **metrics,
             "wall_sec": round(time.perf_counter() - t0, 2),
         })
     return table
@@ -534,23 +578,11 @@ def append_packed_shards_iceberg(weighted_new: DataFrame,
             "Use the streaming incremental store + compact() for "
             "interleaved ids.")
     t0 = time.perf_counter()
-    base = weighted_new.withColumn(
-        "shard_id", F.expr(f"doc_id div {int(docs_per_shard)}"))
-    docs_acc = spark.sparkContext.accumulator(0)
-    packed = (base.repartition("shard_id")
-              .sortWithinPartitions("shard_id", "term_id", "doc_id")
-              .mapInPandas(_pack_partition_fn(docs_acc),
-                           schema=PACKED_SCHEMA))
-    write_uuid, staging, files = table.stage_write(packed)
-    agg = (spark.read.schema(PACKED_SCHEMA).parquet(staging)
-           .select("term_id", "n")
-           .agg(F.countDistinct("term_id").alias("terms"),
-                F.sum("n").alias("postings")).collect()[0])
+    metrics, (write_uuid, files) = _pack_write(
+        _with_shard(weighted_new, docs_per_shard), docs_per_shard,
+        _staged_writer(table))
     table.commit_staged(files, write_uuid, summary={
-        "append_batch": len(table.snapshots),
-        "docs": docs_acc.value,
-        "terms": int(agg["terms"]),
-        "postings": int(agg["postings"] or 0),
+        "append_batch": len(table.snapshots), **metrics,
         "wall_sec": round(time.perf_counter() - t0, 2),
     })
     return table

@@ -7,13 +7,16 @@ per term IS a posting run) — re-laid-out for web scale: delta+varint doc-id
 blobs compress zipfian gaps to ~1-2 bytes/posting, and the per-block maxima
 are the skip structure block-max WAND needs (Ding & Suel, SIGIR'11).
 
-Pure-numpy encode/decode — runs inside mapInPandas during shard builds and
-query traversal; no per-row Python.
+Pure-numpy encode/decode — runs inside Arrow-batch UDFs during shard builds
+and query traversal. The build path calls :func:`pack_runs` once per Arrow
+batch: every run in the batch is encoded by the same handful of numpy calls,
+so there is no per-run (let alone per-posting) Python on the build path.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128
 
@@ -79,52 +82,86 @@ def decode_varint_deltas(blob: bytes) -> np.ndarray:
     return np.cumsum(vals.astype(np.int64))
 
 
-def pack_run(doc_ids: np.ndarray, weights: np.ndarray,
-             block_size: int = BLOCK_SIZE):
-    """One term's postings (sorted by doc_id) → packed run dict:
-    doc_blob, weight_blob (float32 LE), n, and per-block skip metadata:
-    block_max (float32[]), block_last_doc / block_first_doc (int64[]),
-    block_offset (int64[] — byte offset of each block's first varint in
-    doc_blob, enabling BLOCK-LAZY decode: a block decodes independently as
-    blast[b-1] + cumsum(deltas), so WAND traversal pays decode cost only
-    for blocks it actually evaluates)."""
+def _binary_column(data: np.ndarray, offsets: np.ndarray) -> pa.Array:
+    """One contiguous byte buffer + (n+1) byte offsets → Arrow binary array
+    (no per-value copies)."""
+    if int(offsets[-1]) > np.iinfo(np.int32).max:
+        raise OverflowError("packed column exceeds 2 GiB in one batch")
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)),
+         pa.py_buffer(np.ascontiguousarray(data).view(np.uint8))])
+
+
+def pack_runs(doc_ids: np.ndarray, weights: np.ndarray,
+              run_starts: np.ndarray,
+              block_size: int = BLOCK_SIZE) -> dict:
+    """Pack every run of a batch at once. Run ``i`` is
+    ``doc_ids[run_starts[i]:run_starts[i+1]]`` (the last ends at the array's
+    end; ``run_starts[0] == 0``), each sorted by doc_id.
+
+    Returns ``n`` (int64 per run) plus one Arrow binary array per packed
+    column — doc_blob, weight_blob (float32 LE), and the per-block skip
+    metadata block_max (float32[]), block_last_doc / block_first_doc
+    (int64[]), block_offset (int64[] — byte offset of each block's first
+    varint in doc_blob, enabling BLOCK-LAZY decode: a block decodes
+    independently as blast[b-1] + cumsum(deltas), so WAND traversal pays
+    decode cost only for blocks it actually evaluates).
+
+    One varint encode covers the whole batch (each run's first delta is its
+    absolute doc id, so run blobs are contiguous slices of it); block maxima
+    are one ``maximum.reduceat`` over all blocks of all runs."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     weights = np.asarray(weights, dtype=np.float32)
-    n = doc_ids.size
-    nblocks = (n + block_size - 1) // block_size
-    if n:
-        # vectorized per-block stats (a head term has ~n/128 blocks — a
-        # Python loop here was the one per-block interpreter pass in the
-        # build hot path)
-        starts = np.arange(nblocks, dtype=np.int64) * block_size
-        ends = np.minimum(starts + block_size, n) - 1
-        bmax = np.maximum.reduceat(np.abs(weights), starts)
-        blast = doc_ids[ends]
-        bfirst = doc_ids[starts]
+    run_starts = np.asarray(run_starts, dtype=np.int64)
+    total = doc_ids.size
+    bounds = np.append(run_starts, total)
+    lengths = np.diff(bounds)
+    firsts = run_starts[lengths > 0]
+
+    deltas = np.empty_like(doc_ids)
+    if total:
+        np.subtract(doc_ids[1:], doc_ids[:-1], out=deltas[1:])
+        deltas[firsts] = doc_ids[firsts]  # includes position 0
+        varints, nbytes = _varint_encode(deltas.astype(np.uint64))
+    else:
+        varints, nbytes = np.empty(0, np.uint8), np.empty(0, np.int64)
+    cum = np.concatenate(([0], np.cumsum(nbytes))).astype(np.int64)
+
+    # blocks of all runs tile [0, total) in order: block j of run i starts
+    # at run_starts[i] + j * block_size
+    nblocks = (lengths + block_size - 1) // block_size
+    block_bounds = np.concatenate(([0], np.cumsum(nblocks)))
+    block_run = np.repeat(np.arange(lengths.size), nblocks)
+    bstart = (run_starts[block_run]
+              + (np.arange(block_bounds[-1]) - block_bounds[block_run])
+              * block_size)
+    bend = np.minimum(bstart + block_size, bounds[block_run + 1]) - 1
+    if bstart.size:
+        bmax = np.maximum.reduceat(np.abs(weights), bstart)
     else:
         bmax = np.empty(0, dtype=np.float32)
-        blast = np.empty(0, dtype=np.int64)
-        bfirst = np.empty(0, dtype=np.int64)
-    if n:
-        deltas = np.empty_like(doc_ids)
-        deltas[0] = doc_ids[0]
-        np.subtract(doc_ids[1:], doc_ids[:-1], out=deltas[1:])
-        out, nbytes = _varint_encode(deltas.astype(np.uint64))
-        cum = np.concatenate(([0], np.cumsum(nbytes))).astype(np.int64)
-        boffs = cum[np.arange(nblocks) * block_size]
-        doc_blob = out.tobytes()
-    else:
-        boffs = np.empty(0, dtype=np.int64)
-        doc_blob = b""
+    boffs = cum[bstart] - cum[run_starts[block_run]]
     return {
-        "n": int(n),
-        "doc_blob": doc_blob,
-        "weight_blob": weights.tobytes(),
-        "block_max": bmax.tobytes(),
-        "block_last_doc": blast.tobytes(),
-        "block_first_doc": bfirst.tobytes(),
-        "block_offset": boffs.tobytes(),
+        "n": lengths,
+        "doc_blob": _binary_column(varints, cum[bounds]),
+        "weight_blob": _binary_column(weights, 4 * bounds),
+        "block_max": _binary_column(bmax, 4 * block_bounds),
+        "block_last_doc": _binary_column(doc_ids[bend], 8 * block_bounds),
+        "block_first_doc": _binary_column(doc_ids[bstart], 8 * block_bounds),
+        "block_offset": _binary_column(boffs, 8 * block_bounds),
     }
+
+
+def pack_run(doc_ids: np.ndarray, weights: np.ndarray,
+             block_size: int = BLOCK_SIZE) -> dict:
+    """One term's postings (sorted by doc_id) → packed run dict of bytes
+    (see :func:`pack_runs` for the columns)."""
+    cols = pack_runs(doc_ids, weights, np.zeros(1, dtype=np.int64),
+                     block_size)
+    out = {k: v[0].as_py() for k, v in cols.items() if k != "n"}
+    out["n"] = int(cols["n"][0])
+    return out
 
 
 def decode_block(doc_blob: bytes, block_offsets: np.ndarray,

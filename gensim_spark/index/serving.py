@@ -421,6 +421,8 @@ class PositionalIndexServer:
                 v = tbl.column("dl").to_numpy().astype(np.int64)
                 order = np.argsort(d, kind="stable")
                 self._dl_docs, self._dl_vals = d[order], v[order]
+            if self._dl_docs.size == 0:
+                return {}
             q = np.asarray(sorted(doc_ids), dtype=np.int64)
             pos = np.searchsorted(self._dl_docs, q)
             ok = (pos < self._dl_docs.size) & (

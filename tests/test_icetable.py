@@ -254,6 +254,38 @@ def test_packed_shards_iceberg_build_resume_and_metrics(spark, tmp_path):
                one.select("shard_id").distinct().collect()) == {0}
 
 
+def test_packed_shards_iceberg_empty_groups(spark, tmp_path):
+    """Groups with no shards commit a zero-metric snapshot with no files:
+    resume adds nothing and an append still lands past the build."""
+    from gensim_spark.index import layout
+    from gensim_spark.plans import pipeline as P
+    from gensim_spark.sources.synth import generate_pages
+
+    pages = generate_pages(spark, 200, tokens_per_doc=20, partitions=2)
+    idx = P.build(P.tokenize(pages, ascii_fast_path=True), num_docs=200)
+    loc = str(tmp_path / "ice_empty")
+    t = layout.write_packed_shards_iceberg(idx.weighted, loc,
+                                           docs_per_shard=128, num_groups=4)
+    by_group = {int(s.summary["group"]): s for s in t.snapshots
+                if "group" in s.summary}
+    assert sorted(by_group) == [0, 1, 2, 3]
+    for g in (2, 3):  # shards 0 and 1 only
+        s = by_group[g].summary
+        assert (s["docs"], s["terms"], s["postings"],
+                s["added-data-files"]) == ("0", "0", "0", "0")
+    assert sum(int(s.summary["docs"]) for s in by_group.values()) == 200
+    v = t.version
+    assert layout.write_packed_shards_iceberg(
+        idx.weighted, loc, docs_per_shard=128, num_groups=4).version == v
+    new = (idx.weighted.filter(F.col("doc_id") < 10)
+           .withColumn("doc_id", F.col("doc_id") + 256))
+    t2 = layout.append_packed_shards_iceberg(new, loc)
+    assert int(t2.snapshots[-1].summary["docs"]) == 10
+    packed = layout.read_packed_shards_iceberg(spark, loc)
+    assert packed.groupBy().agg(F.sum("n")).collect()[0][0] == \
+        idx.weighted.count() + new.count()
+
+
 def test_postings_bucketed_iceberg_prunes_and_matches(spark, tmp_path):
     from gensim_spark.index import layout
     from gensim_spark.index.icetable import IceTable

@@ -334,3 +334,110 @@ def test_wand_topk_exclusion_distributed(spark, synth_index, tmp_path):
         [(r["rank"], r["doc_id"]) for r in want]
     for g, w in zip(got, want):
         assert g["score"] == pytest.approx(w["score"], rel=1e-9)
+
+
+def _packed_rows(out):
+    import pyarrow.dataset as pads
+
+    tbl = pads.dataset(os.path.join(out, "data"), format="parquet",
+                       partitioning="hive").to_table()
+    rows = tbl.drop_columns(["group"]).to_pylist()
+    return sorted(rows, key=lambda r: (r["shard_id"], r["term_id"]))
+
+
+def test_packed_rows_independent_of_arrow_batch_size(spark, synth_index,
+                                                     tmp_path):
+    """Runs that span many Arrow batches (5 records per batch) pack to the
+    same rows as under the session default, and every row equals the
+    per-run reference packer over that (shard, term)'s postings."""
+    from gensim_spark.index import layout
+    from tests.test_packing import COLUMNS, reference_pack_run
+
+    idx, _ = synth_index
+    weighted = idx.weighted.filter(F.col("doc_id") < 300)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    small, big = str(tmp_path / "small"), str(tmp_path / "big")
+    try:
+        spark.conf.set(key, "5")
+        layout.write_packed_shards(weighted, small, docs_per_shard=128,
+                                   num_groups=2)
+    finally:
+        spark.conf.set(key, default)
+    layout.write_packed_shards(weighted, big, docs_per_shard=128,
+                               num_groups=2)
+    rows = _packed_rows(big)
+    assert _packed_rows(small) == rows
+
+    postings = {}
+    for r in weighted.orderBy("doc_id").collect():
+        postings.setdefault((r["doc_id"] // 128, r["term_id"]), []).append(
+            (r["doc_id"], r["weight"]))
+    assert len(rows) == len(postings)
+    assert max(r["n"] for r in rows) > 5 * 20  # some runs span 20+ batches
+    for r in rows:
+        docs, ws = zip(*postings[(r["shard_id"], r["term_id"])])
+        want = reference_pack_run(np.asarray(docs), np.asarray(ws))
+        assert r["n"] == want["n"]
+        for col in COLUMNS:
+            assert r[col] == want[col], (r["shard_id"], r["term_id"], col)
+
+
+def test_empty_shard_groups_skip_spark(spark, synth_index, tmp_path):
+    """Eight groups, every doc in shard 0: the seven empty groups commit
+    with zero metrics, no data directory and no Spark job; resume and a
+    later append still see a complete build."""
+    from gensim_spark.index import layout
+
+    idx, _ = synth_index
+    weighted = idx.weighted.filter(F.col("doc_id") < 400)
+    n_postings = weighted.count()
+    out = str(tmp_path / "one_shard")
+    sc = spark.sparkContext
+    sc.setJobGroup("pack-empty-groups", "write_packed_shards")
+    try:
+        manifest = layout.write_packed_shards(weighted, out,
+                                              docs_per_shard=4096,
+                                              num_groups=8)
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("pack-empty-groups")
+    assert 0 < len(jobs) <= 12
+    groups = manifest["groups"]
+    assert sorted(groups, key=int) == [str(g) for g in range(8)]
+    assert all(v["committed"] for v in groups.values())
+    assert groups["0"]["docs"] == 400
+    assert groups["0"]["postings"] == n_postings
+    for g in range(1, 8):
+        assert {k: groups[str(g)][k] for k in ("docs", "terms",
+                                               "postings")} == \
+            {"docs": 0, "terms": 0, "postings": 0}
+        assert not os.path.exists(os.path.join(out, "data", f"group={g}"))
+
+    # un-commit the data group and one empty group: resume redoes those two
+    # and leaves every other record untouched
+    mpath = os.path.join(out, "manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    for g, v in m["groups"].items():
+        v["untouched"] = True
+    m["groups"]["0"]["committed"] = False
+    m["groups"]["5"]["committed"] = False
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    m2 = layout.write_packed_shards(weighted, out, docs_per_shard=4096,
+                                    num_groups=8)
+    redone = {g for g, v in m2["groups"].items() if not v.get("untouched")}
+    assert redone == {"0", "5"}
+    assert all(v["committed"] for v in m2["groups"].values())
+    packed = layout.read_packed_shards(spark, out)
+    assert packed.groupBy().agg(F.sum("n")).collect()[0][0] == n_postings
+
+    new = (weighted.filter(F.col("doc_id") < 50)
+           .withColumn("doc_id", F.col("doc_id") + 4096))
+    m3 = layout.append_packed_shards(new, out)
+    assert m3["groups"]["8"]["append"] and m3["groups"]["8"]["docs"] == 50
+    assert m3["groups"]["8"]["postings"] == new.count()
+    packed = layout.read_packed_shards(spark, out)
+    assert packed.groupBy().agg(F.sum("n")).collect()[0][0] == \
+        n_postings + new.count()

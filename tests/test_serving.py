@@ -420,3 +420,28 @@ def test_span_served_fuzz_vs_distributed(spark, tmp_path):
             [(w["doc_id"], w["phrase_tf"], w["rank"]) for w in want_mp]
         or_hits += bool(want)
     assert or_hits >= 2
+
+
+@pytest.mark.parametrize("preload_doclen", [True, False])
+def test_positional_server_empty_doclen(tmp_path, preload_doclen):
+    """An empty ``doclen/`` dataset (the half-appended-crash state, taken to
+    its limit) yields no doclens instead of an IndexError."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gensim_spark.index.serving import PositionalIndexServer
+
+    store = tmp_path / "pos_store"
+    for sub in ("vocab", "positional", "doclen"):
+        (store / sub).mkdir(parents=True)
+    (store / "build_metrics.json").write_text(json.dumps(
+        {"positional": True, "positional_n_buckets": 4, "num_docs": 1}))
+    pq.write_table(pa.table({"token": ["cat"], "term_id": [0], "df": [1],
+                             "cf": [1]}), store / "vocab" / "part-0.parquet")
+    pq.write_table(pa.table({"doc_id": pa.array([], pa.int64()),
+                             "dl": pa.array([], pa.int64())}),
+                   store / "doclen" / "part-0.parquet")
+    srv = PositionalIndexServer(str(store), preload_doclen=preload_doclen)
+    assert srv._doclens([0, 3, 7]) == {}
