@@ -309,9 +309,9 @@ def run_suite():
     results["wmd_rwmd"] = round(t, 3)
 
     # 6c. LSI fit — distributed randomized SVD (k=8, ℓ=16, 1 power iter).
-    # Cost here is jobs × this VM's scheduling/codegen floor (~4 driver
-    # round-trips for the ℓ×ℓ Grams), not data volume — the same job count
-    # serves 10^12 rows.
+    # Cost here is jobs × this VM's scheduling/codegen floor (2 Spark
+    # round-trips for the ℓ×ℓ Grams, one per round), not data volume — the
+    # same job count serves 10^12 rows.
     from gensim_spark.operators import lsi as L
 
     postings_d = idx.postings.select(

@@ -53,8 +53,12 @@ def digamma(x):
     # the recurrence runs as where-masked whole-array passes with the pass
     # count taken from min(x) — bit-identical to the boolean-indexing loop
     # (out − 0.0 and xx + 0.0 are exact), ~3x cheaper per call on small
-    # vectors (no fancy indexing / .any() reduction per pass).
+    # vectors (no fancy indexing / .any() reduction per pass). A NaN entry
+    # makes min() NaN, so the passes then come from the other entries
+    # (NaN stays NaN: it never compares < 6).
     m = float(xx.min()) if xx.size else 6.0
+    if np.isnan(m):
+        m = float(np.nanmin(xx)) if not np.isnan(xx).all() else 6.0
     if m < 6.0:
         passes = int(np.ceil(6.0 - m)) if m > -1e18 else 0
         for _ in range(max(passes, 0)):

@@ -15,15 +15,22 @@ extra_dims ≪ corpus):
 1. ``Y = A·Ω`` — Ω is the hash-sign test matrix (±1, Achlioptas — the same
    deterministic construction as operators/rp.py), applied as ℓ aggregate
    expressions per document. Ω never exists as data.
-2. power iterations ``Y ← A·(Aᵀ·Y)``, re-orthonormalized each round via the
-   ℓ×ℓ Gram + Cholesky (the numerically safe variant of Halko Algorithm 4.4).
-3. ``Q = Y·R⁻¹`` (thin QR by Cholesky), ``B = Qᵀ·A`` kept distributed as
-   term-keyed rows, ``G = B·Bᵀ`` (ℓ×ℓ) eigendecomposed on the driver.
-4. ``u = Bᵀ·Ū·Σ⁻¹`` distributed (terms × k), ``s`` = top-k singular values.
+2. power iterations ``Y ← A·(Aᵀ·Y·R⁻¹)``, re-orthonormalized each round
+   via the ℓ×ℓ Gram + Cholesky (the numerically safe variant of Halko
+   Algorithm 4.4); ``AᵀQ`` is taken as ``W·R⁻¹`` with ``W = AᵀY``
+   (term-keyed rows, cached each round).
+3. thin QR by Cholesky, ``Q = Y·R⁻¹``, folded into the last pass: ``B =
+   Qᵀ·A`` has term rows ``W·R⁻¹``, so ``G = B·Bᵀ = R⁻ᵀ·(WᵀW)·R⁻¹`` —
+   neither Q nor B is ever materialized. Gram(Y) and Gram(W) come from
+   ONE job: every sync point (one per power iteration, one at the end)
+   runs one Gram job.
+4. ``G`` (ℓ×ℓ) eigendecomposed in numpy; ``u = Bᵀ·Ū·Σ⁻¹ =
+   W·(R⁻¹·Ū·Σ⁻¹)`` distributed (terms × k), ``s`` = top-k singular values.
 
 Every matmul is whole-stage-codegen column arithmetic — one join + one
-hash-agg with ℓ sum expressions; the ℓ×ℓ Gram products are Arrow-batched
-numpy partials tree-reduced through a map-side-combined hash-agg (see
+hash-agg with ℓ sum expressions, or one projection whose ℓ outputs are
+each a single SQL expression (see ``_wide_times``); the ℓ×ℓ Gram products
+are Arrow-batched numpy partials over a volume-sized width (see
 ``_gram``), and the only driver-side data ever collected is ℓ×ℓ. A is
 (doc_id, term_id, weight) postings — raw tf or any weighted corpus, exactly
 like the reference.
@@ -35,6 +42,8 @@ approximate-subspace checks.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -71,45 +80,92 @@ def _agg_matmul(rows: DataFrame, key: str, in_cols: list[str],
 
 def _wide_times(df: DataFrame, key: str, in_cols: list[str],
                 mat: np.ndarray, out_prefix: str) -> DataFrame:
-    """Row-wise (key, x₀..x_{n-1}) · mat (n × m) → (key, out₀..out_{m-1})."""
-    outs = []
-    for i in range(mat.shape[1]):
-        lin = None
-        for j, c in enumerate(in_cols):
-            term = F.col(c) * F.lit(float(mat[j, i]))
-            lin = term if lin is None else lin + term
-        outs.append(lin.alias(f"{out_prefix}{i}"))
-    return df.select(F.col(key), *outs)
+    """Row-wise (key, x₀..x_{n-1}) · mat (n × m) → (key, out₀..out_{m-1}).
+
+    Each output is ONE SQL expression ``(`x₀` * c₀D) + (`x₁` * c₁D) + …``
+    and all m go to one ``selectExpr``: Spark parses a ``D`` literal to the
+    very double ``repr`` printed and ``+`` associates left, so every output
+    is bit-identical to a Column-per-product build's, at one py4j call
+    instead of 2·n·m (1-2 s of Python-side time per call at ℓ = 16). A
+    non-finite entry has no literal form and is rejected."""
+    mat = np.asarray(mat, dtype=np.float64)
+    if not np.isfinite(mat).all():
+        raise ValueError("_wide_times: matrix entries must be finite")
+    rows = mat.tolist()
+    outs = [" + ".join(f"(`{c}` * {rows[j][i]!r}D)"
+                       for j, c in enumerate(in_cols))
+            + f" AS `{out_prefix}{i}`" for i in range(mat.shape[1])]
+    return df.selectExpr(f"`{key}`", *outs)
 
 
-def _gram(df: DataFrame, cols: list[str]) -> np.ndarray:
-    """XᵀX over the given columns — per-partition numpy Gram over Arrow
-    batches, tree-reduced through a map-side-combined (i → Σv) hash-agg.
+def _rows(df: DataFrame) -> int:
+    """Rows of a Gram input. A cached frame answers from its cache's own
+    statistics; a cache not built yet is first built through its own RDD —
+    the job its first reader would launch anyway, at the cache's full
+    width — so the statistics are exact. Any other frame is counted."""
+    cached = (df.sparkSession._jsparkSession.sharedState().cacheManager()
+              .lookupCachedData(df._jdf))
+    if not cached.isDefined():
+        return df.count()
+    rel = cached.get().cachedRepresentation()
+    cache = rel.cacheBuilder()
+    if not cache.isCachedColumnBuffersLoaded():
+        cache.cachedColumnBuffers().count()
+    return int(rel.computeStats().rowCount().get())
 
-    One job, two narrow stages; each map task ships exactly ℓ² rows
-    regardless of |df|, so the reduction is scale-safe at any partition
-    count. (The previous ℓ(ℓ+1)/2-expression codegen aggregate spent 3-5 s
-    per call in janino compilation at ℓ=16 — constant cost, but paid per
-    Gram per fit; BLAS on the Arrow batch is both cheaper to launch and the
-    actual fast path for a dense cross product.)"""
+
+def _gram(*parts: tuple[DataFrame, list[str]]) -> list[np.ndarray]:
+    """XᵀX of each (frame, n columns) part, all from one Python job: the
+    parts are tagged, unioned and folded by per-partition numpy Grams over
+    Arrow batches.
+
+    Width follows volume: the union is coalesced to ⌈rows·n·8 B /
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``⌉ tasks, never wider
+    than it already is. ℓ-wide frames are cached at the shuffle width and
+    every Python task pays a fixed worker cost (measured on a 4-core VM: a
+    mapInPandas over a cached 2,000-row frame took 0.23-0.30 s at 1
+    partition, 0.64-0.77 s at 8), so a frame of a few MB runs as one task
+    and a corpus-sized one keeps its width. Rows come from :func:`_rows`; parts are cached frames
+    (the coalesce would narrow the stage computing an uncached one). One
+    task's partials are collected as they are; wider, they are tree-reduced
+    through a map-side-combined (i → Σv) hash-agg, so each task ships
+    exactly parts·n² rows regardless of |df| — scale-safe at any width.
+    (A SQL aggregate of the ℓ(ℓ+1)/2 products spent 3-5 s per call in
+    janino compilation at ℓ = 16; BLAS on the Arrow batch is both cheaper
+    to launch and the fast path for a dense cross product.)"""
     import pandas as pd
 
-    n = len(cols)
+    n, m = len(parts[0][1]), len(parts)
+    x_cols = [f"x{j}" for j in range(n)]
+    union = functools.reduce(DataFrame.union, [
+        df.select(F.lit(t).alias("part"),
+                  *[F.col(c).alias(x) for c, x in zip(cols, x_cols)])
+        for t, (df, cols) in enumerate(parts)])
+    rows = sum(_rows(df) for df, _ in parts)
+    spark = union.sparkSession
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    width = max(1, -(-rows * n * 8 // advisory))
 
     def partial(batches):
-        acc = np.zeros((n, n))
+        acc = np.zeros((m, n, n))
         for pdf in batches:
-            x = pdf[cols].to_numpy(np.float64)
-            acc += x.T @ x
-        yield pd.DataFrame({"i": np.arange(n * n, dtype="int32"),
+            tag = pdf["part"].to_numpy()
+            x = pdf[x_cols].to_numpy(np.float64)
+            for t in np.unique(tag):
+                xt = x[tag == t]
+                acc[t] += xt.T @ xt
+        yield pd.DataFrame({"i": np.arange(m * n * n, dtype="int32"),
                             "v": acc.ravel()})
 
-    rows = (df.select(*cols).mapInPandas(partial, schema="i int, v double")
-            .groupBy("i").agg(F.sum("v").alias("v")).collect())
-    g = np.zeros(n * n)
-    for r in rows:
-        g[r["i"]] = r["v"] or 0.0
-    return g.reshape(n, n)
+    out = union.coalesce(width).mapInPandas(partial, "i int, v double")
+    if width > 1:
+        out = out.groupBy("i").agg(F.sum("v").alias("v"))
+    g = np.zeros(m * n * n)
+    for r in out.collect():
+        g[r["i"]] = r["v"]
+    return list(g.reshape(m, n, n))
 
 
 def _chol_inv(gram: np.ndarray) -> np.ndarray:
@@ -159,54 +215,54 @@ def lsi_fit(postings: DataFrame, num_topics: int = 200,
         for j, s in enumerate(sign_cols(F.col("term_id"), ell))
     ]
     y_cols = [f"y{j}" for j in range(ell)]
+    w_cols = [f"w{j}" for j in range(ell)]
+    z_cols = [f"z{j}" for j in range(ell)]
     y = postings.groupBy("doc_id").agg(*y_exprs).cache()
 
-    for _ in range(max(0, int(power_iters))):
-        # re-orthonormalize (Halko alg 4.4 stabilization), then Y ← A·(AᵀY)
-        rinv = _chol_inv(_gram(y, y_cols))
-        q = _wide_times(y, "doc_id", y_cols, rinv, "y")
-        z = _agg_matmul(postings.join(q, "doc_id"), "term_id", y_cols, w, "y",
-                        ell).cache()
-        # eager localCheckpoint does two jobs at once: it materializes
-        # THROUGH z's cache before the unpersists below (an unpersist while
-        # y_new is still lazy would force the next iteration to recompute
-        # the whole q/z chain — O(power_iters²) corpus passes), and it
-        # TRUNCATES the logical plan to a LogicalRDD. cache()+count() is not
-        # enough for the latter: the analyzed tree still embeds both
-        # postings joins of every prior iteration, so Catalyst re-analysis
-        # doubles per iteration (measured: 4.3 s/iter for p≤2, then 35 s at
-        # p=3). Superseded RDD blocks are GC-unpersisted by ContextCleaner.
-        y_new = _agg_matmul(postings.join(z, "term_id"), "doc_id", y_cols, w,
-                            "y", ell).localCheckpoint(eager=True)
+    # Each round caches W = AᵀY (term-keyed rows, row t = Σ_d weight·Y[d])
+    # and takes Gram(Y) and Gram(W) from one job, which also builds both
+    # caches. A power round re-orthonormalizes (Halko alg 4.4
+    # stabilization) and sets Y ← A·(AᵀQ), AᵀQ = W·R⁻¹: a projection of a
+    # built cache, so the planner sees its true size when it plans the
+    # join. The new Y is checkpointed lazily, which TRUNCATES its logical
+    # plan — without it the analyzed tree embeds both postings joins of
+    # every prior round and Catalyst re-analysis doubles per round
+    # (measured: 4.3 s/iter for p≤2, then 35 s at p=3) — and cached, so the
+    # next round's Gram builds it and reads its size. W is released once
+    # that build has read it.
+    rounds = max(0, int(power_iters))
+    w_prev = None
+    for it in range(rounds + 1):
+        wt = _agg_matmul(postings.join(y, "doc_id"), "term_id", y_cols, w,
+                         "w", ell).cache()
+        gram_y, gram_w = _gram((y, y_cols), (wt, w_cols))
+        if w_prev is not None:
+            w_prev.unpersist()
+        rinv = _chol_inv(gram_y)
+        if it == rounds:
+            break
+        z = _wide_times(wt, "term_id", w_cols, rinv, "z")
+        y_next = _agg_matmul(postings.join(z, "term_id"), "doc_id", z_cols,
+                             w, "y", ell).localCheckpoint(eager=False).cache()
         y.unpersist()
-        z.unpersist()
-        y = y_new
+        y, w_prev = y_next, wt
 
-    # thin QR by Cholesky: Q = Y·R⁻¹
-    rinv = _chol_inv(_gram(y, y_cols))
-    q = _wide_times(y, "doc_id", y_cols, rinv, "q").cache()
-    q_cols = [f"q{j}" for j in range(ell)]
-
-    # B = QᵀA as term-keyed rows (row t = B[:, t]), then G = B·Bᵀ (ℓ×ℓ)
-    b = _agg_matmul(postings.join(q, "doc_id"), "term_id", q_cols, w, "b",
-                    ell).cache()
-    b_cols = [f"b{j}" for j in range(ell)]
-    g = _gram(b, b_cols)
-    evals, evecs = np.linalg.eigh(g)          # ascending
+    # thin QR by Cholesky (Q = Y·R⁻¹) folded into the last round: B = QᵀA
+    # has term rows (row t = B[:, t]) W·R⁻¹, so G = B·Bᵀ = R⁻ᵀ·(WᵀW)·R⁻¹
+    evals, evecs = np.linalg.eigh(rinv.T @ gram_w @ rinv)   # ascending
     order = np.argsort(evals)[::-1][:k]
     s = np.sqrt(np.maximum(evals[order], 0.0))
-    # u = Bᵀ·Ū·Σ⁻¹ (terms × k), guarding σ≈0 (zero-pad like the reference
-    # does when rank < k, lsimodel.py:235-239)
+    # u = Bᵀ·Ū·Σ⁻¹ = W·(R⁻¹·Ū·Σ⁻¹) (terms × k), guarding σ≈0 (zero-pad
+    # like the reference does when rank < k, lsimodel.py:235-239)
     safe = np.where(s > 1e-12, s, np.inf)
     wmat = evecs[:, order] / safe[np.newaxis, :]
     # materialize the basis, then release every fit-local cache — a
     # long-lived projection (repeated add_documents) must not pin one
     # ℓ-wide cached frame per update
-    u = _wide_times(b, "term_id", b_cols, wmat, "t") \
+    u = _wide_times(wt, "term_id", w_cols, rinv @ wmat, "t") \
         .localCheckpoint(eager=True)
     y.unpersist()
-    q.unpersist()
-    b.unpersist()
+    wt.unpersist()
     out = LsiProjection(u, s, k)
     out.k_requested = k
     return out
@@ -231,32 +287,6 @@ def doc_topics(postings: DataFrame, projection: LsiProjection,
                     F.col("p.weight").alias("weight")))
 
 
-def _cross_gram(df: DataFrame, cols_a: list[str],
-                cols_b: list[str]) -> np.ndarray:
-    """XᵀY over the given column groups of one frame — same partial-fold
-    shape as :func:`_gram` (each task ships exactly |A|·|B| rows)."""
-    import pandas as pd
-
-    na, nb = len(cols_a), len(cols_b)
-
-    def partial(batches):
-        acc = np.zeros((na, nb))
-        for pdf in batches:
-            x = pdf[cols_a].to_numpy(np.float64)
-            y = pdf[cols_b].to_numpy(np.float64)
-            acc += x.T @ y
-        yield pd.DataFrame({"i": np.arange(na * nb, dtype="int32"),
-                            "v": acc.ravel()})
-
-    rows = (df.select(*cols_a, *cols_b)
-            .mapInPandas(partial, schema="i int, v double")
-            .groupBy("i").agg(F.sum("v").alias("v")).collect())
-    g = np.zeros(na * nb)
-    for r in rows:
-        g[r["i"]] = r["v"] or 0.0
-    return g.reshape(na, nb)
-
-
 def clip_spectrum(s: np.ndarray, k: int, discard: float = 0.001) -> int:
     """How many factors to keep (lsimodel.py:85-111): drop the trailing
     ``min(discard, 1/k)`` of the energy spectrum, then clip against k.
@@ -277,10 +307,10 @@ def merge_projections(p1: LsiProjection, p2: LsiProjection,
 
     The reference's dense steps — c = U₁ᵀU₂; QR of the orthogonal
     component U₂−U₁c; SVD of the (n₁+n₂)² core; basis rotation — compose
-    here so the distributed work is exactly three passes over the joined
-    (term_id, u₁ᵣₒw, u₂ᵣₒw) frame: one |n₁×n₂| cross-Gram (→ c), one
-    |n₂×n₂| Gram of the orthogonal component (→ R by Cholesky QR), and one
-    wide select producing the rotated basis
+    here so the distributed work is exactly two passes over the joined
+    (term_id, u₁ᵣₒw, u₂ᵣₒw) frame: one (n₁+n₂)² Gram, whose blocks give
+    c = U₁ᵀU₂ and the Gram of the orthogonal component (→ R by Cholesky
+    QR), and one wide select producing the rotated basis
     ``U = U₁·(u1ₖ − c·R⁻¹·u2ₖ) + U₂·(R⁻¹·u2ₖ)`` — Q is never
     materialized, every driver matrix is topics-sized. Matches the
     reference numerically (full QR vs Cholesky QR differ only by a
@@ -304,18 +334,18 @@ def merge_projections(p1: LsiProjection, p2: LsiProjection,
         "term_id",
         *[F.coalesce(F.col(c), F.lit(0.0)).alias(c)
           for c in a_cols + b_cols]).cache()
-    joined.count()
 
-    # c = U1ᵀ·U2 (n1×n2, driver)
-    c = _cross_gram(joined, a_cols, b_cols)
-    # Gram of the orthogonal component U2 − U1·c, without materializing it:
-    # G = U2ᵀU2 − cᵀc (U1 orthonormal ⇒ U1ᵀU1 = I). QR by symmetric
+    # one Gram of [U1 U2] gives c = U1ᵀ·U2 (n1×n2) and U2ᵀU2, hence
+    # the Gram of the orthogonal component U2 − U1·c without materializing
+    # it: G = U2ᵀU2 − cᵀc (U1 orthonormal ⇒ U1ᵀU1 = I). QR by symmetric
     # eigendecomposition with a PSEUDO-inverse: directions where U2 already
     # lies inside span(U1) have eigenvalue ≈ 0 — their R rows are zeroed
     # (so the SVD of the core sees exactly zero new-basis mass there) and
     # their R⁺ columns are zeroed (no 1/√λ blow-up), the backward-stable
     # equivalent of the reference's explicit QR, which never inverts R.
-    g2 = _gram(joined, b_cols) - c.T @ c
+    (full,) = _gram((joined, a_cols + b_cols))
+    c = full[:n1, n1:]
+    g2 = full[n1:, n1:] - c.T @ c
     evals, evecs = np.linalg.eigh((g2 + g2.T) / 2.0)
     tol = max(float(evals[-1]), 0.0) * 1e-12
     root = np.where(evals > tol, np.sqrt(np.maximum(evals, 0.0)), 0.0)

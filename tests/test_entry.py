@@ -1,13 +1,20 @@
 """Driver-contract regression: a fast subset of queries() checked against
-their DuckDB oracles at sf0.001 (the full 26-query sweep lives in
-tools/check_oracles.py and runs in the driver's own gate at sf0.01)."""
+their DuckDB oracles at sf0.001, plus the two LSI oracles at sf0.01, the sf
+their persisted-artifact SQL is keyed to (the full sweep lives in
+tools/check_oracles.py)."""
 
 import math
+import os
 
 import duckdb
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
+# the artifact-backed oracles read the model Spark persisted at sf0.01
+ART_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+LSI_ORACLES = ["lsi_topics", "lsi_merged_topics"]
+TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings"]
 SUBSET = ["vocab", "doc2bow", "bm25_okapi", "bm25_topk", "dedup_exact",
           "minhash_signatures", "simhash", "quality_stats", "knn_cosine",
           "events_hourly"]
@@ -19,20 +26,27 @@ def norm_cell(v):
     return str(v)
 
 
-@pytest.fixture(scope="module")
-def duck():
+def _duck(sf_dir):
     con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
 
 
-@pytest.mark.parametrize("name", SUBSET)
-def test_query_matches_oracle(spark, duck, name):
+@pytest.fixture(scope="module")
+def duck():
+    return _duck(SF_DIR)
+
+
+@pytest.fixture(scope="module")
+def duck_art():
+    return _duck(ART_SF_DIR)
+
+
+def _check_oracle(spark, duck, sf_dir, name):
     import __spark_entry__ as E
 
-    sdf = E.queries()[name](spark, SF_DIR)
+    sdf = E.queries()[name](spark, sf_dir)
     cols = sorted(sdf.columns)
     spark_rows = sorted(
         tuple(norm_cell(r[c]) for c in cols) for r in sdf.collect()
@@ -45,6 +59,18 @@ def test_query_matches_oracle(spark, duck, name):
     )
     assert len(spark_rows) == len(oracle_rows)
     assert spark_rows == oracle_rows
+
+
+@pytest.mark.parametrize("name", SUBSET)
+def test_query_matches_oracle(spark, duck, name):
+    _check_oracle(spark, duck, SF_DIR, name)
+
+
+@pytest.mark.parametrize("name", LSI_ORACLES)
+def test_lsi_oracle_matches_at_artifact_sf(spark, duck_art, name):
+    """The LSI fits (plain and merged) against their DuckDB oracles, which
+    read the u Spark persisted at the sf the oracle SQL is keyed to."""
+    _check_oracle(spark, duck_art, ART_SF_DIR, name)
 
 
 def test_entry_smoke(spark):

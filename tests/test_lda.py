@@ -34,6 +34,15 @@ def test_digamma_identities():
     assert S.digamma(x + 1) == pytest.approx(S.digamma(x) + 1 / x, abs=1e-10)
 
 
+def test_digamma_nan_entry_leaves_others_exact():
+    """One NaN must not skip the recurrence for the finite entries."""
+    got = S.digamma(np.array([np.nan, 0.5, 3.0]))
+    assert np.isnan(got[0])
+    assert got[1] == S.digamma(0.5)
+    assert got[2] == S.digamma(3.0)
+    assert np.isnan(S.digamma(np.array([np.nan, np.nan]))).all()
+
+
 def test_trigamma_identities():
     assert S.trigamma(1.0) == pytest.approx(np.pi ** 2 / 6, abs=1e-10)
     assert S.trigamma(0.5) == pytest.approx(np.pi ** 2 / 2, abs=1e-9)
