@@ -212,11 +212,13 @@ def minhash_band_pairs(signatures: DataFrame, bands: int = 4,
     # each surviving bucket expands its own sorted member array to
     # (doc_a < doc_b) combinations in a per-row JVM fold. Gated bucket
     # width bounds the per-row expansion at max_bucket²/2. Pair output is
-    # identical to the join form (docs are unique within a bucket; the
-    # final distinct dedups across bands, as before).
+    # identical to the join form: a bucket's members are collected as a
+    # set, so a doc id that repeats in the input yields no (d, d) pair and
+    # the max_bucket gate counts distinct docs; the final distinct dedups
+    # across bands, as before.
     buckets = (
         banded.groupBy("band_id", "band_hash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("_ds"))
+        .agg(F.sort_array(F.collect_set("doc_id")).alias("_ds"))
         .filter(F.size("_ds") >= 2)
     )
     if max_bucket is not None:

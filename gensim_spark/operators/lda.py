@@ -23,20 +23,31 @@ only global:
 
 1. the BoW corpus is one ``groupBy(doc_id)`` of the postings (the lists are
    ``sort_array``-ed so per-document float reductions are order-exact and
-   independent of partitioning);
+   independent of partitioning); the fit caches it, and one aggregate over
+   the cache both builds it and yields the document count and (when not
+   given) the vocabulary width;
 2. each pass broadcasts expElogβ (K×V — the model, driver-resident exactly
-   as in the reference) and runs one ``mapInPandas`` over the documents;
-   workers accumulate their partition's sufficient statistics into a
-   term-keyed dict and emit them once, as packed ``(i = term·K + topic, v)``
-   longs — the shuffle carries ≤ |terms-in-partition|·K rows per task, never
-   per-document data, and is map-side combined by the ``groupBy(i).sum``;
-3. the driver applies the blend M-step to the collected K×V partials.
+   as in the reference) and runs one ``mapInArrow`` over the documents.
+   Each Arrow batch is cut on document boundaries into slices whose
+   pairs × K working arrays fit ``_SLICE_ELEMS``, and :func:`infer_batch`
+   runs every document of a slice through the variational iterations in
+   lockstep. The slice's sufficient statistics are summed per term with
+   ``np.unique`` and one ``np.bincount`` per topic, and each task emits its
+   partition's statistics once, as packed ``(i = term·K + topic, v)`` rows
+   over the terms present — the shuffle carries ≤ |terms-in-partition|·K
+   rows per task, never per-document data, and is map-side combined by the
+   ``groupBy(i).sum``;
+3. the driver collects the reduced partials through Arrow (``toPandas``),
+   scatters them into K×V with numpy and applies the blend M-step.
 
 Determinism: the reference draws each document's initial γ from a shared
 sequential RandomState (ldamodel.py:678), which has no distributed
 equivalent — here every (document, update) pair gets its own counter-mixed
-seed, so results are bit-stable under any partitioning or execution order
-(the tests' numpy replica uses the same construction).  dtype is float64
+seed. Every step of :func:`infer_batch` is row-wise, so a document's γ is
+bit-identical whether it runs alone, in any batch or in any slice
+(``tests/test_lda_batch.py`` pins this), and results are stable under any
+partitioning or execution order up to the order of the cross-document
+sums (the tests' numpy replica uses the same seeds). dtype is float64
 (the reference defaults to float32) for stable cross-partition reductions.
 
 Scale: one job per (pass, statistic); model broadcast is O(K·V) like the
@@ -55,7 +66,6 @@ from gensim_spark.functions.special import (
     dirichlet_expectation,
     gammaln,
     logsumexp,
-    mean_absolute_difference,
     trigamma,
 )
 
@@ -71,29 +81,151 @@ def doc_seed(base_seed: int, update_no: int, doc_id: int) -> int:
 
 def init_gamma(base_seed: int, update_no: int, doc_id: int, num_topics: int) -> np.ndarray:
     """The document's initial γ draw (ldamodel.py:678 semantics, per-doc RNG)."""
-    rs = np.random.RandomState(doc_seed(base_seed, update_no, doc_id))
-    return rs.gamma(_GAMMA_SHAPE, 1.0 / _GAMMA_SHAPE, int(num_topics))
+    return init_gammas(base_seed, update_no, [doc_id], num_topics)[0]
+
+
+def init_gammas(base_seed: int, update_no: int, doc_ids,
+                num_topics: int) -> np.ndarray:
+    """:func:`init_gamma` for each of ``doc_ids`` → (B, K). One RandomState
+    is re-seeded per document: ``seed`` resets the whole legacy state (the
+    cached Gaussian too), so each row equals a fresh ``RandomState`` draw."""
+    rs = np.random.RandomState()
+    out = np.empty((len(doc_ids), int(num_topics)))
+    for row, doc_id in enumerate(doc_ids):
+        rs.seed(doc_seed(base_seed, update_no, doc_id))
+        out[row] = rs.gamma(_GAMMA_SHAPE, 1.0 / _GAMMA_SHAPE, int(num_topics))
+    return out
+
+
+def _phinorm(expelogtheta: np.ndarray, lens: np.ndarray,
+             eebd: np.ndarray) -> np.ndarray:
+    """φnorm per pair (without ε): Σₖ expElogθ[doc, k]·expElogβ[k, term],
+    summed over k in order, so a pair's value never depends on the others.
+    ``lens`` are the pairs per document (pairs in document order)."""
+    et = np.ascontiguousarray(expelogtheta.T)
+    acc = np.repeat(et[0], lens) * eebd[0]
+    for k in range(1, eebd.shape[0]):
+        acc += np.repeat(et[k], lens) * eebd[k]
+    return acc
+
+
+def infer_batch(ids: np.ndarray, cts: np.ndarray, lens: np.ndarray,
+                gamma: np.ndarray, exp_elogbeta: np.ndarray,
+                alpha: np.ndarray, iterations: int, gamma_threshold: float):
+    """Variational inference (ldamodel.py:697-734) for a batch of documents
+    in lockstep: the implicit-φ Lee & Seung update, ``iterations`` cap and
+    per-document ``gamma_threshold`` stop.
+
+    ``ids``/``cts`` are the documents' (term, count) pairs concatenated in
+    document order, ``lens`` the pairs per document and ``gamma`` the
+    (B, K) initial γ rows. Returns (γ (B, K), expElogθ (B, K), φnorm per
+    pair). A document that meets the threshold keeps that iteration's
+    values while the others iterate on. Every step works per document or
+    per pair (φnorm as an in-order product-sum over topics, γ as a
+    per-document segment sum, ψ elementwise), so a document's result does
+    not depend on the batch it runs in.
+    """
+    eps = np.finfo(np.float64).eps
+    ids = np.asarray(ids, dtype=np.int64)
+    cts = np.asarray(cts, dtype=np.float64)
+    lens = np.asarray(lens, dtype=np.int64)
+    out_g = np.array(gamma, dtype=np.float64, ndmin=2)
+    out_e = np.exp(dirichlet_expectation(out_g))
+    eebd = exp_elogbeta[:, ids]                        # (K, P)
+    out_pn = _phinorm(out_e, lens, eebd) + eps
+    if iterations <= 0 or lens.size == 0:
+        return out_g, out_e, out_pn
+    # the working set: the rows still iterating plus any that stopped
+    # since the last compaction (``live`` marks the former)
+    rows, pairs = np.arange(lens.size), np.arange(ids.size)
+    g, e, pn, c = out_g, out_e, out_pn, cts
+    live = np.ones(lens.size, dtype=bool)
+
+    def store(m):
+        pm = np.repeat(m, lens)
+        out_g[rows[m]] = g[m]
+        out_e[rows[m]] = e[m]
+        out_pn[pairs[pm]] = pn[pm]
+
+    for _ in range(iterations):
+        nz = lens > 0
+        seg = np.zeros_like(g)
+        if nz.any():
+            # np.add.reduceat gives a zero-length segment the element at
+            # its offset, so only the non-empty documents are reduced
+            starts = (np.cumsum(lens) - lens)[nz]
+            seg[nz] = np.add.reduceat(eebd * (c / pn), starts, axis=1).T
+        lastg = g
+        g = alpha + e * seg
+        e = np.exp(dirichlet_expectation(g))
+        pn = _phinorm(e, lens, eebd) + eps
+        done = live & (np.mean(np.abs(g - lastg), axis=1) < gamma_threshold)
+        if not done.any():
+            continue
+        store(done)
+        live &= ~done
+        if not live.any():
+            return out_g, out_e, out_pn
+        if 2 * int(lens[live].sum()) <= pn.size:       # drop the stopped rows
+            pm = np.repeat(live, lens)
+            eebd, c, pn, pairs = eebd[:, pm], c[pm], pn[pm], pairs[pm]
+            g, e, rows, lens = g[live], e[live], rows[live], lens[live]
+            live = np.ones(lens.size, dtype=bool)
+    store(live)
+    return out_g, out_e, out_pn
 
 
 def infer_doc(ids: np.ndarray, cts: np.ndarray, gammad: np.ndarray,
               exp_elogbeta: np.ndarray, alpha: np.ndarray,
               iterations: int, gamma_threshold: float):
     """One document's variational inference (ldamodel.py:697-734): returns
-    (γ_d, expElogθ_d, φ-normaliser) with the implicit-φ Lee & Seung update."""
-    eps = np.finfo(np.float64).eps
-    elogthetad = dirichlet_expectation(gammad)
-    expelogthetad = np.exp(elogthetad)
-    eebd = exp_elogbeta[:, ids]                       # (K, nnz)
-    phinorm = expelogthetad @ eebd + eps
-    for _ in range(iterations):
-        lastgamma = gammad
-        gammad = alpha + expelogthetad * ((cts / phinorm) @ eebd.T)
-        elogthetad = dirichlet_expectation(gammad)
-        expelogthetad = np.exp(elogthetad)
-        phinorm = expelogthetad @ eebd + eps
-        if mean_absolute_difference(gammad, lastgamma) < gamma_threshold:
-            break
-    return gammad, expelogthetad, phinorm
+    (γ_d, expElogθ_d, φ-normaliser) — a one-document :func:`infer_batch`."""
+    g, e, pn = infer_batch(ids, cts, [len(ids)], gammad, exp_elogbeta,
+                           alpha, iterations, gamma_threshold)
+    return g[0], e[0], pn
+
+
+# One slice's (pairs × K) float64 working arrays hold at most this many
+# elements (32 MiB); Arrow batches are cut on document boundaries to fit.
+_SLICE_ELEMS = 1 << 22
+
+
+def _bow_slices(batches, k: int):
+    """Arrow batches of ``corpus_bow`` rows → (doc_ids, ids, cts, lens)
+    slices of whole documents, each within ``_SLICE_ELEMS`` pairs × K (a
+    larger document is a slice of its own)."""
+    import pyarrow.compute as pc
+
+    cap = max(1, _SLICE_ELEMS // k)
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        doc_ids = batch.column("doc_id").to_numpy().astype(np.int64)
+        lens = pc.list_value_length(batch.column("ids")).to_numpy().astype(np.int64)
+        ids = batch.column("ids").flatten().to_numpy().astype(np.int64)
+        cts = batch.column("cts").flatten().to_numpy().astype(np.float64)
+        offs = np.concatenate(([0], np.cumsum(lens)))
+        lo = 0
+        while lo < n:
+            hi = int(np.searchsorted(offs, offs[lo] + cap, side="right")) - 1
+            hi = max(hi, lo + 1)
+            yield (doc_ids[lo:hi], ids[offs[lo]:offs[hi]],
+                   cts[offs[lo]:offs[hi]], lens[lo:hi])
+            lo = hi
+
+
+def _infer_slices(batches, exp_elogbeta, alpha, iterations, gamma_threshold,
+                  seed, update_no):
+    """Fresh inference over Arrow batches of ``corpus_bow`` rows: per slice
+    (doc_ids, ids, cts, lens, γ, expElogθ, φnorm), every document's initial
+    γ drawn from its own (document, update) seed."""
+    k = exp_elogbeta.shape[0]
+    for doc_ids, ids, cts, lens in _bow_slices(batches, k):
+        g0 = init_gammas(seed, update_no, doc_ids, k)
+        yield (doc_ids, ids, cts, lens) + infer_batch(
+            ids, cts, lens, g0, exp_elogbeta, alpha, iterations,
+            gamma_threshold)
 
 
 def update_dir_prior(prior: np.ndarray, n: float, logphat: np.ndarray,
@@ -207,14 +339,17 @@ class LdaModel:
                    -self.decay)
 
 
+def _empty_dims(col: str, what: str) -> ValueError:
+    return ValueError(f"cannot infer dimensions from an empty {what} "
+                      f"(no rows carry a {col})")
+
+
 def infer_dim(df: DataFrame, col: str, what: str = "corpus") -> int:
     """``max(col) + 1`` with a clear error on an empty input — a NULL max
     would otherwise surface as ``NoneType + int`` deep inside a fit."""
     m = df.agg(F.max(col).alias("m")).first()["m"]
     if m is None:
-        raise ValueError(
-            f"cannot infer dimensions from an empty {what} "
-            f"(no rows carry a {col})")
+        raise _empty_dims(col, what)
     return int(m) + 1
 
 
@@ -231,12 +366,64 @@ def corpus_bow(postings: DataFrame) -> DataFrame:
             ))
 
 
+def _cached_bow(docs: DataFrame, num_terms: int | None) -> tuple:
+    """Cache ``corpus_bow`` rows with one aggregate that builds the cache
+    and reads off the document count and, when ``num_terms`` is None, the
+    vocabulary width (max term id + 1) → (docs, lencorpus, num_terms)."""
+    docs = docs.cache()
+    row = docs.agg(F.count(F.lit(1)).alias("n"),
+                   F.max(F.array_max("ids")).alias("m")).first()
+    if num_terms is None:
+        if row["m"] is None:
+            docs.unpersist()
+            raise _empty_dims("term_id", "corpus")
+        num_terms = int(row["m"]) + 1
+    return docs, int(row["n"]), num_terms
+
+
+def _merge_term_sums(parts, k: int) -> tuple:
+    """[(terms, (K, |terms|) sums)] → one (terms, sums) over their union."""
+    terms, inv = np.unique(np.concatenate([t for t, _ in parts]),
+                           return_inverse=True)
+    vals = np.hstack([x for _, x in parts])
+    return terms, np.stack([np.bincount(inv, weights=vals[t],
+                                        minlength=terms.size)
+                            for t in range(k)])
+
+
+def _partition_sstats(slices, k: int) -> tuple:
+    """One task's E-step statistics from its inferred slices → (terms
+    present, (K, |terms|) sstats partials, Σ_d Elogθ_d, document count).
+    Each slice is summed per term with ``np.unique`` and one ``np.bincount``
+    per topic; slice partials are merged once they outgrow ``_SLICE_ELEMS``,
+    so no dense K×V array is ever built."""
+    parts = [(np.empty(0, np.int64), np.empty((k, 0)))]
+    pending = 0
+    elogtheta_sum = np.zeros(k)
+    ndocs = 0
+    for _, ids, cts, lens, g, e, pn in slices:
+        # sstats[:, ids] += outer(expElogθ_d, cts/φnorm)  (ldamodel.py:734)
+        terms, inv = np.unique(ids, return_inverse=True)
+        w = cts / pn
+        parts.append((terms, np.stack([
+            np.bincount(inv, weights=np.repeat(e[:, t], lens) * w,
+                        minlength=terms.size)
+            for t in range(k)])))
+        pending += terms.size
+        if pending * k > _SLICE_ELEMS:
+            parts = [_merge_term_sums(parts, k)]
+            pending = 0
+        elogtheta_sum += np.sum(dirichlet_expectation(g), axis=0)
+        ndocs += lens.size
+    return (*_merge_term_sums(parts, k), elogtheta_sum, ndocs)
+
+
 def _estep(docs: DataFrame, model: LdaModel, update_no: int) -> tuple:
     """One distributed E-step: returns (sstats K×V, logphat Σ Elogθ, ndocs).
 
-    Emits per-partition dict-combined ``(i = term·K + topic, v)`` partials;
-    negative ``i`` carries the α-optimisation statistics (Σ_d Elogθ_d and the
-    document count) so everything rides one job.
+    Emits per-partition ``(i = term·K + topic, v)`` partials over the terms
+    present; negative ``i`` carries the α-optimisation statistics (Σ_d
+    Elogθ_d and the document count) so everything rides one job.
     """
     k, v = model.num_topics, model.num_terms
     sc = docs.sparkSession.sparkContext
@@ -246,56 +433,28 @@ def _estep(docs: DataFrame, model: LdaModel, update_no: int) -> tuple:
     seed = model.random_seed
 
     def gen(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        eeb = bc.value
-        acc: dict[int, np.ndarray] = {}
-        elogtheta_sum = np.zeros(k)
-        ndocs = 0
-        for pdf in batches:
-            for doc_id, ids_l, cts_l in zip(pdf["doc_id"], pdf["ids"], pdf["cts"]):
-                ids = np.asarray(ids_l, dtype=np.int64)
-                cts = np.asarray(cts_l, dtype=np.float64)
-                gammad = init_gamma(seed, update_no, doc_id, k)
-                gammad, expelogthetad, phinorm = infer_doc(
-                    ids, cts, gammad, eeb, alpha, iters, thr)
-                # sstats[:, ids] += outer(expElogθ_d, cts/φnorm)  (ldamodel.py:734)
-                contrib = np.outer(expelogthetad, cts / phinorm)
-                for j, t in enumerate(ids):
-                    vec = acc.get(t)
-                    if vec is None:
-                        acc[t] = contrib[:, j].copy()
-                    else:
-                        vec += contrib[:, j]
-                elogtheta_sum += dirichlet_expectation(gammad)
-                ndocs += 1
-        n_terms_here = len(acc)
-        i_out = np.empty(n_terms_here * k + k + 1, dtype=np.int64)
-        v_out = np.empty(n_terms_here * k + k + 1, dtype=np.float64)
-        pos = 0
-        for t in sorted(acc):
-            i_out[pos:pos + k] = np.int64(t) * k + np.arange(k)
-            v_out[pos:pos + k] = acc[t]
-            pos += k
-        i_out[pos:pos + k] = -(np.arange(k) + 1)      # Σ Elogθ rows
-        v_out[pos:pos + k] = elogtheta_sum
-        i_out[pos + k] = -(k + 1)                     # doc count
-        v_out[pos + k] = float(ndocs)
-        yield pd.DataFrame({"i": i_out, "v": v_out})
+        terms, vals, elogtheta_sum, ndocs = _partition_sstats(_infer_slices(
+            batches, bc.value, alpha, iters, thr, seed, update_no), k)
+        i_out = np.concatenate([
+            (terms[:, None] * k + np.arange(k)).ravel(),
+            -(np.arange(k + 1) + 1)])                 # Σ Elogθ rows, doc count
+        v_out = np.concatenate([vals.T.ravel(), elogtheta_sum, [float(ndocs)]])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(i_out, pa.int64()), pa.array(v_out, pa.float64())],
+            names=["i", "v"])
 
-    rows = (docs.mapInPandas(gen, "i long, v double")
-            .groupBy("i").agg(F.sum("v").alias("v")).collect())
+    pdf = (docs.mapInArrow(gen, "i long, v double")
+           .groupBy("i").agg(F.sum("v").alias("v")).toPandas())
+    i, val = pdf["i"].to_numpy(), pdf["v"].to_numpy()
+    pos = i >= 0
     sstats = np.zeros((k, v))
+    sstats[i[pos] % k, i[pos] // k] = val[pos]
+    neg, nval = -i[~pos] - 1, val[~pos]
     elogtheta_sum = np.zeros(k)
-    ndocs = 0.0
-    for r in rows:
-        i, val = r["i"], r["v"]
-        if i >= 0:
-            sstats[i % k, i // k] = val
-        elif i == -(k + 1):
-            ndocs = val
-        else:
-            elogtheta_sum[-i - 1] = val
+    elogtheta_sum[neg[neg < k]] = nval[neg < k]
+    ndocs = float(nval[neg == k].sum())
     sstats *= model.exp_elogbeta                      # ldamodel.py:744
     return sstats, elogtheta_sum, ndocs
 
@@ -309,10 +468,7 @@ def lda_fit(postings: DataFrame, num_topics: int, num_terms: int | None = None,
     every pass exactly like ``LdaModel.update`` (ldamodel.py:971-1038);
     per-metric value lists land on ``model.metrics``.
     """
-    if num_terms is None:
-        num_terms = infer_dim(postings, "term_id")
-    docs = corpus_bow(postings).cache()
-    lencorpus = docs.count()
+    docs, lencorpus, num_terms = _cached_bow(corpus_bow(postings), num_terms)
     model = LdaModel(num_topics, num_terms, **model_kwargs)
     model.numdocs += lencorpus                        # ldamodel.py:934
     cb = None
@@ -352,12 +508,9 @@ def lda_fit_online(postings: DataFrame, num_topics: int,
     composition is immaterial, and hash-chunking is deterministic under any
     partitioning.
     """
-    if num_terms is None:
-        num_terms = infer_dim(postings, "term_id")
     n_chunks = max(1, int(update_chunks))
-    docs = corpus_bow(postings).withColumn(
-        "_chunk", F.pmod(F.col("doc_id"), F.lit(n_chunks))).cache()
-    lencorpus = docs.count()
+    docs, lencorpus, num_terms = _cached_bow(corpus_bow(postings).withColumn(
+        "_chunk", F.pmod(F.col("doc_id"), F.lit(n_chunks))), num_terms)
     model = LdaModel(num_topics, num_terms, **model_kwargs)
     model.chunksize = max(1, -(-lencorpus // n_chunks))   # actual chunk size
     model.numdocs += lencorpus                            # ldamodel.py:934
@@ -386,34 +539,25 @@ def doc_topics(postings: DataFrame, model: LdaModel,
     min_p = (model.minimum_probability if minimum_probability is None
              else float(minimum_probability))
     min_p = max(min_p, 1e-8)
-    k = model.num_topics
     sc = postings.sparkSession.sparkContext
     bc = sc.broadcast(model.exp_elogbeta)
     alpha, iters, thr = model.alpha, model.iterations, model.gamma_threshold
     seed = model.random_seed
 
     def gen(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        eeb = bc.value
-        for pdf in batches:
-            out_doc, out_topic, out_p = [], [], []
-            for doc_id, ids_l, cts_l in zip(pdf["doc_id"], pdf["ids"], pdf["cts"]):
-                ids = np.asarray(ids_l, dtype=np.int64)
-                cts = np.asarray(cts_l, dtype=np.float64)
-                gammad = init_gamma(seed, update_no, doc_id, k)
-                gammad, _, _ = infer_doc(ids, cts, gammad, eeb, alpha,
-                                         iters, thr)
-                theta = gammad / gammad.sum()
-                keep = np.nonzero(theta >= min_p)[0]
-                out_doc.extend([doc_id] * len(keep))
-                out_topic.extend(keep.tolist())
-                out_p.extend(theta[keep].tolist())
-            yield pd.DataFrame({"doc_id": pd.Series(out_doc, dtype="int64"),
-                                "topic_id": pd.Series(out_topic, dtype="int64"),
-                                "probability": pd.Series(out_p, dtype="float64")})
+        for doc_ids, _, _, _, g, _, _ in _infer_slices(
+                batches, bc.value, alpha, iters, thr, seed, update_no):
+            theta = g / np.sum(g, axis=1)[:, None]
+            row, topic = np.nonzero(theta >= min_p)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(doc_ids[row], pa.int64()),
+                 pa.array(topic, pa.int64()),
+                 pa.array(theta[row, topic], pa.float64())],
+                names=["doc_id", "topic_id", "probability"])
 
-    return corpus_bow(postings).mapInPandas(
+    return corpus_bow(postings).mapInArrow(
         gen, "doc_id long, topic_id long, probability double")
 
 
@@ -433,29 +577,18 @@ def doc_gamma(postings: DataFrame, model: LdaModel,
     seed = model.random_seed
 
     def gen(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        eeb = bc.value
-        for pdf in batches:
-            out_doc, out_g = [], []
-            for doc_id, ids_l, cts_l in zip(pdf["doc_id"], pdf["ids"],
-                                            pdf["cts"]):
-                ids = np.asarray(ids_l, dtype=np.int64)
-                cts = np.asarray(cts_l, dtype=np.float64)
-                gammad = init_gamma(seed, update_no, doc_id, k)
-                gammad, _, _ = infer_doc(ids, cts, gammad, eeb, alpha,
-                                         iters, thr)
-                out_doc.append(doc_id)
-                out_g.append(gammad.tolist())
-            yield pd.DataFrame({"doc_id": pd.Series(out_doc, dtype="int64"),
-                                "gamma": pd.Series(out_g)})
+        for doc_ids, _, _, _, g, _, _ in _infer_slices(
+                batches, bc.value, alpha, iters, thr, seed, update_no):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.repeat(doc_ids, k), pa.int64()),
+                 pa.array(np.tile(np.arange(k), doc_ids.size), pa.int64()),
+                 pa.array(g.ravel(), pa.float64())],
+                names=["doc_id", "topic_id", "gamma"])
 
-    wide = corpus_bow(postings).mapInPandas(
-        gen, "doc_id long, gamma array<double>")
-    return wide.select(
-        "doc_id",
-        F.posexplode("gamma").alias("topic_id", "gamma")
-    ).select("doc_id", F.col("topic_id").cast("long"), "gamma")
+    return corpus_bow(postings).mapInArrow(
+        gen, "doc_id long, topic_id long, gamma double")
 
 
 def bound(postings: DataFrame, model: LdaModel,
@@ -463,7 +596,6 @@ def bound(postings: DataFrame, model: LdaModel,
     """The ELBO over the corpus (ldamodel.py:1085-1145): per-document terms
     computed distributed (fresh inference per doc, as the reference does when
     no γ is supplied), topic-prior terms added on the driver."""
-    k = model.num_topics
     lam = model.get_lambda()
     elogbeta = dirichlet_expectation(lam)
     sc = postings.sparkSession.sparkContext
@@ -475,28 +607,24 @@ def bound(postings: DataFrame, model: LdaModel,
     glnsum_alpha = float(gammaln(np.sum(alpha)))
 
     def gen(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        eeb, elb = bc_eeb.value, bc_elb.value
+        elb = bc_elb.value
         score = 0.0
-        for pdf in batches:
-            for doc_id, ids_l, cts_l in zip(pdf["doc_id"], pdf["ids"], pdf["cts"]):
-                ids = np.asarray(ids_l, dtype=np.int64)
-                cts = np.asarray(cts_l, dtype=np.float64)
-                gammad = init_gamma(seed, update_no, doc_id, k)
-                gammad, _, _ = infer_doc(ids, cts, gammad, eeb, alpha,
-                                         iters, thr)
-                elogthetad = dirichlet_expectation(gammad)
-                # E[log p(doc | θ, β)]
-                score += float(np.sum(
-                    cts * logsumexp(elogthetad[np.newaxis, :] + elb[:, ids].T)))
-                # E[log p(θ|α) − log q(θ|γ)]
-                score += float(np.sum((alpha - gammad) * elogthetad))
-                score += float(np.sum(gammaln(gammad))) - galpha
-                score += glnsum_alpha - float(gammaln(np.sum(gammad)))
-        yield pd.DataFrame({"v": [score]})
+        for _, ids, cts, lens, g, _, _ in _infer_slices(
+                batches, bc_eeb.value, alpha, iters, thr, seed, update_no):
+            elogtheta = dirichlet_expectation(g)
+            # E[log p(doc | θ, β)]
+            score += float(np.sum(cts * logsumexp(
+                np.repeat(elogtheta, lens, axis=0) + elb.T[ids])))
+            # E[log p(θ|α) − log q(θ|γ)]
+            score += float(np.sum((alpha - g) * elogtheta))
+            score += float(np.sum(gammaln(g))) - galpha * lens.size
+            score += float(np.sum(glnsum_alpha - gammaln(np.sum(g, axis=1))))
+        yield pa.RecordBatch.from_arrays([pa.array([score], pa.float64())],
+                                         names=["v"])
 
-    part = (corpus_bow(postings).mapInPandas(gen, "v double")
+    part = (corpus_bow(postings).mapInArrow(gen, "v double")
             .agg(F.sum("v").alias("v")).first()["v"] or 0.0)
     score = part * subsample_ratio
     # E[log p(β|η) − log q(β|λ)] — driver terms (ldamodel.py:1134-1143)

@@ -144,3 +144,20 @@ def test_shingles_short_docs_yield_no_grams(spark):
     # and the full minhash path survives a mixed corpus
     sigs = D.minhash_signatures(docs, num_hashes=4, shingle_n=3)
     assert [r["doc_id"] for r in sigs.collect()] == [2]
+
+
+def test_band_pairs_repeated_doc_ids_give_no_self_pairs(spark):
+    """A doc id that appears twice in a bucket yields no (d, d) pair, and
+    the max_bucket gate counts distinct docs."""
+    sig = (7, 11, 13, 17)
+    sigs = spark.createDataFrame(
+        [(1, *sig), (1, *sig), (2, *sig)],
+        "doc_id long, sig_0 long, sig_1 long, sig_2 long, sig_3 long")
+    pairs = D.minhash_band_pairs(sigs, bands=2, rows_per_band=2)
+    assert sorted((r["doc_a"], r["doc_b"]) for r in pairs.collect()) == [(1, 2)]
+    gated = D.minhash_band_pairs(sigs, bands=2, rows_per_band=2, max_bucket=2)
+    assert [(r["doc_a"], r["doc_b"]) for r in gated.collect()] == [(1, 2)]
+    lone = spark.createDataFrame(
+        [(3, *sig), (3, *sig)],
+        "doc_id long, sig_0 long, sig_1 long, sig_2 long, sig_3 long")
+    assert D.minhash_band_pairs(lone, bands=2, rows_per_band=2).count() == 0

@@ -1,6 +1,6 @@
 """Driver-contract regression: a fast subset of queries() checked against
-their DuckDB oracles at sf0.001, plus the two LSI oracles at sf0.01, the sf
-their persisted-artifact SQL is keyed to (the full sweep lives in
+their DuckDB oracles at sf0.001, plus the two LSI and two LDA oracles at
+sf0.01, the sf their persisted-artifact SQL is keyed to (the full sweep lives in
 tools/check_oracles.py)."""
 
 import math
@@ -13,6 +13,7 @@ SF_DIR = "/root/testdata/sf0.001"
 # the artifact-backed oracles read the model Spark persisted at sf0.01
 ART_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 LSI_ORACLES = ["lsi_topics", "lsi_merged_topics"]
+LDA_ORACLES = ["lda_doc_topics", "lda_topic_diff"]
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 SUBSET = ["vocab", "doc2bow", "bm25_okapi", "bm25_topk", "dedup_exact",
@@ -70,6 +71,13 @@ def test_query_matches_oracle(spark, duck, name):
 def test_lsi_oracle_matches_at_artifact_sf(spark, duck_art, name):
     """The LSI fits (plain and merged) against their DuckDB oracles, which
     read the u Spark persisted at the sf the oracle SQL is keyed to."""
+    _check_oracle(spark, duck_art, ART_SF_DIR, name)
+
+
+@pytest.mark.parametrize("name", LDA_ORACLES)
+def test_lda_oracle_matches_at_artifact_sf(spark, duck_art, name):
+    """The LDA fit and its document-γ inference against their DuckDB
+    oracles, which read the γ and topics Spark persisted at sf0.01."""
     _check_oracle(spark, duck_art, ART_SF_DIR, name)
 
 
