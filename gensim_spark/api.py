@@ -1206,47 +1206,34 @@ class SparseMatrixSimilarity:
 
 class Similarity:
     """``gensim.similarities.Similarity`` — the sharded index (docsim.py:
-    260-758): builds packed doc-range shards under ``output_prefix`` and
-    answers queries with block-max WAND + two-stage merge."""
+    260-758): builds packed doc-range shards under ``output_prefix`` (a
+    fresh snapshot table, replacing any store already there) and answers
+    queries with block-max WAND + two-stage merge."""
 
     def __init__(self, output_prefix: str, weighted_corpus: DataFrame,
-                 num_best: int = 10, shardsize: int = 32768,
-                 iceberg: bool = False):
+                 num_best: int = 10, shardsize: int = 32768):
         from gensim_spark.index import layout
 
         self.prefix = output_prefix
         self.num_best = num_best
-        self.iceberg = iceberg
         self._spark = weighted_corpus.sparkSession
-        if iceberg:
-            layout.write_packed_shards_iceberg(
-                weighted_corpus, output_prefix, docs_per_shard=shardsize)
-        else:
-            layout.write_packed_shards(weighted_corpus, self.prefix,
-                                       docs_per_shard=shardsize,
-                                       resume=False)
+        layout.write_packed_shards(weighted_corpus, self.prefix,
+                                   docs_per_shard=shardsize, resume=False)
 
     def __getitem__(self, query_terms: dict[int, dict[int, float]]) -> DataFrame:
-        from gensim_spark.index import layout, wand
+        from gensim_spark.index import wand
 
-        packed = (layout.read_packed_shards_iceberg(self._spark, self.prefix)
-                  if self.iceberg else None)
         return wand.wand_topk(self._spark, self.prefix, query_terms,
-                              k=self.num_best, packed=packed)
+                              k=self.num_best)
 
     def add_documents(self, weighted_corpus: DataFrame) -> None:
         """Append new documents as fresh shards in one atomic snapshot
-        (docsim.py:367-416; Iceberg store only). New doc_ids must start at
-        the next shard boundary — the reference's own
-        new-docs-enter-the-tail-shard invariant."""
-        if not self.iceberg:
-            raise ValueError(
-                "add_documents needs the snapshot store (iceberg=True); "
-                "the plain-manifest store is write-once — rebuild or use "
-                "streaming.incremental for continuous ingest.")
+        (docsim.py:367-416). New doc_ids must start at the next shard
+        boundary — the reference's own new-docs-enter-the-tail-shard
+        invariant."""
         from gensim_spark.index import layout
 
-        layout.append_packed_shards_iceberg(weighted_corpus, self.prefix)
+        layout.append_packed_shards(weighted_corpus, self.prefix)
 
 
 class MatrixSimilarity:

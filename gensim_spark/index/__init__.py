@@ -3,8 +3,9 @@
 - ``packing``    — delta+varint run encoding with per-block max-weight
   metadata (the block-max WAND skip structure).
 - ``layout``     — doc-sharded shard tables of packed runs + term-bucketed
-  plain postings (the relational scoring path), head-term salting, build
-  manifest with per-partition checkpoint/lineage/metrics.
+  plain postings (the relational scoring path), head-term salting; the
+  packed store's snapshot log records each shard group's commit,
+  lineage and metrics (checkpoint/resume).
 - ``wand``       — block-max WAND top-k over packed shards, score-exact vs
   the exhaustive join-agg plan.
 """

@@ -258,12 +258,14 @@ class IceTable:
                 out = out.withColumn(pf.name, pf.spark_expr())
         # Iceberg keeps partition values IN the data files; Spark's
         # partitionBy strips its columns from the files, so the directory
-        # layout uses a _p_-prefixed copy and the real column stays data.
+        # layout uses a p_-prefixed copy and the real column stays data.
+        # (No leading "_" or ".": pyarrow's dataset discovery skips such
+        # directories by default.)
         for name in part_names:
-            out = out.withColumn(f"_p_{name}", F.col(name))
+            out = out.withColumn(f"p_{name}", F.col(name))
         writer = out.write.mode("overwrite")
         if part_names:
-            writer = writer.partitionBy(*[f"_p_{n}" for n in part_names])
+            writer = writer.partitionBy(*[f"p_{n}" for n in part_names])
         writer.parquet(staging)
         return write_uuid, staging, _collect_file_stats(staging, part_names)
 
@@ -822,7 +824,7 @@ def _collect_file_stats(staging: str, part_names: list[str]) -> list[dict]:
             for piece in rel.split(os.sep):
                 if "=" in piece:
                     k, v = piece.split("=", 1)
-                    k = k[3:] if k.startswith("_p_") else k
+                    k = k[2:] if k.startswith("p_") else k
                     try:
                         partition[k] = int(v)
                     except ValueError:

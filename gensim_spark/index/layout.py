@@ -11,28 +11,29 @@ Physical design (SURVEY.md §2.5/§7.1 M4; reference analogue:
   delta+varint packed + float32 weights + block-max skip metadata
   (``packing.py``). One pack task per shard sorts its postings by (term,
   doc) and packs them an Arrow batch at a time (``packing.pack_runs``, one
-  set of numpy calls per batch, not one Python call per run). Every packed
-  writer — build and append, plain and Iceberg — runs that one plan
-  (``_pack_write``). Parquet (partitioned by shard_id) stands in for the
-  Iceberg shard tables — same layout, same pruning, no extra runtime dep;
-  min/max stats on ``term_id`` give run-level pruning inside each shard file.
+  set of numpy calls per batch, not one Python call per run). Build and
+  append run that one plan (``_pack_write``). The packed store is an
+  ``icetable`` snapshot table rooted at the index directory
+  (``metadata/`` + ``data/``), identity-partitioned on shard_id: one file
+  per shard, min/max stats on ``term_id`` for run-level pruning inside it.
 - **Term-bucketed plain postings** (``write_postings_bucketed``): the
   relational scoring path — postings bucketed by ``term_id % n_buckets`` so a
   query's scan prunes to its terms' buckets; **head-term salting** splits any
   term with df above a threshold across ``salt`` sub-partitions to bound the
   largest shuffle/file partition (explicit skew handling; the salt column is
   part of the layout, queries just aggregate across salts).
-- **Checkpoint manifest**: the build commits shard-groups one at a time and
-  records lineage + metrics per group in ``manifest.json``; a re-run skips
-  committed groups (resume-from-checkpoint). One aggregate up front finds
-  the groups that hold postings; an empty group (any corpus with fewer
-  shards than groups has some) is committed with zero metrics, no data
-  directory and no Spark job.
+- **Snapshot log**: the build commits shard-groups one at a time, each as
+  one append snapshot whose summary records the group's lineage + metrics;
+  a re-run skips committed groups (resume-from-checkpoint). The snapshot
+  log is the only commit record: every reader (Spark scan, WAND, the
+  pyarrow serving node) plans its files from a snapshot, so the staged
+  files of a crashed write are never read. One aggregate up front finds
+  the groups that hold postings; an empty group commits a snapshot with
+  zero metrics, no files and no Spark job.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -137,15 +138,15 @@ def _with_shard(weighted: DataFrame, docs_per_shard: int) -> DataFrame:
         "shard_id", F.expr(f"doc_id div {int(docs_per_shard)}"))
 
 
-def _pack_write(base: DataFrame, docs_per_shard: int, write) -> tuple:
+def _pack_write(base: DataFrame, docs_per_shard: int, table) -> tuple:
     """The one pack plan every packed writer runs: ``base`` (doc_id,
     term_id, weight, shard_id) → every shard packed whole by one task
-    (repartition by shard, sort by (shard, term, doc), batch-pack) →
-    ``write(packed)``, which returns ``(dir_written, handle)``. Metrics come
-    from the PACKED output (column-pruned: term_id + n only), not a second
-    shuffle of the raw postings; docs ride the write job via the
-    accumulator (shards are doc-disjoint, so per-shard counts sum exactly).
-    Returns (metrics, handle)."""
+    (repartition by shard, sort by (shard, term, doc), batch-pack) → files
+    staged in ``table`` (uncommitted: the caller commits them together with
+    the metrics). Metrics come from the PACKED output (column-pruned:
+    term_id + n only), not a second shuffle of the raw postings; docs ride
+    the write job via the accumulator (shards are doc-disjoint, so
+    per-shard counts sum exactly). Returns (metrics, write_uuid, files)."""
     spark = base.sparkSession
     docs_acc = spark.sparkContext.accumulator(0)
     packed = (
@@ -154,34 +155,16 @@ def _pack_write(base: DataFrame, docs_per_shard: int, write) -> tuple:
         .mapInArrow(_pack_partition_fn(docs_acc, docs_per_shard),
                     schema=PACKED_SCHEMA)
     )
-    written, handle = write(packed)
+    write_uuid, staging, files = table.stage_write(packed)
     agg = (
-        spark.read.schema(PACKED_SCHEMA).parquet(written)
+        spark.read.schema(PACKED_SCHEMA).parquet(staging)
         .select("term_id", "n")
         .agg(F.countDistinct("term_id").alias("terms"),
              F.sum("n").alias("postings"))
         .collect()[0]
     )
-    return {"docs": docs_acc.value, "terms": int(agg["terms"]),
-            "postings": int(agg["postings"] or 0)}, handle
-
-
-def _parquet_writer(path: str):
-    def write(packed: DataFrame) -> tuple:
-        packed.write.mode("overwrite").partitionBy("shard_id").parquet(path)
-        return path, None
-
-    return write
-
-
-def _staged_writer(table):
-    """Iceberg-semantics write: stage the files (committed by the caller
-    together with the group's metrics)."""
-    def write(packed: DataFrame) -> tuple:
-        write_uuid, staging, files = table.stage_write(packed)
-        return staging, (write_uuid, files)
-
-    return write
+    return ({"docs": docs_acc.value, "terms": int(agg["terms"]),
+             "postings": int(agg["postings"] or 0)}, write_uuid, files)
 
 
 def _nonempty_groups(base: DataFrame, num_groups: int) -> set[int]:
@@ -196,176 +179,177 @@ def _nonempty_groups(base: DataFrame, num_groups: int) -> set[int]:
 _EMPTY_GROUP_METRICS = {"docs": 0, "terms": 0, "postings": 0}
 
 
+def _open_store(out_dir: str, docs_per_shard: int, num_groups: int,
+                resume: bool):
+    """The packed table at ``out_dir``: the existing one when resuming,
+    else a fresh one. Replacing removes only the table's own ``metadata``
+    and ``data`` directories — ``vocab/``, ``positional/`` and ``doclen/``
+    beside them stay."""
+    import shutil
+
+    from gensim_spark.index.icetable import IceTable, PartitionField
+
+    if resume:
+        try:
+            table = IceTable.load(out_dir)
+        except FileNotFoundError:
+            pass
+        else:
+            props = table.meta["properties"]
+            if (int(props["docs_per_shard"]), int(props["num_groups"])) \
+                    != (docs_per_shard, num_groups):
+                raise ValueError(
+                    "resume with different docs_per_shard or num_groups")
+            return table
+    for sub in ("metadata", "data"):
+        shutil.rmtree(os.path.join(out_dir, sub), ignore_errors=True)
+    return IceTable.create(
+        out_dir, PACKED_SCHEMA,
+        partition_spec=[PartitionField("shard_id", "shard_id", "identity")],
+        properties={"docs_per_shard": str(docs_per_shard),
+                    "num_groups": str(num_groups),
+                    "write.format": "packed-postings-v1"})
+
+
+def _committed_groups(table) -> set[int]:
+    return {int(s.summary["group"]) for s in table.snapshots
+            if "group" in s.summary}
+
+
 def write_packed_shards(weighted: DataFrame, out_dir: str,
                         docs_per_shard: int = 32768,
                         num_groups: int = 8,
-                        resume: bool = True) -> dict:
-    """weighted (doc_id, term_id, weight) → packed shard tables under
-    ``out_dir`` with a per-group checkpoint manifest.
+                        resume: bool = True) -> "IceTable":
+    """weighted (doc_id, term_id, weight) → the packed shard table rooted
+    at ``out_dir``.
 
     Shards are built in ``num_groups`` commit units (group = shard_id %
     num_groups). One aggregate up front finds the groups that hold
-    postings; each of those is one pack plan: filter → repartition by shard
-    → sort within partitions by (term, doc) → batch-pack (mapInArrow) →
-    write parquet partitioned by shard_id. An empty group launches no Spark
-    job: it is recorded as committed with zero docs/terms/postings and has
-    no data directory. A killed build resumes by skipping committed groups
-    recorded in ``manifest.json`` (lineage + metrics).
+    postings; each of those is one pack plan (filter → repartition by shard
+    → sort within partitions by (term, doc) → batch-pack) staged as parquet
+    files and committed as one append snapshot whose summary carries the
+    group id and its docs/terms/postings metrics. An empty group launches
+    no Spark job: it commits a snapshot with no files and zero metrics.
+
+    ``resume=True`` skips the groups the snapshot log records as committed;
+    a build killed mid-group left only unreferenced staged files, which no
+    reader plans. ``resume=False`` replaces an existing table.
 
     docs_per_shard default mirrors the reference shardsize 32768
     (docsim.py:305).
     """
-    import shutil
-
-    os.makedirs(out_dir, exist_ok=True)
-    manifest_path = os.path.join(out_dir, "manifest.json")
-    manifest = {"params": {"docs_per_shard": docs_per_shard,
-                           "num_groups": num_groups},
-                "groups": {}}
-    if resume and os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            manifest = json.load(f)
-        if manifest["params"]["docs_per_shard"] != docs_per_shard:
-            raise ValueError("resume with different docs_per_shard")
-
+    table = _open_store(out_dir, docs_per_shard, num_groups, resume)
     base = _with_shard(weighted, docs_per_shard)
-    data_dir = os.path.join(out_dir, "data")
     todo = [g for g in range(num_groups)
-            if not manifest["groups"].get(str(g), {}).get("committed")]
+            if g not in _committed_groups(table)]
     nonempty = _nonempty_groups(base, num_groups) if todo else set()
     for g in todo:
         t0 = time.perf_counter()
-        # exactly-once resume: each group owns its subdirectory; an
-        # uncommitted (crashed mid-write) group is wiped before rewriting,
-        # so re-running after any failure never duplicates rows.
-        group_dir = os.path.join(data_dir, f"group={g}")
-        if os.path.exists(group_dir):
-            shutil.rmtree(group_dir)
         if g in nonempty:
             part = base.filter(
                 F.pmod(F.col("shard_id"), F.lit(num_groups)) == g)
-            metrics, _ = _pack_write(part, docs_per_shard,
-                                     _parquet_writer(group_dir))
+            metrics, write_uuid, files = _pack_write(part, docs_per_shard,
+                                                     table)
         else:
-            metrics = _EMPTY_GROUP_METRICS
-        manifest["groups"][str(g)] = {
-            "committed": True, **metrics,
+            metrics, write_uuid, files = (_EMPTY_GROUP_METRICS,
+                                          f"empty-{g}", [])
+        # the snapshot publishes data + lineage metrics atomically together
+        table.commit_staged(files, write_uuid, summary={
+            "group": g, **metrics,
             "wall_sec": round(time.perf_counter() - t0, 2),
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        with open(manifest_path, "w") as f:
-            json.dump(manifest, f, indent=1)
-    return manifest
+        })
+    return table
 
 
-def read_packed_shards(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "data"))
+def next_shard_boundary(out_dir: str) -> int:
+    """First doc id an append may use: ``(max committed shard + 1) ·
+    docs_per_shard``, from the current snapshot's ``shard_id`` partition
+    values (metadata only — no Spark job, no data file opened). Raises if
+    a build group is uncommitted: an interrupted build must finish
+    (``resume=True``) before anything is appended past it."""
+    from gensim_spark.index.icetable import IceTable
 
-
-def packed_max_shard(out_dir: str) -> int:
-    """Max shard id from the hive directory names (ALL group dirs,
-    committed or not) — a dirname scan, no data read."""
-    import glob
-
-    ids = [int(os.path.basename(p).split("=", 1)[1])
-           for p in glob.glob(os.path.join(out_dir, "data", "group=*",
-                                           "shard_id=*"))]
-    return max(ids) if ids else -1
-
-
-def packed_committed_max_shard(out_dir: str) -> int:
-    """Max shard id counting ONLY manifest-committed groups — the right
-    boundary source for append pre-checks, since an orphan dir from a
-    crashed append would otherwise inflate the boundary and make the
-    documented retry-the-same-batch path impossible."""
-    import glob
-
-    with open(os.path.join(out_dir, "manifest.json")) as f:
-        manifest = json.load(f)
-    ids = [
-        int(os.path.basename(p).split("=", 1)[1])
-        for k, v in manifest["groups"].items() if v.get("committed")
-        for p in glob.glob(os.path.join(out_dir, "data", f"group={k}",
-                                        "shard_id=*"))
-    ]
-    return max(ids) if ids else -1
-
-
-def append_packed_shards(weighted_new: DataFrame, out_dir: str,
-                         min_doc_id: int | None = None) -> dict:
-    """``Similarity.add_documents`` for the PLAIN manifest store: pack the
-    new documents into fresh shards and commit them as one extra group
-    (integer group id past the build's, so partition-type inference stays
-    uniform; the WAND/serving readers just see more (shard, term) runs —
-    shards are doc-disjoint, so per-shard top-k merging is unchanged).
-
-    Same invariant as :func:`append_packed_shards_iceberg` (the
-    reference's new-docs-enter-the-tail-shard rule, docsim.py:367-416):
-    new doc_ids must start at the NEXT SHARD BOUNDARY —
-    ``(max_shard + 1) · docs_per_shard`` — not merely above the index
-    max. This is the reader's contract, not pedantry: the WAND shard
-    kernel holds exactly one packed run per (shard, term)
-    (wand.py::_shard_topk_factory), so a second run for a tail shard
-    would silently shadow the first. Exactly-once: a crashed append
-    leaves an uncommitted group dir; the next append wipes every
-    data/group=* dir not committed in the manifest BEFORE computing the
-    boundary, so retrying the same batch succeeds (manifest commit is
-    last). ``min_doc_id``: pass the batch's precomputed min to skip the
-    extra pass over the weighted lineage."""
-    manifest_path = os.path.join(out_dir, "manifest.json")
-    with open(manifest_path) as f:
-        manifest = json.load(f)
-    dps = int(manifest["params"]["docs_per_shard"])
-    num_groups = int(manifest["params"]["num_groups"])
-    # an interrupted BUILD records nothing for its unfinished groups (the
-    # committed flag is only ever written True), so completeness = every
-    # build group key present-and-committed
-    missing = [g for g in range(num_groups)
-               if not manifest["groups"].get(str(g), {}).get("committed")]
+    table = IceTable.load(out_dir)
+    props = table.meta["properties"]
+    missing = sorted(set(range(int(props["num_groups"])))
+                     - _committed_groups(table))
     if missing:
         raise ValueError(
             f"append needs a fully committed store — build groups "
             f"{missing} are uncommitted; finish the interrupted build "
             "first (resume=True)")
-    # wipe orphan group dirs (a crashed append's partial write — with the
-    # build proven complete above, any dir outside the manifest is one);
-    # until this runs, readers would see the orphan's rows
-    import glob as _glob
-    import shutil as _shutil
+    shards = [f["partition"]["shard_id"] for f in table.plan_files()]
+    return (max(shards, default=-1) + 1) * int(props["docs_per_shard"])
 
-    committed_keys = {k for k, v in manifest["groups"].items()
-                      if v.get("committed")}
-    for p in _glob.glob(os.path.join(out_dir, "data", "group=*")):
-        if os.path.basename(p).split("=", 1)[1] not in committed_keys:
-            _shutil.rmtree(p)
-    max_shard = packed_committed_max_shard(out_dir)
-    boundary = (max_shard + 1) * dps
+
+def append_packed_shards(weighted_new: DataFrame, out_dir: str,
+                         min_doc_id: int | None = None) -> "IceTable":
+    """``Similarity.add_documents`` for the packed store (docsim.py:367-416
+    buffer-until-shardsize → close a NEW shard): pack the new documents
+    into fresh shards and commit them as ONE append snapshot.
+
+    The WAND reader holds one packed run per (shard, term)
+    (wand.py::_shard_topk_factory), so appended documents must land in
+    shards no committed snapshot wrote: their doc_ids must start at
+    :func:`next_shard_boundary` (the reference has the same invariant: new
+    docs always enter the fresh tail shard). Violations raise; for
+    arbitrary interleaved ids use the streaming store +
+    ``streaming.incremental.compact`` (the reopen_shard path). A crashed
+    append leaves only unreferenced staged files, so retrying the same
+    batch succeeds. ``min_doc_id``: pass the batch's precomputed min to
+    skip the extra pass over the weighted lineage."""
+    from gensim_spark.index.icetable import IceTable
+
+    boundary = next_shard_boundary(out_dir)
+    table = IceTable.load(out_dir)
+    dps = int(table.meta["properties"]["docs_per_shard"])
     mn = (min_doc_id if min_doc_id is not None else
           weighted_new.agg(F.min("doc_id").alias("mn")).collect()[0]["mn"])
     if mn is None:
-        return manifest
+        return table
     if int(mn) < boundary:
         raise ValueError(
             f"append_packed_shards needs doc_ids >= {boundary} (next "
-            f"shard boundary; max committed shard {max_shard}; the WAND "
-            f"reader holds one run per (shard, term), so new docs cannot "
-            f"extend a committed tail shard); got {mn}.")
-    g = max(int(k) for k in manifest["groups"]) + 1 \
-        if manifest["groups"] else 0
-    group_dir = os.path.join(out_dir, "data", f"group={g}")
-    if os.path.exists(group_dir):
-        _shutil.rmtree(group_dir)
+            f"shard boundary; the WAND reader holds one run per (shard, "
+            f"term), so new docs cannot extend a committed tail shard); "
+            f"got {mn}. Use the streaming incremental store + compact() "
+            "for interleaved ids.")
     t0 = time.perf_counter()
-    metrics, _ = _pack_write(_with_shard(weighted_new, dps), dps,
-                             _parquet_writer(group_dir))
-    manifest["groups"][str(g)] = {
-        "committed": True, "append": True, **metrics,
+    metrics, write_uuid, files = _pack_write(
+        _with_shard(weighted_new, dps), dps, table)
+    table.commit_staged(files, write_uuid, summary={
+        "append_batch": len(table.snapshots), **metrics,
         "wall_sec": round(time.perf_counter() - t0, 2),
-        "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-    }
-    with open(manifest_path, "w") as f:
-        json.dump(manifest, f, indent=1)
-    return manifest
+    })
+    return table
+
+
+def packed_files(out_dir: str, snapshot_id: int | None = None,
+                 shard_ids=None) -> list[dict]:
+    """Data-file entries (``path``, ``partition`` = {"shard_id": …}, row
+    count and column bounds) of the packed store at the current (or a
+    time-travelled) snapshot, pruned to ``shard_ids`` — planned from the
+    snapshot's manifests alone, no file opened. Every packed reader, Spark
+    or pyarrow, reads exactly these files."""
+    from gensim_spark.index.icetable import IceTable
+
+    pred = None
+    if shard_ids is not None:
+        wanted = {int(s) for s in shard_ids}
+        pred = lambda p: p.get("shard_id") in wanted  # noqa: E731
+    return IceTable.load(out_dir).plan_files(snapshot_id=snapshot_id,
+                                             partition_pred=pred)
+
+
+def read_packed_shards(spark: SparkSession, out_dir: str,
+                       snapshot_id: int | None = None,
+                       shard_ids: list[int] | None = None) -> DataFrame:
+    """Scan the packed store at the current (or a time-travelled) snapshot,
+    with manifest-level shard pruning."""
+    files = packed_files(out_dir, snapshot_id, shard_ids)
+    if not files:
+        return spark.createDataFrame([], PACKED_SCHEMA)
+    return spark.read.parquet(*[f["path"] for f in files])
 
 
 # --- term-bucketed plain postings (relational path) --------------------------
@@ -454,7 +438,7 @@ def append_postings_bucketed(new_rows: DataFrame, out_dir: str,
 
     Boundary guard (the reference's new-docs-enter-the-tail invariant,
     docsim.py:367-416, same contract as
-    :func:`append_packed_shards_iceberg`): new doc_ids must lie strictly
+    :func:`append_packed_shards`): new doc_ids must lie strictly
     above the store's current max doc_id, else old and new rows for one
     doc could both exist. The check reads parquet footer statistics only
     (:func:`max_doc_id_bucketed`) — no data scan. ``n_buckets`` must match
@@ -492,116 +476,6 @@ def read_postings_bucketed(spark: SparkSession, out_dir: str,
 
 
 # --- Iceberg-backed store (north rule: "Iceberg-backed shard tables") --------
-
-def write_packed_shards_iceberg(weighted: DataFrame, table_loc: str,
-                                docs_per_shard: int = 32768,
-                                num_groups: int = 8,
-                                resume: bool = True) -> "IceTable":
-    """Packed shard store as an Iceberg-semantics table: each shard group is
-    one snapshot append whose summary carries the lineage + build metrics
-    that manifest.json carried before. Resume reads committed groups from
-    the snapshot log; a crash mid-write leaves only unreferenced staged
-    files (no wipe-before-rewrite needed — commits are atomic)."""
-    from gensim_spark.index.icetable import IceTable, PartitionField
-
-    try:
-        table = IceTable.load(table_loc)
-        props = table.meta["properties"]
-        if int(props["docs_per_shard"]) != docs_per_shard:
-            raise ValueError("resume with different docs_per_shard")
-        if not resume:
-            raise FileExistsError(f"table exists at {table_loc} (resume off)")
-    except FileNotFoundError:
-        table = IceTable.create(
-            table_loc, PACKED_SCHEMA,
-            partition_spec=[PartitionField("shard_id", "shard_id",
-                                           "identity")],
-            properties={"docs_per_shard": str(docs_per_shard),
-                        "num_groups": str(num_groups),
-                        "write.format": "packed-postings-v1"},
-        )
-    committed = {
-        int(s.summary["group"]) for s in table.snapshots
-        if s.operation == "append" and "group" in s.summary
-    }
-    base = _with_shard(weighted, docs_per_shard)
-    todo = [g for g in range(num_groups) if g not in committed]
-    nonempty = _nonempty_groups(base, num_groups) if todo else set()
-    for g in todo:
-        t0 = time.perf_counter()
-        if g in nonempty:
-            part = base.filter(
-                F.pmod(F.col("shard_id"), F.lit(num_groups)) == g)
-            metrics, (write_uuid, files) = _pack_write(
-                part, docs_per_shard, _staged_writer(table))
-        else:
-            # an empty group commits a snapshot with no files, so resume
-            # and appenders see every group of the build as committed
-            metrics, write_uuid, files = (_EMPTY_GROUP_METRICS,
-                                          f"empty-{g}", [])
-        # the snapshot publishes data + lineage metrics atomically together
-        table.commit_staged(files, write_uuid, summary={
-            "group": g, **metrics,
-            "wall_sec": round(time.perf_counter() - t0, 2),
-        })
-    return table
-
-
-def append_packed_shards_iceberg(weighted_new: DataFrame,
-                                 table_loc: str) -> "IceTable":
-    """``Similarity.add_documents`` for the snapshot store
-    (docsim.py:367-416 buffer-until-shardsize → close a NEW shard): pack
-    the new documents into fresh shards and commit ONE append snapshot.
-
-    The WAND reader holds one packed run per (shard, term), so appended
-    documents must land in shards no existing snapshot wrote — i.e. their
-    doc_ids must start at the next shard boundary (the reference has the
-    same invariant: new docs always enter the fresh tail shard). Violations
-    raise; for arbitrary interleaved ids use the streaming store +
-    ``streaming.incremental.compact`` (the reopen_shard path)."""
-    from gensim_spark.index.icetable import IceTable
-
-    spark = weighted_new.sparkSession
-    table = IceTable.load(table_loc)
-    docs_per_shard = int(table.meta["properties"]["docs_per_shard"])
-    existing = read_packed_shards_iceberg(spark, table_loc)
-    row = existing.agg(F.max("shard_id").alias("mx")).collect()[0]
-    max_shard = -1 if row["mx"] is None else int(row["mx"])
-    min_id = weighted_new.agg(F.min("doc_id").alias("mn")).collect()[0]["mn"]
-    boundary = (max_shard + 1) * docs_per_shard
-    if min_id is None:
-        return table
-    if min_id < boundary:
-        raise ValueError(
-            f"add_documents needs doc_ids >= {boundary} (next shard "
-            f"boundary; max committed shard {max_shard}); got {min_id}. "
-            "Use the streaming incremental store + compact() for "
-            "interleaved ids.")
-    t0 = time.perf_counter()
-    metrics, (write_uuid, files) = _pack_write(
-        _with_shard(weighted_new, docs_per_shard), docs_per_shard,
-        _staged_writer(table))
-    table.commit_staged(files, write_uuid, summary={
-        "append_batch": len(table.snapshots), **metrics,
-        "wall_sec": round(time.perf_counter() - t0, 2),
-    })
-    return table
-
-
-def read_packed_shards_iceberg(spark: SparkSession, table_loc: str,
-                               snapshot_id: int | None = None,
-                               shard_ids: list[int] | None = None) -> DataFrame:
-    """Scan the packed store at the current (or a time-traveled) snapshot,
-    with manifest-level shard pruning."""
-    from gensim_spark.index.icetable import IceTable
-
-    table = IceTable.load(table_loc)
-    pred = None
-    if shard_ids is not None:
-        wanted = set(shard_ids)
-        pred = lambda p: p.get("shard_id") in wanted  # noqa: E731
-    return table.scan(spark, snapshot_id=snapshot_id, partition_pred=pred)
-
 
 def write_postings_bucketed_iceberg(weighted: DataFrame, table_loc: str,
                                     n_buckets: int = 64,

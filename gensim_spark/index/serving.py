@@ -1,7 +1,7 @@
 """In-process query serving over packed WAND shards — no Spark job per query.
 
 Spark builds, compacts, and maintains the packed posting shards
-(`layout.write_packed_shards` / the Iceberg variants); SERVING them is a
+(`layout.write_packed_shards` / `append_packed_shards`); SERVING them is a
 read-only problem over immutable files. At cluster scale each query node
 holds a slice of the shard set (page-cache / RAM resident) and answers
 shard-local top-k with the same block-max WAND kernel the distributed path
@@ -34,11 +34,22 @@ import os
 
 import numpy as np
 
+from gensim_spark.index.layout import PACKED_SCHEMA, packed_files
 from gensim_spark.index.wand import _TermRun, _wand
 
 _RUN_COLUMNS = ["shard_id", "term_id", "doc_blob", "weight_blob",
                 "block_max", "block_last_doc", "block_first_doc",
                 "block_offset"]
+
+
+def _packed_arrow_schema():
+    """``layout.PACKED_SCHEMA`` as an Arrow schema: a store with no files
+    (an empty corpus) still reads as an empty table."""
+    import pyarrow as pa
+
+    return pa.schema([(name, pa.int64() if typ == "long" else pa.binary())
+                      for name, typ in (f.split()
+                                        for f in PACKED_SCHEMA.split(","))])
 
 
 def merge_topk(node_rows, k: int = 10) -> list[tuple[int, int, float, int]]:
@@ -68,8 +79,9 @@ def _norm_exclude(exclude_doc_ids):
 
 class PackedIndexServer:
     """One query node over a packed shard store (``index_dir`` as written by
-    ``layout.write_packed_shards``: hive-partitioned parquet under
-    ``index_dir/data``).
+    ``layout.write_packed_shards``). The node reads exactly the files the
+    store's current snapshot lists (``layout.packed_files``): staged files
+    of a crashed or in-flight write are never served.
 
     ``preload=True`` (default) decodes the store's parquet into one Arrow
     table at construction and indexes its rows by term — but constructs a
@@ -84,8 +96,9 @@ class PackedIndexServer:
     ``shards``: restrict this node to a slice of the shard set — the
     deployment unit (shards are doc-disjoint, so N nodes each serving their
     slice's k-list and a broker merging the lists IS the distributed plan's
-    two-stage TakeOrdered, answer-identical by construction). ``None``
-    serves the whole store.
+    two-stage TakeOrdered, answer-identical by construction). The slice
+    prunes the snapshot's file list (one file per shard), so a node never
+    opens another node's files. ``None`` serves the whole store.
 
     ``eager_max`` overrides ``wand.EAGER_DECODE_MAX`` (postings count at or
     below which a run decodes its whole doc array up front).
@@ -93,23 +106,24 @@ class PackedIndexServer:
 
     def __init__(self, index_dir: str, *, preload: bool = True,
                  shards=None, eager_max: int | None = None):
+        import pyarrow as pa
         import pyarrow.dataset as pads
+        import pyarrow.parquet as pq
 
-        self._data_dir = os.path.join(index_dir, "data")
+        paths = [f["path"] for f in packed_files(index_dir, shard_ids=shards)]
         self._pads = pads
-        self._dataset = pads.dataset(self._data_dir, format="parquet",
-                                     partitioning="hive")
-        self._shard_flt = None
-        if shards is not None:
-            self._shard_flt = pads.field("shard_id").isin(
-                [int(s) for s in shards])
+        self._dataset = pads.dataset(paths, schema=_packed_arrow_schema(),
+                                     format="parquet")
         self._eager_max = eager_max
         self._tbl = None
         self._run_cache: dict[int, list[tuple[int, _TermRun]]] = {}
         if preload:
-            self._tbl = self._dataset.to_table(
-                columns=_RUN_COLUMNS,
-                filter=self._shard_flt).combine_chunks()
+            # whole-file reads: a dataset scan costs about 1 ms more per
+            # 2 MB shard file; the dataset reads an empty store
+            self._tbl = pa.concat_tables(
+                [pq.ParquetFile(p).read(columns=_RUN_COLUMNS) for p in paths]
+                or [self._dataset.to_table(columns=_RUN_COLUMNS)]
+            ).combine_chunks()
             tids = self._tbl.column("term_id").to_numpy()
             self._sids = self._tbl.column("shard_id").to_numpy()
             self._order = np.argsort(tids, kind="stable")
@@ -117,15 +131,10 @@ class PackedIndexServer:
 
     @staticmethod
     def shard_ids(index_dir: str) -> list[int]:
-        """Shard ids present in the store (from the hive directory layout)."""
-        import glob
-
-        ids = {
-            int(os.path.basename(p).split("=", 1)[1])
-            for p in glob.glob(os.path.join(index_dir, "data", "group=*",
-                                            "shard_id=*"))
-        }
-        return sorted(ids)
+        """Shard ids in the store's current snapshot (manifest partition
+        values — no data file opened)."""
+        return sorted({f["partition"]["shard_id"]
+                       for f in packed_files(index_dir)})
 
     def _mk_run(self, tbl, i: int) -> _TermRun:
         return _TermRun(
@@ -151,8 +160,6 @@ class PackedIndexServer:
     def _read_runs(self, term_ids) -> dict[int, list[tuple[int, _TermRun]]]:
         """Cold path: fetch only these terms' runs from parquet."""
         flt = self._pads.field("term_id").isin([int(t) for t in term_ids])
-        if self._shard_flt is not None:
-            flt = flt & self._shard_flt
         tbl = self._dataset.to_table(columns=_RUN_COLUMNS, filter=flt)
         tbl = tbl.combine_chunks()
         tids = tbl.column("term_id").to_numpy()

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Index build job: pages parquet (url, warc_ts, html, text, lang) → packed
-shard index + vocab table + manifest. Resumable (--resume skips committed
-shard groups via the manifest)."""
+shard store (a snapshot table: ``metadata/`` + ``data/``) + vocab table +
+``build_metrics.json``. Resumable: a re-run skips the shard groups the
+store's snapshot log records as committed (``--no-resume`` rebuilds)."""
 
 from __future__ import annotations
 
@@ -19,10 +20,12 @@ sys.path.insert(
 def run(spark, input_path: str, output: str, variant: str = "okapi",
         docs_per_shard: int = 32768, num_groups: int = 8,
         from_html: bool = False, resume: bool = True,
-        iceberg: bool = False, positional: bool = False,
+        positional: bool = False,
         positional_n_buckets: int = 64) -> dict:
-    """The job body; returns build metrics. Importable so tests can drive
-    it on the shared session without a subprocess."""
+    """The job body; returns build metrics, with one entry per committed
+    shard group (docs/terms/postings/wall_sec, read back from the group's
+    snapshot summary). Importable so tests can drive it on the shared
+    session without a subprocess."""
     from pyspark.sql import functions as F
 
     from gensim_spark.index.layout import write_packed_shards
@@ -39,37 +42,16 @@ def run(spark, input_path: str, output: str, variant: str = "okapi",
         docs = pages.select("doc_id", "text")
         tok = P.tokenize(docs)
         idx = P.build(tok, variant=variant)
-    if iceberg:
-        from gensim_spark.index.icetable import IceTable
-        from gensim_spark.index.layout import write_packed_shards_iceberg
-
-        try:
-            vt = IceTable.load(f"{output}/vocab")
-        except FileNotFoundError:
-            vt = IceTable.create(
-                f"{output}/vocab",
-                "token string, term_id bigint, df bigint, cf bigint,"
-                " first_doc bigint")
-        vt.append(idx.vocab, operation="overwrite",
-                  summary={"num_docs": idx.num_docs})
-        table = write_packed_shards_iceberg(
-            idx.weighted, f"{output}/shards",
-            docs_per_shard=docs_per_shard,
-            num_groups=num_groups, resume=resume,
-        )
-        groups = {
-            str(s.summary["group"]): {k: s.summary[k] for k in
-                                      ("docs", "terms", "postings",
-                                       "wall_sec")}
-            for s in table.snapshots if "group" in s.summary
-        }
-    else:
-        idx.vocab.write.mode("overwrite").parquet(f"{output}/vocab")
-        manifest = write_packed_shards(
-            idx.weighted, output, docs_per_shard=docs_per_shard,
-            num_groups=num_groups, resume=resume,
-        )
-        groups = manifest["groups"]
+    idx.vocab.write.mode("overwrite").parquet(f"{output}/vocab")
+    table = write_packed_shards(
+        idx.weighted, output, docs_per_shard=docs_per_shard,
+        num_groups=num_groups, resume=resume,
+    )
+    groups = {
+        s.summary["group"]: {k: json.loads(s.summary[k]) for k in
+                             ("docs", "terms", "postings", "wall_sec")}
+        for s in table.snapshots if "group" in s.summary
+    }
     if positional:
         # phrase/NEAR query support: positions through the SAME bucketed
         # layout (positions column rides along; bucket pruning + term_id
@@ -106,7 +88,6 @@ def run(spark, input_path: str, output: str, variant: str = "okapi",
         "epsilon": idx.stats.epsilon,
         "wall_sec": round(wall, 2),
         "docs_per_sec": round(idx.num_docs / wall, 1),
-        "iceberg": bool(iceberg),
         "positional": bool(positional),
         "positional_n_buckets": positional_n_buckets if positional else None,
         "groups": groups,
@@ -123,7 +104,7 @@ def add_documents(spark, input_path: str, index_dir: str,
     instead of rebuilding (VERDICT r4 #3 — ``add_documents`` on a
     phrase-enabled index forced a full rebuild). Phrase/NEAR/span AND
     term/WAND/served queries all see the appended docs. Mirrors the
-    ``append_packed_shards_iceberg`` contract:
+    ``layout.append_packed_shards`` contract:
 
     - **Frozen model** (the reference's ``Similarity.add_documents``
       semantics — the Dictionary and the fitted weights don't refit on
@@ -132,13 +113,15 @@ def add_documents(spark, input_path: str, index_dir: str,
       keeps the build-time num_docs/df/avgdl, so existing docs' phrase
       and NEAR scores are bit-identical before and after the append.
       Refreshing the statistics is a rebuild, by design.
-    - **Boundary guard**: new doc_ids must lie strictly above the store's
-      current max (footer-stats check, no data scan); the input must
-      carry an explicit ``doc_id`` column — auto-assigned ids would
-      collide with the existing range.
-    - The served path (``serving.phrase_topk_served``) needs no change:
-      the hive dataset picks up the appended files, and the key-packing
-      bound is derived from the data per query.
+    - **Boundary guard**: new doc_ids must lie strictly above the
+      positional/doclen stores' current max (footer-stats check, no data
+      scan) and start at the packed store's next shard boundary (snapshot
+      metadata, no job); the input must carry an explicit ``doc_id``
+      column — auto-assigned ids would collide with the existing range.
+    - The served paths need no change: ``serving.phrase_topk_served``'s
+      hive dataset picks up the appended positional files (its key-packing
+      bound is derived from the data per query), and
+      ``PackedIndexServer`` plans the append's snapshot.
 
     Returns {"docs": n_appended, "wall_sec": ...} and records the append
     in build_metrics.json (num_docs stays the frozen scoring N;
@@ -154,11 +137,6 @@ def add_documents(spark, input_path: str, index_dir: str,
     if not meta.get("positional"):
         raise SystemExit("add_documents grows the positional store — this "
                          "index was built without --positional")
-    if meta.get("iceberg"):
-        raise SystemExit("iceberg indexes grow through "
-                         "Similarity.add_documents / the streaming store; "
-                         "add_documents here serves the plain --positional "
-                         "layout")
     pages = spark.read.parquet(input_path)
     if "doc_id" not in pages.columns:
         raise SystemExit("append input needs an explicit doc_id column "
@@ -182,11 +160,9 @@ def add_documents(spark, input_path: str, index_dir: str,
     # evaluated before any write: positional/doclen footer-stats maxima,
     # plus the packed store's next-shard boundary (strictest — the WAND
     # reader needs appended docs in fresh shards)
-    import os as _os
-
     from gensim_spark.index.layout import (append_packed_shards,
                                            max_doc_id_bucketed,
-                                           packed_committed_max_shard)
+                                           next_shard_boundary)
 
     # a pending marker from a crashed earlier append means the three
     # stores may disagree (positional written, doclen/packed not) —
@@ -200,7 +176,6 @@ def add_documents(spark, input_path: str, index_dir: str,
             "may disagree for that id range. Rebuild the index (or "
             "restore it from before that append) before appending again.")
     mn = docs_tok.agg(F.min("doc_id").alias("mn")).collect()[0]["mn"]
-    has_packed = _os.path.exists(f"{index_dir}/manifest.json")
     if mn is not None:
         maxes = [m for m in (max_doc_id_bucketed(f"{index_dir}/positional"),
                              max_doc_id_bucketed(f"{index_dir}/doclen"))
@@ -210,18 +185,14 @@ def add_documents(spark, input_path: str, index_dir: str,
                 f"add_documents needs doc_ids > {max(maxes)} (index max); "
                 f"got {mn}. Interleaved ids need a rebuild or the "
                 "streaming incremental store.")
-        if has_packed:
-            with open(f"{index_dir}/manifest.json") as f:
-                dps = int(json.load(f)["params"]["docs_per_shard"])
-            boundary = (packed_committed_max_shard(index_dir) + 1) * dps
-            if int(mn) < boundary:
-                raise ValueError(
-                    f"add_documents needs doc_ids >= {boundary}: the "
-                    f"packed term store's next shard boundary (shards "
-                    f"hold {dps} ids; the WAND reader keeps one run per "
-                    f"(shard, term), so appended docs cannot extend a "
-                    f"committed tail shard). Re-id the batch to start at "
-                    f"{boundary}, or rebuild; got {mn}.")
+        boundary = next_shard_boundary(index_dir)
+        if int(mn) < boundary:
+            raise ValueError(
+                f"add_documents needs doc_ids >= {boundary}: the packed "
+                f"term store's next shard boundary (the WAND reader keeps "
+                f"one run per (shard, term), so appended docs cannot "
+                f"extend a committed tail shard). Re-id the batch to start "
+                f"at {boundary}, or rebuild; got {mn}.")
     # mark the append in-flight BEFORE any write: the three stores cannot
     # be appended atomically, so a crash mid-way must be detectable (the
     # marker clears when the append record commits below)
@@ -240,32 +211,31 @@ def add_documents(spark, input_path: str, index_dir: str,
                   .select("doc_id",
                           F.size("tokens").cast("long").alias("dl")))
     doclen_new.write.mode("append").parquet(f"{index_dir}/doclen")
-    if has_packed:
-        # grow the TERM-QUERY store too (WAND / served): weight the new
-        # docs against the frozen vocab/stats and pack them as fresh
-        # shards — without this, phrase queries would see appended docs
-        # but term queries would not
-        from gensim_spark.functions.textprep import bow_counts_udf
-        from gensim_spark.operators import bm25 as M
+    # grow the TERM-QUERY store too (WAND / served): weight the new docs
+    # against the frozen vocab/stats and pack them as fresh shards —
+    # without this, phrase queries would see appended docs but term
+    # queries would not
+    from gensim_spark.functions.textprep import bow_counts_udf
+    from gensim_spark.operators import bm25 as M
 
-        stats = M.fit_from_vocab(vocab, meta["num_docs"],
-                                 variant=meta.get("variant", "okapi"),
-                                 k1=meta.get("k1", 1.5),
-                                 b=meta.get("b", 0.75),
-                                 epsilon=meta.get("epsilon", 0.25))
-        counts = docs_tok.select(
-            "doc_id",
-            F.size("tokens").cast("long").alias("dl"),
-            F.explode(bow_counts_udf("tokens")).alias("e"),
-        ).select("doc_id", F.col("e.token").alias("token"),
-                 F.col("e.tf").alias("tf"), "dl")
-        with_dl = counts.join(
-            F.broadcast(vocab.select("token", "term_id")), "token"
-        ).select("doc_id", "term_id", "tf", "dl")
-        weighted_new = M.weight_postings(with_dl, stats, dl="inline")
-        # mn is already validated against the shard boundary above — skip
-        # append_packed_shards' own pass over the weighted lineage
-        append_packed_shards(weighted_new, index_dir, min_doc_id=mn)
+    stats = M.fit_from_vocab(vocab, meta["num_docs"],
+                             variant=meta.get("variant", "okapi"),
+                             k1=meta.get("k1", 1.5),
+                             b=meta.get("b", 0.75),
+                             epsilon=meta.get("epsilon", 0.25))
+    counts = docs_tok.select(
+        "doc_id",
+        F.size("tokens").cast("long").alias("dl"),
+        F.explode(bow_counts_udf("tokens")).alias("e"),
+    ).select("doc_id", F.col("e.token").alias("token"),
+             F.col("e.tf").alias("tf"), "dl")
+    with_dl = counts.join(
+        F.broadcast(vocab.select("token", "term_id")), "token"
+    ).select("doc_id", "term_id", "tf", "dl")
+    weighted_new = M.weight_postings(with_dl, stats, dl="inline")
+    # mn is already validated against the shard boundary above — skip
+    # append_packed_shards' own pass over the weighted lineage
+    append_packed_shards(weighted_new, index_dir, min_doc_id=mn)
     n_new = docs_tok.count()
     docs_tok.unpersist()
     rec = {"input": input_path, "docs": int(n_new),
@@ -290,9 +260,6 @@ def main() -> None:
     ap.add_argument("--from-html", action="store_true",
                     help="extract text from the html column (Arrow UDF path)")
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--iceberg", action="store_true",
-                    help="store shards + vocab as Iceberg-semantics tables "
-                         "(snapshot commits, time travel, manifest pruning)")
     ap.add_argument("--positional", action="store_true",
                     help="also write the positional bucketed store + "
                          "doclen (enables query_index --phrase/--near)")
@@ -313,7 +280,7 @@ def main() -> None:
         metrics = run(spark, args.input, args.output, variant=args.variant,
                       docs_per_shard=args.docs_per_shard,
                       num_groups=args.num_groups, from_html=args.from_html,
-                      resume=not args.no_resume, iceberg=args.iceberg,
+                      resume=not args.no_resume,
                       positional=args.positional,
                       positional_n_buckets=args.positional_n_buckets)
     print(json.dumps(metrics))

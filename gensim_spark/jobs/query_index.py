@@ -16,26 +16,23 @@ sys.path.insert(
 
 
 def run(spark, index_dir: str, queries: list[str], k: int = 10,
-        iceberg: bool = False, snapshot_id: int | None = None,
+        snapshot_id: int | None = None,
         exclude_doc_ids=None, pages_path: str | None = None,
         highlight: int | None = None, facet: str | None = None) -> dict:
     """The job body; returns {"results": {qid: [{doc_id, score, rank}]},
-    "wall_sec": s}. Importable so tests can drive it without a subprocess."""
+    "wall_sec": s}. ``snapshot_id`` time-travels the packed store to that
+    snapshot (default: the current one). Importable so tests can drive it
+    without a subprocess."""
     from pyspark.sql import functions as F
 
     from gensim_spark.functions import textref
+    from gensim_spark.index.layout import read_packed_shards
     from gensim_spark.index.wand import wand_topk
 
-    packed = None
-    if iceberg:
-        from gensim_spark.index.icetable import IceTable
-        from gensim_spark.index.layout import read_packed_shards_iceberg
-
-        vocab = IceTable.load(f"{index_dir}/vocab").scan(spark)
-        packed = read_packed_shards_iceberg(
-            spark, f"{index_dir}/shards", snapshot_id=snapshot_id)
-    else:
-        vocab = spark.read.parquet(f"{index_dir}/vocab")
+    vocab = spark.read.parquet(f"{index_dir}/vocab")
+    # wand_topk reads the current snapshot itself
+    packed = (None if snapshot_id is None else
+              read_packed_shards(spark, index_dir, snapshot_id=snapshot_id))
     tokens = {qid: textref.simple_preprocess(q)
               for qid, q in enumerate(queries)}
     all_tokens = sorted({t for ts in tokens.values() for t in ts})
@@ -348,8 +345,8 @@ def run_phrase_served(index_dir: str, phrase_text: str, k: int = 10,
 def run_served(index_dir: str, queries: list[str], k: int = 10,
                exclude_doc_ids=None) -> dict:
     """Serve the same answers with NO Spark session: pyarrow vocab lookup +
-    ``serving.PackedIndexServer`` over the packed shards (plain-parquet
-    store layout from build_index). Rank/score identical to :func:`run` by
+    ``serving.PackedIndexServer`` over the packed shards of the store's
+    current snapshot. Rank/score identical to :func:`run` by
     the serving module's identity contract; latency is the kernel's own
     cost instead of a per-query Spark job."""
     import pyarrow.dataset as pads
@@ -388,8 +385,6 @@ def main() -> None:
     ap.add_argument("--query", required=True, action="append",
                     help="query text (repeatable)")
     ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--iceberg", action="store_true",
-                    help="index was built with --iceberg (snapshot store)")
     ap.add_argument("--snapshot-id", type=int, default=None,
                     help="time-travel the shard store to this snapshot")
     ap.add_argument("--exclude-doc-ids", type=int, nargs="*", default=None,
@@ -398,7 +393,7 @@ def main() -> None:
                          "packed stores fold them in at the next re-pack)")
     ap.add_argument("--serve", action="store_true",
                     help="answer in-process (PackedIndexServer, no Spark "
-                         "session) — plain-parquet stores only")
+                         "session) from the current snapshot")
     ap.add_argument("--phrase", action="store_true",
                     help="treat the query text as an exact phrase over the "
                          "positional store (build_index --positional)")
@@ -438,9 +433,9 @@ def main() -> None:
         ap.error("--highlight/--facet require --pages")
 
     if args.wildcard or args.fuzzy_dist is not None:
-        if args.phrase or args.iceberg:
+        if args.phrase:
             ap.error("--wildcard/--fuzzy-dist rewrite to a multi-term "
-                     "query (no --phrase/--iceberg)")
+                     "query (no --phrase)")
         if len(args.query) != 1:
             ap.error("--wildcard/--fuzzy-dist take exactly one --query")
         from gensim_spark.session import get_spark
@@ -454,9 +449,6 @@ def main() -> None:
         return
 
     if args.phrase:
-        if args.iceberg:
-            ap.error("--phrase reads the plain positional store "
-                     "(no --iceberg)")
         if len(args.query) != 1:
             ap.error("--phrase takes exactly one --query")
         if args.serve:
@@ -480,9 +472,9 @@ def main() -> None:
         return
 
     if args.serve:
-        if args.iceberg or args.snapshot_id is not None:
-            ap.error("--serve reads the plain-parquet store layout "
-                     "(no --iceberg/--snapshot-id)")
+        if args.snapshot_id is not None:
+            ap.error("--serve answers from the current snapshot "
+                     "(no --snapshot-id)")
         print(json.dumps(run_served(args.index, args.query, k=args.k,
                                     exclude_doc_ids=args.exclude_doc_ids)))
         return
@@ -491,7 +483,7 @@ def main() -> None:
 
     spark = get_spark("gensim_spark_query")
     out = run(spark, args.index, args.query, k=args.k,
-              iceberg=args.iceberg, snapshot_id=args.snapshot_id,
+              snapshot_id=args.snapshot_id,
               exclude_doc_ids=args.exclude_doc_ids, pages_path=args.pages,
               highlight=args.highlight, facet=args.facet)
     print(json.dumps(out))

@@ -43,38 +43,6 @@ def doc2bow_postings(docs: DataFrame, vocab: DataFrame, doc_col: str = "doc_id",
     )
 
 
-def doc2bow_rowlocal(docs: DataFrame, doc_col: str = "doc_id",
-                     tokens_col: str = "tokens") -> DataFrame:
-    """docs(doc_id, tokens) → (doc_id, token, tf, dl) with NO shuffle.
-
-    doc2bow is a per-document operation (gensim counts with a per-doc
-    Counter, dictionary.py:244-247); the distributed groupBy(doc_id, token)
-    formulation shuffles every token position, which at web scale is the
-    single largest exchange in the build. This row-local form counts within
-    the tokens array (array_distinct + filter-count per distinct token —
-    O(distinct·len) comparisons inside whole-stage codegen) and carries
-    ``dl`` (total positions, the BM25 doc length) along, so the entire
-    postings side of the index build stays narrow: the only shuffle left in
-    the pipeline is the vocabulary aggregation, whose output is vocab-sized.
-    """
-    toks = F.col(tokens_col)
-    entry = F.explode(
-        F.transform(
-            F.array_distinct(toks),
-            lambda t: F.struct(
-                t.alias("token"),
-                F.size(F.filter(toks, lambda x: x == t)).cast("long").alias("tf"),
-            ),
-        )
-    )
-    return docs.select(
-        F.col(doc_col).alias("doc_id"),
-        F.size(toks).cast("long").alias("dl"),
-        entry.alias("e"),
-    ).select("doc_id", F.col("e.token").alias("token"),
-             F.col("e.tf").alias("tf"), "dl")
-
-
 def doc2bow_vectors(postings: DataFrame) -> DataFrame:
     """Postings → row-oriented BoW: (doc_id, bow array<struct<term_id,tf>>)
     sorted by term_id ascending (dictionary.py:268)."""

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gensim_spark.functions.hashing import hash60, seeded
+from gensim_spark.functions.hashing import hash60
 
 
 def exact_dup_groups(docs: DataFrame, text_col: str = "text",
@@ -110,36 +110,25 @@ def gram_hashes(docs: DataFrame, tokens_col: str = "tokens", n: int = 3,
 
 def minhash_signatures(docs: DataFrame, tokens_col: str = "tokens",
                        num_hashes: int = 8, shingle_n: int = 3,
-                       doc_col: str = "doc_id",
-                       mode: str = "arrow") -> DataFrame:
+                       doc_col: str = "doc_id") -> DataFrame:
     """(doc_id, sig_0 … sig_{H-1}): per-doc MinHash signature — min over
-    shingles of the seeded hash60 (md5-based, oracle-checkable).
+    shingles of the seeded hash60 (md5-based, oracle-checkable). ``doc_id``
+    keeps ``doc_col``'s type (long, string, …).
 
-    ``mode="arrow"`` (default): ZERO-shuffle Arrow-batched stage — per doc,
-    shingles are built and hashed with CPython's native md5 and the minima
-    emitted directly (``int.from_bytes(digest[:8]) >> 4`` IS
-    ``int(hexdigest[:15], 16)``, bit-identical to the SQL
-    ``conv(substring(md5(..),1,15),16,10)``). The signature never leaves
-    its partition, nothing is exploded, and the md5 runs in C. Measured at
-    sf1.0 (2.85M grams × 4 seeds): SQL aggregate 12.0 s → Arrow stage well
-    under half that; the old explode → distinct → groupBy shape cost
-    17.6 s, its dedup exchange feeding an idempotent min (min over a
-    multiset == min over the set). Same per-task-iterator shape as the
-    pipeline's default ``bow_counts_udf`` stage.
-
-    ``mode="agg"``: the relational form (non-distinct gram explode → one
-    map-side-combined groupBy of codegen'd ``min(seeded(..))``) — the
-    no-Python fallback, identical values.
+    ZERO-shuffle Arrow-batched stage — per doc, shingles are built and
+    hashed with CPython's native md5 and the minima emitted directly
+    (``int.from_bytes(digest[:8]) >> 4`` IS ``int(hexdigest[:15], 16)``,
+    bit-identical to the SQL ``conv(substring(md5(..),1,15),16,10)``). The
+    signature never leaves its partition, nothing is exploded, and the md5
+    runs in C. Measured at sf1.0 (2.85M grams × 4 seeds): the relational
+    aggregate (``min(seeded(..))`` per gram group, kept as the test
+    oracle) took 12.0 s, this stage well under half that; the old explode
+    → distinct → groupBy shape cost 17.6 s, its dedup exchange feeding an
+    idempotent min (min over a multiset == min over the set). Same
+    per-task-iterator shape as the pipeline's ``bow_counts_udf`` stage.
     """
-    if mode == "agg":
-        sh = shingles(docs, tokens_col, shingle_n, doc_col, distinct=False)
-        aggs = [
-            F.min(seeded(F.col("shingle"), h)).alias(f"sig_{h}")
-            for h in range(num_hashes)
-        ]
-        return sh.groupBy("doc_id").agg(*aggs)
-
     import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
 
     prefixes = [f"{h}:".encode("utf-8") for h in range(num_hashes)]
     names = [f"sig_{h}" for h in range(num_hashes)]
@@ -161,14 +150,16 @@ def minhash_signatures(docs: DataFrame, tokens_col: str = "tokens",
                     sig_cols[h].append(min(
                         int.from_bytes(md5(p + g).digest()[:8], "big") >> 4
                         for g in grams))
-            out = {"doc_id": pd.Series(ids, dtype="int64")}
+            out = {"doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype)}
             for h in range(H):
                 out[names[h]] = pd.Series(sig_cols[h], dtype="int64")
             yield pd.DataFrame(out)
 
     from gensim_spark.functions.scanwidth import widen_if_narrow
 
-    schema = "doc_id long, " + ", ".join(f"{c} long" for c in names)
+    schema = StructType(
+        [StructField("doc_id", docs.schema[doc_col].dataType)]
+        + [StructField(c, LongType()) for c in names])
     # md5-per-gram is the heaviest per-byte stage in the repo (~2 s per
     # compressed input MB per core) — fan the Arrow stage out on fine
     # byte-proportional chunks; no-op when the frame is already wide

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from gensim_spark.functions import textprep
 from gensim_spark.operators import bm25 as M
-from gensim_spark.operators import bow as B
 from gensim_spark.operators import topk as T
 from gensim_spark.operators import vocab as V
 
@@ -41,8 +40,7 @@ def tokenize(docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id",
 
 def build(tokenized: DataFrame, variant: str = M.OKAPI, k1: float = 1.5,
           b: float = 0.75, epsilon: float = 0.25, num_docs: int | None = None,
-          distributed_ids: bool = False, cache: bool = True,
-          bow_mode: str = "udf") -> IndexedCorpus:
+          cache: bool = True) -> IndexedCorpus:
     """tokenized (doc_id, tokens) → fully weighted index (dictionary fit path).
 
     Single-pass shape: the token stream is exploded and counted ONCE
@@ -54,10 +52,8 @@ def build(tokenized: DataFrame, variant: str = M.OKAPI, k1: float = 1.5,
     what holds at 10^12 docs (the counts cache becomes a checkpoint table in
     the sharded index build, gensim_spark.index).
 
-    ``distributed_ids=False`` (default): the term-id rank runs as a plain
-    window — one task sorting the *vocabulary* (≪ corpus; fine up to ~10^7
-    terms). Set True for the range-partitioned zipWithIndex rank when the
-    vocabulary itself is huge; it costs one extra pass over the cached counts.
+    The term-id rank runs as a plain window — one task sorting the
+    *vocabulary* (≪ corpus; fine up to ~10^7 terms).
 
     ``cache=True`` (default) persists the (doc,term,tf) counts and the vocab:
     the counts feed three downstream consumers (vocab agg, postings, stats),
@@ -75,41 +71,23 @@ def build(tokenized: DataFrame, variant: str = M.OKAPI, k1: float = 1.5,
         # tokens), costs one in-memory copy of the token arrays, and is
         # LRU-evictable under memory pressure like any persist.
         tokenized = tokenized.persist()
-    # row-local doc2bow: (doc_id, token, tf, dl) with no shuffle.
-    # "udf": per-doc Counter fused into an Arrow batch stage;
-    # "jvm": array-expression counting (no Python at all; O(distinct·len)
-    #        comparisons per doc — fine for short docs);
-    # "explode": classic explode + groupBy(doc_id, token) (one extra
-    #        doc-keyed shuffle; the fallback shape).
-    if bow_mode == "udf":
-        from gensim_spark.functions.textprep import bow_counts_udf
+    # row-local doc2bow: (doc_id, token, tf, dl) with no shuffle — a
+    # per-doc Counter fused into an Arrow batch stage
+    from gensim_spark.functions.textprep import bow_counts_udf
 
-        counts = tokenized.select(
-            "doc_id",
-            F.size("tokens").cast("long").alias("dl"),
-            F.explode(bow_counts_udf("tokens")).alias("e"),
-        ).select("doc_id", F.col("e.token").alias("token"),
-                 F.col("e.tf").alias("tf"), "dl")
-    elif bow_mode == "jvm":
-        counts = B.doc2bow_rowlocal(tokenized)
-    else:
-        from pyspark.sql import Window
-
-        counts = (
-            tokenized.select("doc_id", F.explode("tokens").alias("token"))
-            .groupBy("doc_id", "token")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn("dl", F.sum("tf").over(Window.partitionBy("doc_id")))
-        )
+    counts = tokenized.select(
+        "doc_id",
+        F.size("tokens").cast("long").alias("dl"),
+        F.explode(bow_counts_udf("tokens")).alias("e"),
+    ).select("doc_id", F.col("e.token").alias("token"),
+             F.col("e.tf").alias("tf"), "dl")
     return index_from_counts(counts, num_docs, variant=variant, k1=k1, b=b,
-                             epsilon=epsilon, distributed_ids=distributed_ids,
-                             cache=cache, docs=tokenized)
+                             epsilon=epsilon, cache=cache, docs=tokenized)
 
 
 def build_from_pages(pages: DataFrame, variant: str = M.OKAPI, k1: float = 1.5,
                      b: float = 0.75, epsilon: float = 0.25,
                      num_docs: int | None = None,
-                     distributed_ids: bool = False,
                      cache: bool = True) -> IndexedCorpus:
     """The north-rule front door: pages(doc_id, html, …) → index, with the
     whole text layer fused into one mapInPandas stage (textprep
@@ -120,14 +98,12 @@ def build_from_pages(pages: DataFrame, variant: str = M.OKAPI, k1: float = 1.5,
         num_docs = pages.count()
     counts = extract_tokenize_bow(pages)
     return index_from_counts(counts, num_docs, variant=variant, k1=k1, b=b,
-                             epsilon=epsilon, distributed_ids=distributed_ids,
-                             cache=cache)
+                             epsilon=epsilon, cache=cache)
 
 
 def index_from_counts(counts: DataFrame, num_docs: int,
                       variant: str = M.OKAPI, k1: float = 1.5, b: float = 0.75,
-                      epsilon: float = 0.25, distributed_ids: bool = False,
-                      cache: bool = True,
+                      epsilon: float = 0.25, cache: bool = True,
                       docs: DataFrame | None = None) -> IndexedCorpus:
     """counts(doc_id, token, tf, dl) → index. The ONLY exchange here is the
     vocabulary aggregation (vocab-sized output, map-side partial agg);
@@ -174,7 +150,7 @@ def index_from_counts(counts: DataFrame, num_docs: int,
         F.count(F.lit(1)).alias("df"),
         F.min("doc_id").alias("first_doc"),
     )
-    vocab = V.assign_term_ids(term_stats, distributed=distributed_ids).select(
+    vocab = V.assign_term_ids(term_stats, distributed=False).select(
         "token", "term_id", "df", "cf", "first_doc"
     ).cache()
     postings = counts.join(

@@ -160,8 +160,10 @@ def compact(spark: SparkSession, store_dir: str, index_dir: str,
             variant: str = "okapi") -> IceTable:
     """Periodic compaction: recompute corpus-global stats from all appended
     counts snapshots and rebuild weighted packed shards as Iceberg
-    snapshots (the reopen_shard analogue). Returns the index IceTable."""
-    from gensim_spark.index.layout import write_packed_shards_iceberg
+    snapshots (the reopen_shard analogue), replacing the packed store a
+    previous compaction left in ``index_dir``. Returns the index
+    IceTable."""
+    from gensim_spark.index.layout import write_packed_shards
     from gensim_spark.operators import bm25 as M
 
     counts = read_counts(spark, store_dir)
@@ -172,7 +174,7 @@ def compact(spark: SparkSession, store_dir: str, index_dir: str,
         F.broadcast(vocab.select("token", "term_id")), "token"
     ).select("doc_id", "term_id", "tf", "dl")
     weighted = M.weight_postings(with_ids, stats, dl="inline")
-    return write_packed_shards_iceberg(weighted, index_dir)
+    return write_packed_shards(weighted, index_dir, resume=False)
 
 
 def streaming_event_stats(events_stream: DataFrame,

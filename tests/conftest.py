@@ -41,3 +41,30 @@ def docs_df(spark, texts):
     return spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, tokens array<string>"
     )
+
+
+def crash_commits(monkeypatch, when):
+    """Make ``IceTable.commit_staged`` raise for every commit whose summary
+    satisfies ``when``: the writer's files are staged but its snapshot
+    never lands — a writer killed between the two commit phases."""
+    from gensim_spark.index.icetable import IceTable
+
+    real = IceTable.commit_staged
+
+    def commit(self, files, write_uuid, summary=None, operation="append"):
+        if when(summary or {}):
+            raise RuntimeError("simulated crash before commit")
+        return real(self, files, write_uuid, summary=summary,
+                    operation=operation)
+
+    monkeypatch.setattr(IceTable, "commit_staged", commit)
+
+
+def staged_files(out_dir):
+    """Every parquet data file under a store's ``data/`` — committed or
+    not."""
+    import glob
+    import os
+
+    return glob.glob(os.path.join(out_dir, "data", "**", "*.parquet"),
+                     recursive=True)

@@ -218,9 +218,10 @@ def test_dictionary_driver_collect_guard(spark, common_texts):
 
 
 def test_similarity_add_documents(spark, common_texts, tmp_path):
-    """Iceberg-store add_documents: new docs enter fresh shards as one
+    """Snapshot-store add_documents: new docs enter fresh shards as one
     atomic snapshot; queries over the grown index equal a one-shot build
-    of the full corpus; mid-shard ids are rejected."""
+    of the full corpus; mid-shard ids are rejected; a rebuild into the
+    same prefix replaces the store."""
     from pyspark.sql import functions as F
 
     from gensim_spark import api
@@ -232,25 +233,28 @@ def test_similarity_add_documents(spark, common_texts, tmp_path):
     rest = weighted.filter("doc_id >= 4")
 
     sim = api.Similarity(str(tmp_path / "g"), first, num_best=5,
-                         shardsize=4, iceberg=True)
+                         shardsize=4)
     # doc 4 starts shard 1 (shardsize 4) — exactly the boundary
     sim.add_documents(rest)
     token2id = {r["token"]: r["term_id"] for r in dct.df.collect()}
     q = {0: {token2id["graph"]: 1.0, token2id["user"]: 1.0}}
-    got = [(r["doc_id"], r["score"]) for r in
-           sorted(sim[q].collect(), key=lambda r: r["rank"])]
 
+    def answer(s):
+        return [(r["doc_id"], r["score"]) for r in
+                sorted(s[q].collect(), key=lambda r: r["rank"])]
+
+    got = answer(sim)
     one_shot = api.Similarity(str(tmp_path / "full"), weighted, num_best=5,
-                              shardsize=4, iceberg=True)
-    want = [(r["doc_id"], r["score"]) for r in
-            sorted(one_shot[q].collect(), key=lambda r: r["rank"])]
-    assert got == want
+                              shardsize=4)
+    assert got == answer(one_shot)
 
     # violating the shard boundary is an error, not silent data loss
     with pytest.raises(ValueError, match="shard boundary"):
         sim.add_documents(weighted.filter("doc_id = 2"))
-    # plain-manifest store refuses
-    plain = api.Similarity(str(tmp_path / "plain"), first, num_best=5,
+    # a rebuild into an existing prefix replaces the store: it answers
+    # exactly like a build of the new corpus into a fresh prefix
+    rebuilt = api.Similarity(str(tmp_path / "full"), first, num_best=5,
+                             shardsize=4)
+    fresh = api.Similarity(str(tmp_path / "first"), first, num_best=5,
                            shardsize=4)
-    with pytest.raises(ValueError, match="snapshot store"):
-        plain.add_documents(rest)
+    assert answer(rebuilt) == answer(fresh) != got

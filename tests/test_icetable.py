@@ -231,8 +231,8 @@ def test_packed_shards_iceberg_build_resume_and_metrics(spark, tmp_path):
     tok = P.tokenize(pages, ascii_fast_path=True)
     idx = P.build(tok, num_docs=600)
     loc = str(tmp_path / "ice_idx")
-    t = layout.write_packed_shards_iceberg(idx.weighted, loc,
-                                           docs_per_shard=128, num_groups=3)
+    t = layout.write_packed_shards(idx.weighted, loc,
+                                   docs_per_shard=128, num_groups=3)
     snaps = [s for s in t.snapshots if "group" in s.summary]
     assert len(snaps) == 3
     total_postings = sum(int(s.summary["postings"]) for s in snaps)
@@ -240,16 +240,22 @@ def test_packed_shards_iceberg_build_resume_and_metrics(spark, tmp_path):
     total_docs = sum(int(s.summary["docs"]) for s in snaps)
     assert total_docs == 600
     # packed content round-trips
-    packed = layout.read_packed_shards_iceberg(spark, loc)
+    packed = layout.read_packed_shards(spark, loc)
     assert packed.groupBy().agg(F.sum("n")).collect()[0][0] \
         == idx.weighted.count()
     # resume: a second run adds NO snapshots (all groups committed)
     v = t.version
-    t2 = layout.write_packed_shards_iceberg(idx.weighted, loc,
-                                            docs_per_shard=128, num_groups=3)
+    t2 = layout.write_packed_shards(idx.weighted, loc,
+                                    docs_per_shard=128, num_groups=3)
     assert t2.version == v
+    # resume=False replaces the table: one fresh snapshot per group
+    t3 = layout.write_packed_shards(idx.weighted, loc, docs_per_shard=128,
+                                    num_groups=3, resume=False)
+    assert [s.summary["group"] for s in t3.snapshots] == ["0", "1", "2"]
+    assert not {s.snapshot_id for s in t3.snapshots} \
+        & {s.snapshot_id for s in t2.snapshots}
     # shard pruning via manifests
-    one = layout.read_packed_shards_iceberg(spark, loc, shard_ids=[0])
+    one = layout.read_packed_shards(spark, loc, shard_ids=[0])
     assert set(r["shard_id"] for r in
                one.select("shard_id").distinct().collect()) == {0}
 
@@ -264,8 +270,8 @@ def test_packed_shards_iceberg_empty_groups(spark, tmp_path):
     pages = generate_pages(spark, 200, tokens_per_doc=20, partitions=2)
     idx = P.build(P.tokenize(pages, ascii_fast_path=True), num_docs=200)
     loc = str(tmp_path / "ice_empty")
-    t = layout.write_packed_shards_iceberg(idx.weighted, loc,
-                                           docs_per_shard=128, num_groups=4)
+    t = layout.write_packed_shards(idx.weighted, loc,
+                                   docs_per_shard=128, num_groups=4)
     by_group = {int(s.summary["group"]): s for s in t.snapshots
                 if "group" in s.summary}
     assert sorted(by_group) == [0, 1, 2, 3]
@@ -275,13 +281,13 @@ def test_packed_shards_iceberg_empty_groups(spark, tmp_path):
                 s["added-data-files"]) == ("0", "0", "0", "0")
     assert sum(int(s.summary["docs"]) for s in by_group.values()) == 200
     v = t.version
-    assert layout.write_packed_shards_iceberg(
+    assert layout.write_packed_shards(
         idx.weighted, loc, docs_per_shard=128, num_groups=4).version == v
     new = (idx.weighted.filter(F.col("doc_id") < 10)
            .withColumn("doc_id", F.col("doc_id") + 256))
-    t2 = layout.append_packed_shards_iceberg(new, loc)
+    t2 = layout.append_packed_shards(new, loc)
     assert int(t2.snapshots[-1].summary["docs"]) == 10
-    packed = layout.read_packed_shards_iceberg(spark, loc)
+    packed = layout.read_packed_shards(spark, loc)
     assert packed.groupBy().agg(F.sum("n")).collect()[0][0] == \
         idx.weighted.count() + new.count()
 

@@ -1,13 +1,10 @@
 """M4/M5: packed shard layout, checkpointed build, WAND query exactness."""
 
-import json
-import os
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import docs_df
+from tests.conftest import crash_commits, docs_df, staged_files
 
 
 @pytest.fixture(scope="module")
@@ -40,10 +37,11 @@ def test_packed_build_and_wand_exact(spark, synth_index):
     from gensim_spark.operators import topk as T
 
     idx, out = synth_index
-    manifest = layout.write_packed_shards(idx.weighted, out,
-                                         docs_per_shard=256, num_groups=4)
-    assert all(g["committed"] for g in manifest["groups"].values())
-    total_postings = sum(g["postings"] for g in manifest["groups"].values())
+    table = layout.write_packed_shards(idx.weighted, out,
+                                       docs_per_shard=256, num_groups=4)
+    groups = {s.summary["group"]: s.summary for s in table.snapshots}
+    assert sorted(groups) == ["0", "1", "2", "3"]
+    total_postings = sum(int(g["postings"]) for g in groups.values())
     assert total_postings == idx.weighted.count()
 
     # pick query terms with mixed dfs
@@ -124,28 +122,33 @@ def test_wand_lazy_decode_matches_eager(spark, synth_index, tmp_path):
     assert 0 < stats["blocks_decoded"].value <= stats["blocks_total"].value
 
 
-def test_checkpoint_resume_skips_committed(spark, synth_index, tmp_path):
+def test_checkpoint_resume_skips_committed(spark, synth_index, tmp_path,
+                                           monkeypatch):
     from gensim_spark.index import layout
+    from gensim_spark.index.icetable import IceTable
 
     idx, _ = synth_index
     out = str(tmp_path / "idx2")
-    m1 = layout.write_packed_shards(idx.weighted, out, docs_per_shard=512,
-                                    num_groups=4)
-    # un-commit one group, delete nothing: resume must redo ONLY that group
-    mpath = os.path.join(out, "manifest.json")
-    with open(mpath) as f:
-        m = json.load(f)
-    wall_before = {g: v["wall_sec"] for g, v in m["groups"].items()}
-    m["groups"]["2"]["committed"] = False
-    with open(mpath, "w") as f:
-        json.dump(m, f)
-    m2 = layout.write_packed_shards(idx.weighted, out, docs_per_shard=512,
-                                    num_groups=4)
-    assert m2["groups"]["2"]["committed"]
-    # untouched groups keep their original committed_at metrics
-    for g in ("0", "1", "3"):
-        assert m2["groups"][g]["wall_sec"] == wall_before[g]
-    # exactly-once: the redone group holds exactly one copy of its runs
+    # kill the build at group 2's commit: its files are staged, its
+    # snapshot never lands, groups 0 and 1 are committed
+    with monkeypatch.context() as m:
+        crash_commits(m, lambda s: s.get("group") == 2)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            layout.write_packed_shards(idx.weighted, out,
+                                       docs_per_shard=512, num_groups=4)
+    before = {s.summary["group"]: s.snapshot_id
+              for s in IceTable.load(out).snapshots}
+    assert sorted(before) == ["0", "1"]
+    t = layout.write_packed_shards(idx.weighted, out, docs_per_shard=512,
+                                   num_groups=4)
+    after = {s.summary["group"]: s.snapshot_id for s in t.snapshots}
+    # resume redid ONLY the uncommitted groups; committed snapshots are
+    # untouched
+    assert len(t.snapshots) == 4 and sorted(after) == ["0", "1", "2", "3"]
+    assert {g: after[g] for g in before} == before
+    # exactly-once: the crashed write's staged files stay on disk but are
+    # never read — the store holds exactly one copy of every run
+    assert len(staged_files(out)) > len(layout.packed_files(out))
     packed = layout.read_packed_shards(spark, out)
     total = packed.groupBy().agg(F.sum("n")).collect()[0][0]
     assert total == idx.weighted.count()
@@ -339,9 +342,11 @@ def test_wand_topk_exclusion_distributed(spark, synth_index, tmp_path):
 def _packed_rows(out):
     import pyarrow.dataset as pads
 
-    tbl = pads.dataset(os.path.join(out, "data"), format="parquet",
-                       partitioning="hive").to_table()
-    rows = tbl.drop_columns(["group"]).to_pylist()
+    from gensim_spark.index import layout
+
+    tbl = pads.dataset([f["path"] for f in layout.packed_files(out)],
+                       format="parquet").to_table()
+    rows = tbl.to_pylist()
     return sorted(rows, key=lambda r: (r["shard_id"], r["term_id"]))
 
 
@@ -383,9 +388,10 @@ def test_packed_rows_independent_of_arrow_batch_size(spark, synth_index,
             assert r[col] == want[col], (r["shard_id"], r["term_id"], col)
 
 
-def test_empty_shard_groups_skip_spark(spark, synth_index, tmp_path):
+def test_empty_shard_groups_skip_spark(spark, synth_index, tmp_path,
+                                      monkeypatch):
     """Eight groups, every doc in shard 0: the seven empty groups commit
-    with zero metrics, no data directory and no Spark job; resume and a
+    snapshots with zero metrics, no files and no Spark job; resume and a
     later append still see a complete build."""
     from gensim_spark.index import layout
 
@@ -396,48 +402,60 @@ def test_empty_shard_groups_skip_spark(spark, synth_index, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("pack-empty-groups", "write_packed_shards")
     try:
-        manifest = layout.write_packed_shards(weighted, out,
-                                              docs_per_shard=4096,
-                                              num_groups=8)
+        table = layout.write_packed_shards(weighted, out,
+                                           docs_per_shard=4096,
+                                           num_groups=8)
     finally:
         sc.setJobGroup("", "")
     jobs = sc.statusTracker().getJobIdsForGroup("pack-empty-groups")
     assert 0 < len(jobs) <= 12
-    groups = manifest["groups"]
-    assert sorted(groups, key=int) == [str(g) for g in range(8)]
-    assert all(v["committed"] for v in groups.values())
-    assert groups["0"]["docs"] == 400
-    assert groups["0"]["postings"] == n_postings
+    groups = {int(s.summary["group"]): s.summary for s in table.snapshots}
+    assert sorted(groups) == list(range(8))
+    assert groups[0]["docs"] == "400"
+    assert groups[0]["postings"] == str(n_postings)
     for g in range(1, 8):
-        assert {k: groups[str(g)][k] for k in ("docs", "terms",
-                                               "postings")} == \
-            {"docs": 0, "terms": 0, "postings": 0}
-        assert not os.path.exists(os.path.join(out, "data", f"group={g}"))
+        assert {k: groups[g][k] for k in ("docs", "terms", "postings",
+                                          "added-data-files")} == \
+            {"docs": "0", "terms": "0", "postings": "0",
+             "added-data-files": "0"}
+    assert {f["partition"]["shard_id"]
+            for f in layout.packed_files(out)} == {0}
 
-    # un-commit the data group and one empty group: resume redoes those two
-    # and leaves every other record untouched
-    mpath = os.path.join(out, "manifest.json")
-    with open(mpath) as f:
-        m = json.load(f)
-    for g, v in m["groups"].items():
-        v["untouched"] = True
-    m["groups"]["0"]["committed"] = False
-    m["groups"]["5"]["committed"] = False
-    with open(mpath, "w") as f:
-        json.dump(m, f)
-    m2 = layout.write_packed_shards(weighted, out, docs_per_shard=4096,
-                                    num_groups=8)
-    redone = {g for g, v in m2["groups"].items() if not v.get("untouched")}
-    assert redone == {"0", "5"}
-    assert all(v["committed"] for v in m2["groups"].values())
-    packed = layout.read_packed_shards(spark, out)
+    # a build killed at empty group 5: resume redoes groups 5-7 only and
+    # launches no pack job — its only Spark work is the aggregate that
+    # finds the non-empty groups
+    crashed = str(tmp_path / "one_shard_crashed")
+    with monkeypatch.context() as m:
+        crash_commits(m, lambda s: s.get("group") == 5)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            layout.write_packed_shards(weighted, crashed,
+                                       docs_per_shard=4096, num_groups=8)
+    sc.setJobGroup("find-nonempty-groups", "_nonempty_groups")
+    try:
+        layout._nonempty_groups(layout._with_shard(weighted, 4096), 8)
+    finally:
+        sc.setJobGroup("", "")
+    sc.setJobGroup("resume-empty-groups", "write_packed_shards")
+    try:
+        t2 = layout.write_packed_shards(weighted, crashed,
+                                        docs_per_shard=4096, num_groups=8)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(
+        "resume-empty-groups")) == len(sc.statusTracker()
+                                       .getJobIdsForGroup(
+                                           "find-nonempty-groups"))
+    assert [s.summary["group"] for s in t2.snapshots] == \
+        [str(g) for g in range(8)]
+    packed = layout.read_packed_shards(spark, crashed)
     assert packed.groupBy().agg(F.sum("n")).collect()[0][0] == n_postings
 
     new = (weighted.filter(F.col("doc_id") < 50)
            .withColumn("doc_id", F.col("doc_id") + 4096))
-    m3 = layout.append_packed_shards(new, out)
-    assert m3["groups"]["8"]["append"] and m3["groups"]["8"]["docs"] == 50
-    assert m3["groups"]["8"]["postings"] == new.count()
+    t3 = layout.append_packed_shards(new, out)
+    appended = t3.snapshots[-1].summary
+    assert "append_batch" in appended and appended["docs"] == "50"
+    assert appended["postings"] == str(new.count())
     packed = layout.read_packed_shards(spark, out)
     assert packed.groupBy().agg(F.sum("n")).collect()[0][0] == \
         n_postings + new.count()

@@ -759,12 +759,12 @@ def test_add_documents_positional_append(spark, tmp_path):
         meta = _json.load(f)
     assert meta["num_docs"] == 32 and meta["num_docs_total"] == 40
     assert meta["appends"][0]["docs"] == 8
-    # packed manifest gained one committed append group
-    with open(f"{inc}/manifest.json") as f:
-        man = _json.load(f)
-    ap_groups = [g for g in man["groups"].values() if g.get("append")]
-    assert len(ap_groups) == 1 and ap_groups[0]["committed"]
-    assert ap_groups[0]["docs"] == 8
+    # the packed store gained one committed append snapshot
+    from gensim_spark.index.icetable import IceTable
+
+    appends = [s.summary for s in IceTable.load(inc).snapshots
+               if "append_batch" in s.summary]
+    assert len(appends) == 1 and appends[0]["docs"] == "8"
 
     # guards: interleaved ids refuse; missing doc_id refuses;
     # non-positional index refuses
@@ -788,17 +788,20 @@ def test_add_documents_positional_append(spark, tmp_path):
         build_index.add_documents(spark, p_new, plain)
 
 
-def test_add_documents_crash_recovery_guards(spark, tmp_path):
-    """Append crash-safety (review r5b): an orphan group dir from a
-    crashed append is wiped and the retry succeeds; a pending-append
+def test_add_documents_crash_recovery_guards(spark, tmp_path, monkeypatch):
+    """Append crash-safety (review r5b): the staged files of a crashed
+    packed append are never read and the retry succeeds; a pending-append
     marker (crash between store writes) refuses loudly; an incomplete
-    BUILD (missing manifest group) refuses the append."""
+    BUILD (an uncommitted build group) refuses the append."""
     import json as _json
 
     import pytest as _pytest
     from pyspark.sql import functions as F
 
+    from gensim_spark.index import layout
+    from gensim_spark.index.icetable import IceTable
     from gensim_spark.jobs import build_index
+    from tests.conftest import crash_commits, staged_files
 
     base = _pages_df(spark).withColumn(
         "doc_id", F.regexp_extract("url", r"p(\d+)$", 1).cast("long"))
@@ -810,15 +813,24 @@ def test_add_documents_crash_recovery_guards(spark, tmp_path):
     build_index.run(spark, p_old, out, docs_per_shard=16, num_groups=2,
                     positional=True, positional_n_buckets=4)
 
-    # (a) orphan group dir (crashed append's partial write): wiped, and
-    # the retried append lands as the next committed group
-    orphan = os.path.join(out, "data", "group=2", "shard_id=2")
-    os.makedirs(orphan)
+    # (a) a crashed packed append (shard 2 staged, never committed): the
+    # boundary ignores it, and the retried append lands as the one
+    # committed append snapshot, read exactly once
+    wdummy = spark.createDataFrame(
+        [(32, 0, 1.0), (33, 1, 1.0)],
+        "doc_id long, term_id long, weight double")
+    with monkeypatch.context() as m:
+        crash_commits(m, lambda s: "append_batch" in s)
+        with _pytest.raises(RuntimeError, match="simulated crash"):
+            layout.append_packed_shards(wdummy, out)
+    assert len(staged_files(out)) > len(layout.packed_files(out))
     rec = build_index.add_documents(spark, p_new, out)
     assert rec["docs"] == 8
-    with open(f"{out}/manifest.json") as f:
-        man = _json.load(f)
-    assert man["groups"]["2"]["append"] and man["groups"]["2"]["committed"]
+    appended = IceTable.load(out).snapshots[-1].summary
+    assert appended["docs"] == "8"
+    shard2 = layout.read_packed_shards(spark, out, shard_ids=[2])
+    assert shard2.groupBy().agg(F.sum("n")).collect()[0][0] == \
+        int(appended["postings"])
 
     # (b) pending marker: a crash BETWEEN store writes leaves it set —
     # the next append must refuse with the batch named
@@ -835,25 +847,82 @@ def test_add_documents_crash_recovery_guards(spark, tmp_path):
         with open(mpath, "w") as f:
             _json.dump(meta, f)
 
-    # (c) incomplete build: drop a build group from the manifest — the
-    # packed append must refuse rather than hijack the missing group id
-    from gensim_spark.index.layout import append_packed_shards
+    # (c) incomplete build: a build killed at group 1's commit — the
+    # packed append must refuse rather than land past the missing group
+    partial = str(tmp_path / "idx_partial")
+    wbuild = spark.createDataFrame(
+        [(d, 0, 1.0) for d in range(32)],
+        "doc_id long, term_id long, weight double")
+    with monkeypatch.context() as m:
+        crash_commits(m, lambda s: s.get("group") == 1)
+        with _pytest.raises(RuntimeError, match="simulated crash"):
+            layout.write_packed_shards(wbuild, partial, docs_per_shard=16,
+                                       num_groups=2)
+    wlate = spark.createDataFrame(
+        [(1000, 0, 1.0)], "doc_id long, term_id long, weight double")
+    with _pytest.raises(ValueError, match="uncommitted"):
+        layout.append_packed_shards(wlate, partial)
 
-    man_path = f"{out}/manifest.json"
-    with open(man_path) as f:
-        man = _json.load(f)
-    broken = {**man, "groups": {k: v for k, v in man["groups"].items()
-                                if k != "1"}}
-    try:
-        with open(man_path, "w") as f:
-            _json.dump(broken, f)
-        wdummy = spark.createDataFrame(
-            [(1000, 0, 1.0)], "doc_id long, term_id long, weight double")
-        with _pytest.raises(ValueError, match="uncommitted"):
-            append_packed_shards(wdummy, out)
-    finally:
-        with open(man_path, "w") as f:
-            _json.dump(man, f)
+
+def test_crashed_append_is_never_read(spark, tmp_path, monkeypatch):
+    """An append whose files are staged but never committed is invisible
+    to every packed reader — the Spark scan, distributed WAND, both
+    serving modes and the served query job answer exactly as before it —
+    and retrying the same batch succeeds and is then seen by all of
+    them."""
+    from pyspark.sql import functions as F
+
+    from gensim_spark.index import layout, serving, wand
+    from gensim_spark.jobs import build_index, query_index
+    from tests.conftest import crash_commits, staged_files
+
+    pages = str(tmp_path / "pages")
+    _pages_df(spark, n=32).withColumn(
+        "doc_id", F.regexp_extract("url", r"p(\d+)$", 1).cast("long")) \
+        .write.parquet(pages)
+    out = str(tmp_path / "idx")
+    build_index.run(spark, pages, out, docs_per_shard=16, num_groups=2)
+    tid = {r["token"]: r["term_id"]
+           for r in spark.read.parquet(f"{out}/vocab").collect()}
+    qterms = {0: {tid["alpha"]: 1.0, tid["common"]: 1.0}}
+    # heavy weights on the query terms: the batch tops every answer once
+    # it is visible
+    batch = spark.createDataFrame(
+        [(d, t, 50.0) for d in (32, 33, 40) for t in qterms[0]],
+        "doc_id long, term_id long, weight double")
+
+    def answers():
+        wand_rows = sorted(
+            (r["query_id"], r["rank"], r["doc_id"], r["score"])
+            for r in wand.wand_topk(spark, out, qterms, k=5).collect())
+        served = [
+            serving.PackedIndexServer(out, preload=p).topk(qterms, k=5)
+            for p in (True, False)]
+        job = query_index.run_served(out, ["alpha common"], k=5)["results"]
+        packed = layout.read_packed_shards(spark, out)
+        return {"postings": packed.groupBy().agg(F.sum("n")).collect()[0][0],
+                "wand": wand_rows,
+                "served": [sorted((q, r, d, s) for q, d, s, r in rows)
+                           for rows in served],
+                "run_served": [(h["rank"], h["doc_id"], h["score"])
+                               for h in job["0"]]}
+
+    before = answers()
+    assert before["served"] == [before["wand"]] * 2
+    with monkeypatch.context() as m:
+        crash_commits(m, lambda s: "append_batch" in s)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            layout.append_packed_shards(batch, out)
+    assert len(staged_files(out)) > len(layout.packed_files(out))
+    assert answers() == before
+
+    layout.append_packed_shards(batch, out)
+    after = answers()
+    assert after["postings"] == before["postings"] + 6
+    assert {d for _q, _r, d, _s in after["wand"][:3]} == {32, 33, 40}
+    assert after["served"] == [after["wand"]] * 2
+    assert after["run_served"] == [(r, d, s)
+                                   for _q, r, d, s in after["wand"]]
 
 
 def test_query_index_span_near_multi(spark, tmp_path):

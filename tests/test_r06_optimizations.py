@@ -1,9 +1,9 @@
 """Round-6 optimization regression tests: every rewrite that changed an
 operator's internals is pinned against its previous (reference) form —
-MinHash Arrow stage vs the relational aggregate, row-local LSH pair
-expansion vs the naive self-join, row-distinct decontamination counts,
-the digamma fast path, and the warm positional-server cache identity/
-invalidation behavior."""
+MinHash Arrow stage vs the relational aggregate (kept here as the
+oracle), row-local LSH pair expansion vs the naive self-join,
+row-distinct decontamination counts, the digamma fast path, and the warm
+positional-server cache identity/invalidation behavior."""
 
 from __future__ import annotations
 
@@ -27,17 +27,44 @@ def tokdocs(spark):
     return spark.createDataFrame(rows, "doc_id long, tokens array<string>")
 
 
+def minhash_agg(docs, num_hashes, shingle_n=3, doc_col="doc_id"):
+    """Reference MinHash: the relational form — non-distinct gram explode,
+    then one groupBy of ``min(seeded(gram, h))`` per hash."""
+    from gensim_spark.functions.hashing import seeded
+    from gensim_spark.operators.dedup import shingles
+
+    sh = shingles(docs, "tokens", shingle_n, doc_col, distinct=False)
+    return sh.groupBy("doc_id").agg(*[
+        F.min(seeded(F.col("shingle"), h)).alias(f"sig_{h}")
+        for h in range(num_hashes)])
+
+
 def test_minhash_arrow_matches_agg(tokdocs):
     from gensim_spark.operators import dedup as D
 
     a = D.minhash_signatures(tokdocs, num_hashes=4)
-    b = D.minhash_signatures(tokdocs, num_hashes=4, mode="agg")
+    b = minhash_agg(tokdocs, num_hashes=4)
     assert a.columns == b.columns
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     # docs with < shingle_n tokens emit no row in either form
     n_short = tokdocs.filter(F.size("tokens") < 3).count()
     assert n_short > 0
     assert a.count() == tokdocs.count() - n_short
+
+
+def test_minhash_string_doc_ids_match_agg(tokdocs):
+    """String-keyed docs (``doc_col`` renamed too): the signature keeps
+    the id type and equals the reference."""
+    from gensim_spark.operators import dedup as D
+
+    docs = tokdocs.select(
+        F.concat(F.lit("url-"), F.col("doc_id").cast("string"))
+        .alias("url"), "tokens")
+    a = D.minhash_signatures(docs, num_hashes=4, doc_col="url")
+    b = minhash_agg(docs, num_hashes=4, doc_col="url")
+    assert a.dtypes == b.dtypes and dict(a.dtypes)["doc_id"] == "string"
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    assert a.count() == tokdocs.filter(F.size("tokens") >= 3).count()
 
 
 def test_band_pairs_match_naive_self_join(tokdocs):
