@@ -115,6 +115,11 @@ def minhash_signatures(docs: DataFrame, tokens_col: str = "tokens",
     shingles of the seeded hash60 (md5-based, oracle-checkable). ``doc_id``
     keeps ``doc_col``'s type (long, string, …).
 
+    The input is one row per document. Several rows for one doc give one
+    signature row per input row, each the min over that row's shingles —
+    not one row with the min over their union; group such input into one
+    token list per doc first.
+
     ZERO-shuffle Arrow-batched stage — per doc, shingles are built and
     hashed with CPython's native md5 and the minima emitted directly
     (``int.from_bytes(digest[:8]) >> 4`` IS ``int(hexdigest[:15], 16)``,
@@ -453,7 +458,10 @@ def dedup_clusters(docs: DataFrame, pairs: DataFrame,
     """(doc_id, cluster_id, keep): every document labeled with the canonical
     (minimum) doc id of its near-dup cluster; singletons label themselves.
     ``keep`` marks the one survivor per cluster — the standard train-data
-    dedup contract (drop everything with keep = false)."""
+    dedup contract (drop everything with keep = false).
+
+    ``docs`` is one row per document: a doc id on several rows gives that
+    many identical output rows, one per input row."""
     comp = connected_components(pairs, src_col, dst_col)
     out = (
         docs.select(F.col(doc_col).alias("doc_id"))

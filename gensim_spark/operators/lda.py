@@ -190,10 +190,15 @@ def infer_doc(ids: np.ndarray, cts: np.ndarray, gammad: np.ndarray,
 _SLICE_ELEMS = 1 << 22
 
 
-def _bow_slices(batches, k: int):
+def _bow_slices(batches, k: int, extra: tuple = (), doc_extra: tuple = ()):
     """Arrow batches of ``corpus_bow`` rows → (doc_ids, ids, cts, lens)
     slices of whole documents, each within ``_SLICE_ELEMS`` pairs × K (a
-    larger document is a slice of its own)."""
+    larger document is a slice of its own). ``doc_ids`` is None for rows
+    without a ``doc_id`` column. ``extra`` names further per-posting
+    columns (one list per document, aligned with ``ids``) and
+    ``doc_extra`` per-document list columns of one width; each slice
+    carries them after ``lens`` as (postings,) and (documents, width)
+    arrays."""
     import pyarrow.compute as pc
 
     cap = max(1, _SLICE_ELEMS // k)
@@ -201,17 +206,23 @@ def _bow_slices(batches, k: int):
         n = batch.num_rows
         if n == 0:
             continue
-        doc_ids = batch.column("doc_id").to_numpy().astype(np.int64)
+        doc_ids = (batch.column("doc_id").to_numpy().astype(np.int64)
+                   if "doc_id" in batch.schema.names else None)
         lens = pc.list_value_length(batch.column("ids")).to_numpy().astype(np.int64)
         ids = batch.column("ids").flatten().to_numpy().astype(np.int64)
         cts = batch.column("cts").flatten().to_numpy().astype(np.float64)
+        cols = [batch.column(c).flatten().to_numpy() for c in extra]
+        rows = [batch.column(c).flatten().to_numpy().reshape(n, -1)
+                for c in doc_extra]
         offs = np.concatenate(([0], np.cumsum(lens)))
         lo = 0
         while lo < n:
             hi = int(np.searchsorted(offs, offs[lo] + cap, side="right")) - 1
             hi = max(hi, lo + 1)
-            yield (doc_ids[lo:hi], ids[offs[lo]:offs[hi]],
-                   cts[offs[lo]:offs[hi]], lens[lo:hi])
+            a, b = offs[lo], offs[hi]
+            yield (None if doc_ids is None else doc_ids[lo:hi],
+                   ids[a:b], cts[a:b], lens[lo:hi],
+                   *[x[a:b] for x in cols], *[x[lo:hi] for x in rows])
             lo = hi
 
 
@@ -353,10 +364,13 @@ def infer_dim(df: DataFrame, col: str, what: str = "corpus") -> int:
     return int(m) + 1
 
 
-def corpus_bow(postings: DataFrame) -> DataFrame:
-    """(doc_id, term_id, tf) postings → one row per document with parallel
-    sorted id/count arrays — the unit the E-step's Arrow batches consume."""
-    tf_col = "tf" if "tf" in postings.columns else "weight"
+def corpus_bow(postings: DataFrame, value_col: str | None = None) -> DataFrame:
+    """(doc_id, term_id, value) postings → one row per document with
+    parallel id/value arrays sorted by term id, ``(doc_id, ids, cts)`` — the
+    unit the topic models' Arrow batches consume. ``cts`` carries
+    ``value_col`` as double (default: ``tf`` when present, else
+    ``weight``)."""
+    tf_col = value_col or ("tf" if "tf" in postings.columns else "weight")
     pairs = F.sort_array(F.collect_list(F.struct("term_id", F.col(tf_col).alias("tf"))))
     return (postings.groupBy("doc_id").agg(pairs.alias("bow"))
             .select(

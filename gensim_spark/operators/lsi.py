@@ -8,32 +8,45 @@ stochastic_svd lsimodel.py:860-1061, after Halko, Martinsson, Tropp 2011,
 "Finding structure with randomness"); ``LsiModel.__getitem__`` returns
 ``uᵀ·x`` per document, optionally scaled by ``1/s`` (lsimodel.py:578-636).
 
-This implementation runs the same published algorithm with Spark doing every
-corpus-sized product and the driver touching only ℓ×ℓ matrices (ℓ = k +
-extra_dims ≪ corpus):
+This implementation runs the same published algorithm in the reference's
+own shape — every worker forms its chunk's products before any merge
+(``stochastic_svd``'s chunk loop, gensim's ``lsi_worker``) — with the
+driver touching ℓ×ℓ matrices (ℓ = k + extra_dims ≪ corpus) and, when it is
+small, W = AᵀY:
 
-1. ``Y = A·Ω`` — Ω is the hash-sign test matrix (±1, Achlioptas — the same
-   deterministic construction as operators/rp.py), applied as ℓ aggregate
-   expressions per document. Ω never exists as data.
-2. power iterations ``Y ← A·(Aᵀ·Y·R⁻¹)``, re-orthonormalized each round
-   via the ℓ×ℓ Gram + Cholesky (the numerically safe variant of Halko
-   Algorithm 4.4); ``AᵀQ`` is taken as ``W·R⁻¹`` with ``W = AᵀY``
-   (term-keyed rows, cached each round).
-3. thin QR by Cholesky, ``Q = Y·R⁻¹``, folded into the last pass: ``B =
-   Qᵀ·A`` has term rows ``W·R⁻¹``, so ``G = B·Bᵀ = R⁻ᵀ·(WᵀW)·R⁻¹`` —
-   neither Q nor B is ever materialized. Gram(Y) and Gram(W) come from
-   ONE job: every sync point (one per power iteration, one at the end)
-   runs one Gram job.
-4. ``G`` (ℓ×ℓ) eigendecomposed in numpy; ``u = Bᵀ·Ū·Σ⁻¹ =
-   W·(R⁻¹·Ū·Σ⁻¹)`` distributed (terms × k), ``s`` = top-k singular values.
+1. A is read once, into one cached doc-grouped frame: ``lda.corpus_bow``
+   rows ``(doc_id, ids, cts)``, one per document, the weights in ``cts``.
+2. Each round is ONE ``mapInArrow`` over those rows (:func:`_round`). Per
+   slice of whole documents it forms each document's Y row (A·Ω in round
+   0, A·Z after), folds YᵀY into a task-local Gram and emits the task's
+   term-keyed AᵀY partials, the ℓ Gram rows riding under keys below every
+   term id. One ``groupBy(term_id)`` sum then yields W = AᵀY and Gram(Y)
+   together. The doc ids never enter the kernel, so they may be of any
+   type.
+3. Ω is the hash-sign test matrix of :func:`sign_cols` (±1 from bit b of
+   ``xxhash64(term_id, blk)`` for column 64·blk + b). Round 0 computes the
+   ⌈ℓ/64⌉ hash words per posting in the JVM as array columns over the
+   cached rows and the kernel bit-slices them in numpy, so Ω never exists
+   as data and is bit for bit ``sign_cols``' Ω.
+4. A power round re-orthonormalizes (Halko Alg 4.4, stabilized: thin QR by
+   Cholesky of Gram(Y)) and sets Z = AᵀQ = W·R⁻¹. Where Z lives: when W
+   (terms × ℓ doubles) fits under ``spark.sql.autoBroadcastJoinThreshold``
+   it is collected and Z broadcast as sorted (term ids, rows), looked up
+   with ``np.searchsorted`` — hashed ids reach 2³¹, so never a dense array
+   indexed by id; the round then has one exchange and Y is never
+   materialized. Above the threshold W stays distributed: A·W is a term
+   join and a doc-keyed sum (:func:`_with_y`), each document's A·W row
+   (ℓ doubles) is joined to its cached row, and the same kernel takes
+   Y = (A·W)·R⁻¹ = A·Z, so Z is never formed.
+5. B = QᵀA is folded into the last round: its term rows are W·R⁻¹, so
+   ``G = B·Bᵀ = R⁻ᵀ·(WᵀW)·R⁻¹`` (WᵀW in numpy, or :func:`_gram` when W is
+   distributed). G (ℓ×ℓ) is eigendecomposed in numpy; ``u = Bᵀ·Ū·Σ⁻¹ =
+   W·(R⁻¹·Ū·Σ⁻¹)`` (terms × k), in numpy on the driver or over W's Arrow
+   batches (:func:`_arrow_times`); s = the top-k singular values. Neither
+   Q nor B is ever materialized.
 
-Every matmul is whole-stage-codegen column arithmetic — one join + one
-hash-agg with ℓ sum expressions, or one projection whose ℓ outputs are
-each a single SQL expression (see ``_wide_times``); the ℓ×ℓ Gram products
-are Arrow-batched numpy partials over a volume-sized width (see
-``_gram``), and the only driver-side data ever collected is ℓ×ℓ. A is
-(doc_id, term_id, weight) postings — raw tf or any weighted corpus, exactly
-like the reference.
+A is (doc_id, term_id, weight) postings — raw tf or any weighted corpus,
+exactly like the reference.
 
 Exactness property used by the tests: when ℓ ≥ rank(A), the range finder
 captures the full column space, so the result equals the exact truncated
@@ -46,11 +59,19 @@ from __future__ import annotations
 import functools
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gensim_spark.operators.lda import (
+    _SLICE_ELEMS,
+    _bow_slices,
+    _merge_term_sums,
+    corpus_bow,
+)
 
 P2_EXTRA_DIMS = 100   # lsimodel.py:81
 P2_EXTRA_ITERS = 2    # lsimodel.py:82
+_GRAM_KEY = -(2 ** 63)   # a round's Gram(Y) row i rides under term_id _GRAM_KEY + i
 
 
 def sign_cols(term_col, ell: int) -> list:
@@ -69,6 +90,26 @@ def sign_cols(term_col, ell: int) -> list:
     return cols
 
 
+def _hash_words(ell: int) -> list:
+    """⌈ℓ/64⌉ ``h{blk}`` array columns over ``corpus_bow`` rows: each id's
+    ``xxhash64(term_id, blk)`` — the draws :func:`sign_cols` slices,
+    computed by the JVM. ``transform`` binds a two-argument lambda as
+    (element, index), so each block's lambda is a one-argument closure."""
+    def word(blk):
+        return lambda t: F.xxhash64(t, F.lit(blk))
+    return [F.transform("ids", word(blk)).alias(f"h{blk}")
+            for blk in range((ell + 63) // 64)]
+
+
+def _omega(words: np.ndarray, ell: int) -> np.ndarray:
+    """(terms, ⌈ℓ/64⌉) int64 hash words → (terms, ℓ) Ω rows: column
+    64·blk + b is +1 where bit b of word blk is set, else −1 — the signs
+    :func:`sign_cols` builds in SQL, bit for bit."""
+    bits = (np.ascontiguousarray(words).view(np.uint64)[:, :, None]
+            >> np.arange(64, dtype=np.uint64)) & np.uint64(1)
+    return np.where(bits.reshape(len(words), -1)[:, :ell] == 1, 1.0, -1.0)
+
+
 def _agg_matmul(rows: DataFrame, key: str, in_cols: list[str],
                 weight: str, out_prefix: str, n_out: int) -> DataFrame:
     """groupBy(key).agg(Σ weight·in_col_j) for j — one join-free hash-agg.
@@ -76,6 +117,125 @@ def _agg_matmul(rows: DataFrame, key: str, in_cols: list[str],
     exprs = [F.sum(F.col(weight) * F.col(c)).alias(f"{out_prefix}{i}")
              for i, c in enumerate(in_cols)]
     return rows.groupBy(key).agg(*exprs)
+
+
+def _round(rows: DataFrame, ell: int, z_bc=None,
+           y_times: np.ndarray | None = None) -> DataFrame:
+    """One round over doc rows ``(ids, cts, …)`` → ``(term_id,
+    w0..w_{ℓ-1})``: the rows of W = AᵀY, and Gram(Y)'s row i under
+    term_id ``_GRAM_KEY + i`` (below every int and long id in use).
+
+    One ``mapInArrow`` and one ``groupBy(term_id)`` sum. Per slice of whole
+    documents the kernel forms each document's Y row: A·Z with Z looked up
+    for the slice's distinct terms in the broadcast ``z_bc`` (sorted term
+    ids, rows) by ``np.searchsorted``, A·Ω from the hash words ``h0…``, or
+    the document's own ``y`` row times ``y_times`` when the rows carry one
+    (:func:`_with_y`). It adds YᵀY to
+    the task's Gram and sums AᵀY per term with one ``np.bincount`` per
+    column. Term partials merge, and are emitted, once they outgrow
+    ``_SLICE_ELEMS``, so a task holds a bounded share of W; the
+    aggregate's map-side combine merges what one task emits more than
+    once."""
+    import pyarrow as pa
+
+    w_cols = [f"w{j}" for j in range(ell)]
+    given = ("y",) if "y" in rows.columns else ()
+    words = tuple(c for c in rows.columns if c not in ("ids", "cts", "y"))
+
+    def emit(keys, w):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(keys, pa.int64()), *[pa.array(col) for col in w]],
+            names=["term_id", *w_cols])
+
+    def z_rows(terms, first, ex):
+        if z_bc is not None:
+            z_ids, z = z_bc.value
+            return z[np.searchsorted(z_ids, terms)]
+        return _omega(np.stack([h[first] for h in ex], axis=1), ell)
+
+    def gen(batches):
+        gram = np.zeros((ell, ell))
+        parts, pending = [], 0
+        for _, ids, vals, lens, *ex in _bow_slices(batches, ell, words,
+                                                   given):
+            if not ids.size:
+                continue
+            terms, first, inv = np.unique(ids, return_index=True,
+                                          return_inverse=True)
+            nonempty = lens > 0
+            lens = lens[nonempty]
+            if given:
+                y = ex[0][nonempty] @ y_times
+            else:
+                y = np.add.reduceat(vals[:, None] * z_rows(terms, first, ex)[inv],
+                                    np.cumsum(lens) - lens, axis=0)
+            gram += y.T @ y
+            c = vals[:, None] * np.repeat(y, lens, axis=0)
+            parts.append((terms, np.stack([
+                np.bincount(inv, weights=c[:, j], minlength=terms.size)
+                for j in range(ell)])))
+            pending += terms.size
+            if pending * ell > _SLICE_ELEMS:
+                yield emit(*_merge_term_sums(parts, ell))
+                parts, pending = [], 0
+        if parts:
+            yield emit(*_merge_term_sums(parts, ell))
+        yield emit(_GRAM_KEY + np.arange(ell), gram.T)
+
+    schema = "term_id long, " + ", ".join(f"{c} double" for c in w_cols)
+    return (rows.mapInArrow(gen, schema).groupBy("term_id").sum(*w_cols)
+            .toDF("term_id", *w_cols))
+
+
+def _split(keys: np.ndarray, vals: np.ndarray, ell: int) -> tuple:
+    """Aggregated round rows → (sorted term ids, their W rows, Gram(Y))."""
+    gram = np.zeros((ell, ell))
+    g = keys < _GRAM_KEY + ell
+    gram[keys[g] - _GRAM_KEY] = vals[g]
+    order = np.argsort(keys[~g])
+    return keys[~g][order], vals[~g][order], gram
+
+
+def _with_y(docs: DataFrame, w: DataFrame, ell: int) -> DataFrame:
+    """Doc rows with each document's A·W row attached → ``(ids, cts, y)``,
+    the kernel's input when Z = W·R⁻¹ is too large to broadcast; the kernel
+    multiplies ``y`` by R⁻¹, so Y = A·W·R⁻¹ = A·Z and Z is never formed.
+    A·W comes from a term join and a doc-keyed sum, which combines
+    map-side, and is joined back on doc_id: ℓ doubles per document, never
+    per posting."""
+    w_cols = [f"w{j}" for j in range(ell)]
+    y_cols = [f"y{j}" for j in range(ell)]
+    post = (docs.select("doc_id", F.inline(F.arrays_zip("ids", "cts")))
+            .withColumnRenamed("ids", "term_id"))
+    y = _agg_matmul(post.join(w, "term_id"), "doc_id", w_cols, "cts", "y", ell)
+    return (docs.join(y.select("doc_id", F.array(*y_cols).alias("y")), "doc_id")
+            .select("ids", "cts", "y"))
+
+
+def _arrow_times(df: DataFrame, key: str, in_cols: list[str],
+                 mat: np.ndarray, out_prefix: str, key_type) -> DataFrame:
+    """Row-wise (key, x₀..x_{n-1}) · mat → (key, out₀..out_{m-1}) in numpy
+    over Arrow batches, the key cast to ``key_type``: :func:`_wide_times`'
+    product for a matrix too large for one SQL expression per output
+    (each is n terms; a 100 × 100 product took 12 s over 30 rows on a
+    4-core VM, and 300 × 200 ran a 4 GB driver out of memory)."""
+    import pyarrow as pa
+
+    mat = np.asarray(mat, dtype=np.float64)
+    out_cols = [f"{out_prefix}{i}" for i in range(mat.shape[1])]
+
+    def gen(batches):
+        for b in batches:
+            out = np.stack([b.column(c).to_numpy() for c in in_cols],
+                           axis=1) @ mat
+            yield pa.RecordBatch.from_arrays(
+                [b.column(key), *[pa.array(col) for col in out.T]],
+                names=[key, *out_cols])
+
+    schema = (f"{key} {df.schema[key].dataType.simpleString()}, "
+              + ", ".join(f"{c} double" for c in out_cols))
+    return (df.select(key, *in_cols).mapInArrow(gen, schema)
+            .withColumn(key, F.col(key).cast(key_type)))
 
 
 def _wide_times(df: DataFrame, key: str, in_cols: list[str],
@@ -99,7 +259,7 @@ def _wide_times(df: DataFrame, key: str, in_cols: list[str],
 
 
 def _rows(df: DataFrame) -> int:
-    """Rows of a Gram input. A cached frame answers from its cache's own
+    """Rows of a frame. A cached frame answers from its cache's own
     statistics; a cache not built yet is first built through its own RDD —
     the job its first reader would launch anyway, at the cache's full
     width — so the statistics are exact. Any other frame is counted."""
@@ -114,7 +274,8 @@ def _rows(df: DataFrame) -> int:
     return int(rel.computeStats().rowCount().get())
 
 
-def _gram(*parts: tuple[DataFrame, list[str]]) -> list[np.ndarray]:
+def _gram(*parts: tuple[DataFrame, list[str]],
+          rows: int | None = None) -> list[np.ndarray]:
     """XᵀX of each (frame, n columns) part, all from one Python job: the
     parts are tagged, unioned and folded by per-partition numpy Grams over
     Arrow batches.
@@ -125,8 +286,10 @@ def _gram(*parts: tuple[DataFrame, list[str]]) -> list[np.ndarray]:
     every Python task pays a fixed worker cost (measured on a 4-core VM: a
     mapInPandas over a cached 2,000-row frame took 0.23-0.30 s at 1
     partition, 0.64-0.77 s at 8), so a frame of a few MB runs as one task
-    and a corpus-sized one keeps its width. Rows come from :func:`_rows`; parts are cached frames
-    (the coalesce would narrow the stage computing an uncached one). One
+    and a corpus-sized one keeps its width. Rows are ``rows`` when the
+    caller knows them, else from :func:`_rows`; parts are cached frames, or
+    filters of one (the coalesce would narrow the stage computing an
+    uncached one). One
     task's partials are collected as they are; wider, they are tree-reduced
     through a map-side-combined (i → Σv) hash-agg, so each task ships
     exactly parts·n² rows regardless of |df| — scale-safe at any width.
@@ -141,7 +304,8 @@ def _gram(*parts: tuple[DataFrame, list[str]]) -> list[np.ndarray]:
         df.select(F.lit(t).alias("part"),
                   *[F.col(c).alias(x) for c, x in zip(cols, x_cols)])
         for t, (df, cols) in enumerate(parts)])
-    rows = sum(_rows(df) for df, _ in parts)
+    if rows is None:
+        rows = sum(_rows(df) for df, _ in parts)
     spark = union.sparkSession
     advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
         .byteStringAsBytes(spark.conf.get(
@@ -207,62 +371,72 @@ def lsi_fit(postings: DataFrame, num_topics: int = 200,
     """Fit the LSI projection over (doc_id, term_id, weight) postings."""
     k = int(num_topics)
     ell = k + (extra_dims if extra_dims is not None else min(P2_EXTRA_DIMS, k))
-    w = weight_col
-
-    # Y = A·Ω: per-doc ℓ sums of weight·sign(term, j)
-    y_exprs = [
-        F.sum(F.col(w) * s).alias(f"y{j}")
-        for j, s in enumerate(sign_cols(F.col("term_id"), ell))
-    ]
-    y_cols = [f"y{j}" for j in range(ell)]
     w_cols = [f"w{j}" for j in range(ell)]
-    z_cols = [f"z{j}" for j in range(ell)]
-    y = postings.groupBy("doc_id").agg(*y_exprs).cache()
+    is_w = F.col("term_id") >= _GRAM_KEY + ell     # a W row, not a Gram row
+    spark = postings.sparkSession
+    tid_type = postings.schema["term_id"].dataType
+    # one task per core: every round is a Python stage, and each task of
+    # one pays a fixed worker floor, so a second wave costs a whole floor
+    docs = (corpus_bow(postings, value_col=weight_col)
+            .coalesce(spark.sparkContext.defaultParallelism).cache())
 
-    # Each round caches W = AᵀY (term-keyed rows, row t = Σ_d weight·Y[d])
-    # and takes Gram(Y) and Gram(W) from one job, which also builds both
-    # caches. A power round re-orthonormalizes (Halko alg 4.4
-    # stabilization) and sets Y ← A·(AᵀQ), AᵀQ = W·R⁻¹: a projection of a
-    # built cache, so the planner sees its true size when it plans the
-    # join. The new Y is checkpointed lazily, which TRUNCATES its logical
-    # plan — without it the analyzed tree embeds both postings joins of
-    # every prior round and Catalyst re-analysis doubles per round
-    # (measured: 4.3 s/iter for p≤2, then 35 s at p=3) — and cached, so the
-    # next round's Gram builds it and reads its size. W is released once
-    # that build has read it.
+    # round 0 (Y = A·Ω) builds both caches; W's size decides where Z lives
+    agg = _round(docs.select("ids", "cts", *_hash_words(ell)), ell).cache()
+    n_rows = _rows(agg)
+    local = n_rows * ell * 8 <= (spark._jsparkSession.sessionState().conf()
+                                 .autoBroadcastJoinThreshold())
     rounds = max(0, int(power_iters))
-    w_prev = None
+    stale = []   # what the round before read: released once this one is built
     for it in range(rounds + 1):
-        wt = _agg_matmul(postings.join(y, "doc_id"), "term_id", y_cols, w,
-                         "w", ell).cache()
-        gram_y, gram_w = _gram((y, y_cols), (wt, w_cols))
-        if w_prev is not None:
-            w_prev.unpersist()
+        # collect W with its Gram(Y) rows, or the Gram rows alone
+        pdf = (agg if local else agg.filter(~is_w)).toPandas()
+        for x in stale + ([agg] if local else []):
+            x.unpersist()
+        terms, wm, gram_y = _split(pdf["term_id"].to_numpy(),
+                                   pdf[w_cols].to_numpy(np.float64), ell)
         rinv = _chol_inv(gram_y)
         if it == rounds:
             break
-        z = _wide_times(wt, "term_id", w_cols, rinv, "z")
-        y_next = _agg_matmul(postings.join(z, "term_id"), "doc_id", z_cols,
-                             w, "y", ell).localCheckpoint(eager=False).cache()
-        y.unpersist()
-        y, w_prev = y_next, wt
+        # power round: Z = AᵀQ = W·R⁻¹, then Y ← A·Z in the same kernel
+        if local:
+            z_bc = spark.sparkContext.broadcast((terms, wm @ rinv))
+            stale, agg = [z_bc], _round(docs.select("ids", "cts"), ell, z_bc)
+        else:
+            stale, agg = [agg], _round(_with_y(docs, agg.filter(is_w), ell),
+                                       ell, y_times=rinv).cache()
 
     # thin QR by Cholesky (Q = Y·R⁻¹) folded into the last round: B = QᵀA
     # has term rows (row t = B[:, t]) W·R⁻¹, so G = B·Bᵀ = R⁻ᵀ·(WᵀW)·R⁻¹
+    if local:
+        gram_w = wm.T @ wm
+    else:
+        w = agg.filter(is_w)
+        (gram_w,) = _gram((w, w_cols), rows=n_rows - len(pdf))
     evals, evecs = np.linalg.eigh(rinv.T @ gram_w @ rinv)   # ascending
     order = np.argsort(evals)[::-1][:k]
     s = np.sqrt(np.maximum(evals[order], 0.0))
     # u = Bᵀ·Ū·Σ⁻¹ = W·(R⁻¹·Ū·Σ⁻¹) (terms × k), guarding σ≈0 (zero-pad
     # like the reference does when rank < k, lsimodel.py:235-239)
     safe = np.where(s > 1e-12, s, np.inf)
-    wmat = evecs[:, order] / safe[np.newaxis, :]
-    # materialize the basis, then release every fit-local cache — a
-    # long-lived projection (repeated add_documents) must not pin one
-    # ℓ-wide cached frame per update
-    u = _wide_times(wt, "term_id", w_cols, rinv @ wmat, "t") \
-        .localCheckpoint(eager=True)
-    y.unpersist()
-    wt.unpersist()
+    rot = rinv @ (evecs[:, order] / safe[np.newaxis, :])
+    t_cols = [f"t{i}" for i in range(k)]
+    if local:
+        import pandas as pd
+
+        u_np = wm @ rot
+        u = spark.createDataFrame(
+            pd.DataFrame({"term_id": terms,
+                          **{c: u_np[:, i] for i, c in enumerate(t_cols)}}),
+            f"term_id {tid_type.simpleString()}, "
+            + ", ".join(f"{c} double" for c in t_cols))
+    else:
+        # materialize the basis, then release the fit's caches — a
+        # long-lived projection (repeated add_documents) must not pin one
+        # ℓ-wide cached frame per update
+        u = _arrow_times(w, "term_id", w_cols, rot, "t",
+                         tid_type).localCheckpoint(eager=True)
+        agg.unpersist()
+    docs.unpersist()
     out = LsiProjection(u, s, k)
     out.k_requested = k
     return out

@@ -1,4 +1,11 @@
+import os
+
 import pytest
+
+# The test session's JVM heap. The library's 48g default sizes a production
+# driver; on a 15 GB host it let one tier-1 session grow until the kernel's
+# OOM killer stopped it. An explicit setting still wins.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 
 @pytest.fixture(scope="session")

@@ -26,6 +26,24 @@ def interesting(plan: str, keys=("Exchange", "Scan parquet", "PushedFilters",
     return "\n".join(dict.fromkeys(out))
 
 
+def above_cache(df) -> str:
+    """One line per operator of ``df``'s physical plan, leaving out what
+    sits under each InMemoryTableScan — the cached relation's own build
+    plan, which runs once, not per query."""
+    lines = []
+
+    def walk(node, depth):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        lines.append("  " * depth + node.simpleString(25))
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), depth + 1)
+
+    walk(df._jdf.queryExecution().executedPlan(), 0)
+    return "\n".join(lines)
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -175,6 +193,41 @@ def main() -> None:
         "LSI projection merge (add_documents) — basis rotation as one "
         "codegen projection over the term join",
         summarize(p), interesting(p)))
+
+    # LSI fit round: one Arrow kernel over the cached doc-grouped corpus,
+    # feeding ONE term-keyed aggregate (W = AᵀY and Gram(Y) together). With
+    # Z broadcast there is no join; with broadcasting off (W above the
+    # threshold) each document's A·W row, from a term join and a doc-keyed
+    # sum, is joined to its cached row first. The plans stop at the cached
+    # frames, which a fit builds once; W and Z are zero placeholders (only
+    # the plan is shown).
+    import numpy as np
+
+    from gensim_spark.operators.lda import corpus_bow
+
+    ell, n = 5, 100
+    bow = corpus_bow(postings_d, value_col="weight").cache()
+    w = spark.range(n).select(
+        F.col("id").alias("term_id"),
+        *[F.lit(0.0).alias(f"w{j}") for j in range(ell)]).cache()
+    z_bc = spark.sparkContext.broadcast((np.arange(n), np.zeros((n, ell))))
+    plans = [above_cache(L._round(bow.select("ids", "cts"), ell, z_bc))]
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    plans.append(above_cache(L._round(L._with_y(bow, w, ell), ell,
+                                      y_times=np.eye(ell))))
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    for title, p in zip((
+            "LSI fit round, Z broadcast — one mapInArrow over the cached "
+            "doc rows feeding exactly one term-keyed aggregate, no join",
+            "LSI fit round, Z distributed (broadcasts off: W above the "
+            "threshold) — a term join and a doc-keyed sum give each "
+            "document's A·W row, joined to its cached row for the same "
+            "kernel"), plans):
+        sections.append((title, summarize(p), "\n".join(
+            "    " + line[:160] for line in p.splitlines())))
+    z_bc.destroy()
+    w.unpersist()
+    bow.unpersist()
 
     # Vocabulary-wide termsim build: the LSH bucket SELF-join must shuffle
     # both sides on the bucket key and broadcast NOTHING corpus-sized — the
