@@ -113,7 +113,8 @@ def _omega(words: np.ndarray, ell: int) -> np.ndarray:
 def _agg_matmul(rows: DataFrame, key: str, in_cols: list[str],
                 weight: str, out_prefix: str, n_out: int) -> DataFrame:
     """groupBy(key).agg(Σ weight·in_col_j) for j — one join-free hash-agg.
-    Small driver-side matrix multiplies live in :func:`_wide_times`."""
+    Row-wise products by a driver-side matrix live in
+    :func:`_arrow_times`."""
     exprs = [F.sum(F.col(weight) * F.col(c)).alias(f"{out_prefix}{i}")
              for i, c in enumerate(in_cols)]
     return rows.groupBy(key).agg(*exprs)
@@ -247,7 +248,9 @@ def _wide_times(df: DataFrame, key: str, in_cols: list[str],
     very double ``repr`` printed and ``+`` associates left, so every output
     is bit-identical to a Column-per-product build's, at one py4j call
     instead of 2·n·m (1-2 s of Python-side time per call at ℓ = 16). A
-    non-finite entry has no literal form and is rejected."""
+    non-finite entry has no literal form and is rejected. The library no
+    longer calls it (every product goes through :func:`_arrow_times`);
+    ROADMAP item 8 lists it for deletion."""
     mat = np.asarray(mat, dtype=np.float64)
     if not np.isfinite(mat).all():
         raise ValueError("_wide_times: matrix entries must be finite")
@@ -484,7 +487,8 @@ def merge_projections(p1: LsiProjection, p2: LsiProjection,
     here so the distributed work is exactly two passes over the joined
     (term_id, u₁ᵣₒw, u₂ᵣₒw) frame: one (n₁+n₂)² Gram, whose blocks give
     c = U₁ᵀU₂ and the Gram of the orthogonal component (→ R by Cholesky
-    QR), and one wide select producing the rotated basis
+    QR), and one Arrow-batched numpy product (:func:`_arrow_times`)
+    producing the rotated basis
     ``U = U₁·(u1ₖ − c·R⁻¹·u2ₖ) + U₂·(R⁻¹·u2ₖ)`` — Q is never
     materialized, every driver matrix is topics-sized. Matches the
     reference numerically (full QR vs Cholesky QR differ only by a
@@ -557,7 +561,8 @@ def merge_projections(p1: LsiProjection, p2: LsiProjection,
     # rotation plan (tools/explain_plans.py captures it as evidence) but
     # still drops the cache: the Gram passes above already consumed it,
     # and a later evaluation of the lazy u just recomputes the join.
-    u = _wide_times(joined, "term_id", a_cols + b_cols, rot, "t")
+    u = _arrow_times(joined, "term_id", a_cols + b_cols, rot, "t",
+                     joined.schema["term_id"].dataType)
     if checkpoint:
         u = u.localCheckpoint(eager=True)
     joined.unpersist()

@@ -4,13 +4,24 @@ The reference has no CC operator; this is the training-data-pipeline stage
 that turns LSH candidate *pairs* into keep/drop *clusters*. Oracle here is a
 driver-side union-find; the driver-level DuckDB oracle is a recursive CTE
 (see __spark_entry__.oracle_sql()["dedup_clusters"]).
+
+``connected_components`` has two paths: the local finish (edges collected
+and clustered in numpy, taken while they fit under
+``spark.sql.autoBroadcastJoinThreshold``) and the large-star/small-star
+rounds (forced here with the threshold at -1). Both must give the same
+``(node, component)`` set as the reference union-find.
 """
 
 import random
 
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from gensim_spark.operators import dedup as D
+
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
 
 def _union_find(n_nodes, edges):
@@ -34,10 +45,49 @@ def _union_find(n_nodes, edges):
     return {x: labels[find(x)] for x in range(n_nodes)}
 
 
-def _pairs_df(spark, edges):
+def _pairs_df(spark, edges, id_type="long"):
     return spark.createDataFrame(
-        [(a, b) for a, b in edges], "doc_a long, doc_b long"
+        [(a, b) for a, b in edges], f"doc_a {id_type}, doc_b {id_type}"
     )
+
+
+def _cc_both(spark, pairs):
+    """``{path: (output frame, its rows as a set, stats)}`` for the local
+    finish (session default budget) and the star rounds (budget -1)."""
+    out = {}
+    old = spark.conf.get(THRESHOLD)
+    for path, budget in (("local", old), ("star", "-1")):
+        spark.conf.set(THRESHOLD, budget)
+        try:
+            stats = {}
+            cc = D.connected_components(pairs, stats=stats)
+            out[path] = (cc, {(r.node, r.component) for r in cc.collect()},
+                         stats)
+        finally:
+            spark.conf.set(THRESHOLD, old)
+    return out
+
+
+def _want(edges):
+    """Reference ``(node, component)`` set over the nodes the edges touch
+    (self-loops touch nothing), ids mapped to ranks for the union-find."""
+    real = [(a, b) for a, b in edges if a != b]
+    nodes = sorted({x for e in real for x in e})
+    rank = {x: i for i, x in enumerate(nodes)}
+    labels = _union_find(len(nodes), [(rank[a], rank[b]) for a, b in real])
+    return {(x, nodes[labels[rank[x]]]) for x in nodes}
+
+
+def _check_both(spark, edges, id_type="long"):
+    both = _cc_both(spark, _pairs_df(spark, edges, id_type))
+    want = _want(edges)
+    n_comp = len({c for _, c in want})
+    for path, (_, got, stats) in both.items():
+        assert got == want, path
+        assert stats["star_edges"] == len(want) - n_comp, path
+    assert both["local"][2]["rounds"] == 0
+    assert both["star"][2]["rounds"] >= 1
+    return both
 
 
 def test_cc_chain_triangle_star(spark):
@@ -89,6 +139,84 @@ def test_cc_random_graphs_match_union_find(spark):
         touched = {a for a, b in edges} | {b for a, b in edges}
         want = {(x, oracle[x]) for x in touched}
         assert got == want
+
+
+@st.composite
+def _graphs(draw):
+    """Edge lists mixing random edges (self-loops included), a 40-node
+    path and a star over shuffled ids, with duplicated and reversed
+    copies of some edges."""
+    n = draw(st.integers(2, 30), label="n")
+    edges = draw(st.lists(st.tuples(st.integers(0, n - 1),
+                                    st.integers(0, n - 1)), max_size=40),
+                 label="random")
+    if draw(st.booleans(), label="path"):
+        ids = draw(st.permutations(range(100, 140)), label="path_ids")
+        edges += list(zip(ids, ids[1:]))
+    if draw(st.booleans(), label="star"):
+        hub = draw(st.integers(200, 220), label="hub")
+        leaves = draw(st.lists(st.integers(150, 260), min_size=1,
+                               max_size=15), label="leaves")
+        edges += [(hub, v) for v in leaves]
+    if edges:
+        dup = draw(st.lists(st.sampled_from(edges), max_size=10), label="dup")
+        rev = draw(st.lists(st.sampled_from(edges), max_size=10), label="rev")
+        edges += dup + [(b, a) for a, b in rev]
+    return draw(st.permutations(edges), label="order")
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(edges=_graphs())
+def test_cc_both_paths_match_union_find(spark, edges):
+    _check_both(spark, edges)
+
+
+def test_cc_string_ids_both_paths(spark):
+    # Spark orders strings by UTF-8 bytes, numpy by code point: the same
+    # order, so the component label is the same minimum on both paths
+    edges = [("b", "a"), ("a", "ab"), ("zz", "é"), ("é", "Z"), ("q", "q"),
+             ("x1", "x10"), ("x10", "x2"), ("日本", "éa")]
+    both = _check_both(spark, edges, "string")
+    for cc, _, _ in both.values():
+        assert cc.dtypes == [("node", "string"), ("component", "string")]
+
+
+@pytest.mark.parametrize("id_type", ["int", "long"])
+def test_cc_extreme_ids_both_paths(spark, id_type):
+    lo, hi = ((-2 ** 31, 2 ** 31 - 1) if id_type == "int"
+              else (-2 ** 63, 2 ** 63 - 1))
+    edges = [(hi, lo), (hi - 1, hi), (lo + 1, lo + 2), (lo + 2, 0),
+             (0, -1), (hi - 2, hi - 3)]
+    want = spark.createDataFrame([], f"x {id_type}").dtypes[0][1]
+    both = _check_both(spark, edges, id_type)
+    for cc, _, _ in both.values():
+        assert [t for _, t in cc.dtypes] == [want, want]
+
+
+@pytest.mark.parametrize("id_type", ["int", "long", "string"])
+def test_cc_empty_pairs_both_paths(spark, id_type):
+    both = _cc_both(spark, _pairs_df(spark, [], id_type))
+    want = spark.createDataFrame([], f"x {id_type}").dtypes[0][1]
+    for path, (cc, rows, stats) in both.items():
+        assert rows == set(), path
+        assert cc.columns == ["node", "component"], path
+        assert [t for _, t in cc.dtypes] == [want, want], path
+        assert stats["star_edges"] == 0, path
+    assert both["local"][2]["rounds"] == 0
+
+
+def test_dedup_clusters_broadcasts_local_components(spark):
+    """Under the session default budget the components come back as a
+    small local frame, and the doc-side join broadcasts it."""
+    docs = spark.range(50).withColumnRenamed("id", "doc_id")
+    out = D.dedup_clusters(docs, _pairs_df(spark, [(1, 2), (2, 5), (6, 7)]))
+    rows = out.collect()
+    assert len(rows) == 50
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
 
 
 def test_dedup_clusters_labels_every_doc(spark):
@@ -161,3 +289,45 @@ def test_band_pairs_repeated_doc_ids_give_no_self_pairs(spark):
         [(3, *sig), (3, *sig)],
         "doc_id long, sig_0 long, sig_1 long, sig_2 long, sig_3 long")
     assert D.minhash_band_pairs(lone, bands=2, rows_per_band=2).count() == 0
+
+
+def _bucket_sigs(spark, members, repeat=()):
+    """Signatures where ``members`` (plus the ``repeat`` ids again) share
+    band 0's bucket and every doc has a band-1 bucket of its own."""
+    ids = list(members) + list(repeat)
+    return spark.createDataFrame(
+        [(d, 7, 11, d, d) for d in ids],
+        "doc_id long, sig_0 long, sig_1 long, sig_2 long, sig_3 long")
+
+
+@pytest.mark.parametrize("size, repeat", [(5, ()), (5, (0, 3)), (6, ())])
+def test_band_pairs_max_bucket_boundary(spark, size, repeat):
+    """``max_bucket`` distinct docs emit every pair, one more emits none,
+    and a repeated doc id is counted once."""
+    pairs = D.minhash_band_pairs(_bucket_sigs(spark, range(size), repeat),
+                                 bands=2, rows_per_band=2, max_bucket=5)
+    got = sorted((r["doc_a"], r["doc_b"]) for r in pairs.collect())
+    want = ([(a, b) for a in range(size) for b in range(a + 1, size)]
+            if size <= 5 else [])
+    assert got == want
+
+
+def test_band_pairs_gate_below_collect_set(spark):
+    """The executed plan filters buckets on their distinct-doc count
+    below the member-list aggregate, so an oversize bucket's list is never
+    built."""
+    pairs = D.minhash_band_pairs(_bucket_sigs(spark, range(8)), bands=2,
+                                 rows_per_band=2, max_bucket=5)
+    assert pairs.count() == 0
+    final = (pairs._jdf.queryExecution().executedPlan().toString()
+             .split("== Initial Plan ==")[0].splitlines())
+    agg = max(i for i, line in enumerate(final)
+              if "partial_collect_set" in line)
+    depth = len(final[agg]) - len(final[agg].lstrip(" :+-"))
+    below = []
+    for line in final[agg + 1:]:
+        if len(line) - len(line.lstrip(" :+-")) <= depth:
+            break
+        below.append(line)
+    assert any("Filter" in line and "<= 5" in line for line in below)
+    assert any("dense_rank" in line for line in below)

@@ -1,7 +1,9 @@
 """Driver-contract regression: a fast subset of queries() checked against
 their DuckDB oracles at sf0.001, plus the two LSI and two LDA oracles at
 sf0.01, the sf their persisted-artifact SQL is keyed to (the full sweep lives in
-tools/check_oracles.py)."""
+tools/check_oracles.py). ``dedup_clusters`` is checked on both connected-
+components paths: the local finish (session default) and the star rounds
+(``spark.sql.autoBroadcastJoinThreshold=-1``)."""
 
 import math
 import os
@@ -17,8 +19,9 @@ LDA_ORACLES = ["lda_doc_topics", "lda_topic_diff"]
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 SUBSET = ["vocab", "doc2bow", "bm25_okapi", "bm25_topk", "dedup_exact",
-          "minhash_signatures", "simhash", "quality_stats", "knn_cosine",
-          "events_hourly"]
+          "minhash_signatures", "dedup_minhash_pairs", "dedup_clusters",
+          "simhash", "quality_stats", "knn_cosine", "events_hourly"]
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
 
 def norm_cell(v):
@@ -65,6 +68,17 @@ def _check_oracle(spark, duck, sf_dir, name):
 @pytest.mark.parametrize("name", SUBSET)
 def test_query_matches_oracle(spark, duck, name):
     _check_oracle(spark, duck, SF_DIR, name)
+
+
+def test_dedup_clusters_star_rounds_match_oracle(spark, duck):
+    """The same oracle with the broadcast budget off, so connected
+    components runs its large-star/small-star rounds."""
+    old = spark.conf.get(THRESHOLD)
+    spark.conf.set(THRESHOLD, "-1")
+    try:
+        _check_oracle(spark, duck, SF_DIR, "dedup_clusters")
+    finally:
+        spark.conf.set(THRESHOLD, old)
 
 
 @pytest.mark.parametrize("name", LSI_ORACLES)

@@ -194,3 +194,26 @@ def test_empty_postings(spark, id_type):
             f"struct<term_id:{'bigint' if id_type == 'long' else 'int'},"
             "t0:double,t1:double,t2:double>")
 
+
+
+@pytest.mark.parametrize("id_type", ["int", "long"])
+def test_arrow_times_wide_matrix(spark, id_type):
+    """A 400 × 200 product (``merge_projections``' rotation at k = 200)
+    over a few dozen rows matches numpy's ``@`` and keeps the key's type."""
+    rng = np.random.default_rng(7)
+    x, mat = rng.normal(size=(36, 400)), rng.normal(size=(400, 200))
+    ids = np.arange(36) * 97 - 1000
+    cols = [f"a{j}" for j in range(400)]
+    df = spark.createDataFrame(
+        pd.DataFrame({"term_id": ids, **dict(zip(cols, x.T))}),
+        f"term_id {id_type}, " + ", ".join(f"{c} double" for c in cols))
+    out = L._arrow_times(df, "term_id", cols, mat, "t",
+                         df.schema["term_id"].dataType)
+    assert out.dtypes[0] == ("term_id", "int" if id_type == "int"
+                             else "bigint")
+    rows = sorted(out.collect(), key=lambda r: r["term_id"])
+    assert [r["term_id"] for r in rows] == ids.tolist()
+    got = np.array([[r[f"t{i}"] for i in range(200)] for r in rows])
+    want = x @ mat
+    np.testing.assert_allclose(got, want, rtol=1e-12,
+                               atol=1e-12 * np.abs(want).max())

@@ -176,9 +176,9 @@ def main() -> None:
         summarize(p), interesting(p)))
 
     # LSI projection merge (online add_documents): the rotated basis is ONE
-    # whole-stage-codegen projection over the cached full-outer term join —
-    # Q is never materialized; the Grams feeding the rotation are
-    # topics²-sized partial folds.
+    # Arrow-batched numpy product (mapInArrow) over the cached full-outer
+    # term join — Q is never materialized; the Grams feeding the rotation
+    # are topics²-sized partial folds.
     from gensim_spark.operators import lsi as L
 
     postings_d = idx.postings.select(
@@ -191,8 +191,8 @@ def main() -> None:
     p = merged.u._jdf.queryExecution().executedPlan().toString()
     sections.append((
         "LSI projection merge (add_documents) — basis rotation as one "
-        "codegen projection over the term join",
-        summarize(p), interesting(p)))
+        "mapInArrow numpy product over the term join",
+        summarize(p), interesting(p, ("Exchange", "MapInArrow"))))
 
     # LSI fit round: one Arrow kernel over the cached doc-grouped corpus,
     # feeding ONE term-keyed aggregate (W = AᵀY and Gram(Y) together). With
@@ -228,6 +228,27 @@ def main() -> None:
     z_bc.destroy()
     w.unpersist()
     bow.unpersist()
+
+    # MinHash LSH band pairs: ONE exchange on the bucket key; each bucket's
+    # distinct docs are counted by windows over that exchange's sort, and
+    # the max_bucket / singleton gate filters rows BELOW the collect_set
+    # aggregate, so an oversize bucket's member list is never built.
+    from gensim_spark.operators import dedup as DD
+
+    sigs = DD.minhash_signatures(tok, num_hashes=4, shingle_n=3)
+    bp = DD.minhash_band_pairs(sigs, bands=2, rows_per_band=2,
+                               max_bucket=1000)
+    bp.collect()
+    final = (bp._jdf.queryExecution().executedPlan().toString()
+             .split("== Initial Plan ==")[0].splitlines())
+    final = final[:next((i for i, line in enumerate(final)
+                         if "InMemoryRelation" in line), len(final))]
+    p = "\n".join(final)
+    sections.append((
+        "MinHash LSH band pairs — one bucket-key exchange; distinct-doc "
+        "count by window, oversize/singleton gate below the collect_set "
+        "aggregate (final AQE plan, down to the cached token scan)",
+        summarize(p), "\n".join("    " + line[:160] for line in final)))
 
     # Vocabulary-wide termsim build: the LSH bucket SELF-join must shuffle
     # both sides on the bucket key and broadcast NOTHING corpus-sized — the
