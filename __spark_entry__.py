@@ -374,10 +374,10 @@ def _q_dedup_clusters(spark, sf_dir):
     """Full near-dup pipeline: MinHash → LSH pairs → connected components
     → every doc labeled with its cluster's canonical min doc_id + a keep
     flag. Connected components finishes on the driver (numpy union-find,
-    broadcast back) while the pair edges fit under
-    ``spark.sql.autoBroadcastJoinThreshold``, and runs large-star/small-star
-    rounds above it (or with the threshold at -1). Oracle: recursive-CTE
-    min-label reachability."""
+    returned as a local frame that the doc join broadcasts) while the pair
+    edges fit under ``spark.sql.autoBroadcastJoinThreshold``, and runs
+    large-star/small-star rounds above it (or with the threshold at -1).
+    Oracle: recursive-CTE min-label reachability."""
     from gensim_spark.operators import dedup as D
 
     tok = _tokenized(spark, sf_dir)

@@ -207,6 +207,32 @@ def test_cc_empty_pairs_both_paths(spark, id_type):
     assert both["local"][2]["rounds"] == 0
 
 
+
+@pytest.mark.parametrize("budget", ["default", "-1"])
+def test_cc_evaluates_pairs_once(spark, budget):
+    """Both paths read the input pairs in one pass: a counting UDF on the
+    input sees each row once."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        seen.add(1)
+        return x
+
+    edges = [(1, 2), (2, 3), (3, 1), (5, 6), (7, 7)]
+    pairs = _pairs_df(spark, edges).select(
+        F.udf(tick, "long").asNondeterministic()("doc_a").alias("doc_a"),
+        "doc_b")
+    old = spark.conf.get(THRESHOLD)
+    spark.conf.set(THRESHOLD, old if budget == "default" else budget)
+    try:
+        stats = {}
+        rows = D.connected_components(pairs, stats=stats).collect()
+    finally:
+        spark.conf.set(THRESHOLD, old)
+    assert (stats["rounds"] == 0) == (budget == "default")
+    assert len(rows) == 5
+    assert seen.value == len(edges)
+
 def test_dedup_clusters_broadcasts_local_components(spark):
     """Under the session default budget the components come back as a
     small local frame, and the doc-side join broadcasts it."""
@@ -289,45 +315,3 @@ def test_band_pairs_repeated_doc_ids_give_no_self_pairs(spark):
         [(3, *sig), (3, *sig)],
         "doc_id long, sig_0 long, sig_1 long, sig_2 long, sig_3 long")
     assert D.minhash_band_pairs(lone, bands=2, rows_per_band=2).count() == 0
-
-
-def _bucket_sigs(spark, members, repeat=()):
-    """Signatures where ``members`` (plus the ``repeat`` ids again) share
-    band 0's bucket and every doc has a band-1 bucket of its own."""
-    ids = list(members) + list(repeat)
-    return spark.createDataFrame(
-        [(d, 7, 11, d, d) for d in ids],
-        "doc_id long, sig_0 long, sig_1 long, sig_2 long, sig_3 long")
-
-
-@pytest.mark.parametrize("size, repeat", [(5, ()), (5, (0, 3)), (6, ())])
-def test_band_pairs_max_bucket_boundary(spark, size, repeat):
-    """``max_bucket`` distinct docs emit every pair, one more emits none,
-    and a repeated doc id is counted once."""
-    pairs = D.minhash_band_pairs(_bucket_sigs(spark, range(size), repeat),
-                                 bands=2, rows_per_band=2, max_bucket=5)
-    got = sorted((r["doc_a"], r["doc_b"]) for r in pairs.collect())
-    want = ([(a, b) for a in range(size) for b in range(a + 1, size)]
-            if size <= 5 else [])
-    assert got == want
-
-
-def test_band_pairs_gate_below_collect_set(spark):
-    """The executed plan filters buckets on their distinct-doc count
-    below the member-list aggregate, so an oversize bucket's list is never
-    built."""
-    pairs = D.minhash_band_pairs(_bucket_sigs(spark, range(8)), bands=2,
-                                 rows_per_band=2, max_bucket=5)
-    assert pairs.count() == 0
-    final = (pairs._jdf.queryExecution().executedPlan().toString()
-             .split("== Initial Plan ==")[0].splitlines())
-    agg = max(i for i, line in enumerate(final)
-              if "partial_collect_set" in line)
-    depth = len(final[agg]) - len(final[agg].lstrip(" :+-"))
-    below = []
-    for line in final[agg + 1:]:
-        if len(line) - len(line.lstrip(" :+-")) <= depth:
-            break
-        below.append(line)
-    assert any("Filter" in line and "<= 5" in line for line in below)
-    assert any("dense_rank" in line for line in below)

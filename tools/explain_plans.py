@@ -229,10 +229,10 @@ def main() -> None:
     w.unpersist()
     bow.unpersist()
 
-    # MinHash LSH band pairs: ONE exchange on the bucket key; each bucket's
-    # distinct docs are counted by windows over that exchange's sort, and
-    # the max_bucket / singleton gate filters rows BELOW the collect_set
-    # aggregate, so an oversize bucket's member list is never built.
+    # MinHash LSH band pairs: ONE exchange on the bucket key, fed by a
+    # map-side partial collect_set; the singleton / max_bucket gate is a
+    # size filter on each bucket's member set, and the surviving sets
+    # expand to pairs row-locally (no self-join).
     from gensim_spark.operators import dedup as DD
 
     sigs = DD.minhash_signatures(tok, num_hashes=4, shingle_n=3)
@@ -245,9 +245,10 @@ def main() -> None:
                          if "InMemoryRelation" in line), len(final))]
     p = "\n".join(final)
     sections.append((
-        "MinHash LSH band pairs — one bucket-key exchange; distinct-doc "
-        "count by window, oversize/singleton gate below the collect_set "
-        "aggregate (final AQE plan, down to the cached token scan)",
+        "MinHash LSH band pairs — one bucket-key exchange after a "
+        "map-side partial collect_set, size gate on each member set, "
+        "row-local pair expansion (final AQE plan, down to the cached "
+        "token scan)",
         summarize(p), "\n".join("    " + line[:160] for line in final)))
 
     # Vocabulary-wide termsim build: the LSH bucket SELF-join must shuffle
