@@ -39,7 +39,13 @@ Deviation from the reference (documented): the reference defers the
 log (hdpmodel.py:549-554, 735-747) — a sequential-sparsity trick with no
 semantic content.  Here λ decays eagerly every update; the algebra is
 identical and the driver cost is O(T·W) per chunk, the same as the
-reference's own ``update_expectations``.
+reference's own ``update_expectations``.  Σλ is still carried by the
+reference's recurrence (hdpmodel.py:685-725), not summed from the eagerly
+decayed λ: at the default ``var_converge`` a document's iteration count
+can turn on 1-ulp differences in E[log β].  The warm-up iterations 0–2
+repeat the same likelihood in exact arithmetic, so the sign of a rounding
+residual decides whether the document stops, and a recomputed Σλ differs
+from the carried one by such an ulp after the first chunk.
 
 Scale: one job per chunk; model broadcast is O(T·W) like the reference's
 worker memory; vocab is bounded by ``filter_extremes`` upstream exactly as
@@ -229,14 +235,21 @@ class HdpModel:
                       chunksize: int, word_list: np.ndarray,
                       opt_o: bool = True):
         """ρ-blended stochastic update + stick refresh (hdpmodel.py:685-725);
-        λ decays eagerly across all columns (see module docstring)."""
+        λ decays eagerly across all columns (see module docstring).
+
+        Σλ follows the reference's recurrence
+        ``(1−ρ)·Σλ + ρ·D·Σ_w β_ss[:, w] / chunksize`` over the chunk's word
+        columns; it is not recomputed from the eagerly decayed λ.  The two
+        agree in exact arithmetic but not to the last bit, and E[log β]
+        (hence the next chunk's E-step) reads Σλ."""
         rhot = self.m_scale * pow(self.m_tau + self.m_updatect, -self.m_kappa)
         if rhot < RHOT_BOUND:
             rhot = RHOT_BOUND
         self.m_lambda *= 1.0 - rhot
         self.m_lambda[:, word_list] += \
             rhot * self.m_D * beta_ss / chunksize
-        self.m_lambda_sum = np.sum(self.m_lambda, axis=1)
+        self.m_lambda_sum = (1.0 - rhot) * self.m_lambda_sum \
+            + rhot * self.m_D * np.sum(beta_ss, axis=1) / chunksize
         self.m_updatect += 1
         self.m_varphi_ss = (1.0 - rhot) * self.m_varphi_ss \
             + rhot * sticks_ss * self.m_D / chunksize

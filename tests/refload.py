@@ -15,10 +15,23 @@ from __future__ import annotations
 
 import importlib.util
 import math
+import os
 import sys
 import types
 
+import pytest
+
 REFERENCE_ROOT = "/root/reference/gensim"
+
+
+def requires_reference(*relpaths: str):
+    """Skip mark for a test that reads ``{REFERENCE_ROOT}/{relpath}``: the
+    reference tree is not part of this repo, so the test runs only where it
+    is checked out and names the missing files otherwise."""
+    missing = [f"{REFERENCE_ROOT}/{p}" for p in relpaths
+               if not os.path.exists(f"{REFERENCE_ROOT}/{p}")]
+    return pytest.mark.skipif(
+        bool(missing), reason=f"reference file absent: {', '.join(missing)}")
 
 
 def _stub_unitvec(vec, norm="l2", return_norm=False):

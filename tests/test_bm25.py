@@ -10,6 +10,7 @@ import pytest
 
 from tests.conftest import docs_df
 from tests.oracle import PyBM25, PyDictionary
+from tests.refload import requires_reference
 
 
 @pytest.fixture(scope="module")
@@ -129,6 +130,7 @@ def _load_reference_bm25():
     return load_reference_module("models/bm25model.py", "ref_bm25model")
 
 
+@requires_reference("models/bm25model.py")
 @pytest.mark.parametrize("variant", ["okapi", "lucene", "atire"])
 def test_live_reference_weight_parity(spark, common_texts, variant):
     """North-rule evidence against the LIVE reference (not fixtures): fit

@@ -10,10 +10,14 @@ import numpy as np
 import pytest
 
 from gensim_spark.sources import fasttext_bin as FB
+from tests.refload import REFERENCE_ROOT, requires_reference
 
-CAP_BIN = "/root/reference/gensim/test/test_data/crime-and-punishment.bin"
-CAP_VEC = "/root/reference/gensim/test/test_data/crime-and-punishment.vec"
-NON_ASCII_BIN = "/root/reference/gensim/test/test_data/non_ascii_fasttext.bin"
+CAP_BIN_REL = "test/test_data/crime-and-punishment.bin"
+CAP_VEC_REL = "test/test_data/crime-and-punishment.vec"
+NON_ASCII_BIN_REL = "test/test_data/non_ascii_fasttext.bin"
+CAP_BIN = f"{REFERENCE_ROOT}/{CAP_BIN_REL}"
+CAP_VEC = f"{REFERENCE_ROOT}/{CAP_VEC_REL}"
+NON_ASCII_BIN = f"{REFERENCE_ROOT}/{NON_ASCII_BIN_REL}"
 
 
 def _load_vec(path):
@@ -27,6 +31,7 @@ def _load_vec(path):
     return out
 
 
+@requires_reference(CAP_BIN_REL)
 def test_load_fixture_shapes_and_vocab():
     # reference docstring goldens (_fasttext_bin.py:24-28)
     m = FB.load(CAP_BIN)
@@ -39,6 +44,7 @@ def test_load_fixture_shapes_and_vocab():
     assert m2.hidden_output is None
 
 
+@requires_reference(CAP_BIN_REL, CAP_VEC_REL)
 def test_in_vocab_vectors_match_published_vec():
     # test_fasttext.py:1198-1209: wv[word] == the .vec file the C tool wrote
     model = FB.load_facebook_model(CAP_BIN)
@@ -50,6 +56,7 @@ def test_in_vocab_vectors_match_published_vec():
                                    atol=1e-5)
 
 
+@requires_reference(CAP_BIN_REL)
 def test_oov_vectors_match_published_c_tool_output():
     # test_fasttext.py:1211-1221: ./fasttext print-word-vectors goldens
     model = FB.load_facebook_model(CAP_BIN)
@@ -68,6 +75,7 @@ def test_oov_vectors_match_published_c_tool_output():
                            model.adjusted_vectors()[0])
 
 
+@requires_reference(NON_ASCII_BIN_REL)
 def test_non_ascii_fixture_loads():
     m = FB.load(NON_ASCII_BIN)
     assert m.nwords == m.vocab_size and m.vectors_ngrams.shape[1] == \
@@ -116,6 +124,7 @@ def test_supervised_raises():
         FB.load(io.BytesIO(bytes(raw)))
 
 
+@requires_reference(CAP_BIN_REL)
 def test_to_model_feeds_spark_query_surface(spark):
     model = FB.load_facebook_model(CAP_BIN)
     vecs = model.vectors_df(spark)

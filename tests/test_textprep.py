@@ -7,11 +7,12 @@ import importlib.util
 import pytest
 
 from gensim_spark.functions import textref
+from tests.refload import REFERENCE_ROOT, requires_reference
 
 
 def _load_reference_porter():
     spec = importlib.util.spec_from_file_location(
-        "ref_porter", "/root/reference/gensim/parsing/porter.py"
+        "ref_porter", f"{REFERENCE_ROOT}/parsing/porter.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -112,6 +113,7 @@ def test_decode_htmlentities():
 
 # --- reference Porter as live oracle ----------------------------------------
 
+@requires_reference("parsing/porter.py")
 def test_porter_matches_reference_oracle():
     ref = _load_reference_porter()
     from gensim_spark.functions.porter import porter_stem

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import docs_df
 from tests.oracle import PyDictionary
+from tests.refload import requires_reference
 
 
 def _postings_and_dfs(spark, texts):
@@ -376,6 +377,7 @@ def _load_reference_tfidf():
     return load_reference_module("models/tfidfmodel.py", "ref_tfidfmodel")
 
 
+@requires_reference("models/tfidfmodel.py")
 @pytest.mark.parametrize("smartirs,pivot", [
     ("nfc", None), ("lfc", None), ("bnn", None), ("dtc", None),
     ("Ltc", None), ("npc", None), ("nfu", 10.0), ("nfn", None),
@@ -414,6 +416,7 @@ def test_live_reference_tfidf_parity(spark, common_texts, smartirs, pivot):
         assert got[key] == pytest.approx(want[key], abs=1e-12), key
 
 
+@requires_reference("models/tfidfmodel.py")
 def test_live_reference_smartirs_full_grid(spark, common_texts):
     """LIVE-reference parity over the ENTIRE SMART-IRS grid — all 96
     b/n/a/l/d/L × n/f/t/p × n/c/u/b combinations against the reference's
@@ -484,6 +487,7 @@ def test_live_reference_smartirs_full_grid(spark, common_texts):
     assert checked == 96
 
 
+@requires_reference("models/logentropy_model.py")
 @pytest.mark.parametrize("normalize", [True, False])
 def test_live_reference_logentropy_parity(spark, common_texts, normalize):
     """LIVE LogEntropyModel parity (logentropy_model.py run standalone)."""
@@ -514,6 +518,7 @@ def test_live_reference_logentropy_parity(spark, common_texts, normalize):
         assert got[key] == pytest.approx(want[key], abs=1e-12), key
 
 
+@requires_reference("models/normmodel.py")
 @pytest.mark.parametrize("norm", ["l1", "l2", "unique"])
 def test_live_reference_normmodel_parity(spark, common_texts, norm):
     """LIVE NormModel parity (normmodel.py run standalone) for all three
@@ -546,6 +551,7 @@ def test_live_reference_normmodel_parity(spark, common_texts, norm):
         assert got[key] == pytest.approx(want[key], abs=1e-12), key
 
 
+@requires_reference("models/phrases.py")
 @pytest.mark.parametrize("scoring,conn", [
     ("default", frozenset()),
     ("npmi", frozenset()),

@@ -4,6 +4,7 @@ import pytest
 
 from tests.conftest import docs_df
 from tests.oracle import PyDictionary
+from tests.refload import requires_reference
 
 
 @pytest.fixture(scope="module")
@@ -182,6 +183,7 @@ def test_build_with_empty_documents(spark):
     assert idx.weighted.count() == 3
 
 
+@requires_reference("corpora/dictionary.py")
 def test_live_reference_dictionary_parity(spark, common_texts):
     """LIVE Dictionary oracle (corpora/dictionary.py run standalone):
     token2id, dfs, cfs, num_docs/num_pos/num_nnz, doc2bow, doc2idx, and
@@ -243,6 +245,7 @@ def test_live_reference_dictionary_parity(spark, common_texts):
     assert got_f == want_f
 
 
+@requires_reference("corpora/hashdictionary.py")
 def test_live_reference_hashdictionary_ids(spark, common_texts):
     """LIVE HashDictionary oracle: the adler32 id path produces the
     reference's restricted_hash ids and doc2bow counts."""

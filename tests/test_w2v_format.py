@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gensim_spark.sources import word2vec_format as WF
+from tests.refload import REFERENCE_ROOT, requires_reference
 
 
 def _mk_df(spark, words, vecs, counts=None):
@@ -245,10 +246,11 @@ def test_facade_load_feeds_most_similar(spark, tmp_path):
     assert sorted(r["word"] for r in kv2.df.collect()) == sorted(words)
 
 
+@requires_reference("test/test_data/crime-and-punishment.vec")
 def test_reference_shipped_vec_fixture(spark):
     # a real .vec written by the original C fastText tool, shipped as
     # reference test data — 291 words x 5 dims
-    path = "/root/reference/gensim/test/test_data/crime-and-punishment.vec"
+    path = f"{REFERENCE_ROOT}/test/test_data/crime-and-punishment.vec"
     got = WF.load_word2vec_format(spark, path)
     rows = {r["word"]: np.array(r["embedding"]) for r in got.collect()}
     assert len(rows) == 291
