@@ -247,7 +247,8 @@ class IceTable:
         uncommitted directory under data/ and harvest manifest entries from
         the parquet footers. Nothing references the files until
         :meth:`commit_staged`; a crash here leaves only orphans (cleaned by
-        ``remove_orphans``), never partial table state."""
+        ``remove_orphans``), never partial table state. Pages are zstd, for
+        every table (Iceberg's default Parquet codec since 1.4)."""
         spec = [PartitionField(**pf) for pf in self.meta["partition-spec"]]
         write_uuid = str(_uuid.uuid4())[:13]
         staging = os.path.join(self._data_dir, write_uuid)
@@ -263,7 +264,7 @@ class IceTable:
         # directories by default.)
         for name in part_names:
             out = out.withColumn(f"p_{name}", F.col(name))
-        writer = out.write.mode("overwrite")
+        writer = out.write.mode("overwrite").option("compression", "zstd")
         if part_names:
             writer = writer.partitionBy(*[f"p_{n}" for n in part_names])
         writer.parquet(staging)
@@ -808,9 +809,11 @@ def _ddl_fields(ddl: str) -> list[dict]:
 
 
 def _collect_file_stats(staging: str, part_names: list[str]) -> list[dict]:
-    """Walk the staged write, harvesting per-file record counts and column
-    min/max bounds from the parquet footers (pyarrow), plus the partition
-    tuple from the directory path — the manifest entry fields."""
+    """Walk the staged write, harvesting per-file record counts, column
+    min/max bounds and compressed column sizes (Iceberg's
+    ``column_sizes``, keyed by column name here) from the parquet footers
+    (pyarrow), plus the partition tuple from the directory path — the
+    manifest entry fields."""
     import pyarrow.parquet as pq
 
     out = []
@@ -830,15 +833,17 @@ def _collect_file_stats(staging: str, part_names: list[str]) -> list[dict]:
                     except ValueError:
                         partition[k] = v
             md = pq.ParquetFile(path).metadata
-            lower, upper = {}, {}
+            lower, upper, sizes = {}, {}, {}
             for rg in range(md.num_row_groups):
                 g = md.row_group(rg)
                 for ci in range(g.num_columns):
                     col = g.column(ci)
+                    cname = col.path_in_schema
+                    sizes[cname] = (sizes.get(cname, 0)
+                                    + col.total_compressed_size)
                     stats = col.statistics
                     if stats is None or not stats.has_min_max:
                         continue
-                    cname = col.path_in_schema
                     mn, mx = stats.min, stats.max
                     if isinstance(mn, bytes):
                         continue
@@ -853,6 +858,7 @@ def _collect_file_stats(staging: str, part_names: list[str]) -> list[dict]:
                 "partition": partition,
                 "record-count": md.num_rows,
                 "file-size-in-bytes": os.path.getsize(path),
+                "column-sizes": sizes,
                 "lower-bounds": _jsonable(lower),
                 "upper-bounds": _jsonable(upper),
             })

@@ -7,15 +7,22 @@ Physical design (SURVEY.md §2.5/§7.1 M4; reference analogue:
   holds complete documents (all their terms), so top-k is computable per
   shard and merged (two-stage top-k), exactly gensim's shard query fan-out
   (docsim.py:480-503) as a Spark scan.
-- **Packed runs**: within a shard, one row per term: sorted doc_ids
-  delta+varint packed + float32 weights + block-max skip metadata
-  (``packing.py``). One pack task per shard sorts its postings by (term,
-  doc) and packs them an Arrow batch at a time (``packing.pack_runs``, one
-  set of numpy calls per batch, not one Python call per run). Build and
-  append run that one plan (``_pack_write``). The packed store is an
-  ``icetable`` snapshot table rooted at the index directory
-  (``metadata/`` + ``data/``), identity-partitioned on shard_id: one file
-  per shard, min/max stats on ``term_id`` for run-level pruning inside it.
+- **Packed runs** (format v2, ``packing.py``): within a shard, one row per
+  term: sorted doc_ids delta+varint packed, the weights as a per-run
+  dictionary of distinct float32 values (``weight_dict``) plus one 1- or
+  2-byte code per posting (``weight_code``; 4 B only past 65,536 distinct
+  weights, which a run of a default 32,768-doc shard cannot reach), and
+  block-max skip metadata. The table property ``write.format`` is
+  ``packed-postings-v2``; readers and writers refuse any other value with
+  :class:`PackedFormatError` (a v1 store, with float32 ``weight_blob``, is
+  rebuilt, never decoded). One pack task per shard sorts its postings by
+  (term, doc) and packs them an Arrow batch at a time
+  (``packing.pack_runs``, one set of numpy calls per batch, not one Python
+  call per run). Build and append run that one plan (``_pack_write``). The
+  packed store is an ``icetable`` snapshot table rooted at the index
+  directory (``metadata/`` + ``data/``), identity-partitioned on shard_id:
+  one file per shard, min/max stats on ``term_id`` for run-level pruning
+  inside it, zstd pages (``icetable`` writes every table that way).
 - **Term-bucketed plain postings** (``write_postings_bucketed``): the
   relational scoring path — postings bucketed by ``term_id % n_buckets`` so a
   query's scan prunes to its terms' buckets; **head-term salting** splits any
@@ -43,11 +50,30 @@ from pyspark.sql import functions as F
 
 from gensim_spark.index import packing
 
-PACKED_SCHEMA = (
-    "shard_id long, term_id long, n long, doc_blob binary, weight_blob binary,"
-    " block_max binary, block_last_doc binary, block_first_doc binary,"
-    " block_offset binary"
-)
+PACKED_SCHEMA = "shard_id long, term_id long, n long, " + ", ".join(
+    f"{c} binary" for c in packing.RUN_COLUMNS)
+PACKED_FORMAT = "packed-postings-v2"
+
+
+class PackedFormatError(ValueError):
+    """The store at a packed-store path was written in another packed
+    format (or is not a packed store)."""
+
+
+def _load_store(out_dir: str):
+    """The packed table at ``out_dir``, refused unless its ``write.format``
+    is :data:`PACKED_FORMAT` — the one format check every packed reader
+    and writer goes through."""
+    from gensim_spark.index.icetable import IceTable
+
+    table = IceTable.load(out_dir)
+    fmt = table.meta["properties"].get("write.format")
+    if fmt != PACKED_FORMAT:
+        raise PackedFormatError(
+            f"packed store at {out_dir} has write.format {fmt!r}; this "
+            f"version reads and appends only {PACKED_FORMAT!r}. Rebuild the "
+            "store with resume=False (build_index --no-resume).")
+    return table
 
 
 def _pack_partition_fn(docs_acc, docs_per_shard: int):
@@ -181,8 +207,9 @@ _EMPTY_GROUP_METRICS = {"docs": 0, "terms": 0, "postings": 0}
 
 def _open_store(out_dir: str, docs_per_shard: int, num_groups: int,
                 resume: bool):
-    """The packed table at ``out_dir``: the existing one when resuming,
-    else a fresh one. Replacing removes only the table's own ``metadata``
+    """The packed table at ``out_dir``: the existing one when resuming
+    (refused with :class:`PackedFormatError` if it is not format v2), else
+    a fresh one. Replacing removes only the table's own ``metadata``
     and ``data`` directories — ``vocab/``, ``positional/`` and ``doclen/``
     beside them stay."""
     import shutil
@@ -191,7 +218,7 @@ def _open_store(out_dir: str, docs_per_shard: int, num_groups: int,
 
     if resume:
         try:
-            table = IceTable.load(out_dir)
+            table = _load_store(out_dir)
         except FileNotFoundError:
             pass
         else:
@@ -208,7 +235,7 @@ def _open_store(out_dir: str, docs_per_shard: int, num_groups: int,
         partition_spec=[PartitionField("shard_id", "shard_id", "identity")],
         properties={"docs_per_shard": str(docs_per_shard),
                     "num_groups": str(num_groups),
-                    "write.format": "packed-postings-v1"})
+                    "write.format": PACKED_FORMAT})
 
 
 def _committed_groups(table) -> set[int]:
@@ -267,9 +294,7 @@ def next_shard_boundary(out_dir: str) -> int:
     values (metadata only — no Spark job, no data file opened). Raises if
     a build group is uncommitted: an interrupted build must finish
     (``resume=True``) before anything is appended past it."""
-    from gensim_spark.index.icetable import IceTable
-
-    table = IceTable.load(out_dir)
+    table = _load_store(out_dir)
     props = table.meta["properties"]
     missing = sorted(set(range(int(props["num_groups"])))
                      - _committed_groups(table))
@@ -298,10 +323,8 @@ def append_packed_shards(weighted_new: DataFrame, out_dir: str,
     append leaves only unreferenced staged files, so retrying the same
     batch succeeds. ``min_doc_id``: pass the batch's precomputed min to
     skip the extra pass over the weighted lineage."""
-    from gensim_spark.index.icetable import IceTable
-
     boundary = next_shard_boundary(out_dir)
-    table = IceTable.load(out_dir)
+    table = _load_store(out_dir)
     dps = int(table.meta["properties"]["docs_per_shard"])
     mn = (min_doc_id if min_doc_id is not None else
           weighted_new.agg(F.min("doc_id").alias("mn")).collect()[0]["mn"])
@@ -330,15 +353,14 @@ def packed_files(out_dir: str, snapshot_id: int | None = None,
     count and column bounds) of the packed store at the current (or a
     time-travelled) snapshot, pruned to ``shard_ids`` — planned from the
     snapshot's manifests alone, no file opened. Every packed reader, Spark
-    or pyarrow, reads exactly these files."""
-    from gensim_spark.index.icetable import IceTable
-
+    or pyarrow, reads exactly these files; a store in another packed format
+    raises :class:`PackedFormatError` here, before any file is read."""
     pred = None
     if shard_ids is not None:
         wanted = {int(s) for s in shard_ids}
         pred = lambda p: p.get("shard_id") in wanted  # noqa: E731
-    return IceTable.load(out_dir).plan_files(snapshot_id=snapshot_id,
-                                             partition_pred=pred)
+    return _load_store(out_dir).plan_files(snapshot_id=snapshot_id,
+                                           partition_pred=pred)
 
 
 def read_packed_shards(spark: SparkSession, out_dir: str,

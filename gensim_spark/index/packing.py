@@ -1,5 +1,5 @@
-"""Posting-run packing: sorted doc_ids delta+varint-encoded, float32 weights,
-per-block max-weight metadata.
+"""Posting-run packing, format v2: sorted doc_ids delta+varint-encoded,
+weights coded through a per-run dictionary, per-block max-weight metadata.
 
 The packed run is the analogue of gensim's CSR index column
 (gensim/similarities/docsim.py:1241-1248 stores docs×terms CSR; a CSC column
@@ -7,10 +7,36 @@ per term IS a posting run) — re-laid-out for web scale: delta+varint doc-id
 blobs compress zipfian gaps to ~1-2 bytes/posting, and the per-block maxima
 are the skip structure block-max WAND needs (Ding & Suel, SIGIR'11).
 
+Format v2 (table property ``write.format = packed-postings-v2``; a v1 store,
+which kept one float32 per posting in ``weight_blob``, is refused by
+``layout``, never decoded). One row per (shard, term) run, columns
+:data:`RUN_COLUMNS`:
+
+- ``doc_blob`` — LEB128 varints of the doc-id deltas (the first delta is the
+  absolute doc id);
+- ``weight_dict`` — the run's distinct float32 bit patterns, ascending as
+  unsigned 32-bit integers (so -0.0, 0.0 and NaN payloads are distinct
+  entries and round-trip bit for bit);
+- ``weight_code`` — one little-endian unsigned code per posting, an index
+  into ``weight_dict``. Its width follows from the dictionary size alone
+  (:func:`code_widths`: 1 B up to 256 entries, 2 B up to 65,536, 4 B above),
+  so the format stores no flag. A run's weights are idf_t · g(tf, dl), and
+  a run holds at most as many postings as its shard has documents, so at
+  the default ``docs_per_shard`` (32,768) no dictionary can exceed 65,536
+  entries and codes never exceed 2 B;
+- ``block_max`` (float32 max |w| per block), ``block_last_doc`` /
+  ``block_first_doc`` (int64 per block) and ``block_offset`` (int64 byte
+  offset of each block's first varint in ``doc_blob``) — the skip metadata
+  that lets block-max WAND decode one block at a time.
+
+Decoding the weights is one gather, ``weight_dict[weight_code]``
+(:func:`decode_weights`).
+
 Pure-numpy encode/decode — runs inside Arrow-batch UDFs during shard builds
 and query traversal. The build path calls :func:`pack_runs` once per Arrow
-batch: every run in the batch is encoded by the same handful of numpy calls,
-so there is no per-run (let alone per-posting) Python on the build path.
+batch: every run in the batch is encoded by the same handful of numpy calls
+(one ``np.unique`` builds every run's dictionary), so there is no per-run
+(let alone per-posting) Python on the build path.
 """
 
 from __future__ import annotations
@@ -19,6 +45,10 @@ import numpy as np
 import pyarrow as pa
 
 BLOCK_SIZE = 128
+
+# the packed columns of one run, in the order :class:`wand._TermRun` takes
+RUN_COLUMNS = ("doc_blob", "weight_dict", "weight_code", "block_max",
+               "block_last_doc", "block_first_doc", "block_offset")
 
 
 def _varint_encode(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -93,6 +123,49 @@ def _binary_column(data: np.ndarray, offsets: np.ndarray) -> pa.Array:
          pa.py_buffer(np.ascontiguousarray(data).view(np.uint8))])
 
 
+def code_widths(n_dict) -> np.ndarray:
+    """Bytes per weight code of runs whose dictionaries hold ``n_dict``
+    entries: 1 up to 256, 2 up to 65,536, 4 above. The width follows from
+    the dictionary alone, so the format stores no flag."""
+    n = np.asarray(n_dict)
+    return np.where(n <= 1 << 8, 1, np.where(n <= 1 << 16, 2, 4))
+
+
+def _weight_columns(weights: np.ndarray, lengths: np.ndarray,
+                    bounds: np.ndarray) -> tuple[pa.Array, pa.Array]:
+    """Every run's (weight_dict, weight_code) at once. One ``np.unique``
+    over ``(run << 32) | float32 bits`` sorts each run's distinct bit
+    patterns together, so the unique keys are the dictionaries laid end to
+    end, and the inverse minus the run's dictionary start is the code."""
+    run_of = np.repeat(np.arange(lengths.size, dtype=np.int64), lengths)
+    keys, inv = np.unique((run_of.astype(np.uint64) << np.uint64(32))
+                          | weights.view(np.uint32), return_inverse=True)
+    dict_bounds = np.concatenate(([0], np.cumsum(np.bincount(
+        (keys >> np.uint64(32)).astype(np.int64), minlength=lengths.size))))
+    widths = code_widths(np.diff(dict_bounds))
+    code_bounds = np.concatenate(([0], np.cumsum(lengths * widths)))
+    codes = inv.reshape(-1) - dict_bounds[run_of]
+    w_of = widths[run_of]
+    pos = (code_bounds[run_of]
+           + (np.arange(run_of.size) - bounds[run_of]) * w_of)
+    out = np.empty(int(code_bounds[-1]), dtype=np.uint8)
+    for w in (1, 2, 4):
+        m = w_of == w
+        if m.any():
+            out[pos[m, None] + np.arange(w)] = \
+                codes[m].astype(f"<u{w}").view(np.uint8).reshape(-1, w)
+    return (_binary_column(keys.astype(np.uint32), 4 * dict_bounds),
+            _binary_column(out, code_bounds))
+
+
+def decode_weights(weight_dict, weight_code, dtype=np.float32) -> np.ndarray:
+    """A run's weights, ``weight_dict[weight_code]``: the dictionary is cast
+    to ``dtype`` first, so the gather is the only per-posting work."""
+    wdict = np.frombuffer(weight_dict, dtype="<f4").astype(dtype)
+    width = int(code_widths(wdict.size))
+    return wdict[np.frombuffer(weight_code, dtype=f"<u{width}")]
+
+
 def pack_runs(doc_ids: np.ndarray, weights: np.ndarray,
               run_starts: np.ndarray,
               block_size: int = BLOCK_SIZE) -> dict:
@@ -101,16 +174,11 @@ def pack_runs(doc_ids: np.ndarray, weights: np.ndarray,
     end; ``run_starts[0] == 0``), each sorted by doc_id.
 
     Returns ``n`` (int64 per run) plus one Arrow binary array per packed
-    column — doc_blob, weight_blob (float32 LE), and the per-block skip
-    metadata block_max (float32[]), block_last_doc / block_first_doc
-    (int64[]), block_offset (int64[] — byte offset of each block's first
-    varint in doc_blob, enabling BLOCK-LAZY decode: a block decodes
-    independently as blast[b-1] + cumsum(deltas), so WAND traversal pays
-    decode cost only for blocks it actually evaluates).
-
-    One varint encode covers the whole batch (each run's first delta is its
-    absolute doc id, so run blobs are contiguous slices of it); block maxima
-    are one ``maximum.reduceat`` over all blocks of all runs."""
+    column of :data:`RUN_COLUMNS` (see the module docstring). One varint
+    encode covers the whole batch (each run's first delta is its absolute
+    doc id, so run blobs are contiguous slices of it), one ``np.unique``
+    builds every run's weight dictionary, and block maxima are one
+    ``maximum.reduceat`` over all blocks of all runs."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     weights = np.asarray(weights, dtype=np.float32)
     run_starts = np.asarray(run_starts, dtype=np.int64)
@@ -142,10 +210,12 @@ def pack_runs(doc_ids: np.ndarray, weights: np.ndarray,
     else:
         bmax = np.empty(0, dtype=np.float32)
     boffs = cum[bstart] - cum[run_starts[block_run]]
+    weight_dict, weight_code = _weight_columns(weights, lengths, bounds)
     return {
         "n": lengths,
         "doc_blob": _binary_column(varints, cum[bounds]),
-        "weight_blob": _binary_column(weights, 4 * bounds),
+        "weight_dict": weight_dict,
+        "weight_code": weight_code,
         "block_max": _binary_column(bmax, 4 * block_bounds),
         "block_last_doc": _binary_column(doc_ids[bend], 8 * block_bounds),
         "block_first_doc": _binary_column(doc_ids[bstart], 8 * block_bounds),
@@ -177,24 +247,3 @@ def decode_block(doc_blob: bytes, block_offsets: np.ndarray,
     if b > 0:
         docs = docs + int(block_last_doc[b - 1])
     return docs
-
-
-def unpack_run(run) -> tuple[np.ndarray, np.ndarray]:
-    """Packed run (dict/Row with doc_blob, weight_blob) → (doc_ids, weights)."""
-    doc_ids = decode_varint_deltas(bytes(run["doc_blob"]))
-    weights = np.frombuffer(bytes(run["weight_blob"]), dtype=np.float32)
-    return doc_ids, weights
-
-
-def unpack_blocks(run) -> tuple[np.ndarray, np.ndarray]:
-    bmax = np.frombuffer(bytes(run["block_max"]), dtype=np.float32)
-    blast = np.frombuffer(bytes(run["block_last_doc"]), dtype=np.int64)
-    return bmax, blast
-
-
-def unpack_block_lazy_meta(run) -> tuple[np.ndarray, np.ndarray]:
-    """(block_first_doc int64[], block_offset int64[]) — the lazy-decode
-    sidecar added in pack format v2."""
-    bfirst = np.frombuffer(bytes(run["block_first_doc"]), dtype=np.int64)
-    boffs = np.frombuffer(bytes(run["block_offset"]), dtype=np.int64)
-    return bfirst, boffs

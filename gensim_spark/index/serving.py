@@ -35,11 +35,10 @@ import os
 import numpy as np
 
 from gensim_spark.index.layout import PACKED_SCHEMA, packed_files
+from gensim_spark.index.packing import RUN_COLUMNS
 from gensim_spark.index.wand import _TermRun, _wand
 
-_RUN_COLUMNS = ["shard_id", "term_id", "doc_blob", "weight_blob",
-                "block_max", "block_last_doc", "block_first_doc",
-                "block_offset"]
+_READ_COLUMNS = ["shard_id", "term_id", *RUN_COLUMNS]
 
 
 def _packed_arrow_schema():
@@ -121,8 +120,8 @@ class PackedIndexServer:
             # whole-file reads: a dataset scan costs about 1 ms more per
             # 2 MB shard file; the dataset reads an empty store
             self._tbl = pa.concat_tables(
-                [pq.ParquetFile(p).read(columns=_RUN_COLUMNS) for p in paths]
-                or [self._dataset.to_table(columns=_RUN_COLUMNS)]
+                [pq.ParquetFile(p).read(columns=_READ_COLUMNS) for p in paths]
+                or [self._dataset.to_table(columns=_READ_COLUMNS)]
             ).combine_chunks()
             tids = self._tbl.column("term_id").to_numpy()
             self._sids = self._tbl.column("shard_id").to_numpy()
@@ -137,15 +136,8 @@ class PackedIndexServer:
                        for f in packed_files(index_dir)})
 
     def _mk_run(self, tbl, i: int) -> _TermRun:
-        return _TermRun(
-            tbl.column("doc_blob")[i].as_py(),
-            tbl.column("weight_blob")[i].as_py(),
-            tbl.column("block_max")[i].as_py(),
-            tbl.column("block_last_doc")[i].as_py(),
-            tbl.column("block_first_doc")[i].as_py(),
-            tbl.column("block_offset")[i].as_py(),
-            eager_max=self._eager_max,
-        )
+        return _TermRun(*(tbl.column(c)[i].as_py() for c in RUN_COLUMNS),
+                        eager_max=self._eager_max)
 
     def _runs_for_term(self, tid: int) -> list[tuple[int, _TermRun]]:
         lst = self._run_cache.get(tid)
@@ -160,7 +152,7 @@ class PackedIndexServer:
     def _read_runs(self, term_ids) -> dict[int, list[tuple[int, _TermRun]]]:
         """Cold path: fetch only these terms' runs from parquet."""
         flt = self._pads.field("term_id").isin([int(t) for t in term_ids])
-        tbl = self._dataset.to_table(columns=_RUN_COLUMNS, filter=flt)
+        tbl = self._dataset.to_table(columns=_READ_COLUMNS, filter=flt)
         tbl = tbl.combine_chunks()
         tids = tbl.column("term_id").to_numpy()
         sids = tbl.column("shard_id").to_numpy()

@@ -45,18 +45,23 @@ EAGER_DECODE_MAX = 8192
 
 
 class _TermRun:
-    """One term's packed run in a shard, shared across the batch's queries:
-    weights/skip metadata are O(1) frombuffer views; the doc-id varint blob
-    decodes per block on demand (pack format v2 block_offset sidecar)."""
+    """One term's packed run in a shard, shared across the batch's queries.
+    Takes the run's :data:`packing.RUN_COLUMNS` in order. Weights decode in
+    one gather, ``weight_dict[weight_code]`` (format v2: a per-run
+    dictionary of distinct float32 weights, cast to float64 before the
+    gather, and one 1-, 2- or 4-byte code per posting whose width follows
+    from the dictionary size); skip metadata are O(1) frombuffer views; the
+    doc-id varint blob decodes per block on demand via ``block_offset``."""
 
     __slots__ = ("doc_blob", "weights", "bmax", "blast", "bfirst", "boffs",
                  "docs", "blocks", "eager", "n", "has_neg", "has_pos")
 
-    def __init__(self, doc_blob, weight_blob, block_max, block_last,
-                 block_first, block_offset, eager_max: int | None = None):
+    def __init__(self, doc_blob, weight_dict, weight_code, block_max,
+                 block_last, block_first, block_offset,
+                 eager_max: int | None = None):
         self.doc_blob = bytes(doc_blob)
-        self.weights = np.frombuffer(bytes(weight_blob), dtype=np.float32) \
-            .astype(np.float64)
+        self.weights = packing.decode_weights(bytes(weight_dict),
+                                              bytes(weight_code), np.float64)
         self.bmax = np.frombuffer(bytes(block_max), dtype=np.float32) \
             .astype(np.float64)
         self.blast = np.frombuffer(bytes(block_last), dtype=np.int64)
@@ -306,15 +311,9 @@ def _shard_topk_factory(query_terms: dict[int, dict[int, float]], k: int,
     def shard_topk(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
         runs_by_term = {}
-        for tid, doc_blob, weight_blob, block_max, block_last, block_first, \
-                block_offset in zip(
-            pdf["term_id"], pdf["doc_blob"], pdf["weight_blob"],
-            pdf["block_max"], pdf["block_last_doc"], pdf["block_first_doc"],
-            pdf["block_offset"],
-        ):
-            runs_by_term[int(tid)] = _TermRun(
-                doc_blob, weight_blob, block_max, block_last, block_first,
-                block_offset, eager_max=eager_max)
+        for tid, *cols in zip(pdf["term_id"],
+                              *(pdf[c] for c in packing.RUN_COLUMNS)):
+            runs_by_term[int(tid)] = _TermRun(*cols, eager_max=eager_max)
         stats = {} if postings_acc is not None else None
         for qid, terms in query_terms.items():
             runs = []

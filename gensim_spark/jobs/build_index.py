@@ -24,8 +24,11 @@ def run(spark, input_path: str, output: str, variant: str = "okapi",
         positional_n_buckets: int = 64) -> dict:
     """The job body; returns build metrics, with one entry per committed
     shard group (docs/terms/postings/wall_sec, read back from the group's
-    snapshot summary). Importable so tests can drive it on the shared
-    session without a subprocess."""
+    snapshot summary, and ``bytes``, its ``added-files-size``), the
+    store's ``bytes_per_posting`` over those groups, and ``column_bytes``:
+    compressed bytes per packed column over the current snapshot's files,
+    summed from the footer sizes each manifest entry records. Importable
+    so tests can drive it on the shared session without a subprocess."""
     from pyspark.sql import functions as F
 
     from gensim_spark.index.layout import write_packed_shards
@@ -48,10 +51,17 @@ def run(spark, input_path: str, output: str, variant: str = "okapi",
         num_groups=num_groups, resume=resume,
     )
     groups = {
-        s.summary["group"]: {k: json.loads(s.summary[k]) for k in
-                             ("docs", "terms", "postings", "wall_sec")}
+        s.summary["group"]: {
+            **{k: json.loads(s.summary[k]) for k in
+               ("docs", "terms", "postings", "wall_sec")},
+            "bytes": int(s.summary["added-files-size"])}
         for s in table.snapshots if "group" in s.summary
     }
+    postings = sum(g["postings"] for g in groups.values())
+    column_bytes: dict[str, int] = {}
+    for f in table.plan_files():
+        for col, size in f["column-sizes"].items():
+            column_bytes[col] = column_bytes.get(col, 0) + size
     if positional:
         # phrase/NEAR query support: positions through the SAME bucketed
         # layout (positions column rides along; bucket pruning + term_id
@@ -91,6 +101,9 @@ def run(spark, input_path: str, output: str, variant: str = "okapi",
         "positional": bool(positional),
         "positional_n_buckets": positional_n_buckets if positional else None,
         "groups": groups,
+        "bytes_per_posting": (sum(g["bytes"] for g in groups.values())
+                              / postings if postings else None),
+        "column_bytes": column_bytes,
     }
     with open(f"{output}/build_metrics.json", "w") as f:
         json.dump(metrics, f, indent=1)

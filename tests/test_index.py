@@ -74,8 +74,9 @@ def test_packed_build_and_wand_exact(spark, synth_index):
 
 
 def test_decode_block_matches_full_decode():
-    """Pack format v2: every block decodes independently via its byte offset
-    + the previous block's last doc, bit-identical to the full decode."""
+    """Block-lazy decode: every block decodes independently via its byte
+    offset + the previous block's last doc, bit-identical to the full
+    decode."""
     from gensim_spark.index import packing
 
     rng = np.random.default_rng(7)
@@ -234,9 +235,7 @@ def _mk_run(rng, n, sign=1, dup_weights=False, eager_max=None):
     else:
         ws = (rng.random(n).astype(np.float32) + 0.01) * sign
     run = packing.pack_run(ids, ws)
-    return wand._TermRun(run["doc_blob"], run["weight_blob"],
-                         run["block_max"], run["block_last_doc"],
-                         run["block_first_doc"], run["block_offset"],
+    return wand._TermRun(*(run[c] for c in packing.RUN_COLUMNS),
                          eager_max=eager_max)
 
 

@@ -75,6 +75,134 @@ def test_build_index_job_from_html(spark, tmp_path):
     assert len(res["results"]["0"]) == 3
 
 
+def test_build_metrics_record_store_bytes(spark, tmp_path):
+    """``build_metrics.json`` records each group's stored bytes, the
+    store's bytes per posting, and compressed bytes per packed column. The
+    column chunks tile each data file after its leading magic; with the
+    page indexes and footer behind them they add up to the files' sizes."""
+    import pyarrow.parquet as pq
+
+    from gensim_spark.index import layout
+    from gensim_spark.jobs import build_index
+
+    pages = str(tmp_path / "pages")
+    _pages_df(spark, n=60).write.parquet(pages)
+    out = str(tmp_path / "idx")
+    m = build_index.run(spark, pages, out, docs_per_shard=16, num_groups=2)
+    with open(os.path.join(out, "build_metrics.json")) as f:
+        assert json.load(f) == m
+    files = layout.packed_files(out)
+    sizes = [os.path.getsize(f["path"]) for f in files]
+    assert sum(g["bytes"] for g in m["groups"].values()) == sum(sizes)
+    postings = sum(g["postings"] for g in m["groups"].values())
+    assert postings == 60 * 7
+    assert m["bytes_per_posting"] == pytest.approx(sum(sizes) / postings)
+    assert set(m["column_bytes"]) == {
+        c.split()[0] for c in layout.PACKED_SCHEMA.split(",")}
+    want, rest = {}, 0
+    for f, size in zip(files, sizes):
+        md = pq.ParquetFile(f["path"]).metadata
+        end = 4  # after the leading magic; column chunks follow each other
+        for rg in range(md.num_row_groups):
+            for ci in range(md.num_columns):
+                c = md.row_group(rg).column(ci)
+                assert c.compression == "ZSTD"
+                start = (c.dictionary_page_offset if c.has_dictionary_page
+                         else c.data_page_offset)
+                assert start == end
+                end += c.total_compressed_size
+                want[c.path_in_schema] = (want.get(c.path_in_schema, 0)
+                                          + c.total_compressed_size)
+        # after the chunks: page indexes, the footer, its length and magic
+        assert size - end >= md.serialized_size + 8
+        rest += 4 + size - end
+    assert m["column_bytes"] == want
+    assert sum(m["column_bytes"].values()) + rest == sum(sizes)
+
+
+def test_v1_store_is_refused_by_every_entry_point(spark, tmp_path):
+    """A store marked ``packed-postings-v1`` (float32 ``weight_blob``) is
+    refused with a named error by every reader and writer, never decoded;
+    ``resume=False`` replaces it with a v2 store that scores as before."""
+    import shutil
+
+    from gensim_spark.index import layout, packing, serving, wand
+    from gensim_spark.index.icetable import IceTable, PartitionField
+    from gensim_spark.jobs import build_index, query_index
+
+    pages = str(tmp_path / "pages")
+    _pages_df(spark).write.parquet(pages)
+    out = str(tmp_path / "idx")
+    build_index.run(spark, pages, out, docs_per_shard=16, num_groups=2)
+    queries = ["alpha beta", "zeta common"]
+    before = query_index.run(spark, out, queries, k=5)["results"]
+
+    # rewrite the store in format v1: the same runs, one float32 per
+    # posting in weight_blob, under the v1 marker
+    rows = layout.read_packed_shards(spark, out).collect()
+    v1_cols = ["doc_blob", "weight_blob", "block_max", "block_last_doc",
+               "block_first_doc", "block_offset"]
+    v1_rows = [
+        (r["shard_id"], r["term_id"], r["n"], r["doc_blob"],
+         bytearray(packing.decode_weights(bytes(r["weight_dict"]),
+                                          bytes(r["weight_code"]))
+                   .tobytes()),
+         *(r[c] for c in v1_cols[2:]))
+        for r in rows]
+    v1_schema = "shard_id long, term_id long, n long, " + ", ".join(
+        f"{c} binary" for c in v1_cols)
+    for sub in ("metadata", "data"):
+        shutil.rmtree(os.path.join(out, sub))
+    table = IceTable.create(
+        out, v1_schema,
+        partition_spec=[PartitionField("shard_id", "shard_id", "identity")],
+        properties={"docs_per_shard": "16", "num_groups": "2",
+                    "write.format": "packed-postings-v1"})
+    for g in range(2):
+        table.append(spark.createDataFrame(
+            [r for r in v1_rows if r[0] % 2 == g], v1_schema),
+            summary={"group": g, "docs": 0, "terms": 0, "postings": 0})
+
+    tid = next(r["term_id"] for r in rows)
+    weighted = spark.createDataFrame(
+        [(10_000, tid, 1.0)], "doc_id long, term_id long, weight double")
+    entry_points = {
+        "read_packed_shards": lambda: layout.read_packed_shards(spark, out),
+        "packed_files": lambda: layout.packed_files(out),
+        "wand_topk": lambda: wand.wand_topk(spark, out, {0: {tid: 1.0}}),
+        "query_index.run": lambda: query_index.run(spark, out, queries),
+        "run_served": lambda: query_index.run_served(out, queries),
+        "PackedIndexServer": lambda: serving.PackedIndexServer(out),
+        "next_shard_boundary": lambda: layout.next_shard_boundary(out),
+        "append_packed_shards": lambda: layout.append_packed_shards(
+            weighted, out, min_doc_id=10_000),
+        "build_index.run(resume=True)": lambda: build_index.run(
+            spark, pages, out, docs_per_shard=16, num_groups=2),
+    }
+    for name, call in entry_points.items():
+        with pytest.raises(layout.PackedFormatError) as err:
+            call()
+        msg = str(err.value)
+        assert out in msg and "packed-postings-v1" in msg, name
+        assert "resume=False" in msg and "--no-resume" in msg, name
+    assert IceTable.load(out).meta["properties"]["write.format"] == \
+        "packed-postings-v1"
+
+    build_index.run(spark, pages, out, docs_per_shard=16, num_groups=2,
+                    resume=False)
+    table = IceTable.load(out)
+    assert table.meta["properties"]["write.format"] == layout.PACKED_FORMAT
+    assert query_index.run(spark, out, queries, k=5)["results"] == before
+    assert query_index.run_served(out, queries, k=5)["results"] == before
+    got = layout.read_packed_shards(spark, out).collect()
+    assert len(got) == len(rows)
+    by_key = {(r[0], r[1]): r[4] for r in v1_rows}
+    for r in got:
+        w = packing.decode_weights(bytes(r["weight_dict"]),
+                                   bytes(r["weight_code"]))
+        assert w.tobytes() == bytes(by_key[(r["shard_id"], r["term_id"])])
+
+
 WIKI_XML = """<mediawiki>
 {pages}
 </mediawiki>"""
