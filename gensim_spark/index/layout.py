@@ -23,12 +23,16 @@ Physical design (SURVEY.md §2.5/§7.1 M4; reference analogue:
   directory (``metadata/`` + ``data/``), identity-partitioned on shard_id:
   one file per shard, min/max stats on ``term_id`` for run-level pruning
   inside it, zstd pages (``icetable`` writes every table that way).
-- **Term-bucketed plain postings** (``write_postings_bucketed``): the
-  relational scoring path — postings bucketed by ``term_id % n_buckets`` so a
-  query's scan prunes to its terms' buckets; **head-term salting** splits any
-  term with df above a threshold across ``salt`` sub-partitions to bound the
-  largest shuffle/file partition (explicit skew handling; the salt column is
-  part of the layout, queries just aggregate across salts).
+- **Term-bucketed postings** (``write_postings_bucketed``): the relational
+  scoring path and the positional store — an ``icetable`` snapshot table
+  partitioned by ``bucket = term_id mod n_buckets`` (the modulus is the
+  table property ``n_buckets``, so readers and appenders take it from the
+  table). A query plans only its terms' bucket files, pruned again by the
+  manifests' term_id bounds. **Head-term salting** splits any term with df
+  above a threshold across ``salt`` sub-partitions to bound the largest
+  shuffle/file partition (explicit skew handling; the salt column is part
+  of the layout, queries just aggregate across salts). One writer, one
+  appender and one reader; the ``*_iceberg`` names are the same functions.
 - **Snapshot log**: the build commits shard-groups one at a time, each as
   one append snapshot whose summary records the group's lineage + metrics;
   a re-run skips committed groups (resume-from-checkpoint). The snapshot
@@ -205,7 +209,7 @@ def _nonempty_groups(base: DataFrame, num_groups: int) -> set[int]:
 _EMPTY_GROUP_METRICS = {"docs": 0, "terms": 0, "postings": 0}
 
 
-def _open_store(out_dir: str, docs_per_shard: int, num_groups: int,
+def open_packed_store(out_dir: str, docs_per_shard: int, num_groups: int,
                 resume: bool):
     """The packed table at ``out_dir``: the existing one when resuming
     (refused with :class:`PackedFormatError` if it is not format v2), else
@@ -265,7 +269,7 @@ def write_packed_shards(weighted: DataFrame, out_dir: str,
     docs_per_shard default mirrors the reference shardsize 32768
     (docsim.py:305).
     """
-    table = _open_store(out_dir, docs_per_shard, num_groups, resume)
+    table = open_packed_store(out_dir, docs_per_shard, num_groups, resume)
     base = _with_shard(weighted, docs_per_shard)
     todo = [g for g in range(num_groups)
             if g not in _committed_groups(table)]
@@ -374,12 +378,42 @@ def read_packed_shards(spark: SparkSession, out_dir: str,
     return spark.read.parquet(*[f["path"] for f in files])
 
 
-# --- term-bucketed plain postings (relational path) --------------------------
+# --- term-bucketed postings (relational path) -------------------------------
+
+class BucketedFormatError(ValueError):
+    """The path at a bucketed-store location holds no snapshot table — e.g.
+    a plain hive-partitioned parquet store written by an earlier version."""
+
+
+def load_bucketed(out_dir: str, n_buckets: int | None = None) -> "IceTable":
+    """The bucketed table at ``out_dir`` — the one load every bucketed
+    reader, writer and appender goes through. A directory without a table
+    raises :class:`BucketedFormatError`; an explicit ``n_buckets`` that
+    differs from the stored one raises ``ValueError`` (pruning by the wrong
+    modulus would silently miss rows)."""
+    from gensim_spark.index.icetable import IceTable
+
+    try:
+        table = IceTable.load(out_dir)
+    except FileNotFoundError:
+        if not os.path.isdir(out_dir):
+            raise
+        raise BucketedFormatError(
+            f"{out_dir} is not a bucketed snapshot table (no metadata/); a "
+            "plain-parquet store from an earlier version is not read. "
+            "Rebuild the index with build_index --positional.") from None
+    stored = int(table.meta["properties"]["n_buckets"])
+    if n_buckets is not None and n_buckets != stored:
+        raise ValueError(f"table at {out_dir} was created with "
+                         f"n_buckets={stored}; caller passed "
+                         f"n_buckets={n_buckets}")
+    return table
+
 
 def _bucket_salt(weighted: DataFrame, n_buckets: int,
                  salt_threshold: int, dfs: DataFrame | None,
                  salts: int) -> DataFrame:
-    """Shared write prep for the term-bucketed store: bucket = term_id %
+    """Write prep for the term-bucketed store: bucket = term_id %
     n_buckets, plus head-term salting (terms with df ≥ salt_threshold split
     on doc_id % salts so no write partition is df-sized)."""
     df = weighted.withColumn(
@@ -397,184 +431,133 @@ def _bucket_salt(weighted: DataFrame, n_buckets: int,
     return df
 
 
+def _commit_bucketed(table, df: DataFrame, operation: str,
+                     summary: dict) -> None:
+    """Stage ``df`` (repartitioned on (bucket, salt), term- then
+    doc-sorted within each file) and publish it as one snapshot: a writer
+    killed before the commit leaves only staged files, which no reader
+    plans."""
+    write_uuid, _staging, files = table.stage_write(
+        df.repartition("bucket", "salt").sortWithinPartitions("term_id",
+                                                              "doc_id"))
+    table.commit_staged(files, write_uuid, summary=summary,
+                        operation=operation)
+
+
 def write_postings_bucketed(weighted: DataFrame, out_dir: str,
                             n_buckets: int = 64,
                             salt_threshold: int = 1_000_000,
                             dfs: DataFrame | None = None,
-                            salts: int = 16) -> None:
-    """Plain postings partitioned by ``bucket = term_id % n_buckets`` with
-    explicit head-term salting: terms with df ≥ salt_threshold additionally
-    split on ``salt = doc_id % salts`` so no single write partition (and no
-    single parquet file) is df-sized. Query-side pruning: a term's postings
-    live only in its bucket directory (+ min/max term_id row-group stats).
-    """
-    (
-        _bucket_salt(weighted, n_buckets, salt_threshold, dfs, salts)
-        .repartition("bucket", "salt")
-        .sortWithinPartitions("term_id", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(out_dir)
-    )
+                            salts: int = 16) -> "IceTable":
+    """Postings (weighted or positional rows, any columns beside
+    ``doc_id``/``term_id``) → the term-bucketed snapshot table at
+    ``out_dir``, as one ``overwrite`` snapshot. ``bucket = term_id mod
+    n_buckets`` is the partition transform and is stored as the table
+    property ``n_buckets``; head-term salting additionally splits terms
+    with df ≥ salt_threshold on ``salt = doc_id % salts``, so no write
+    partition (and no file) is df-sized. The schema is the frame's. An
+    existing table keeps its modulus: another ``n_buckets`` raises."""
+    from gensim_spark.index.icetable import IceTable, PartitionField
+
+    df = _bucket_salt(weighted, n_buckets, salt_threshold, dfs, salts)
+    try:
+        table = load_bucketed(out_dir, n_buckets)
+    except (FileNotFoundError, BucketedFormatError):
+        table = IceTable.create(
+            out_dir, ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                               for f in df.schema),
+            partition_spec=[PartitionField("term_id", "bucket",
+                                           f"mod[{n_buckets}]")],
+            properties={"n_buckets": str(n_buckets)})
+    _commit_bucketed(table, df, "overwrite",
+                     {"n_buckets": n_buckets, "salts": salts})
+    return table
 
 
 def max_doc_id_bucketed(out_dir: str) -> int | None:
-    """Footer-stats max(doc_id) over a bucketed store — parquet row-group
-    statistics only, no Spark job and no data pages read. None for an
-    empty store. (The append boundary guard at 10^9-doc scale must not
-    scan a postings column to learn one scalar.)"""
-    import pyarrow.dataset as pads
-
-    ds = pads.dataset(out_dir, format="parquet", partitioning="hive")
-    mx = None
-    for frag in ds.get_fragments():
-        frag.ensure_complete_metadata()
-        for rg in frag.row_groups:
-            st = (rg.statistics or {}).get("doc_id")
-            if st is None or st.get("max") is None:
-                # stats missing (foreign writer): fall back to one
-                # column scan of this fragment
-                t = frag.to_table(columns=["doc_id"])
-                import pyarrow.compute as pc
-
-                v = pc.max(t.column("doc_id")).as_py()
-            else:
-                v = st["max"]
-            if v is not None and (mx is None or v > mx):
-                mx = v
-    return mx
+    """max(doc_id) over the committed files of the bucketed store, from
+    the doc_id upper bounds in its manifests — no Spark job and no data
+    file opened, and staged files of a crashed write never count. None for
+    an empty store."""
+    return max((f["upper-bounds"]["doc_id"]
+                for f in load_bucketed(out_dir).plan_files()
+                if f["record-count"]), default=None)
 
 
 def append_postings_bucketed(new_rows: DataFrame, out_dir: str,
-                             n_buckets: int = 64,
+                             n_buckets: int | None = None,
                              salt_threshold: int = 1_000_000,
                              dfs: DataFrame | None = None,
-                             salts: int = 16) -> None:
-    """``add_documents`` for the term-bucketed plain store (positional or
-    weighted): append the new documents' rows into the SAME
-    bucket-partition layout instead of rebuilding. Readers are unchanged —
-    bucket pruning and term_id pushdown see the appended files exactly
-    like the originals (each bucket directory simply gains files), and the
-    served reader derives its key-packing bound from the data at query
-    time, so longer appended docs are safe.
+                             salts: int = 16) -> "IceTable":
+    """``add_documents`` for the term-bucketed store: commit the new
+    documents' rows as one ``append`` snapshot, bucketed by the table's
+    stored ``n_buckets`` (an explicit, different ``n_buckets`` raises)
+    and cast to the table's column types. Readers plan the new files like
+    the originals; a crashed append is never read.
 
     Boundary guard (the reference's new-docs-enter-the-tail invariant,
-    docsim.py:367-416, same contract as
-    :func:`append_packed_shards`): new doc_ids must lie strictly
-    above the store's current max doc_id, else old and new rows for one
-    doc could both exist. The check reads parquet footer statistics only
-    (:func:`max_doc_id_bucketed`) — no data scan. ``n_buckets`` must match
-    the build (bucket dirs are the layout)."""
+    docsim.py:367-416, same contract as :func:`append_packed_shards`): new
+    doc_ids must lie strictly above the store's current max doc_id
+    (:func:`max_doc_id_bucketed`, manifest bounds only), else old and new
+    rows for one doc could both exist."""
+    table = load_bucketed(out_dir, n_buckets)
     mn = new_rows.agg(F.min("doc_id").alias("mn")).collect()[0]["mn"]
     if mn is None:
-        return
+        return table
     mx = max_doc_id_bucketed(out_dir)
     if mx is not None and int(mn) <= int(mx):
         raise ValueError(
             f"append_postings_bucketed needs doc_ids > {mx} (store max); "
             f"got {mn}. Interleaved ids need the streaming incremental "
             "store + compact().")
-    (
-        _bucket_salt(new_rows, n_buckets, salt_threshold, dfs, salts)
-        .repartition("bucket", "salt")
-        .sortWithinPartitions("term_id", "doc_id")
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(out_dir)
-    )
+    df = _bucket_salt(new_rows, int(table.meta["properties"]["n_buckets"]),
+                      salt_threshold, dfs, salts)
+    # the table's column types, so the new files read with the old ones
+    df = df.select(*[F.col(f["name"]).cast(f["type"])
+                     for f in table.meta["schema"]["fields"]])
+    _commit_bucketed(table, df, "append",
+                     {"append_batch": len(table.snapshots)})
+    return table
+
+
+def term_file_pred(n_buckets: int, term_ids):
+    """Manifest-entry predicate for a term query: the file's bucket
+    partition holds one of ``term_ids`` and its term_id bounds can contain
+    one — files are excluded before anything opens them."""
+    tids = sorted({int(t) for t in term_ids})
+    buckets = {t % n_buckets for t in tids}
+
+    def keep(fentry: dict) -> bool:
+        if fentry["partition"].get("bucket") not in buckets:
+            return False
+        lo = fentry.get("lower-bounds", {}).get("term_id")
+        hi = fentry.get("upper-bounds", {}).get("term_id")
+        return lo is None or hi is None or any(lo <= t <= hi for t in tids)
+
+    return keep
 
 
 def read_postings_bucketed(spark: SparkSession, out_dir: str,
                            term_ids: list[int] | None = None,
-                           n_buckets: int = 64) -> DataFrame:
-    """Scan pruned to the query terms' buckets + term_id pushdown."""
-    df = spark.read.parquet(out_dir)
-    if term_ids:
-        buckets = sorted({t % n_buckets for t in term_ids})
-        df = df.filter(F.col("bucket").isin(buckets)).filter(
-            F.col("term_id").isin([int(t) for t in term_ids])
-        )
-    return df
-
-
-# --- Iceberg-backed store (north rule: "Iceberg-backed shard tables") --------
-
-def write_postings_bucketed_iceberg(weighted: DataFrame, table_loc: str,
-                                    n_buckets: int = 64,
-                                    salt_threshold: int = 1_000_000,
-                                    dfs: DataFrame | None = None,
-                                    salts: int = 16) -> "IceTable":
-    """Term-bucketed plain postings as an Iceberg-semantics table:
-    ``bucket = term_id mod n_buckets`` is the partition transform, salting
-    is the same head-term guard as the parquet path. One overwrite
-    snapshot; incremental loads can append further snapshots."""
-    from gensim_spark.index.icetable import IceTable, PartitionField
-
-    df = weighted
-    if dfs is not None:
-        heads = dfs.filter(F.col("df") >= salt_threshold).select("term_id")
-        df = df.join(F.broadcast(heads.withColumn("_head", F.lit(1))),
-                     "term_id", "left")
-        salt = F.when(F.col("_head").isNotNull(),
-                      F.pmod(F.col("doc_id"), F.lit(salts))).otherwise(F.lit(0))
-        df = df.withColumn("salt", salt).drop("_head")
-    else:
-        df = df.withColumn("salt", F.lit(0))
-    try:
-        table = IceTable.load(table_loc)
-        stored = int(table.meta["properties"]["n_buckets"])
-        if stored != n_buckets:
-            # the reader prunes partitions with the STORED n_buckets; files
-            # written under a different modulus would silently miss rows
-            raise ValueError(
-                f"table at {table_loc} was created with n_buckets={stored}; "
-                f"writer passed n_buckets={n_buckets}")
-    except FileNotFoundError:
-        table = IceTable.create(
-            table_loc,
-            "doc_id bigint, term_id bigint, weight double, salt int",
-            partition_spec=[PartitionField("term_id", "bucket",
-                                           f"mod[{n_buckets}]")],
-            properties={"n_buckets": str(n_buckets)},
-        )
-    df = df.withColumn("bucket", F.pmod(F.col("term_id"), F.lit(n_buckets)))
-    df = df.repartition("bucket", "salt").sortWithinPartitions(
-        "term_id", "doc_id"
-    )
-    table.append(df, operation="overwrite",
-                 summary={"n_buckets": n_buckets, "salts": salts})
-    return table
-
-
-def read_postings_bucketed_iceberg(spark: SparkSession, table_loc: str,
-                                   term_ids: list[int] | None = None,
-                                   snapshot_id: int | None = None) -> DataFrame:
-    """Query-side scan planning on the Iceberg metadata: partition pruning
-    to the query terms' buckets PLUS min/max term_id file skipping from the
-    manifest column bounds — files are excluded before Spark opens any of
-    them. Residual term_id filter is pushed into the parquet scan."""
-    from gensim_spark.index.icetable import IceTable
-
-    table = IceTable.load(table_loc)
+                           n_buckets: int | None = None,
+                           snapshot_id: int | None = None) -> DataFrame:
+    """Scan of the bucketed store at the current (or a time-travelled)
+    snapshot, planned from the manifests: pruned to the query terms'
+    buckets (the stored ``n_buckets``) and term_id bounds before Spark
+    opens a file, with the term_id filter pushed into the parquet scan.
+    Equality deletes (:func:`delete_docs_iceberg`) apply."""
+    table = load_bucketed(out_dir, n_buckets)
     if not term_ids:
         return table.scan(spark, snapshot_id=snapshot_id)
-    n_buckets = int(table.meta["properties"]["n_buckets"])
     tids = sorted({int(t) for t in term_ids})
-    buckets = {t % n_buckets for t in tids}
+    pred = term_file_pred(int(table.meta["properties"]["n_buckets"]), tids)
+    return (table.scan(spark, snapshot_id=snapshot_id, stats_pred=pred)
+            .filter(F.col("term_id").isin(tids)))
 
-    def part_pred(p: dict) -> bool:
-        return p.get("bucket") in buckets
 
-    def stats_pred(fentry: dict) -> bool:
-        lo = fentry.get("lower-bounds", {}).get("term_id")
-        hi = fentry.get("upper-bounds", {}).get("term_id")
-        if lo is None or hi is None:
-            return True  # no stats → cannot skip
-        return any(lo <= t <= hi for t in tids)
-
-    out = table.scan(spark, snapshot_id=snapshot_id,
-                     partition_pred=part_pred, stats_pred=stats_pred)
-    return out.filter(F.col("term_id").isin(tids))
+# both spellings stay bound: bench.py and __spark_entry__.py call each by name
+write_postings_bucketed_iceberg = write_postings_bucketed
+read_postings_bucketed_iceberg = read_postings_bucketed
 
 
 def delete_docs_iceberg(spark: SparkSession, table_loc: str,
@@ -583,7 +566,7 @@ def delete_docs_iceberg(spark: SparkSession, table_loc: str,
     rebuild: one Iceberg-v2 equality-delete commit on ``doc_id``
     (merge-on-read — a web-corpus takedown/refresh path; the reference's
     in-memory ``Similarity`` index can only rebuild shards). Every
-    subsequent ``read_postings_bucketed_iceberg`` scan drops the docs'
+    subsequent ``read_postings_bucketed`` scan drops the docs'
     postings via the store's broadcast anti-join; pre-delete snapshots
     still see them (time travel), and a re-append of the same doc_id after
     the delete is visible, per the spec's sequence-ordering rule.
@@ -595,9 +578,7 @@ def delete_docs_iceberg(spark: SparkSession, table_loc: str,
     (copy-on-write ``rewrite_data_files``) — the amortization knob: cheap
     deletes accumulate merge-on-read cost per query; periodic compaction
     resets it to zero."""
-    from gensim_spark.index.icetable import IceTable
-
-    table = IceTable.load(table_loc)
+    table = load_bucketed(table_loc)
     if isinstance(doc_ids, DataFrame):
         if "doc_id" not in doc_ids.columns:
             # an equality delete on the wrong column would silently drop

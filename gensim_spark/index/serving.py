@@ -34,7 +34,8 @@ import os
 
 import numpy as np
 
-from gensim_spark.index.layout import PACKED_SCHEMA, packed_files
+from gensim_spark.index.layout import (PACKED_SCHEMA, load_bucketed,
+                                       packed_files, term_file_pred)
 from gensim_spark.index.packing import RUN_COLUMNS
 from gensim_spark.index.wand import _TermRun, _wand
 
@@ -323,14 +324,17 @@ def np_idf(dfs: np.ndarray, num_docs: int, variant: str = "okapi",
 
 
 class PositionalIndexServer:
-    """Warm in-process query node over the positional bucketed store
+    """Warm in-process query node over the positional bucketed table
     written by ``build_index --positional`` — the positional twin of
     :class:`PackedIndexServer`. Construction loads build_metrics.json and
     the vocab once (token → term_id map, the full idf array incl. the
-    Okapi ε-clamp's global mean, avgdl); per-term positional reads and the
-    doclen table warm lazily into caches on first touch, so repeated
-    queries pay numpy-kernel cost only. ``phrase_topk_served`` keeps the
-    old per-call API on top of a small keyed server cache.
+    Okapi ε-clamp's global mean, avgdl) and plans the table's files from
+    its current snapshot once (``layout.load_bucketed``: a plain-parquet
+    store from an earlier version raises ``layout.BucketedFormatError``);
+    per-term positional reads and the doclen table warm lazily into caches
+    on first touch, so repeated queries pay numpy-kernel cost only.
+    ``phrase_topk_served`` keeps the old per-call API on top of a small
+    keyed server cache.
 
     ``preload_doclen=True`` (default) reads the whole doclen table into two
     sorted arrays on first use — the deployment trade a RAM-resident query
@@ -349,7 +353,6 @@ class PositionalIndexServer:
             raise FileNotFoundError(
                 "index has no positional store — rebuild with "
                 "build_index --positional")
-        self.n_buckets = meta.get("positional_n_buckets") or 64
         self.variant = meta.get("variant", "okapi")
         self.num_docs = meta["num_docs"]
         # fit parameters recorded at build time (build_index.run); the
@@ -370,8 +373,11 @@ class PositionalIndexServer:
         idf_all = np_idf(vdf, self.num_docs, self.variant, self.epsilon)
         self.idf_by_term = dict(zip((int(t) for t in vterm), idf_all))
         self.avgdl = float(vcf.sum()) / self.num_docs
-        self._pos_ds = pads.dataset(os.path.join(index_dir, "positional"),
-                                    format="parquet", partitioning="hive")
+        # the positional table's files, planned once from its current
+        # snapshot: staged files of a crashed write are never read
+        table = load_bucketed(os.path.join(index_dir, "positional"))
+        self.n_buckets = int(table.meta["properties"]["n_buckets"])
+        self._pos_files = table.plan_files()
         self._preload_doclen = preload_doclen
         self._dl_docs: np.ndarray | None = None
         self._dl_vals: np.ndarray | None = None
@@ -379,28 +385,32 @@ class PositionalIndexServer:
 
     def _term_positions(self, term_ids) -> dict:
         """(docs, positions) int64 arrays per term, cache-warmed; misses are
-        fetched in ONE bucket-pruned + term-filtered dataset read."""
+        fetched in ONE term-filtered read of the planned files their
+        buckets and term_id bounds admit."""
         import pyarrow.compute as pc
+        import pyarrow.dataset as pads
 
         missing = sorted(t for t in set(term_ids) if t not in self._term_cache)
-        if missing:
-            buckets = sorted({t % self.n_buckets for t in missing})
-            tbl = self._pos_ds.to_table(
-                columns=["doc_id", "term_id", "positions"],
-                filter=pc.field("bucket").isin(buckets)
-                & pc.field("term_id").isin(missing))
-            # flatten (doc, position) pairs per term WITHOUT a python row
-            # loop: list_flatten + repeat-by-length keeps everything
-            # columnar — head terms with millions of positions stay
-            # numpy-speed
-            for t in missing:
-                sub = tbl.filter(pc.equal(tbl.column("term_id"), t))
-                plist = sub.column("positions").combine_chunks()
-                flat = pc.list_flatten(plist).to_numpy().astype(np.int64)
-                lens = pc.list_value_length(plist).to_numpy().astype(np.int64)
-                docs = np.repeat(
-                    sub.column("doc_id").to_numpy().astype(np.int64), lens)
-                self._term_cache[int(t)] = (docs, flat)
+        keep = term_file_pred(self.n_buckets, missing)
+        paths = [f["path"] for f in self._pos_files if missing and keep(f)]
+        empty = np.empty(0, np.int64)
+        tbl = (pads.dataset(paths, format="parquet").to_table(
+            columns=["doc_id", "term_id", "positions"],
+            filter=pc.field("term_id").isin(missing)) if paths else None)
+        # flatten (doc, position) pairs per term WITHOUT a python row
+        # loop: list_flatten + repeat-by-length keeps everything columnar —
+        # head terms with millions of positions stay numpy-speed
+        for t in missing:
+            if tbl is None:  # no planned file can hold the term
+                self._term_cache[int(t)] = (empty, empty)
+                continue
+            sub = tbl.filter(pc.equal(tbl.column("term_id"), t))
+            plist = sub.column("positions").combine_chunks()
+            flat = pc.list_flatten(plist).to_numpy().astype(np.int64)
+            lens = pc.list_value_length(plist).to_numpy().astype(np.int64)
+            docs = np.repeat(
+                sub.column("doc_id").to_numpy().astype(np.int64), lens)
+            self._term_cache[int(t)] = (docs, flat)
         return {int(t): self._term_cache[int(t)] for t in set(term_ids)}
 
     def _doclens(self, doc_ids: list) -> dict:
@@ -469,15 +479,16 @@ def phrase_topk_served(index_dir: str, tokens: list[str], k: int = 10,
                        slop: int | None = None,
                        ordered: bool = True) -> list[tuple[int, int, float, int]]:
     """Exact-phrase / NEAR / N-clause SpanNear top-k with NO Spark session,
-    over the positional bucketed store written by ``build_index
+    over the positional bucketed table written by ``build_index
     --positional``. Same answers as the distributed
     ``positional.phrase_topk`` / ``near_topk`` / ``span_near_topk`` plans
-    (identity pinned in tests): pyarrow reads ONLY the
-    phrase terms' buckets (hive partition pruning) with a term_id filter
-    (row-group stats), adjacency is the same shifted-intersection /
-    windowed-anchor fold in numpy, scoring the same pseudo-term model fit
-    from the stored vocab (``np_idf`` + Σcf/N avgdl, the build's variant
-    from build_metrics.json). Returns [(doc_id, tf, score, rank)].
+    (identity pinned in tests): pyarrow reads ONLY the snapshot's files of
+    the phrase terms' buckets whose manifest term_id bounds admit them,
+    with a term_id filter (row-group stats), adjacency is the same
+    shifted-intersection / windowed-anchor fold in numpy, scoring the same
+    pseudo-term model fit from the stored vocab (``np_idf`` + Σcf/N avgdl,
+    the build's variant from build_metrics.json). Returns [(doc_id, tf,
+    score, rank)].
 
     Serving is WARM: calls against the same (unmodified) store reuse a
     cached :class:`PositionalIndexServer` — vocab/idf load once, per-term

@@ -31,10 +31,14 @@ def run(spark, input_path: str, output: str, variant: str = "okapi",
     so tests can drive it on the shared session without a subprocess."""
     from pyspark.sql import functions as F
 
-    from gensim_spark.index.layout import write_packed_shards
+    from gensim_spark.index.layout import (open_packed_store,
+                                           write_packed_shards)
     from gensim_spark.plans import pipeline as P
 
     t0 = time.perf_counter()
+    # open (and, when resuming, check) the packed store before anything is
+    # written: a refused resume must leave the index as it was
+    open_packed_store(output, docs_per_shard, num_groups, resume)
     pages = spark.read.parquet(input_path)
     if "doc_id" not in pages.columns:
         pages = pages.withColumn(
@@ -46,9 +50,11 @@ def run(spark, input_path: str, output: str, variant: str = "okapi",
         tok = P.tokenize(docs)
         idx = P.build(tok, variant=variant)
     idx.vocab.write.mode("overwrite").parquet(f"{output}/vocab")
+    # resume=True: the store opened above is the one to fill (a fresh
+    # table when not resuming)
     table = write_packed_shards(
         idx.weighted, output, docs_per_shard=docs_per_shard,
-        num_groups=num_groups, resume=resume,
+        num_groups=num_groups, resume=True,
     )
     groups = {
         s.summary["group"]: {
@@ -64,8 +70,12 @@ def run(spark, input_path: str, output: str, variant: str = "okapi",
             column_bytes[col] = column_bytes.get(col, 0) + size
     if positional:
         # phrase/NEAR query support: positions through the SAME bucketed
-        # layout (positions column rides along; bucket pruning + term_id
-        # pushdown at query time), plus the doclen table the scorer joins
+        # table (positions column rides along; bucket pruning + term_id
+        # pushdown at query time), plus the doclen table the scorer joins.
+        # The table is replaced, like the packed one when not resuming, so
+        # a rebuild may change --positional-n-buckets.
+        import shutil
+
         from gensim_spark.index.layout import write_postings_bucketed
         from gensim_spark.operators.positional import positional_postings
 
@@ -81,6 +91,7 @@ def run(spark, input_path: str, output: str, variant: str = "okapi",
             extracted = pages.withColumn(
                 "text", extract_html_text_udf(F.col("html")))
             docs_tok = tokenize_pages(extracted).select("doc_id", "tokens")
+        shutil.rmtree(f"{output}/positional", ignore_errors=True)
         write_postings_bucketed(
             positional_postings(docs_tok, idx.vocab),
             f"{output}/positional", n_buckets=positional_n_buckets)
@@ -110,6 +121,27 @@ def run(spark, input_path: str, output: str, variant: str = "okapi",
     return metrics
 
 
+def _footer_max_doc_id(path: str) -> int | None:
+    """max(doc_id) of a plain parquet table (the doclen table) from its
+    row-group statistics — no Spark job and no data page read, so the
+    append guard does not scan a 10^9-row column for one scalar. A row
+    group without statistics (a foreign writer) reads its file's column."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    mx = None
+    for frag in pads.dataset(path, format="parquet").get_fragments():
+        frag.ensure_complete_metadata()
+        for rg in frag.row_groups:
+            v = ((rg.statistics or {}).get("doc_id") or {}).get("max")
+            if v is None:
+                v = pc.max(frag.to_table(columns=["doc_id"])
+                           .column("doc_id")).as_py()
+            if v is not None and (mx is None or v > mx):
+                mx = v
+    return mx
+
+
 def add_documents(spark, input_path: str, index_dir: str,
                   from_html: bool = False) -> dict:
     """Grow a ``--positional`` index in place: append the new pages'
@@ -127,14 +159,16 @@ def add_documents(spark, input_path: str, index_dir: str,
       and NEAR scores are bit-identical before and after the append.
       Refreshing the statistics is a rebuild, by design.
     - **Boundary guard**: new doc_ids must lie strictly above the
-      positional/doclen stores' current max (footer-stats check, no data
-      scan) and start at the packed store's next shard boundary (snapshot
-      metadata, no job); the input must carry an explicit ``doc_id``
-      column — auto-assigned ids would collide with the existing range.
-    - The served paths need no change: ``serving.phrase_topk_served``'s
-      hive dataset picks up the appended positional files (its key-packing
-      bound is derived from the data per query), and
-      ``PackedIndexServer`` plans the append's snapshot.
+      positional store's current max (the doc_id upper bounds in its
+      manifests) and the doclen table's (parquet footer statistics) — no
+      data scan — and start at the packed store's next shard boundary
+      (snapshot metadata, no job); the input must carry an explicit
+      ``doc_id`` column — auto-assigned ids would collide with the
+      existing range. A positional store written as plain parquet by an
+      earlier version raises ``layout.BucketedFormatError`` here, before
+      any write.
+    - The served paths need no change: ``serving.phrase_topk_served`` and
+      ``PackedIndexServer`` plan the appends' snapshots.
 
     Returns {"docs": n_appended, "wall_sec": ...} and records the append
     in build_metrics.json (num_docs stays the frozen scoring N;
@@ -170,9 +204,10 @@ def add_documents(spark, input_path: str, index_dir: str,
     # boundary guards on the INPUT docs (not the vocab-joined postings —
     # an all-OOV doc with a colliding id would otherwise slip past the
     # postings-level check and append a duplicate doclen row), ALL
-    # evaluated before any write: positional/doclen footer-stats maxima,
-    # plus the packed store's next-shard boundary (strictest — the WAND
-    # reader needs appended docs in fresh shards)
+    # evaluated before any write: the positional (manifest bounds) and
+    # doclen (footer statistics) maxima, plus the packed store's
+    # next-shard boundary (strictest — the WAND reader needs appended docs
+    # in fresh shards)
     from gensim_spark.index.layout import (append_packed_shards,
                                            max_doc_id_bucketed,
                                            next_shard_boundary)
@@ -191,7 +226,7 @@ def add_documents(spark, input_path: str, index_dir: str,
     mn = docs_tok.agg(F.min("doc_id").alias("mn")).collect()[0]["mn"]
     if mn is not None:
         maxes = [m for m in (max_doc_id_bucketed(f"{index_dir}/positional"),
-                             max_doc_id_bucketed(f"{index_dir}/doclen"))
+                             _footer_max_doc_id(f"{index_dir}/doclen"))
                  if m is not None]
         if maxes and int(mn) <= max(maxes):
             raise ValueError(
@@ -215,9 +250,8 @@ def add_documents(spark, input_path: str, index_dir: str,
         with open(f"{index_dir}/build_metrics.json", "w") as f:
             json.dump(meta, f, indent=1)
     vocab = spark.read.parquet(f"{index_dir}/vocab")
-    append_postings_bucketed(
-        positional_postings(docs_tok, vocab), f"{index_dir}/positional",
-        n_buckets=meta.get("positional_n_buckets") or 64)
+    append_postings_bucketed(positional_postings(docs_tok, vocab),
+                             f"{index_dir}/positional")
     # doclen parity with the one-shot build: dl = FULL token count (incl.
     # out-of-vocab tokens), one row per doc with >= 1 token
     doclen_new = (docs_tok.filter(F.size("tokens") > 0)

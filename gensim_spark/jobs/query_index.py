@@ -119,7 +119,9 @@ def run_phrase(spark, index_dir: str, phrase_text: str, k: int = 10,
     the index's fitted variant AND fit parameters (build_metrics.json),
     so phrase scores are comparable to term-query scores. OOV members or
     a missing positional store answer [] / error out explicitly (OOV
-    EXCLUDE words drop silently — they can never block)."""
+    EXCLUDE words drop silently — they can never block); a positional
+    store written as plain parquet by an earlier version raises
+    ``layout.BucketedFormatError``."""
     from pyspark.sql import functions as F
 
     from gensim_spark.functions import textref
@@ -160,9 +162,8 @@ def run_phrase(spark, index_dir: str, phrase_text: str, k: int = 10,
     ids = [c[0] for c in clauses]
     ex_ids = [int(vmap[t]) for t in ex_toks if t in vmap]
     scan_ids = sorted({t for c in clauses for t in c} | set(ex_ids))
-    pos = read_postings_bucketed(
-        spark, f"{index_dir}/positional", term_ids=scan_ids,
-        n_buckets=meta.get("positional_n_buckets") or 64)
+    pos = read_postings_bucketed(spark, f"{index_dir}/positional",
+                                 term_ids=scan_ids)
 
     def out_rows(out, tf_col):
         return [{"doc_id": r["doc_id"], "tf": r[tf_col],

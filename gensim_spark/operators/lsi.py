@@ -216,10 +216,10 @@ def _with_y(docs: DataFrame, w: DataFrame, ell: int) -> DataFrame:
 def _arrow_times(df: DataFrame, key: str, in_cols: list[str],
                  mat: np.ndarray, out_prefix: str, key_type) -> DataFrame:
     """Row-wise (key, x₀..x_{n-1}) · mat → (key, out₀..out_{m-1}) in numpy
-    over Arrow batches, the key cast to ``key_type``: :func:`_wide_times`'
-    product for a matrix too large for one SQL expression per output
-    (each is n terms; a 100 × 100 product took 12 s over 30 rows on a
-    4-core VM, and 300 × 200 ran a 4 GB driver out of memory)."""
+    over Arrow batches, the key cast to ``key_type``. A product built as
+    one SQL expression per output (n terms each) does not scale: a
+    100 × 100 product took 12 s over 30 rows on a 4-core VM, and 300 × 200
+    ran a 4 GB driver out of memory."""
     import pyarrow as pa
 
     mat = np.asarray(mat, dtype=np.float64)
@@ -237,28 +237,6 @@ def _arrow_times(df: DataFrame, key: str, in_cols: list[str],
               + ", ".join(f"{c} double" for c in out_cols))
     return (df.select(key, *in_cols).mapInArrow(gen, schema)
             .withColumn(key, F.col(key).cast(key_type)))
-
-
-def _wide_times(df: DataFrame, key: str, in_cols: list[str],
-                mat: np.ndarray, out_prefix: str) -> DataFrame:
-    """Row-wise (key, x₀..x_{n-1}) · mat (n × m) → (key, out₀..out_{m-1}).
-
-    Each output is ONE SQL expression ``(`x₀` * c₀D) + (`x₁` * c₁D) + …``
-    and all m go to one ``selectExpr``: Spark parses a ``D`` literal to the
-    very double ``repr`` printed and ``+`` associates left, so every output
-    is bit-identical to a Column-per-product build's, at one py4j call
-    instead of 2·n·m (1-2 s of Python-side time per call at ℓ = 16). A
-    non-finite entry has no literal form and is rejected. The library no
-    longer calls it (every product goes through :func:`_arrow_times`);
-    ROADMAP item 8 lists it for deletion."""
-    mat = np.asarray(mat, dtype=np.float64)
-    if not np.isfinite(mat).all():
-        raise ValueError("_wide_times: matrix entries must be finite")
-    rows = mat.tolist()
-    outs = [" + ".join(f"(`{c}` * {rows[j][i]!r}D)"
-                       for j, c in enumerate(in_cols))
-            + f" AS `{out_prefix}{i}`" for i in range(mat.shape[1])]
-    return df.selectExpr(f"`{key}`", *outs)
 
 
 def _rows(df: DataFrame) -> int:

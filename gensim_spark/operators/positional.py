@@ -23,11 +23,11 @@ Plans (100 TB shape):
   ``array_intersect``/``transform`` — zero Python UDFs, zero shuffles
   beyond the k-way join on the intersection-sized frames.
 - **storage**: the positional frame persists through the SAME
-  ``layout.write_postings_bucketed`` store as plain postings (the
-  positions column rides along; bucket partition pruning + term_id
-  row-group pushdown apply unchanged) — pass the pruned
-  ``read_postings_bucketed(..., term_ids=phrase_ids)`` frame straight
-  into :func:`phrase_occurrences` / :func:`phrase_topk`
+  ``layout.write_postings_bucketed`` snapshot table as weighted postings
+  (the positions column rides along; manifest pruning to the terms'
+  bucket files + term_id row-group pushdown apply unchanged) — pass the
+  pruned ``read_postings_bucketed(..., term_ids=phrase_ids)`` frame
+  straight into :func:`phrase_occurrences` / :func:`phrase_topk`
   (tests/test_positional.py::test_phrase_over_stored_bucketed_index).
   In-session frames work too but re-derive the positional groupBy per
   term leg (with the term filter pushed below it).

@@ -181,7 +181,7 @@ def test_salting_splits_head_terms(spark, synth_index, tmp_path):
     layout.write_postings_bucketed(idx.weighted, out, n_buckets=4,
                                    salt_threshold=300, salts=4,
                                    dfs=idx.vocab.select("term_id", "df"))
-    df = spark.read.parquet(out)
+    df = layout.read_postings_bucketed(spark, out)
     head_terms = [r["term_id"] for r in
                   idx.vocab.filter(F.col("df") >= 300).collect()]
     assert head_terms, "fixture should contain head terms"
@@ -195,6 +195,41 @@ def test_salting_splits_head_terms(spark, synth_index, tmp_path):
     total = df.groupBy().agg(F.sum("weight")).collect()[0][0]
     want = idx.weighted.groupBy().agg(F.sum("weight")).collect()[0][0]
     assert total == pytest.approx(want, rel=1e-9)
+
+
+def test_bucketed_store_keeps_its_modulus(spark, synth_index, tmp_path):
+    """Readers and appenders take n_buckets from the table: an 8-bucket
+    store read with no n_buckets returns every row of a term outside the
+    first 8 buckets of a 64-bucket layout, an appended row lands in the
+    8-bucket reads, and an explicit n_buckets other than the stored one
+    raises on read and on append."""
+    from gensim_spark.index import layout
+
+    idx, _ = synth_index
+    out = str(tmp_path / "b8")
+    layout.write_postings_bucketed(idx.weighted, out, n_buckets=8)
+    term = next(r["term_id"] for r in idx.vocab.orderBy("term_id").collect()
+                if r["term_id"] % 64 >= 8)
+    want = idx.weighted.filter(F.col("term_id") == term).count()
+    assert want > 0
+    assert layout.read_postings_bucketed(
+        spark, out, term_ids=[term]).count() == want
+    top = idx.weighted.agg(F.max("doc_id")).collect()[0][0]
+    new = spark.createDataFrame([(top + 1, term, 1.0)],
+                                "doc_id long, term_id long, weight double")
+    for call in (
+            lambda: layout.read_postings_bucketed(spark, out,
+                                                  term_ids=[term],
+                                                  n_buckets=64),
+            lambda: layout.append_postings_bucketed(new, out, n_buckets=64)):
+        with pytest.raises(ValueError, match="n_buckets"):
+            call()
+    layout.append_postings_bucketed(new, out)
+    got = layout.read_postings_bucketed(spark, out, term_ids=[term])
+    assert got.count() == want + 1
+    assert got.filter(F.col("doc_id") == top + 1).count() == 1
+    with pytest.raises(ValueError, match="doc_ids"):
+        layout.append_postings_bucketed(new, out)  # not above the max
 
 
 def test_wand_on_common_texts_matches_oracle(spark, common_texts, tmp_path):

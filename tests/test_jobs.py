@@ -1053,6 +1053,118 @@ def test_crashed_append_is_never_read(spark, tmp_path, monkeypatch):
                                    for _q, r, d, s in after["wand"]]
 
 
+def _positional_index(spark, tmp_path):
+    """A 32-doc ``--positional`` index (4 buckets) plus the next 8 pages
+    as an append batch: (index dir, append pages path)."""
+    from pyspark.sql import functions as F
+
+    from gensim_spark.jobs import build_index
+
+    base = _pages_df(spark).withColumn(
+        "doc_id", F.regexp_extract("url", r"p(\d+)$", 1).cast("long"))
+    p_old = str(tmp_path / "pages_old")
+    p_new = str(tmp_path / "pages_new")
+    base.filter("doc_id < 32").write.parquet(p_old)
+    base.filter("doc_id >= 32").write.parquet(p_new)
+    out = str(tmp_path / "idx")
+    build_index.run(spark, p_old, out, docs_per_shard=16, num_groups=2,
+                    positional=True, positional_n_buckets=4)
+    return out, p_new
+
+
+def test_staged_positional_write_is_never_read(spark, tmp_path):
+    """Positional rows staged into the bucketed table but never committed
+    (a writer killed between its two commit phases) are invisible to the
+    distributed reader, the served phrase path and add_documents' boundary
+    guard."""
+    from pyspark.sql import functions as F
+
+    from gensim_spark.index import layout, serving
+    from gensim_spark.index.icetable import IceTable
+    from gensim_spark.jobs import build_index, query_index
+    from gensim_spark.operators import positional as PX
+    from gensim_spark.plans import pipeline as P
+
+    out, p_new = _positional_index(spark, tmp_path)
+    pos_dir = f"{out}/positional"
+    vocab = spark.read.parquet(f"{out}/vocab")
+    tids = [r["term_id"] for r in
+            vocab.filter(F.col("token").isin("alpha", "beta")).collect()]
+
+    def answers():
+        serving._SERVER_CACHE.clear()
+        rows = layout.read_postings_bucketed(spark, pos_dir, term_ids=tids)
+        return (sorted(r["doc_id"] for r in rows.collect()),
+                serving.phrase_topk_served(out, ["alpha", "beta"], k=100))
+
+    before = answers()
+    stray = spark.createDataFrame([(999, "alpha beta alpha beta")],
+                                  "doc_id long, text string")
+    staged = PX.positional_postings(P.tokenize(stray), vocab)
+    IceTable.load(pos_dir).stage_write(staged.withColumn("salt", F.lit(0)))
+    assert answers() == before
+    assert 999 not in before[0]
+    # the guard sees the committed max (31), not the staged 999
+    assert build_index.add_documents(spark, p_new, out)["docs"] == 8
+    after = answers()
+    assert 999 not in after[0] and max(after[0]) >= 32
+    assert 999 not in {r["doc_id"] for r in query_index.run_phrase(
+        spark, out, "alpha beta", k=100)["results"]}
+
+
+def test_plain_parquet_positional_store_is_refused(spark, tmp_path):
+    """A positional store written as plain hive-partitioned parquet (no
+    snapshot metadata) is refused by name — with its path and the rebuild
+    command — by the distributed and served phrase paths and by
+    add_documents, not read as empty or failed with FileNotFoundError."""
+    import shutil
+
+    from gensim_spark.index import layout, serving
+    from gensim_spark.jobs import build_index, query_index
+
+    out, p_new = _positional_index(spark, tmp_path)
+    pos_dir = f"{out}/positional"
+    rows = layout.read_postings_bucketed(spark, pos_dir).collect()
+    shutil.rmtree(pos_dir)
+    spark.createDataFrame(rows).write.partitionBy("bucket").parquet(pos_dir)
+    for call in (
+            lambda: query_index.run_phrase(spark, out, "alpha beta"),
+            lambda: query_index.run_phrase_served(out, "alpha beta"),
+            lambda: serving.PositionalIndexServer(out),
+            lambda: build_index.add_documents(spark, p_new, out)):
+        with pytest.raises(layout.BucketedFormatError) as err:
+            call()
+        assert pos_dir in str(err.value)
+        assert "build_index --positional" in str(err.value)
+
+
+def test_refused_resume_leaves_vocab_untouched(spark, tmp_path):
+    """A resume the packed store refuses (here: another docs_per_shard)
+    fails before anything is written — the index's vocab stays the one
+    its packed runs were built with, byte for byte, even though the new
+    input would give another vocab."""
+    from gensim_spark.jobs import build_index
+
+    p_a = str(tmp_path / "pages_a")
+    p_b = str(tmp_path / "pages_b")
+    _pages_df(spark, n=20).write.parquet(p_a)
+    spark.createDataFrame([(0, "omega psi chi"), (1, "omega phi")],
+                          "doc_id long, text string").write.parquet(p_b)
+    out = str(tmp_path / "idx")
+    build_index.run(spark, p_a, out, docs_per_shard=16, num_groups=2)
+
+    def vocab_bytes():
+        import pathlib
+
+        return {p.name: p.read_bytes()
+                for p in sorted(pathlib.Path(out, "vocab").iterdir())}
+
+    before = vocab_bytes()
+    with pytest.raises(ValueError, match="docs_per_shard"):
+        build_index.run(spark, p_b, out, docs_per_shard=8, num_groups=2)
+    assert vocab_bytes() == before
+
+
 def test_query_index_span_near_multi(spark, tmp_path):
     """3+-term sloppy phrase '"a b c"~slop' end-to-end: the distributed
     span_near_topk path via --phrase --slop, and the served greedy-chain

@@ -1,8 +1,5 @@
 """Exactness of the LSI fit's building blocks (operators/lsi.py).
 
-* ``_wide_times`` renders each output as one SQL expression; the
-  Column-per-product build it replaced is kept here as the reference and
-  the two must agree bit for bit.
 * ``lsi_fit`` folds B = QᵀA into the last pass (Gram(B) = R⁻ᵀ·(WᵀW)·R⁻¹
   with W = AᵀY) and takes AᵀQ as (AᵀY)·R⁻¹; the plain Halko loop it
   replaced is kept here as a numpy replica and the two must agree to
@@ -11,75 +8,14 @@
   folded by one Python task, a frame above the size target keeps several.
 """
 
-import struct
 import time
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from gensim_spark.operators import lsi as L
 from tests.conftest import docs_df
-
-
-def wide_times_columns(df, key, in_cols, mat, out_prefix):
-    """The Column-per-product ``_wide_times`` (reference form)."""
-    outs = []
-    for i in range(mat.shape[1]):
-        lin = None
-        for j, c in enumerate(in_cols):
-            term = F.col(c) * F.lit(float(mat[j, i]))
-            lin = term if lin is None else lin + term
-        outs.append(lin.alias(f"{out_prefix}{i}"))
-    return df.select(F.col(key), *outs)
-
-
-SPECIAL = [0.0, -0.0, 1e-300, -1e-300, 1e300, -1e300, 5e-324, 3.0, -7.0,
-           1e16, 2.0 ** 53 + 2.0]
-values = st.one_of(
-    st.sampled_from(SPECIAL),
-    st.integers(-1000, 1000).map(float),
-    st.floats(allow_nan=False, allow_infinity=False, width=64))
-
-
-def _bits(v):
-    return struct.unpack("<q", struct.pack("<d", v))[0]
-
-
-@settings(max_examples=25, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(data=st.data())
-def test_wide_times_sql_text_bit_identical(spark, data):
-    n = data.draw(st.integers(1, 5), label="n")
-    m = data.draw(st.integers(1, 4), label="m")
-    rows = data.draw(st.integers(1, 6), label="rows")
-    mat = np.array(data.draw(st.lists(values, min_size=n * m,
-                                      max_size=n * m), label="mat"),
-                   dtype=np.float64).reshape(n, m)
-    x = data.draw(st.lists(st.lists(values, min_size=n, max_size=n),
-                           min_size=rows, max_size=rows), label="x")
-    cols = [f"x{j}" for j in range(n)]
-    df = spark.createDataFrame(
-        [(i, *r) for i, r in enumerate(x)],
-        "k long, " + ", ".join(f"{c} double" for c in cols))
-    got = {r["k"]: r for r in L._wide_times(df, "k", cols, mat, "o").collect()}
-    want = {r["k"]: r for r in
-            wide_times_columns(df, "k", cols, mat, "o").collect()}
-    assert got.keys() == want.keys()
-    for k, w in want.items():
-        for i in range(m):
-            a, b = got[k][f"o{i}"], w[f"o{i}"]
-            assert (np.isnan(a) and np.isnan(b)) or _bits(a) == _bits(b), \
-                (k, i, a, b)
-
-
-def test_wide_times_rejects_non_finite(spark):
-    df = spark.createDataFrame([(0, 1.0)], "k long, x0 double")
-    for bad in (np.inf, -np.inf, np.nan):
-        with pytest.raises(ValueError):
-            L._wide_times(df, "k", ["x0"], np.array([[bad]]), "o")
 
 
 # ---------- lsi_fit vs the plain Halko loop ----------

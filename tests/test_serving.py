@@ -431,11 +431,15 @@ def test_positional_server_empty_doclen(tmp_path, preload_doclen):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from gensim_spark.index.icetable import IceTable
     from gensim_spark.index.serving import PositionalIndexServer
 
     store = tmp_path / "pos_store"
-    for sub in ("vocab", "positional", "doclen"):
+    for sub in ("vocab", "doclen"):
         (store / sub).mkdir(parents=True)
+    IceTable.create(str(store / "positional"),
+                    "doc_id bigint, term_id bigint, positions array<int>",
+                    properties={"n_buckets": "4"})
     (store / "build_metrics.json").write_text(json.dumps(
         {"positional": True, "positional_n_buckets": 4, "num_docs": 1}))
     pq.write_table(pa.table({"token": ["cat"], "term_id": [0], "df": [1],

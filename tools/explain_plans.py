@@ -64,22 +64,32 @@ def main() -> None:
     sections.append(("Index build — weighted postings (counts cached)",
                      summarize(p), interesting(p)))
 
-    layout.write_postings_bucketed(idx.weighted, "/tmp/explain_buckets",
-                                   n_buckets=8)
-    pruned = layout.read_postings_bucketed(
-        spark, "/tmp/explain_buckets", term_ids=[3, 11], n_buckets=8)
+    # the term-bucketed snapshot table: manifest planning prunes files to
+    # the query terms' buckets and term_id bounds BEFORE Spark opens
+    # anything — evidence is the planned-file count
+    import shutil
+    import tempfile
+
+    bucket_dir = tempfile.mkdtemp(prefix="explain_buckets_")
+    table = layout.write_postings_bucketed(idx.weighted, bucket_dir,
+                                           n_buckets=8)
+    pruned = layout.read_postings_bucketed(spark, bucket_dir,
+                                           term_ids=[3, 11])
+    planned = table.plan_files(stats_pred=layout.term_file_pred(8, [3, 11]))
     p = pruned._jdf.queryExecution().executedPlan().toString()
-    sections.append(("Query scan over the term-bucketed store (terms 3, 11)",
-                     summarize(p), interesting(p)))
+    sections.append((
+        "Query scan over the term-bucketed store (terms 3, 11) — manifest "
+        "pruning",
+        f"files_planned={len(planned)}/{len(table.plan_files())} "
+        f"(bucket partition pruning + term_id min/max bounds, pre-open) "
+        + summarize(p),
+        interesting(p)))
 
     q = T.query_terms_df(spark, {0: [3, 11]})
     s = T.search(pruned.select("doc_id", "term_id", "weight"), q, k=10)
     p = s._jdf.queryExecution().executedPlan().toString()
     sections.append(("BM25 top-k over the pruned scan", summarize(p),
                      interesting(p)))
-
-    import shutil
-    import tempfile
 
     shard_dir = tempfile.mkdtemp(prefix="explain_shards_")
     shutil.rmtree(shard_dir, ignore_errors=True)
@@ -92,34 +102,11 @@ def main() -> None:
     sections.append(("Packed-shard scan pruned to query terms (WAND input)",
                      summarize(p), interesting(p)))
 
-    # Iceberg-semantics store: manifest-level scan planning prunes files
-    # BEFORE Spark opens anything — evidence is the planned-file count.
-    ice_dir = tempfile.mkdtemp(prefix="explain_ice_") + "/postings"
-    layout.write_postings_bucketed_iceberg(idx.weighted, ice_dir, n_buckets=8)
-    from gensim_spark.index.icetable import IceTable
-
-    table = IceTable.load(ice_dir)
-    all_files = table.plan_files()
-    pruned_ice = layout.read_postings_bucketed_iceberg(
-        spark, ice_dir, term_ids=[3, 11])
-    n_b = 8
-    buckets = {3 % n_b, 11 % n_b}
-    pruned_files = table.plan_files(
-        partition_pred=lambda part: part.get("bucket") in buckets)
-    p = pruned_ice._jdf.queryExecution().executedPlan().toString()
-    sections.append((
-        "Iceberg-store scan for terms 3, 11 — manifest pruning",
-        f"files_planned={len(pruned_files)}/{len(all_files)} "
-        f"(partition pruning + term_id min/max bounds, pre-open) "
-        + summarize(p),
-        interesting(p)))
-
     # Head-term salting: the query's pruned scan fans out over salt files
     # instead of reading one df-sized file (1M-doc numbers: BASELINE.md)
     import bench as B
 
     salt_dir = tempfile.mkdtemp(prefix="explain_salt_")
-    shutil.rmtree(salt_dir, ignore_errors=True)
     skewed = B._synth_weighted(spark, 50_000, 4).cache()
     dfs = skewed.groupBy("term_id").agg(F.count("*").alias("df"))
     head = dfs.orderBy(F.col("df").desc()).first()
@@ -127,7 +114,7 @@ def main() -> None:
                                    salt_threshold=int(head["df"]) // 2,
                                    dfs=dfs, salts=4)
     pruned_salt = layout.read_postings_bucketed(
-        spark, salt_dir, term_ids=[int(head["term_id"])], n_buckets=4)
+        spark, salt_dir, term_ids=[int(head["term_id"])])
     per_file = (pruned_salt.groupBy(F.input_file_name().alias("f"))
                 .agg(F.count("*").alias("rows"))
                 .agg(F.count("*").alias("files"),
@@ -387,17 +374,10 @@ def main() -> None:
         "zero exchanges)",
         summarize(p), interesting(p)))
 
-    import shutil
-    import tempfile
-
-    from gensim_spark.index.icetable import IceTable
-
     ice_loc = tempfile.mkdtemp(prefix="explain_ice_del_")
-    shutil.rmtree(ice_loc, ignore_errors=True)
-    layout.write_postings_bucketed_iceberg(idx.weighted, ice_loc,
-                                           n_buckets=8)
+    layout.write_postings_bucketed(idx.weighted, ice_loc, n_buckets=8)
     layout.delete_docs_iceberg(spark, ice_loc, [1, 2, 3])
-    mor = IceTable.load(ice_loc).scan(spark)
+    mor = layout.read_postings_bucketed(spark, ice_loc)
     p = mor._jdf.queryExecution().executedPlan().toString()
     sections.append((
         "Merge-on-read scan after delete_docs_iceberg — data legs + ONE "
@@ -431,8 +411,8 @@ def main() -> None:
     exp = vstored.filter(vstored.token.like(like)).select("term_id")
     p_exp = exp._jdf.queryExecution().executedPlan().toString()
     exp_ids = [int(r["term_id"]) for r in exp.collect()]
-    pruned_wc = layout.read_postings_bucketed(
-        spark, "/tmp/explain_buckets", term_ids=exp_ids, n_buckets=8)
+    pruned_wc = layout.read_postings_bucketed(spark, bucket_dir,
+                                              term_ids=exp_ids)
     qwc = T.query_terms_df(spark, {0: exp_ids})
     p = (T.search(pruned_wc.select("doc_id", "term_id", "weight"), qwc, k=10)
          ._jdf.queryExecution().executedPlan().toString())
