@@ -1108,11 +1108,8 @@ class CoherenceModel:
             if self.dictionary is None:
                 raise ValueError("u_mass with token topics needs "
                                  "dictionary= to map tokens to ids")
-            tok2id = {r["token"]: r["term_id"]
-                      for r in self.dictionary.df
-                      .filter(F.col("token").isin(
-                          [w for t in self._topic_ids for w in t]))
-                      .select("token", "term_id").collect()}
+            tok2id = _vocab.term_ids(
+                self.dictionary.df, [w for t in self._topic_ids for w in t])
             return [[tok2id[w] for w in t] for t in self._topic_ids]
         return self._topic_ids
 
@@ -1186,17 +1183,10 @@ class SparseMatrixSimilarity:
     def query_text(self, spark: SparkSession, dictionary: Dictionary,
                    queries: dict[int, str], k: int | None = None) -> DataFrame:
         """Binary ('bnn') query weighting via vocab lookup (docsim.py:1149)."""
-        from gensim_spark.functions import textref
+        from gensim_spark.plans import pipeline as _P
 
-        tokens = {qid: sorted(set(textref.simple_preprocess(q)))
-                  for qid, q in queries.items()}
-        flat = sorted({t for ts in tokens.values() for t in ts})
-        tid = {r["token"]: r["term_id"] for r in
-               dictionary.df.filter(F.col("token").isin(flat)).collect()}
-        qdf = _topk.query_terms_df(
-            spark, {qid: [tid[t] for t in ts if t in tid]
-                    for qid, ts in tokens.items()})
-        return _topk.search(self.weighted, qdf,
+        return _topk.search(self.weighted,
+                            _P.query_terms(spark, dictionary.df, queries),
                             k=self.num_best if k is None else k)
 
     def similarity_by_id(self, doc_id: int, k: int | None = None) -> DataFrame:
@@ -1415,10 +1405,13 @@ class SearchEngine:
 
         return _textref.simple_preprocess(text)
 
-    def _tids(self, tokens) -> dict:
-        rows = self.index.vocab.filter(
-            F.col("token").isin(sorted(set(tokens)))).collect()
-        return {r["token"]: int(r["term_id"]) for r in rows}
+    def _bag(self, toks: list, index=None):
+        """doc2bow on the query against ``index`` (default: the main
+        index): (token → term_id, the one-query 'bnn' frame — None when
+        every token is OOV)."""
+        tid = _vocab.term_ids((index or self.index).vocab, toks)
+        return tid, (_topk.query_terms_df(self._spark, {0: [*tid.values()]})
+                     if tid else None)
 
     def _pos(self):
         if self._positional is None:
@@ -1464,6 +1457,7 @@ class SearchEngine:
         scores, highlight marks passages in the engine's main text
         column."""
         toks = self._tokenize(text)
+        tid = None
         if fields is not None:
             scores = self._bm25f(toks, fields)
             if scores is None:
@@ -1472,29 +1466,21 @@ class SearchEngine:
                 out = _topk.collapse_topk(scores, self._meta, collapse, k)
             else:
                 out = _topk.topk(scores, k)
-            if highlight is not None:
-                from gensim_spark.operators import highlight as _hl
-
-                # vocab lookup only when snippets are actually wanted —
-                # the fused scoring itself never needs the main index
-                tid = self._tids(toks)
-                out = _hl.highlight_topk(self.index.docs, out,
-                                         [t for t in toks if t in tid],
-                                         width=highlight)
-            return out
-        tid = self._tids(toks)
-        ids = sorted({tid[t] for t in toks if t in tid})
-        if not ids:
-            return self._empty_topk()
-        q = _topk.query_terms_df(self._spark, {0: ids})
-        if collapse is not None:
-            out = _topk.collapse_topk(
-                _topk.score(self.index.weighted, q), self._meta, collapse, k)
         else:
-            out = _topk.search(self.index.weighted, q, k)
+            tid, q = self._bag(toks)
+            if q is None:
+                return self._empty_topk()
+            if collapse is not None:
+                out = _topk.collapse_topk(_topk.score(self.index.weighted, q),
+                                          self._meta, collapse, k)
+            else:
+                out = _topk.search(self.index.weighted, q, k)
         if highlight is not None:
             from gensim_spark.operators import highlight as _hl
 
+            if tid is None:
+                # the fused scoring never resolves against the main index
+                tid = _vocab.term_ids(self.index.vocab, toks)
             out = _hl.highlight_topk(self.index.docs, out,
                                      [t for t in toks if t in tid],
                                      width=highlight)
@@ -1507,15 +1493,11 @@ class SearchEngine:
         field_weighted, field_queries = {}, {}
         for col in fields:
             fidx = self._field_index(col)
-            rows = fidx.vocab.filter(
-                F.col("token").isin(sorted(set(toks)))).collect()
-            tid = {r["token"]: int(r["term_id"]) for r in rows}
-            ids = sorted({tid[t] for t in toks if t in tid})
-            if not ids:
+            _, q = self._bag(toks, fidx)
+            if q is None:
                 continue
             field_weighted[col] = fidx.weighted
-            field_queries[col] = _topk.query_terms_df(self._spark,
-                                                      {0: ids})
+            field_queries[col] = q
         if not field_weighted:
             return None
         return _topk.bm25f_scores(field_weighted, field_queries,
@@ -1524,7 +1506,8 @@ class SearchEngine:
     def boolean(self, must=(), should=(), must_not=(),
                 min_should_match: int = 0, boosts: dict | None = None,
                 k: int | None = 10) -> DataFrame:
-        tid = self._tids(list(must) + list(should) + list(must_not))
+        tid = _vocab.term_ids(self.index.vocab,
+                              [*must, *should, *must_not])
         if any(t not in tid for t in must):
             return self._empty_topk()  # an OOV must clause can never match
         return _topk.bool_topk(
@@ -1557,14 +1540,11 @@ class SearchEngine:
     def explain(self, text: str, doc_ids=None) -> DataFrame:
         """Per-term score breakdown for a query (Lucene explain):
         Σ contribution per (query, doc) equals search()'s score."""
-        toks = self._tokenize(text)
-        tid = self._tids(toks)
-        ids = sorted({tid[t] for t in toks if t in tid})
-        if not ids:
+        _, q = self._bag(self._tokenize(text))
+        if q is None:
             return self._spark.createDataFrame(
                 [], "query_id int, doc_id long, term_id long, token string,"
                     " weight double, q_weight double, contribution double")
-        q = _topk.query_terms_df(self._spark, {0: ids})
         return _topk.explain_scores(self.index.weighted, q,
                                     vocab=self.index.vocab,
                                     doc_ids=doc_ids)
@@ -1574,11 +1554,11 @@ class SearchEngine:
         from gensim_spark.operators import positional as _px
 
         toks = self._tokenize(text)
-        tid = self._tids(toks)
-        if any(t not in tid for t in toks) or not toks:
+        ids = [c[0] for c in _vocab.resolve_clauses(
+            _vocab.term_ids(self.index.vocab, toks), [[t] for t in toks])]
+        if not ids:
             return self._spark.createDataFrame(
                 [], "doc_id long, phrase_tf int, score double, rank int")
-        ids = [tid[t] for t in toks]
         if slop is None:
             return _px.phrase_topk(self._pos(), self.index.stats, ids,
                                    self.index.doclen, k=k)
@@ -1608,9 +1588,10 @@ class SearchEngine:
         # become an OOV drop
         alts = [[w for x in a for w in self._tokenize(x)]
                 for a in alternatives]
-        tid = self._tids(sorted({w for a in alts for w in a}))
-        ids = [[tid[w] for w in a if w in tid] for a in alts]
-        if not ids or any(not a for a in ids):
+        ids = _vocab.resolve_clauses(
+            _vocab.term_ids(self.index.vocab, [w for a in alts for w in a]),
+            alts)
+        if not ids:
             return self._spark.createDataFrame(
                 [], "doc_id long, phrase_tf int, score double, rank int")
         return _px.multi_phrase_topk(self._pos(), self.index.stats, ids,
@@ -1638,9 +1619,10 @@ class SearchEngine:
         alts = [[w for x in a for w in self._tokenize(x)] for a in inc]
         exc = (self._tokenize(exclude) if isinstance(exclude, str)
                else [w for x in exclude for w in self._tokenize(x)])
-        tid = self._tids(sorted({w for a in alts for w in a} | set(exc)))
-        ids = [[tid[w] for w in a if w in tid] for a in alts]
-        if not ids or any(not a for a in ids):
+        tid = _vocab.term_ids(self.index.vocab,
+                              [w for a in alts for w in a] + exc)
+        ids = _vocab.resolve_clauses(tid, alts)
+        if not ids:
             return self._spark.createDataFrame(
                 [], "doc_id long, near_tf int, score double, rank int")
         ex_ids = [tid[w] for w in exc if w in tid]
@@ -1662,22 +1644,16 @@ class SearchEngine:
     def feedback(self, text: str, fb_docs: int = 5, fb_terms: int = 10,
                  alpha: float = 1.0, beta: float = 0.75,
                  k: int | None = 10) -> DataFrame:
-        toks = self._tokenize(text)
-        tid = self._tids(toks)
-        ids = sorted({tid[t] for t in toks if t in tid})
-        if not ids:
+        _, q = self._bag(self._tokenize(text))
+        if q is None:
             return self._empty_topk()
-        q = _topk.query_terms_df(self._spark, {0: ids})
         return _topk.rocchio_topk(self.index.weighted, q, fb_docs,
                                   fb_terms, alpha, beta, k)
 
     def _match_set(self, text: str) -> DataFrame:
-        toks = self._tokenize(text)
-        tid = self._tids(toks)
-        ids = sorted({tid[t] for t in toks if t in tid})
-        if not ids:
+        _, q = self._bag(self._tokenize(text))
+        if q is None:
             return self._spark.createDataFrame([], "doc_id long")
-        q = _topk.query_terms_df(self._spark, {0: ids})
         return _topk.score(self.index.weighted, q).select("doc_id")
 
     def sort(self, text: str, field: str, k: int | None = 10,
@@ -1686,14 +1662,11 @@ class SearchEngine:
         """Sort-by-field results with searchAfter pagination
         (``topk.sort_topk``): rank the match set by a metadata field;
         ``after=(field_value, doc_id)`` continues from that cursor."""
-        toks = self._tokenize(text)
-        tid = self._tids(toks)
-        ids = sorted({tid[t] for t in toks if t in tid})
-        if not ids:
+        _, q = self._bag(self._tokenize(text))
+        if q is None:
             return self._spark.createDataFrame(
                 [], f"query_id int, doc_id long, {field} long, "
                     "score double, rank int")
-        q = _topk.query_terms_df(self._spark, {0: ids})
         return _topk.sort_topk(_topk.score(self.index.weighted, q),
                                self._meta, field, k, ascending, after)
 

@@ -31,6 +31,7 @@ with the same pruning (only the query terms' runs are ever touched).
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import numpy as np
 
@@ -38,6 +39,7 @@ from gensim_spark.index.layout import (PACKED_SCHEMA, load_bucketed,
                                        packed_files, term_file_pred)
 from gensim_spark.index.packing import RUN_COLUMNS
 from gensim_spark.index.wand import _TermRun, _wand
+from gensim_spark.operators.vocab import resolve_clauses
 
 _READ_COLUMNS = ["shard_id", "term_id", *RUN_COLUMNS]
 
@@ -68,6 +70,23 @@ def merge_topk(node_rows, k: int = 10) -> list[tuple[int, int, float, int]]:
         for rank, (d, s) in enumerate(cand, start=1):
             out.append((q, d, float(s), rank))
     return out
+
+
+def stored_term_ids(index_dir: str, tokens) -> dict[str, int]:
+    """token → term_id for the in-vocab members of ``tokens`` against a
+    stored ``<index_dir>/vocab`` — the pyarrow twin of
+    ``vocab.term_ids``: one token-filtered parquet read, no Spark job. No
+    tokens → ``{}`` (an empty ``isin`` value set has no type)."""
+    import pyarrow.dataset as pads
+
+    toks = sorted(set(tokens))
+    if not toks:
+        return {}
+    vt = pads.dataset(os.path.join(index_dir, "vocab"),
+                      format="parquet").to_table(
+        columns=["token", "term_id"], filter=pads.field("token").isin(toks))
+    return dict(zip(vt.column("token").to_pylist(),
+                    vt.column("term_id").to_pylist()))
 
 
 def _norm_exclude(exclude_doc_ids):
@@ -248,9 +267,6 @@ def bm25f_topk_served(field_dirs: dict, tokens: list[str],
     the same rows the distributed fusion's score legs shuffle; a
     stopword-heavy query pays the same union either way."""
     boosts = boosts or {}
-    toks = sorted(set(tokens))
-    if not toks:
-        return []
     # per-field (docs, boost·scores) arrays; fusion stays vectorized all the
     # way down — the per-doc Python dict walk this replaces is O(candidate
     # set) interpreter work per query, the exact scale-killer shape the
@@ -258,15 +274,7 @@ def bm25f_topk_served(field_dirs: dict, tokens: list[str],
     field_docs: list[np.ndarray] = []
     field_scores: list[np.ndarray] = []
     for fname, d in field_dirs.items():
-        import pyarrow.dataset as pads
-
-        vt = pads.dataset(os.path.join(d, "vocab"),
-                          format="parquet").to_table(
-            columns=["token", "term_id"],
-            filter=pads.field("token").isin(toks))
-        tid = dict(zip(vt.column("token").to_pylist(),
-                       vt.column("term_id").to_pylist()))
-        ids = sorted({int(tid[t]) for t in tokens if t in tid})
+        ids = sorted(stored_term_ids(d, tokens).values())
         if not ids:
             continue  # field matches nothing — contributes 0
         srv = (servers or {}).get(fname) or PackedIndexServer(
@@ -330,7 +338,8 @@ class PositionalIndexServer:
     the vocab once (token → term_id map, the full idf array incl. the
     Okapi ε-clamp's global mean, avgdl) and plans the table's files from
     its current snapshot once (``layout.load_bucketed``: a plain-parquet
-    store from an earlier version raises ``layout.BucketedFormatError``);
+    store from an earlier version raises ``layout.BucketedFormatError``)
+    with its equality deletes applied as ``IceTable.scan`` applies them;
     per-term positional reads and the doclen table warm lazily into caches
     on first touch, so repeated queries pay numpy-kernel cost only.
     ``phrase_topk_served`` keeps the old per-call API on top of a small
@@ -345,6 +354,7 @@ class PositionalIndexServer:
         import json as _json
 
         import pyarrow.dataset as pads
+        import pyarrow.parquet as pq
 
         self._dir = index_dir
         with open(os.path.join(index_dir, "build_metrics.json")) as f:
@@ -378,6 +388,15 @@ class PositionalIndexServer:
         table = load_bucketed(os.path.join(index_dir, "positional"))
         self.n_buckets = int(table.meta["properties"]["n_buckets"])
         self._pos_files = table.plan_files()
+        # equality deletes by IceTable.scan's rule: a delete hides a data
+        # file's rows only when its _seq is greater than the file's (a doc
+        # re-appended after it stays). _gone: data seq → doc ids hidden.
+        dels = [(d["_seq"], pq.read_table(d["path"], columns=["doc_id"])
+                 .column("doc_id").to_pylist())
+                for d in table.plan_delete_files()]
+        self._gone = {seq: tuple(sorted({d for s, ids in dels if s > seq
+                                         for d in ids}))
+                      for seq in {f["_seq"] for f in self._pos_files}}
         self._preload_doclen = preload_doclen
         self._dl_docs: np.ndarray | None = None
         self._dl_vals: np.ndarray | None = None
@@ -387,16 +406,24 @@ class PositionalIndexServer:
         """(docs, positions) int64 arrays per term, cache-warmed; misses are
         fetched in ONE term-filtered read of the planned files their
         buckets and term_id bounds admit."""
+        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
         missing = sorted(t for t in set(term_ids) if t not in self._term_cache)
         keep = term_file_pred(self.n_buckets, missing)
-        paths = [f["path"] for f in self._pos_files if missing and keep(f)]
-        empty = np.empty(0, np.int64)
-        tbl = (pads.dataset(paths, format="parquet").to_table(
+        # one read per set of hidden docs (one read when nothing is deleted)
+        by_gone: dict[tuple, list[str]] = {}
+        for f in self._pos_files:
+            if missing and keep(f):
+                by_gone.setdefault(self._gone[f["_seq"]], []).append(f["path"])
+        parts = [pads.dataset(paths, format="parquet").to_table(
             columns=["doc_id", "term_id", "positions"],
-            filter=pc.field("term_id").isin(missing)) if paths else None)
+            filter=pc.field("term_id").isin(missing)
+            & ~pc.field("doc_id").isin(pa.array(gone, pa.int64())))
+            for gone, paths in by_gone.items()]
+        empty = np.empty(0, np.int64)
+        tbl = pa.concat_tables(parts) if parts else None
         # flatten (doc, position) pairs per term WITHOUT a python row
         # loop: list_flatten + repeat-by-length keeps everything columnar —
         # head terms with millions of positions stay numpy-speed
@@ -452,17 +479,20 @@ class PositionalIndexServer:
                                       ordered=ordered)
 
 
-# small warm-server cache behind the per-call API: keyed on the store path
-# plus build_metrics.json's identity (every build/append commit rewrites
-# that file, so appends invalidate), bounded so long-lived processes
-# serving many stores do not pin every store's vocab
+# small warm-server cache behind the per-call API: keyed on the store path,
+# build_metrics.json's identity (rewritten by every build/append) and the
+# positional table's version hint (moved by every commit, deletes too),
+# bounded so long-lived processes serving many stores do not pin every
+# store's vocab
 _SERVER_CACHE: dict = {}
 _SERVER_CACHE_MAX = 8
 
 
 def _positional_server(index_dir: str) -> PositionalIndexServer:
     st = os.stat(os.path.join(index_dir, "build_metrics.json"))
-    key = (os.path.realpath(index_dir), st.st_mtime_ns, st.st_size)
+    hint = Path(index_dir, "positional", "metadata", "version-hint.text")
+    key = (os.path.realpath(index_dir), st.st_mtime_ns, st.st_size,
+           hint.read_text() if hint.exists() else None)
     srv = _SERVER_CACHE.get(key)
     if srv is None:
         # drop stale entries for the same dir (superseded by a newer build)
@@ -492,8 +522,8 @@ def phrase_topk_served(index_dir: str, tokens: list[str], k: int = 10,
 
     Serving is WARM: calls against the same (unmodified) store reuse a
     cached :class:`PositionalIndexServer` — vocab/idf load once, per-term
-    positional reads and doclens cache across calls; a rebuilt or appended
-    store (build_metrics.json rewritten) gets a fresh server.
+    positional reads and doclens cache across calls; a rebuilt, appended
+    or deleted-from store gets a fresh server.
 
     Scale note: the in-process cost is intersection-sized (the pruned
     buckets' rows for the query terms), exactly what the distributed legs
@@ -507,21 +537,14 @@ def _phrase_topk_on_server(srv: PositionalIndexServer, tokens: list[str],
                            k: int = 10, slop: int | None = None,
                            ordered: bool = True,
                            ) -> list[tuple[int, int, float, int]]:
-    tid = srv.tid
     idf_by_term = srv.idf_by_term
     variant, num_docs, avgdl = srv.variant, srv.num_docs, srv.avgdl
     k1, b = srv.k1, srv.b
     # a clause is a token (str) or a list of alternative tokens — the
-    # served MultiPhrase / spanOr form. Lucene parity (ADVICE r5): an OOV
-    # ALTERNATIVE drops from its clause ('(table|zzz)' still matches via
-    # table, like SearchEngine.multi_phrase); [] only when a whole clause
-    # empties (a bare OOV word is the unit-clause case).
-    tok_clauses = [[t] if isinstance(t, str) else list(t) for t in tokens]
-    if not tok_clauses or any(not c for c in tok_clauses):
-        return []
-    clauses = [sorted({tid[t] for t in c if t in tid})
-               for c in tok_clauses]
-    if any(not c for c in clauses):
+    # served MultiPhrase / spanOr form, resolved by the shared OOV rule
+    clauses = resolve_clauses(
+        srv.tid, [[t] if isinstance(t, str) else t for t in tokens])
+    if not clauses:
         return []
     ids = [c[0] for c in clauses]           # unit-clause view (n = len)
     flat_ids = [t for c in clauses for t in c]

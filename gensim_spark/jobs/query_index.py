@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Query job: text query → tokenize with the build pipeline → vocab lookup →
-block-max WAND top-k over the packed shard index."""
+"""Query job: text query → tokenize with the build pipeline → term ids from
+the stored vocab (``serving.stored_term_ids``, a pyarrow read — no Spark
+job) → block-max WAND top-k over the packed shard index."""
 
 from __future__ import annotations
 
@@ -15,35 +16,35 @@ sys.path.insert(
 )
 
 
+def _bnn_queries(index_dir: str, queries: list[str]):
+    """Query texts → (tokens per query id, binary 'bnn' query weights over
+    the stored vocab — docsim.py:1149's query model, OOV tokens dropped)."""
+    from gensim_spark.functions import textref
+    from gensim_spark.index.serving import stored_term_ids
+
+    tokens = {qid: textref.simple_preprocess(q)
+              for qid, q in enumerate(queries)}
+    tid = stored_term_ids(index_dir, [t for ts in tokens.values() for t in ts])
+    return tokens, {qid: {tid[t]: 1.0 for t in set(ts) if t in tid}
+                    for qid, ts in tokens.items()}
+
+
 def run(spark, index_dir: str, queries: list[str], k: int = 10,
         snapshot_id: int | None = None,
         exclude_doc_ids=None, pages_path: str | None = None,
         highlight: int | None = None, facet: str | None = None) -> dict:
     """The job body; returns {"results": {qid: [{doc_id, score, rank}]},
-    "wall_sec": s}. ``snapshot_id`` time-travels the packed store to that
-    snapshot (default: the current one). Importable so tests can drive it
-    without a subprocess."""
-    from pyspark.sql import functions as F
-
-    from gensim_spark.functions import textref
+    "wall_sec": s}. Query terms resolve against the stored vocab with
+    pyarrow, so the WAND top-k is the only Spark work. ``snapshot_id``
+    time-travels the packed store to that snapshot (default: the current
+    one). Importable so tests can drive it without a subprocess."""
     from gensim_spark.index.layout import read_packed_shards
     from gensim_spark.index.wand import wand_topk
 
-    vocab = spark.read.parquet(f"{index_dir}/vocab")
     # wand_topk reads the current snapshot itself
     packed = (None if snapshot_id is None else
               read_packed_shards(spark, index_dir, snapshot_id=snapshot_id))
-    tokens = {qid: textref.simple_preprocess(q)
-              for qid, q in enumerate(queries)}
-    all_tokens = sorted({t for ts in tokens.values() for t in ts})
-    tid = {
-        r["token"]: r["term_id"]
-        for r in vocab.filter(F.col("token").isin(all_tokens)).collect()
-    }
-    query_terms = {
-        qid: {int(tid[t]): 1.0 for t in set(ts) if t in tid}
-        for qid, ts in tokens.items()
-    }
+    tokens, query_terms = _bnn_queries(index_dir, queries)
     t0 = time.perf_counter()
     rows = wand_topk(spark, index_dir, query_terms, k=k,
                      packed=packed,
@@ -122,12 +123,12 @@ def run_phrase(spark, index_dir: str, phrase_text: str, k: int = 10,
     EXCLUDE words drop silently — they can never block); a positional
     store written as plain parquet by an earlier version raises
     ``layout.BucketedFormatError``."""
-    from pyspark.sql import functions as F
-
     from gensim_spark.functions import textref
     from gensim_spark.index.layout import read_postings_bucketed
+    from gensim_spark.index.serving import stored_term_ids
     from gensim_spark.operators import bm25 as M
     from gensim_spark.operators import positional as PX
+    from gensim_spark.operators.vocab import resolve_clauses
 
     with open(f"{index_dir}/build_metrics.json") as f:
         meta = json.load(f)
@@ -144,23 +145,16 @@ def run_phrase(spark, index_dir: str, phrase_text: str, k: int = 10,
                              epsilon=meta.get("epsilon", 0.25))
     clause_toks = _parse_phrase_clauses(phrase_text)
     ex_toks = textref.simple_preprocess(exclude) if exclude else []
-    flat = sorted({t for c in clause_toks for t in c} | set(ex_toks))
-    vmap = {r["token"]: r["term_id"] for r in
-            vocab.filter(F.col("token").isin(flat)).collect()}
+    vmap = stored_term_ids(index_dir,
+                           [t for c in clause_toks for t in c] + ex_toks)
     t0 = time.perf_counter()
     oov = [t for c in clause_toks for t in c if t not in vmap]
-    # Lucene parity (ADVICE r5): an OOV ALTERNATIVE drops from its clause
-    # — '(table|zzz)' still matches via table, same as the
-    # SearchEngine.multi_phrase facade — and the query answers [] only
-    # when a whole clause empties (every alternative OOV or tokenized
-    # away; a bare OOV word is the unit-clause case of that rule).
-    kept_toks = [[t for t in c if t in vmap] for c in clause_toks]
-    if not clause_toks or any(not c for c in kept_toks):
+    clauses = resolve_clauses(vmap, clause_toks)
+    if not clauses:
         return {"results": [], "wall_sec": 0.0, "oov": oov}
-    clauses = [[int(vmap[t]) for t in c] for c in kept_toks]
     multi = any(len(c) > 1 for c in clauses)
     ids = [c[0] for c in clauses]
-    ex_ids = [int(vmap[t]) for t in ex_toks if t in vmap]
+    ex_ids = [vmap[t] for t in ex_toks if t in vmap]
     scan_ids = sorted({t for c in clauses for t in c} | set(ex_ids))
     pos = read_postings_bucketed(spark, f"{index_dir}/positional",
                                  term_ids=scan_ids)
@@ -334,9 +328,8 @@ def run_phrase_served(index_dir: str, phrase_text: str, k: int = 10,
     from gensim_spark.index.serving import phrase_topk_served
 
     clause_toks = _parse_phrase_clauses(phrase_text)
-    toks = [c[0] if len(c) == 1 else c for c in clause_toks]
     t0 = time.perf_counter()
-    rows = phrase_topk_served(index_dir, toks, k=k, slop=slop,
+    rows = phrase_topk_served(index_dir, clause_toks, k=k, slop=slop,
                               ordered=ordered)
     return {"results": [{"doc_id": d, "tf": tf, "score": s, "rank": r}
                         for d, tf, s, r in rows],
@@ -345,29 +338,15 @@ def run_phrase_served(index_dir: str, phrase_text: str, k: int = 10,
 
 def run_served(index_dir: str, queries: list[str], k: int = 10,
                exclude_doc_ids=None) -> dict:
-    """Serve the same answers with NO Spark session: pyarrow vocab lookup +
-    ``serving.PackedIndexServer`` over the packed shards of the store's
-    current snapshot. Rank/score identical to :func:`run` by
-    the serving module's identity contract; latency is the kernel's own
-    cost instead of a per-query Spark job."""
-    import pyarrow.dataset as pads
-
-    from gensim_spark.functions import textref
+    """Serve the same answers with NO Spark session: the same stored-vocab
+    term resolution as :func:`run`, then ``serving.PackedIndexServer`` over
+    the packed shards of the store's current snapshot. Rank/score
+    identical to :func:`run` by the serving module's identity contract;
+    latency is the kernel's own cost instead of a per-query Spark job."""
     from gensim_spark.index.serving import PackedIndexServer
 
     t_load0 = time.perf_counter()
-    tokens = {qid: textref.simple_preprocess(q)
-              for qid, q in enumerate(queries)}
-    all_tokens = sorted({t for ts in tokens.values() for t in ts})
-    vt = pads.dataset(f"{index_dir}/vocab", format="parquet").to_table(
-        columns=["token", "term_id"],
-        filter=pads.field("token").isin(all_tokens))
-    tid = dict(zip(vt.column("token").to_pylist(),
-                   vt.column("term_id").to_pylist()))
-    query_terms = {
-        qid: {int(tid[t]): 1.0 for t in set(ts) if t in tid}
-        for qid, ts in tokens.items()
-    }
+    tokens, query_terms = _bnn_queries(index_dir, queries)
     srv = PackedIndexServer(index_dir, preload=True)
     load_sec = time.perf_counter() - t_load0
     t0 = time.perf_counter()

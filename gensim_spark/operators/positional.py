@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import vocab as _vocab
 from .bm25 import BM25Stats
 
 
@@ -522,11 +523,8 @@ def phrase_text_topk(spark, docs: DataFrame, vocab: DataFrame,
                      k: int = 10) -> DataFrame:
     """Convenience: phrase given as token strings; OOV member → no match
     (inner vocab probe, the dictionary.doc2bow drop semantics)."""
-    vmap = {r["token"]: r["term_id"] for r in
-            vocab.filter(F.col("token").isin(list(phrase_tokens)))
-            .select("token", "term_id").collect()}
+    vmap = _vocab.term_ids(vocab, phrase_tokens)
     if any(t not in vmap for t in phrase_tokens):
-        from .bow import doc2bow_postings  # noqa: F401  (schema parity)
         return spark.createDataFrame(
             [], "doc_id long, phrase_tf int, score double, rank int")
     pos = positional_postings(docs, vocab)

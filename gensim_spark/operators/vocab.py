@@ -115,6 +115,33 @@ def corpus_stats(docs: DataFrame, vocab: DataFrame | None = None,
     return out
 
 
+# --- query-side lookup (doc2bow on a query) ----------------------------------
+
+def term_ids(vocab: DataFrame, tokens) -> dict[str, int]:
+    """token → term_id for the in-vocab members of ``tokens`` — the lookup
+    half of ``dictionary.doc2bow`` (OOV tokens drop): one ``isin`` filter
+    over the deduplicated tokens and one collect of query-sized rows; no
+    tokens → ``{}`` without a job. A stored index resolves through
+    ``serving.stored_term_ids`` instead, with no Spark job."""
+    toks = sorted(set(tokens))
+    if not toks:
+        return {}
+    rows = vocab.filter(F.col("token").isin(toks)).select(
+        "token", "term_id").collect()
+    return {r["token"]: int(r["term_id"]) for r in rows}
+
+
+def resolve_clauses(tid: dict[str, int], clauses) -> list[list[int]]:
+    """Token clauses → term-id clauses under Lucene's OOV rule for
+    MultiPhrase / spanOr: an OOV alternative drops from its clause, each
+    clause becomes its sorted distinct ids (an alternative set, the form
+    ``positional._norm_clauses`` gives it), and ``[]`` — the query can
+    never match — when there are no clauses or a whole clause empties. A
+    bare word is the one-token clause."""
+    out = [sorted({tid[t] for t in c if t in tid}) for c in clauses]
+    return out if out and all(out) else []
+
+
 # --- vocabulary maintenance --------------------------------------------------
 
 def compactify(vocab: DataFrame) -> DataFrame:

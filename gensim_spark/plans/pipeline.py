@@ -178,31 +178,30 @@ def index_from_counts(counts: DataFrame, num_docs: int,
                          weighted=weighted)
 
 
-def query_text(spark, index: IndexedCorpus, queries: dict[int, str],
-               k: int = 10, ascii_fast_path: bool = False) -> DataFrame:
-    """Text queries → tokenize with the same pipeline → binary ('bnn') query
-    weights via vocab lookup → top-k (docsim.py:1149 query model).
-
-    Queries are tiny, so tokenization runs driver-side with the *same*
-    reference functions the distributed UDFs wrap (byte-identical by
-    construction), and term-id resolution is one vocab filter job returning
-    a handful of rows — the scoring plan is then a single broadcast join +
-    hash agg + rank (3 stages), not a per-query mini-pipeline.
-    """
+def query_terms(spark, vocab: DataFrame,
+                queries: dict[int, str]) -> DataFrame:
+    """Text queries → binary ('bnn') (query_id, term_id, q_weight) rows:
+    tokenized driver-side by the same reference functions the distributed
+    UDFs wrap (byte-identical by construction), resolved by
+    ``vocab.term_ids`` — one ``isin`` filter and one collect of
+    query-sized rows; OOV tokens drop."""
     from gensim_spark.functions import textref
 
-    tokens = {qid: set(textref.simple_preprocess(text))
+    tokens = {qid: textref.simple_preprocess(text)
               for qid, text in queries.items()}
-    all_tokens = sorted({t for ts in tokens.values() for t in ts})
-    tid = {
-        r["token"]: r["term_id"]
-        for r in index.vocab.filter(F.col("token").isin(all_tokens)).collect()
-    }
-    rows = [
-        (int(qid), int(tid[t]), 1.0)
-        for qid, ts in tokens.items() for t in sorted(ts) if t in tid
-    ]
-    qterms = spark.createDataFrame(
-        rows, "query_id int, term_id long, q_weight double"
-    )
-    return T.search(index.weighted, qterms, k=k)
+    tid = V.term_ids(vocab, [t for ts in tokens.values() for t in ts])
+    return T.query_terms_df(
+        spark, {qid: [tid[t] for t in ts if t in tid]
+                for qid, ts in tokens.items()})
+
+
+def query_text(spark, index: IndexedCorpus, queries: dict[int, str],
+               k: int = 10, ascii_fast_path: bool = False) -> DataFrame:
+    """Text queries → :func:`query_terms` → top-k (docsim.py:1149 query
+    model): the scoring plan is a single broadcast join + hash agg + rank
+    (3 stages), not a per-query mini-pipeline. ``ascii_fast_path`` is
+    accepted for the callers that pass it (``bench.py``,
+    ``__spark_entry__.py``) and has no effect: queries tokenize
+    driver-side, where there is no JVM fast path."""
+    return T.search(index.weighted, query_terms(spark, index.vocab, queries),
+                    k=k)

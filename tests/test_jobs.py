@@ -581,6 +581,23 @@ def test_query_index_serve_mode_matches_spark_path(spark, tmp_path):
     assert not {h["doc_id"] for h in got_ex["results"]["0"]} & set(victims)
 
 
+def test_query_index_all_empty_batch(spark, tmp_path):
+    """A batch whose every query tokenizes to nothing ("a !!": one short
+    word and punctuation) answers [] per key on the distributed and the
+    served path alike, alone and next to an in-vocab query."""
+    from gensim_spark.jobs import build_index, query_index
+
+    pages = str(tmp_path / "pages_e")
+    _pages_df(spark, n=12).write.parquet(pages)
+    out = str(tmp_path / "idx_e")
+    build_index.run(spark, pages, out, docs_per_shard=16, num_groups=1)
+    assert query_index.run_served(out, ["a !!"])["results"] == {"0": []}
+    for qs in (["a !!"], ["a !!", "alpha"]):
+        want = query_index.run(spark, out, qs, k=5)["results"]
+        assert query_index.run_served(out, qs, k=5)["results"] == want
+    assert want["0"] == [] and want["1"]
+
+
 def test_build_index_positional_and_phrase_query(spark, tmp_path):
     from gensim_spark.jobs import build_index, query_index
 
@@ -1224,3 +1241,74 @@ def test_query_index_span_near_multi(spark, tmp_path):
         [(r["doc_id"], r["tf"], r["rank"]) for r in resu["results"]]
     for h, r in zip(srvu["results"], resu["results"]):
         assert h["score"] == _pytest.approx(r["score"], rel=1e-9)
+
+
+def test_positional_deletes_apply_on_every_phrase_path(spark, tmp_path):
+    """An equality delete on the positional table hides the doc from the
+    distributed phrase plan and from the served one, warm or cold; before
+    the delete both return it."""
+    from pyspark.sql import functions as F
+
+    from gensim_spark.index import layout, serving
+    from gensim_spark.jobs import build_index, query_index
+
+    pages = str(tmp_path / "pages_del")
+    _pages_df(spark, n=10).withColumn(
+        "doc_id", F.regexp_extract("url", r"p(\d+)$", 1).cast("long")
+    ).write.parquet(pages)
+    out = str(tmp_path / "idx_del")
+    build_index.run(spark, pages, out, docs_per_shard=16, num_groups=1,
+                    positional=True, positional_n_buckets=4)
+
+    def answers():
+        dist = query_index.run_phrase(spark, out, "alpha beta", k=20)
+        srv = query_index.run_phrase_served(out, "alpha beta", k=20)
+        return ([(r["doc_id"], r["tf"], r["rank"]) for r in dist["results"]],
+                [(r["doc_id"], r["tf"], r["rank"]) for r in srv["results"]])
+
+    dist, srv = answers()
+    assert dist == srv and 3 in {d for d, _, _ in dist}
+    layout.delete_docs_iceberg(spark, f"{out}/positional", [3])
+    dist, srv = answers()  # the served call reuses nothing stale
+    assert dist == srv and dist
+    assert 3 not in {d for d, _, _ in dist}
+    cold = serving.PositionalIndexServer(out).query(["alpha", "beta"], k=20)
+    assert [(d, tf, rk) for d, tf, _s, rk in cold] == srv
+
+
+def test_clause_oov_rule_agrees_across_entry_points(spark, tmp_path):
+    """The OOV-alternative rule for '(a|b)' clauses gives one answer on
+    SearchEngine.multi_phrase, run_phrase and run_phrase_served: an OOV
+    alternative drops, an all-OOV clause answers [], and a repeated
+    alternative counts once."""
+    from gensim_spark.api import SearchEngine
+    from gensim_spark.jobs import build_index, query_index
+
+    words = ["value", "table", "key", "table", "value", "row", "index"]
+    rows = [(i, " ".join(words[(i + j) % 7] for j in range(3 + i % 5)))
+            for i in range(24)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    pages = str(tmp_path / "pages_cl")
+    docs.write.parquet(pages)
+    out = str(tmp_path / "idx_cl")
+    build_index.run(spark, pages, out, docs_per_shard=16, num_groups=2,
+                    positional=True, positional_n_buckets=4)
+    engine = SearchEngine(docs)
+
+    cases = {"value (table|zzz)": [["value"], ["table", "zzz"]],
+             "value (zzz|qqq)": [["value"], ["zzz", "qqq"]],
+             "(table|table) value": [["table", "table"], ["value"]]}
+    for text, alts in cases.items():
+        se = [(r["doc_id"], r["score"], r["rank"]) for r in
+              engine.multi_phrase(alts, k=30).orderBy("rank").collect()]
+        dist = [(r["doc_id"], r["score"], r["rank"]) for r in
+                query_index.run_phrase(spark, out, text, k=30)["results"]]
+        srv = [(r["doc_id"], r["score"], r["rank"]) for r in
+               query_index.run_phrase_served(out, text, k=30)["results"]]
+        assert [(d, rk) for d, _, rk in se] == \
+            [(d, rk) for d, _, rk in dist] == \
+            [(d, rk) for d, _, rk in srv], text
+        for (_, a, _), (_, b, _), (_, c, _) in zip(se, dist, srv):
+            assert a == pytest.approx(b, rel=1e-12), text
+            assert c == pytest.approx(b, rel=1e-9), text
+        assert bool(dist) == (text != "value (zzz|qqq)"), text

@@ -272,6 +272,76 @@ def test_phrase_served_matches_spark_path(spark, tmp_path):
     assert query_index.run_phrase_served(out, "alpha nosuch")["results"] == []
 
 
+def _jobs_in_group(sc, group, want_some):
+    """Job ids Spark ran under ``group``; waits (up to 10 s) for the
+    asynchronously fed status listener when jobs are expected."""
+    import time
+
+    tracker = sc.statusTracker()
+    deadline = time.time() + 10
+    while True:
+        jobs = list(tracker.getJobIdsForGroup(group))
+        if jobs or not want_some or time.time() > deadline:
+            return jobs
+        time.sleep(0.1)
+
+
+def test_term_resolvers_agree(spark, tmp_path):
+    """The in-session resolver (vocab.term_ids over a DataFrame) and the
+    stored one (serving.stored_term_ids over <index>/vocab) return equal
+    token → term_id dicts with Python-int ids for OOV, duplicated, empty
+    and non-ASCII token lists; the stored one starts no Spark job."""
+    from gensim_spark.index.serving import stored_term_ids
+    from gensim_spark.operators import vocab as V
+
+    vocab = spark.createDataFrame(
+        [("alpha", 0, 3, 5, 0), ("beta", 1, 2, 2, 0), ("naïve", 2, 1, 1, 1),
+         ("日本", 3, 1, 4, 2), ("größe", 4, 2, 2, 2)],
+        "token string, term_id long, df long, cf long, first_doc long")
+    out = str(tmp_path / "idx")
+    vocab.write.parquet(f"{out}/vocab")
+
+    cases = [["zzz", "qqq"], ["alpha", "beta", "alpha", "alpha"], [],
+             ["naïve", "日本", "größe", "naive"], ["beta", "zzz", "日本"]]
+    for toks in cases:
+        want = V.term_ids(vocab, toks)
+        got = stored_term_ids(out, toks)
+        assert got == want, toks
+        assert all(type(v) is int for v in [*got.values(), *want.values()])
+    assert stored_term_ids(out, ["zzz"]) == {}
+    assert stored_term_ids(out, []) == {}
+    assert V.term_ids(vocab, ["alpha", "alpha"]) == {"alpha": 0}
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("session-term-ids", "vocab.term_ids")
+        V.term_ids(vocab, ["alpha", "日本"])
+        sc.setJobGroup("stored-term-ids", "serving.stored_term_ids")
+        stored_term_ids(out, ["alpha", "日本"])
+    finally:
+        sc.setJobGroup("", "")
+    # the control shows the tracker sees a resolver's job at all
+    assert _jobs_in_group(sc, "session-term-ids", want_some=True)
+    assert _jobs_in_group(sc, "stored-term-ids", want_some=False) == []
+
+
+def test_resolve_clauses_oov_rule():
+    """An OOV alternative drops from its clause; a clause that empties (or
+    no clauses at all) answers [] — each clause is its sorted distinct
+    ids."""
+    from gensim_spark.operators.vocab import resolve_clauses
+
+    tid = {"value": 7, "table": 3, "key": 5}
+    assert resolve_clauses(tid, [["value"], ["table", "zzz"]]) == [[7], [3]]
+    assert resolve_clauses(tid, [["value"], ["zzz", "qqq"]]) == []
+    assert resolve_clauses(tid, [["table", "table"], ["value"]]) == \
+        [[3], [7]]
+    assert resolve_clauses(tid, [["value"], ["key", "table"]]) == \
+        [[7], [3, 5]]
+    assert resolve_clauses(tid, [["value"], []]) == []
+    assert resolve_clauses(tid, []) == []
+
+
 def test_bm25f_served_matches_distributed(spark, tmp_path):
     """Served multi-field fusion == topk.bm25f_topk over the f32-stored
     weights: two packed stores (title/body fields over the same docs),
