@@ -13,6 +13,10 @@ HadoopCatalog flavor) in pure Python over parquet data files:
   rollback) creates a snapshot with parent-snapshot-id, sequence-number,
   timestamp, operation, and a summary carrying standard metrics
   (added-data-files, added-records, total-records) plus caller lineage.
+- manifest lists: each snapshot points at one manifest list holding its
+  FULL state, the one form every scan plans from. A table whose snapshots
+  lack ``manifest-list`` (written before manifest lists existed) is refused
+  by :meth:`IceTable.load` with :class:`ManifestListError`.
 - manifests: one per commit, listing data files with partition tuple,
   record count, file size, and per-column lower/upper bounds harvested from
   the real parquet footers — used for partition pruning AND min/max file
@@ -27,7 +31,16 @@ HadoopCatalog flavor) in pure Python over parquet data files:
 Deviation from the spec (documented, forced by the environment): manifest
 files and manifest lists are JSON, not Avro — fastavro/avro are not
 installed here and the container is offline. Field layout mirrors the Avro
-schemas, so swapping the serializer restores on-disk spec compliance.
+schemas, so swapping the serializer restores on-disk spec compliance. Each
+artifact and its spec (format-version 2) counterpart:
+
+- ``metadata/v<N>.metadata.json`` → TableMetadata JSON (plus a ``ddl``
+  convenience field); ``metadata/version-hint.text`` → HadoopCatalog hint;
+- ``snap-<id>-<uuid>.manifest-list.json`` ``entries[]`` → the Avro
+  ``manifest_file`` records of a manifest list, same field names;
+- ``manifest-<id>-<uuid>.json`` ``added-files[]`` → ``manifest_entry`` +
+  ``data_file`` records (bounds decoded to native values, not binary);
+- ``bucket[N]`` → the spec bucket transform, hash60 pmod for murmur3.
 
 Reference analogue: gensim's ``Similarity`` shard persistence + pickled
 index metadata (gensim/similarities/docsim.py:260-478 save/close_shard/
@@ -57,37 +70,9 @@ class CommitConflict(Exception):
     """Another writer claimed the metadata version we targeted."""
 
 
-def spec_compat_map() -> dict[str, str]:
-    """Map each JSON artifact this layer writes to its Apache Iceberg spec
-    counterpart — the contract that keeps the "swap the serializer and the
-    layout is spec-compliant" claim honest. Keys are our on-disk artifacts,
-    values the spec's (format-version 2):
-
-    - ``metadata/v<N>.metadata.json`` → TableMetadata JSON (spec: identical
-      format; ours adds a human-oriented ``schema.ddl`` convenience field).
-    - ``metadata/version-hint.text`` → HadoopCatalog version-hint.text
-      (byte-identical semantics).
-    - ``snap-<id>-<uuid>.manifest-list.json`` ``entries[]`` → the
-      ``manifest_file`` Avro records of a manifest list (same field names:
-      manifest_path, manifest_length, partition_spec_id, content,
-      sequence_number, min_sequence_number, added_snapshot_id,
-      added_data_files_count, existing_data_files_count,
-      deleted_data_files_count, added_rows_count).
-    - ``manifest-<id>-<uuid>.json`` ``added-files[]`` → ``manifest_entry``
-      Avro records with status=ADDED; each entry carries the ``data_file``
-      struct fields (path≙file_path, partition, record-count≙record_count,
-      file-size-in-bytes≙file_size_in_bytes, bounds≙lower_bounds/
-      upper_bounds decoded to native values instead of binary).
-    - ``bucket[N]`` partition transform → spec bucket transform with
-      hash60-pmod in place of murmur3 (semantics-equal, not byte-equal).
-    """
-    return {
-        "metadata/v<N>.metadata.json": "TableMetadata JSON",
-        "metadata/version-hint.text": "HadoopCatalog version hint",
-        "snap-*.manifest-list.json": "manifest list (Avro manifest_file records)",
-        "manifest-*.json": "manifest (Avro manifest_entry + data_file records)",
-        "bucket[N] transform": "bucket transform (hash60 pmod vs murmur3)",
-    }
+class ManifestListError(ValueError):
+    """The table's snapshots lack ``manifest-list``: it was written before
+    manifest lists existed, and this version plans scans only from them."""
 
 
 # --- partition transforms ----------------------------------------------------
@@ -127,8 +112,7 @@ class Snapshot:
     manifest: str                       # delta manifest filename (metadata/-rel)
     summary: dict[str, Any] = field(default_factory=dict)
     manifest_list: str | None = None    # snap-<id>.manifest-list.json (spec:
-    #   one manifest-list per snapshot holding its FULL state; older tables
-    #   written before round 3 lack it and fall back to the parent walk)
+    #   one manifest-list per snapshot holding its FULL state)
     schema_id: int = 0
 
 
@@ -199,6 +183,10 @@ class IceTable:
             version += 1
         with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as f:
             meta = json.load(f)
+        if any(s.get("manifest-list") is None for s in meta["snapshots"]):
+            raise ManifestListError(
+                f"table at {location} has snapshots without a manifest "
+                "list (written before manifest lists existed); rebuild it.")
         return cls(location, meta, version)
 
     def refresh(self) -> "IceTable":
@@ -504,10 +492,7 @@ class IceTable:
         ``_commit_files``), and files are unlinked only after the commit
         succeeded — a lost race or a crash can strand unreferenced files
         for ``remove_orphans``, never metadata that points at deleted
-        files. Kept snapshots that predate manifest-lists get one
-        synthesized and persisted before their ancestors leave the
-        snapshot list (their state would otherwise silently truncate to
-        the snapshots still listed)."""
+        files."""
         for _attempt in range(_MAX_COMMIT_RETRIES):
             self.refresh()
             snaps = self.meta["snapshots"]
@@ -523,9 +508,7 @@ class IceTable:
             # manifest list = the ancestor closure of its appends), not
             # just its own delta manifest — an append snapshot's state
             # includes files added by expired ancestors, which must
-            # survive. Computed (with the drop snapshots' state) BEFORE
-            # the commit, while the parent-walk fallback still sees the
-            # full snapshot list.
+            # survive.
             live_manifests: set[str] = set()
             for s in keep:
                 live_manifests.update(self._state_manifest_names(s))
@@ -536,22 +519,7 @@ class IceTable:
             drop_state = [(s, self._state_manifest_names(s)) for s in drop]
 
             new_meta = json.loads(json.dumps(self.meta))
-            kept_meta = new_meta["snapshots"][-keep_last:]
-            synthesized: list[str] = []
-            for s_meta in kept_meta:
-                if s_meta.get("manifest-list") is None:
-                    entries = self._manifest_list_entries(s_meta)
-                    mlist_name = (f"snap-{s_meta['snapshot-id']}-"
-                                  f"{_uuid.uuid4().hex}.manifest-list.json")
-                    with open(os.path.join(self._meta_dir, mlist_name),
-                              "w") as f:
-                        json.dump({"manifest-list-format":
-                                   "json (avro in the iceberg spec; no "
-                                   "avro writer in this environment)",
-                                   "entries": entries}, f, indent=1)
-                    s_meta["manifest-list"] = mlist_name
-                    synthesized.append(mlist_name)
-            new_meta["snapshots"] = kept_meta
+            new_meta["snapshots"] = new_meta["snapshots"][-keep_last:]
             dropped_ids = {s["snapshot-id"] for s in drop}
             new_meta["snapshot-log"] = [
                 e for e in new_meta["snapshot-log"]
@@ -561,8 +529,6 @@ class IceTable:
             try:
                 self._write_version(self.version + 1, new_meta)
             except CommitConflict:
-                for name in synthesized:
-                    os.unlink(os.path.join(self._meta_dir, name))
                 continue
             self.meta, self.version = new_meta, self.version + 1
             break
@@ -588,58 +554,44 @@ class IceTable:
                     removed_manifests += 1
                 live_manifests.add(name)  # shared-by-dropped: delete once
         for s, _names in drop_state:
-            mlist = s.get("manifest-list")
-            if mlist is not None:
-                mlpath = os.path.join(self._meta_dir, mlist)
-                if os.path.exists(mlpath):
-                    os.unlink(mlpath)
+            mlpath = os.path.join(self._meta_dir, s["manifest-list"])
+            if os.path.exists(mlpath):
+                os.unlink(mlpath)
         return {"snapshots": len(drop_state),
                 "manifests": removed_manifests,
                 "data_files": removed_data}
 
     # --- read path -----------------------------------------------------------
 
-    def _manifest_files(self, snap: dict | Snapshot) -> list[dict]:
-        name = snap["manifest"] if isinstance(snap, dict) else snap.manifest
-        return self._read_manifest(name)
-
     def _read_manifest(self, name: str) -> list[dict]:
         with open(os.path.join(self._meta_dir, name)) as f:
             return json.load(f)["added-files"]
 
     def _manifest_list_entries(self, snap: dict | Snapshot) -> list[dict]:
-        """The snapshot's manifest-list entries = its FULL state (spec
-        layout). Tables written before the manifest-list existed fall back
-        to the parent walk and synthesize equivalent entries."""
-        if isinstance(snap, Snapshot):
-            mlist = snap.manifest_list
-        else:
-            mlist = snap.get("manifest-list")
-        if mlist is not None:
-            with open(os.path.join(self._meta_dir, mlist)) as f:
-                return json.load(f)["entries"]
-        return [{"manifest_path": s.manifest,
-                 "added_snapshot_id": s.snapshot_id,
-                 "sequence_number": s.sequence_number}
-                for s in reversed(self._live_manifests(_as_snapshot(snap)))]
+        """The snapshot's manifest-list entries = its FULL state."""
+        mlist = (snap.manifest_list if isinstance(snap, Snapshot)
+                 else snap["manifest-list"])
+        with open(os.path.join(self._meta_dir, mlist)) as f:
+            return json.load(f)["entries"]
 
     def _state_manifest_names(self, snap: dict | Snapshot) -> list[str]:
         return [e["manifest_path"] for e in self._manifest_list_entries(snap)]
 
-    def _live_manifests(self, snapshot: Snapshot) -> list[Snapshot]:
-        """Manifest-holding ancestors of ``snapshot``: walk parents back to
-        the most recent overwrite/replace (which truncates history).
-        Pre-manifest-list fallback only — requires every ancestor to still
-        be present in the snapshot list."""
-        by_id = {s.snapshot_id: s for s in self.snapshots}
-        chain = []
-        cur: Snapshot | None = snapshot
-        while cur is not None:
-            chain.append(cur)
-            if cur.operation in ("overwrite", "replace"):
-                break
-            cur = by_id.get(cur.parent_snapshot_id)
-        return chain
+    def _resolve_snapshot(self, snapshot_id: int | None,
+                          as_of_ms: int | None) -> Snapshot | None:
+        """The snapshot a read plans from: ``snapshot_id``, the latest as
+        of ``as_of_ms``, or the current one (None for an empty table)."""
+        if snapshot_id is not None and as_of_ms is not None:
+            raise ValueError("choose snapshot_id or as_of_ms, not both")
+        if snapshot_id is not None:
+            snap = next((s for s in self.snapshots
+                         if s.snapshot_id == snapshot_id), None)
+            if snap is None:
+                raise ValueError(f"unknown snapshot {snapshot_id}")
+            return snap
+        if as_of_ms is not None:
+            return self.snapshot_as_of(as_of_ms)
+        return self.current_snapshot
 
     def plan_files(self, snapshot_id: int | None = None,
                    as_of_ms: int | None = None,
@@ -648,18 +600,7 @@ class IceTable:
                    ) -> list[dict]:
         """Scan planning: data-file entries of the chosen snapshot, filtered
         by partition values and column bounds BEFORE any file is opened."""
-        if snapshot_id is not None and as_of_ms is not None:
-            raise ValueError("choose snapshot_id or as_of_ms, not both")
-        snap: Snapshot | None
-        if snapshot_id is not None:
-            snap = next((s for s in self.snapshots
-                         if s.snapshot_id == snapshot_id), None)
-            if snap is None:
-                raise ValueError(f"unknown snapshot {snapshot_id}")
-        elif as_of_ms is not None:
-            snap = self.snapshot_as_of(as_of_ms)
-        else:
-            snap = self.current_snapshot
+        snap = self._resolve_snapshot(snapshot_id, as_of_ms)
         if snap is None:
             return []
         out = []
@@ -684,17 +625,7 @@ class IceTable:
                           as_of_ms: int | None = None) -> list[dict]:
         """Equality-delete file entries of the chosen snapshot, each with
         ``_seq`` (the delete's sequence number) and ``equality-cols``."""
-        if snapshot_id is not None and as_of_ms is not None:
-            raise ValueError("choose snapshot_id or as_of_ms, not both")
-        if snapshot_id is not None:
-            snap = next((s for s in self.snapshots
-                         if s.snapshot_id == snapshot_id), None)
-            if snap is None:
-                raise ValueError(f"unknown snapshot {snapshot_id}")
-        elif as_of_ms is not None:
-            snap = self.snapshot_as_of(as_of_ms)
-        else:
-            snap = self.current_snapshot
+        snap = self._resolve_snapshot(snapshot_id, as_of_ms)
         if snap is None:
             return []
         out = []
@@ -712,7 +643,7 @@ class IceTable:
              as_of_ms: int | None = None,
              partition_pred: Callable[[dict], bool] | None = None,
              stats_pred: Callable[[dict], bool] | None = None,
-             apply_deletes: bool = True) -> DataFrame:
+             ) -> DataFrame:
         """DataFrame over the planned files (time travel + pruning). Empty
         plan → empty DataFrame with the table schema.
 
@@ -737,8 +668,7 @@ class IceTable:
                 if extra:
                     ddl = ddl + ", " + ", ".join(extra)
             return spark.createDataFrame([], ddl)
-        deletes = (self.plan_delete_files(snapshot_id, as_of_ms)
-                   if apply_deletes else [])
+        deletes = self.plan_delete_files(snapshot_id, as_of_ms)
         if not deletes:
             # partition values live in the data files (see stage_write), so
             # the planned file list reads directly — no directory inference.
@@ -785,12 +715,6 @@ class IceTable:
 
 def _now_ms() -> int:
     return int(time.time() * 1000)
-
-
-def _as_snapshot(snap: dict | Snapshot) -> Snapshot:
-    if isinstance(snap, Snapshot):
-        return snap
-    return Snapshot(**{k.replace("-", "_"): v for k, v in snap.items()})
 
 
 def _new_snapshot_id() -> int:

@@ -431,17 +431,14 @@ def _bucket_salt(weighted: DataFrame, n_buckets: int,
     return df
 
 
-def _commit_bucketed(table, df: DataFrame, operation: str,
-                     summary: dict) -> None:
+def _stage_bucketed(table, df: DataFrame) -> tuple[str, list[dict]]:
     """Stage ``df`` (repartitioned on (bucket, salt), term- then
-    doc-sorted within each file) and publish it as one snapshot: a writer
-    killed before the commit leaves only staged files, which no reader
-    plans."""
+    doc-sorted within each file): a writer killed before the commit leaves
+    only staged files, which no reader plans."""
     write_uuid, _staging, files = table.stage_write(
         df.repartition("bucket", "salt").sortWithinPartitions("term_id",
                                                               "doc_id"))
-    table.commit_staged(files, write_uuid, summary=summary,
-                        operation=operation)
+    return write_uuid, files
 
 
 def write_postings_bucketed(weighted: DataFrame, out_dir: str,
@@ -469,8 +466,9 @@ def write_postings_bucketed(weighted: DataFrame, out_dir: str,
             partition_spec=[PartitionField("term_id", "bucket",
                                            f"mod[{n_buckets}]")],
             properties={"n_buckets": str(n_buckets)})
-    _commit_bucketed(table, df, "overwrite",
-                     {"n_buckets": n_buckets, "salts": salts})
+    write_uuid, files = _stage_bucketed(table, df)
+    table.commit_staged(files, write_uuid, operation="overwrite",
+                        summary={"n_buckets": n_buckets, "salts": salts})
     return table
 
 
@@ -499,9 +497,18 @@ def append_postings_bucketed(new_rows: DataFrame, out_dir: str,
     docsim.py:367-416, same contract as :func:`append_packed_shards`): new
     doc_ids must lie strictly above the store's current max doc_id
     (:func:`max_doc_id_bucketed`, manifest bounds only), else old and new
-    rows for one doc could both exist."""
+    rows for one doc could both exist. The batch's min doc_id is read from
+    the staged files' footer bounds, so the guard costs no Spark job; a
+    refused batch leaves only staged files, which no reader plans."""
     table = load_bucketed(out_dir, n_buckets)
-    mn = new_rows.agg(F.min("doc_id").alias("mn")).collect()[0]["mn"]
+    df = _bucket_salt(new_rows, int(table.meta["properties"]["n_buckets"]),
+                      salt_threshold, dfs, salts)
+    # the table's column types, so the new files read with the old ones
+    df = df.select(*[F.col(f["name"]).cast(f["type"])
+                     for f in table.meta["schema"]["fields"]])
+    write_uuid, files = _stage_bucketed(table, df)
+    mn = min((f["lower-bounds"]["doc_id"] for f in files
+              if "doc_id" in f["lower-bounds"]), default=None)
     if mn is None:
         return table
     mx = max_doc_id_bucketed(out_dir)
@@ -510,13 +517,8 @@ def append_postings_bucketed(new_rows: DataFrame, out_dir: str,
             f"append_postings_bucketed needs doc_ids > {mx} (store max); "
             f"got {mn}. Interleaved ids need the streaming incremental "
             "store + compact().")
-    df = _bucket_salt(new_rows, int(table.meta["properties"]["n_buckets"]),
-                      salt_threshold, dfs, salts)
-    # the table's column types, so the new files read with the old ones
-    df = df.select(*[F.col(f["name"]).cast(f["type"])
-                     for f in table.meta["schema"]["fields"]])
-    _commit_bucketed(table, df, "append",
-                     {"append_batch": len(table.snapshots)})
+    table.commit_staged(files, write_uuid, operation="append",
+                        summary={"append_batch": len(table.snapshots)})
     return table
 
 

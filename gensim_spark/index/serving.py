@@ -345,12 +345,11 @@ class PositionalIndexServer:
     ``phrase_topk_served`` keeps the old per-call API on top of a small
     keyed server cache.
 
-    ``preload_doclen=True`` (default) reads the whole doclen table into two
-    sorted arrays on first use — the deployment trade a RAM-resident query
-    node makes (same as PackedIndexServer preload); ``False`` re-reads the
-    hit docs' doclens per query (cold / bigger-than-RAM node)."""
+    The whole doclen table is read into two sorted arrays on first use —
+    the deployment trade a RAM-resident query node makes (same as
+    PackedIndexServer preload)."""
 
-    def __init__(self, index_dir: str, *, preload_doclen: bool = True):
+    def __init__(self, index_dir: str):
         import json as _json
 
         import pyarrow.dataset as pads
@@ -397,7 +396,6 @@ class PositionalIndexServer:
         self._gone = {seq: tuple(sorted({d for s, ids in dels if s > seq
                                          for d in ids}))
                       for seq in {f["_seq"] for f in self._pos_files}}
-        self._preload_doclen = preload_doclen
         self._dl_docs: np.ndarray | None = None
         self._dl_vals: np.ndarray | None = None
         self._term_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
@@ -445,32 +443,23 @@ class PositionalIndexServer:
         doclen row (the half-appended-crash state) are simply absent —
         callers skip them, matching the distributed plans' inner-join drop
         (ADVICE r5)."""
-        import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
-        if self._preload_doclen:
-            if self._dl_docs is None:
-                tbl = pads.dataset(os.path.join(self._dir, "doclen"),
-                                   format="parquet").to_table(
-                    columns=["doc_id", "dl"])
-                d = tbl.column("doc_id").to_numpy().astype(np.int64)
-                v = tbl.column("dl").to_numpy().astype(np.int64)
-                order = np.argsort(d, kind="stable")
-                self._dl_docs, self._dl_vals = d[order], v[order]
-            if self._dl_docs.size == 0:
-                return {}
-            q = np.asarray(sorted(doc_ids), dtype=np.int64)
-            pos = np.searchsorted(self._dl_docs, q)
-            ok = (pos < self._dl_docs.size) & (
-                self._dl_docs[np.minimum(pos, self._dl_docs.size - 1)] == q)
-            return dict(zip(q[ok].tolist(),
-                            self._dl_vals[pos[ok]].tolist()))
-        dl_tbl = pads.dataset(os.path.join(self._dir, "doclen"),
-                              format="parquet").to_table(
-            columns=["doc_id", "dl"],
-            filter=pc.field("doc_id").isin(sorted(doc_ids)))
-        return dict(zip(dl_tbl.column("doc_id").to_pylist(),
-                        dl_tbl.column("dl").to_pylist()))
+        if self._dl_docs is None:
+            tbl = pads.dataset(os.path.join(self._dir, "doclen"),
+                               format="parquet").to_table(
+                columns=["doc_id", "dl"])
+            d = tbl.column("doc_id").to_numpy().astype(np.int64)
+            v = tbl.column("dl").to_numpy().astype(np.int64)
+            order = np.argsort(d, kind="stable")
+            self._dl_docs, self._dl_vals = d[order], v[order]
+        if self._dl_docs.size == 0:
+            return {}
+        q = np.asarray(sorted(doc_ids), dtype=np.int64)
+        pos = np.searchsorted(self._dl_docs, q)
+        ok = (pos < self._dl_docs.size) & (
+            self._dl_docs[np.minimum(pos, self._dl_docs.size - 1)] == q)
+        return dict(zip(q[ok].tolist(), self._dl_vals[pos[ok]].tolist()))
 
     def query(self, tokens: list[str], k: int = 10,
               slop: int | None = None,

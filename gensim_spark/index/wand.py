@@ -386,13 +386,7 @@ def wand_topk(spark: SparkSession, index_dir: str,
                             eager_max=eager_max, exclude=exclude),
         schema=LOCAL_TOPK_SCHEMA,
     )
-    from pyspark.sql import Window
+    # imported here so workers unpickling the shard kernel never load it
+    from gensim_spark.operators.topk import topk
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.abs(F.col("score")).desc(), F.col("doc_id").asc()
-    )
-    return (
-        local.filter(F.col("score") != 0.0)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return topk(local, k)

@@ -3,39 +3,8 @@
 dedup, similarity search, text statistics, topic models
 (RP/LSI/LDA/NMF/HDP/LdaSeq/AuthorTopic/Ensemble), coherence, WMD,
 embeddings training (Word2Vec/FastText/Doc2Vec/Poincaré) + KeyedVectors
-queries, translation matrices."""
+queries, translation matrices.
 
-from gensim_spark.operators import (  # noqa: F401
-    annindexer,
-    atmodel,
-    bm25,
-    bow,
-    coherence,
-    corpusops,
-    dedup,
-    doc2vec,
-    ensemble,
-    fasttext,
-    fuzzy,
-    hdp,
-    keyedvectors,
-    lda,
-    ldaseq,
-    lsi,
-    matutils,
-    multimodal,
-    nmf,
-    phrases,
-    poincare,
-    rp,
-    simsearch,
-    softcosine,
-    textstats,
-    tfidf,
-    topk,
-    translation,
-    transport,
-    vocab,
-    wmd,
-    word2vec,
-)
+The package imports none of its modules: import the one you use
+(``from gensim_spark.operators import bm25``), so a Python worker that
+unpickles one kernel loads only that kernel's modules."""

@@ -23,8 +23,7 @@ POSTINGS_COLS = ("doc_id", "term_id", "tf")
 
 
 def doc2bow_postings(docs: DataFrame, vocab: DataFrame, doc_col: str = "doc_id",
-                     tokens_col: str = "tokens",
-                     broadcast_vocab: bool = True) -> DataFrame:
+                     tokens_col: str = "tokens") -> DataFrame:
     """docs(doc_id, tokens) ⋈ vocab → postings(doc_id, term_id, tf).
 
     Unknown tokens are dropped by the inner join (dictionary.py:256 dict probe
@@ -35,10 +34,8 @@ def doc2bow_postings(docs: DataFrame, vocab: DataFrame, doc_col: str = "doc_id",
         .groupBy(doc_col, "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    v = vocab.select("token", "term_id")
-    if broadcast_vocab:
-        v = F.broadcast(v)
-    return counts.join(v, "token").select(
+    return counts.join(F.broadcast(vocab.select("token", "term_id")),
+                       "token").select(
         F.col(doc_col).alias("doc_id"), "term_id", "tf"
     )
 

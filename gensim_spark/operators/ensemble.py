@@ -20,11 +20,10 @@ ensemblelda.py:798-884).
 
 Spark shape: each member model is a full distributed LDA fit
 (operators/lda.py — the expensive part); the ttda is num_models·K rows
-(model-sized), so the distance matrix and CBDBSCAN run on the driver like
-the reference. For very large ensembles ``asymmetric_distances_spark``
-chunks the ttda rows over executors (one Arrow task per chunk) — the
-same split the reference's multiprocessing workers use
-(ensemblelda.py:521-594).
+(model-sized), so the distance matrix and CBDBSCAN run on the driver, in
+one ``asymmetric_distance_chunk`` call over all rows — the reference's
+single-process path (its multiprocessing workers split the same kernel by
+row chunks, ensemblelda.py:521-594).
 
 Determinism: member models use seeds ``seed + m`` (the reference draws
 random states from one sequential RNG); our LDA's per-(doc, update)
@@ -90,41 +89,6 @@ def asymmetric_distance_chunk(ttda1: np.ndarray, ttda2: np.ndarray,
             else:
                 distances[i][j] = _cosine_distance(ttd1_masked, ttd2_masked)
     return distances
-
-
-def asymmetric_distances_spark(spark, ttda: np.ndarray,
-                               masking_method=mass_masking,
-                               masking_threshold: float | None = None,
-                               chunk_rows: int = 64) -> np.ndarray:
-    """Distance matrix with the row chunks fanned out over executors — the
-    distributed analogue of the reference's worker split
-    (ensemblelda.py:521-594)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    bc = spark.sparkContext.broadcast((ttda, masking_threshold))
-    starts = list(range(0, len(ttda), chunk_rows))
-    sdf = spark.createDataFrame([(s,) for s in starts], "start long") \
-        .repartition(len(starts))
-
-    def gen(batches):
-        full, thr = bc.value
-        for pdf in batches:
-            for s in pdf["start"]:
-                chunk = full[s:s + chunk_rows]
-                d = asymmetric_distance_chunk(chunk, full, int(s),
-                                              masking_method, thr)
-                yield pd.DataFrame({
-                    "start": [int(s)] * len(chunk),
-                    "row": list(range(len(chunk))),
-                    "dists": [list(r) for r in d]})
-
-    rows = sdf.mapInPandas(
-        gen, "start long, row long, dists array<double>").collect()
-    out = np.empty((len(ttda), len(ttda)))
-    for r in rows:
-        out[r["start"] + r["row"]] = np.asarray(r["dists"])
-    return out
 
 
 @dataclass
@@ -298,7 +262,6 @@ def ensemble_lda_fit(postings: DataFrame, num_topics: int = 10,
                      min_cores: int | None = None,
                      masking_method=mass_masking,
                      masking_threshold: float | None = None,
-                     distributed_distance: bool = False,
                      **lda_kwargs) -> EnsembleLdaModel:
     """Train ``num_models`` distributed LDA fits (seeds seed+m), then the
     reference's cluster-and-average pipeline with defaults
@@ -321,12 +284,8 @@ def ensemble_lda_fit(postings: DataFrame, num_topics: int = 10,
         ttda_parts.append(model.get_topics())
     ttda = np.vstack(ttda_parts)
 
-    if distributed_distance:
-        amatrix = asymmetric_distances_spark(
-            postings.sparkSession, ttda, masking_method, masking_threshold)
-    else:
-        amatrix = asymmetric_distance_chunk(
-            ttda, ttda, 0, masking_method, masking_threshold)
+    amatrix = asymmetric_distance_chunk(ttda, ttda, 0, masking_method,
+                                        masking_threshold)
 
     if min_samples is None:
         min_samples = int(num_models / 2)

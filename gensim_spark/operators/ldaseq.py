@@ -171,8 +171,7 @@ class Sslm:
 
     def fit(self, sstats, update_obs_fn):
         """fit_sslm (ldaseqmodel.py:923-981): M-step for one topic;
-        ``update_obs_fn(self, sstats, totals)`` performs the word sweep
-        (driver or distributed)."""
+        ``update_obs_fn(self, sstats, totals)`` performs the word sweep."""
         self.compute_post_variance()
         totals = sstats.sum(axis=0)
         bound = self.compute_bound(sstats, totals)
@@ -297,25 +296,6 @@ def _word_roles(sstats):
     if len(lows):
         roles[lows[0]] = "zero"
     return roles
-
-
-def update_obs_driver(chain: Sslm, sstats, totals):
-    """Sequential word sweep (the reference's update_obs) — used by the
-    tests as the parity baseline and for tiny vocabularies."""
-    roles = _word_roles(sstats)
-    var_row = chain.variance[0]
-    fwd_var_row = chain.fwd_variance[0]
-    for w in range(chain.vocab_len):
-        if roles[w] == "skip":
-            continue
-        counts = np.zeros(chain.num_time_slices) if roles[w] == "zero" \
-            else sstats[w]
-        chain.obs[w] = _solve_word(
-            chain.obs[w], counts, totals, var_row, fwd_var_row,
-            chain.zeta, chain.obs_variance, chain.chain_variance)
-    chain.compute_post_mean()
-    chain.update_zeta()
-    return chain.obs, chain.zeta
 
 
 def make_update_obs_spark(spark, arrow_batch: int = 256):
@@ -456,8 +436,7 @@ def ldaseq_fit(postings: DataFrame, doc_times: DataFrame, num_topics: int,
                alphas: float = 0.01, obs_variance: float = 0.5,
                chain_variance: float = 0.005, passes: int = 10,
                lda_inference_max_iter: int = 25, em_min_iter: int = 6,
-               em_max_iter: int = 20, random_seed: int = 13,
-               distributed_mstep: bool = True) -> LdaSeqModel:
+               em_max_iter: int = 20, random_seed: int = 13) -> LdaSeqModel:
     """Fit over (doc_id, term_id, tf) postings + (doc_id, time) slice
     assignments (use :func:`time_from_slices` to reproduce the reference's
     slice-counting quirk). 'gensim' initialization: a distributed LDA fit
@@ -490,8 +469,7 @@ def ldaseq_fit(postings: DataFrame, doc_times: DataFrame, num_topics: int,
         raise ValueError(
             f"document {orphan['doc_id']} has postings but no doc_times "
             "row — time slices must cover the whole corpus")
-    update_obs_fn = make_update_obs_spark(spark) if distributed_mstep \
-        else update_obs_driver
+    update_obs_fn = make_update_obs_spark(spark)
 
     LDASQE_EM_THRESHOLD = 1e-4
     LOWER_ITER, ITER_MULT_LOW, MAX_ITER = 10, 2, 500

@@ -79,18 +79,15 @@ def _rank_pseudo_term(occ: DataFrame, tf_col: str, stats: BM25Stats,
 
 
 def positional_postings(docs: DataFrame, vocab: DataFrame,
-                        doc_col: str = "doc_id", tokens_col: str = "tokens",
-                        broadcast_vocab: bool = True) -> DataFrame:
+                        doc_col: str = "doc_id", tokens_col: str = "tokens"
+                        ) -> DataFrame:
     """docs(doc_id, tokens) ⋈ vocab → (doc_id, term_id, positions, tf).
 
     ``positions`` is the sorted int array of 0-based token offsets;
     ``tf == size(positions)`` so the frame is a drop-in superset of
     ``doc2bow_postings`` output (same single shuffle, same join)."""
     rows = docs.select(doc_col, F.posexplode(tokens_col).alias("pos", "token"))
-    v = vocab.select("token", "term_id")
-    if broadcast_vocab:
-        v = F.broadcast(v)
-    return (rows.join(v, "token")
+    return (rows.join(F.broadcast(vocab.select("token", "term_id")), "token")
             .groupBy(doc_col, "term_id")
             .agg(F.sort_array(F.collect_list("pos")).alias("positions"),
                  F.count(F.lit(1)).alias("tf")))

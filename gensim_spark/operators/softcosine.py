@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
+from gensim_spark.operators.topk import topk
+
 
 def term_sim_matrix_from_fuzzy(spark: SparkSession, vocab: DataFrame,
                                max_distance: int = 1, alpha: float = 1.8,
@@ -224,11 +226,4 @@ def soft_cosine_topk(weighted_postings: DataFrame, query_terms: DataFrame,
             ).otherwise(F.lit(0.0)).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.abs(F.col("score")).desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.filter(F.col("score") != 0.0)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return topk(scored, k)

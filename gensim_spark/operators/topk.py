@@ -55,18 +55,16 @@ def score(weighted_postings: DataFrame, query_terms: DataFrame) -> DataFrame:
     )
 
 
-def topk(scores: DataFrame, k: int | None, by_abs: bool = True,
-         drop_zeros: bool = True) -> DataFrame:
+def topk(scores: DataFrame, k: int | None) -> DataFrame:
     """Per-query top-k with gensim's exact tie/zero semantics:
     rank by |score| desc (interfaces.py:339-353), drop exact zeros
     (matutils.py:435-468), ties by doc_id ascending (argsort index order).
     ``k=None`` ≙ gensim's ``num_best=None``: every (nonzero) similarity is
     returned, still ranked; ``k=0`` returns no rows."""
-    if drop_zeros:
-        scores = scores.filter(F.col("score") != 0.0)
-    rank_key = F.abs(F.col("score")) if by_abs else F.col("score")
-    w = Window.partitionBy("query_id").orderBy(rank_key.desc(), F.col("doc_id").asc())
-    out = scores.withColumn("rank", F.row_number().over(w))
+    w = Window.partitionBy("query_id").orderBy(F.abs(F.col("score")).desc(),
+                                               F.col("doc_id").asc())
+    out = (scores.filter(F.col("score") != 0.0)
+           .withColumn("rank", F.row_number().over(w)))
     if k is not None:
         out = out.filter(F.col("rank") <= k)
     return out.select("query_id", "doc_id", "score", "rank")

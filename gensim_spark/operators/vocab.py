@@ -23,9 +23,8 @@ Reference semantics (piskvorky/gensim, see SURVEY.md §1.4 / §2.3):
 Scale notes (10^12 docs): the token aggregation is a single hash-agg shuffle
 keyed by token — web vocabularies are zipfian but partial (map-side) aggregation
 flattens the head before the shuffle, so no explicit salting is needed here.
-The rank over (first_doc, token) is vocab-sized (≪ corpus); ``assign_term_ids``
-offers a truly distributed range-partitioned rank (default) so no single task
-ever sorts the whole vocabulary.
+The rank over (first_doc, token) is vocab-sized (≪ corpus): one task ranks
+the vocab with a global ``Window.orderBy``, as ``pipeline.build`` does.
 """
 
 from __future__ import annotations
@@ -62,35 +61,21 @@ def term_stats(tokens: DataFrame, doc_col: str = "doc_id") -> DataFrame:
     )
 
 
-def assign_term_ids(stats: DataFrame, order_cols=("first_doc", "token"),
-                    distributed: bool = True) -> DataFrame:
+def assign_term_ids(stats: DataFrame) -> DataFrame:
     """Attach gensim-deterministic ``term_id`` = dense 0-based rank over
-    ``order_cols`` (§1.4: arrival order of first containing doc, then token).
-
-    distributed=True (default): range-partition by the order keys, sort within
-    partitions, then ``zipWithIndex`` — the rank is computed with one small
-    count job plus a distributed map; no single task ever sorts the whole
-    vocabulary, so a 10^8-term web vocabulary ranks in parallel. The global
-    order (and hence every id) is independent of partition boundaries, so the
-    result is deterministic across re-evaluations. distributed=False uses a
-    plain global window (fine for tests; Spark executes it on one task).
-    """
-    if not distributed:
-        w = Window.orderBy(*order_cols)
-        return stats.withColumn("term_id", F.row_number().over(w) - F.lit(1))
-
-    sorted_df = stats.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-    schema = sorted_df.schema.add("term_id", LongType())
-    rdd = sorted_df.rdd.zipWithIndex().map(lambda ri: (*ri[0], ri[1]))
-    return sorted_df.sparkSession.createDataFrame(rdd, schema)
+    ``(first_doc, token)`` (§1.4: arrival order of first containing doc,
+    then token). One task ranks the vocab with a global window; the order
+    is total, so every id is the same across re-evaluations."""
+    w = Window.orderBy("first_doc", "token")
+    return stats.withColumn("term_id", F.row_number().over(w) - F.lit(1))
 
 
 def build_vocab(docs: DataFrame, doc_col: str = "doc_id",
-                tokens_col: str = "tokens", distributed: bool = True) -> DataFrame:
+                tokens_col: str = "tokens") -> DataFrame:
     """docs → vocab(token, term_id, df, cf, first_doc), id-compatible with
     ``gensim.corpora.Dictionary(docs_in_doc_id_order)``."""
     stats = term_stats(tokens_long(docs, doc_col, tokens_col), doc_col)
-    return assign_term_ids(stats, distributed=distributed).select(
+    return assign_term_ids(stats).select(
         "token", "term_id", "df", "cf", "first_doc"
     )
 

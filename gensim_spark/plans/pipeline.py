@@ -150,7 +150,7 @@ def index_from_counts(counts: DataFrame, num_docs: int,
         F.count(F.lit(1)).alias("df"),
         F.min("doc_id").alias("first_doc"),
     )
-    vocab = V.assign_term_ids(term_stats, distributed=False).select(
+    vocab = V.assign_term_ids(term_stats).select(
         "token", "term_id", "df", "cf", "first_doc"
     ).cache()
     postings = counts.join(

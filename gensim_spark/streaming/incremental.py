@@ -85,6 +85,7 @@ def process_pages_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     """One micro-batch of the incremental build (the foreachBatch body,
     module-level so crash/replay paths are directly testable)."""
     from gensim_spark.functions.textprep import extract_tokenize_bow
+    from gensim_spark.operators.vocab import assign_term_ids, merge_with
 
     s = batch_df.sparkSession
     ct = counts_table(store_dir)
@@ -112,43 +113,12 @@ def process_pages_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
         F.min("doc_id").alias("first_doc"),
     )
     vt = vocab_table(store_dir)
-    old = vt.scan(s) if vt.current_snapshot is not None else None
-    if old is None or vt.current_snapshot.summary.get(
-            "total-records") == "0":
-        from gensim_spark.operators.vocab import assign_term_ids
-
-        vocab = assign_term_ids(new_stats, distributed=False).select(
-            "token", "term_id", "df", "cf", "first_doc"
-        )
-    else:
-        from pyspark.sql import Window
-
-        base_n = old.count()
-        joined = old.alias("a").join(new_stats.alias("b"), "token",
-                                     "full_outer")
-        kept = joined.filter(F.col("a.term_id").isNotNull()).select(
-            "token", F.col("a.term_id").alias("term_id"),
-            (F.coalesce(F.col("a.df"), F.lit(0))
-             + F.coalesce(F.col("b.df"), F.lit(0))).alias("df"),
-            (F.coalesce(F.col("a.cf"), F.lit(0))
-             + F.coalesce(F.col("b.cf"), F.lit(0))).alias("cf"),
-            F.col("a.first_doc").alias("first_doc"),
-        )
-        fresh = (
-            joined.filter(F.col("a.term_id").isNull())
-            .select("token", F.col("b.df").alias("df"),
-                    F.col("b.cf").alias("cf"),
-                    F.col("b.first_doc").alias("first_doc"))
-            .withColumn(
-                "term_id",
-                F.lit(base_n)
-                + F.row_number().over(
-                    Window.orderBy("first_doc", "token")
-                ) - F.lit(1),
-            )
-            .select("token", "term_id", "df", "cf", "first_doc")
-        )
-        vocab = kept.unionByName(fresh)
+    vocab = assign_term_ids(new_stats)
+    cur = vt.current_snapshot
+    if cur is not None and cur.summary.get("total-records") != "0":
+        # fresh tokens take merge_with's other-vocab id order, which here
+        # is the batch's (first_doc, token) rank
+        vocab = merge_with(vt.scan(s), vocab)
     # snapshot isolation replaces the _next-dir swap dance: readers on
     # the previous snapshot are untouched until this commit lands
     vt.append(vocab.select("token", "term_id", "df", "cf", "first_doc"),

@@ -1,6 +1,5 @@
 """EnsembleLda: masking/distance kernel goldens, CBDBSCAN behavior on
-hand-crafted matrices, Spark-vs-driver distance parity, end-to-end stable
-topics on a planted corpus."""
+hand-crafted matrices, end-to-end stable topics on a planted corpus."""
 import numpy as np
 import pytest
 
@@ -35,14 +34,6 @@ def test_asymmetric_distance_chunk_golden():
     t4 = np.array([0.02, 0.02, 0.48, 0.48])
     d2 = EN.asymmetric_distance_chunk(np.array([t1]), np.array([t4]), 5)
     assert d2[0][0] == 1  # masked sum 0.04 <= 0.05 threshold
-
-
-def test_spark_distance_matches_driver(spark):
-    rng = np.random.default_rng(3)
-    ttda = rng.dirichlet(np.ones(30), size=25)
-    want = EN.asymmetric_distance_chunk(ttda, ttda, 0)
-    got = EN.asymmetric_distances_spark(spark, ttda, chunk_rows=7)
-    np.testing.assert_allclose(got, want, atol=1e-12)
 
 
 def _two_group_amatrix():
@@ -112,22 +103,6 @@ def test_ensemble_end_to_end(spark):
 
     dt = LD.doc_topics(postings, classic)
     assert dt.count() > 0
-
-
-def test_ensemble_distributed_distance_same_result(spark):
-    rng = np.random.default_rng(9)
-    rows = []
-    for d in range(60):
-        comm = d % 2
-        for _ in range(10):
-            rows.append((d, int(4 * comm + rng.integers(4)), 1))
-    postings = spark.createDataFrame(rows,
-                                     "doc_id long, term_id long, tf long")
-    kw = dict(num_topics=2, num_models=3, num_terms=8, passes=1,
-              iterations=20, random_seed=3)
-    a = EN.ensemble_lda_fit(postings, distributed_distance=False, **kw)
-    b = EN.ensemble_lda_fit(postings, distributed_distance=True, **kw)
-    np.testing.assert_allclose(a.get_topics(), b.get_topics(), atol=1e-12)
 
 
 def test_ensemble_fit_infers_num_terms(spark):

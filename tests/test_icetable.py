@@ -431,38 +431,28 @@ def test_random_op_sequences_match_model(spark, tmp_path, simple_df):
             assert hist == want, (trial, sid)
 
 
-def test_expire_synthesizes_manifest_list_for_old_format_snapshots(
-        spark, tmp_path, simple_df):
-    """A kept snapshot written before manifest-lists existed resolves its
-    state through the parent walk — expire must persist a synthesized
-    manifest-list BEFORE dropping ancestors, or the kept snapshot's scans
-    silently lose the ancestors' rows."""
-    from gensim_spark.index.icetable import IceTable
+def test_load_refuses_snapshots_without_manifest_list(tmp_path, simple_df):
+    """Scans plan only from manifest lists: a table whose snapshots lack
+    ``manifest-list`` (written before manifest lists existed) raises the
+    named error on load instead of resolving state another way."""
+    from gensim_spark.index.icetable import IceTable, ManifestListError
 
     loc = str(tmp_path / "old_format")
     t = IceTable.create(loc, "doc_id bigint, term_id bigint, weight double")
     t.append(simple_df(0, 5))
     t.append(simple_df(5, 9))
-    # simulate the pre-round-3 format: strip manifest-list from every
-    # snapshot in the CURRENT metadata version (and remove the files)
     mpath = os.path.join(loc, "metadata", f"v{t.version}.metadata.json")
     with open(mpath) as f:
         meta = json.load(f)
     for s in meta["snapshots"]:
-        ml = s.pop("manifest-list", None)
-        if ml:
-            os.unlink(os.path.join(loc, "metadata", ml))
+        s.pop("manifest-list")
     with open(mpath, "w") as f:
         json.dump(meta, f)
 
-    t = IceTable.load(loc)
-    assert all(s.manifest_list is None for s in t.snapshots)
-    stats = t.expire_snapshots(keep_last=1)
-    assert stats["snapshots"] == 1
-    # the kept snapshot must still see BOTH appends' rows
-    assert _rows(t.scan(spark)) == [(i,) for i in range(9)]
-    # and survive a reload (state no longer depends on dropped ancestors)
-    assert _rows(IceTable.load(loc).scan(spark)) == [(i,) for i in range(9)]
+    with pytest.raises(ManifestListError, match="manifest list"):
+        IceTable.load(loc)
+    with pytest.raises(ManifestListError):
+        t.refresh()
 
 
 def test_expire_commits_before_deleting(spark, tmp_path, simple_df):
@@ -524,8 +514,8 @@ def test_equality_delete_merge_on_read(spark, tmp_path, simple_df):
     assert s.summary["total-records"] == "10"  # data totals untouched (MoR)
     got = _rows(t.scan(spark))
     assert got == [(i,) for i in range(10) if i not in (2, 5, 7)]
-    # raw scan (apply_deletes=False) still sees everything
-    assert t.scan(spark, apply_deletes=False).count() == 10
+    # the data files still hold every row (merge-on-read rewrites nothing)
+    assert sum(f["record-count"] for f in t.plan_files()) == 10
 
 
 def test_equality_delete_sequence_ordering(spark, tmp_path, simple_df):

@@ -232,6 +232,47 @@ def test_bucketed_store_keeps_its_modulus(spark, synth_index, tmp_path):
         layout.append_postings_bucketed(new, out)  # not above the max
 
 
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bucketed_append_guard_runs_no_job(spark, synth_index, tmp_path):
+    """The append's doc_id guard reads the staged files' footer bounds, so
+    an append runs exactly the jobs of writing the same rows as a fresh
+    store; an overlapping batch still raises and leaves the current
+    snapshot and its planned files as they were."""
+    from gensim_spark.index import layout
+
+    idx, _ = synth_index
+    top = idx.weighted.agg(F.max("doc_id")).collect()[0][0]
+    base = idx.weighted.filter(F.col("doc_id") < 200)
+    new = (idx.weighted.filter(F.col("doc_id").between(200, 260))
+           .withColumn("doc_id", F.col("doc_id") + top))
+    out = str(tmp_path / "guard")
+    layout.write_postings_bucketed(base, out, n_buckets=8)
+    write_jobs = _jobs_in_group(
+        spark, "bucketed-write", lambda: layout.write_postings_bucketed(
+            new, str(tmp_path / "fresh"), n_buckets=8))
+    append_jobs = _jobs_in_group(
+        spark, "bucketed-append",
+        lambda: layout.append_postings_bucketed(new, out))
+    assert 0 < append_jobs == write_jobs
+
+    table = layout.load_bucketed(out)
+    snap, planned = table.current_snapshot.snapshot_id, table.plan_files()
+    with pytest.raises(ValueError, match="doc_ids"):
+        layout.append_postings_bucketed(new, out)  # not above the max
+    after = layout.load_bucketed(out)
+    assert after.current_snapshot.snapshot_id == snap
+    assert after.plan_files() == planned
+
+
 def test_wand_on_common_texts_matches_oracle(spark, common_texts, tmp_path):
     """End-to-end rank+score identity vs the pure-python gensim oracle."""
     from gensim_spark.index import layout, wand

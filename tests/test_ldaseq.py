@@ -1,11 +1,30 @@
 """DTM / LdaSeqModel: finite-difference pin of the obs gradient, CG
 convergence, Kalman-chain invariants, the slice-boundary quirk,
-distributed-vs-driver M-step identity, and planted-topic recovery."""
+Spark-vs-driver M-step identity, and planted-topic recovery."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from gensim_spark.operators import ldaseq as LS
+
+
+def update_obs_driver(chain, sstats, totals):
+    """Sequential word sweep (the reference's update_obs): the oracle the
+    library's Spark word sweep must match solve for solve."""
+    roles = LS._word_roles(sstats)
+    var_row = chain.variance[0]
+    fwd_var_row = chain.fwd_variance[0]
+    for w in range(chain.vocab_len):
+        if roles[w] == "skip":
+            continue
+        counts = np.zeros(chain.num_time_slices) if roles[w] == "zero" \
+            else sstats[w]
+        chain.obs[w] = LS._solve_word(
+            chain.obs[w], counts, totals, var_row, fwd_var_row,
+            chain.zeta, chain.obs_variance, chain.chain_variance)
+    chain.compute_post_mean()
+    chain.update_zeta()
+    return chain.obs, chain.zeta
 
 
 def _chain(T=4, W=6, seed=0):
@@ -55,7 +74,7 @@ def test_sslm_fit_increases_bound_driver():
     ch, sstats = _chain(T=3, W=8, seed=5)
     totals = sstats.sum(axis=0)
     before = ch.compute_bound(sstats, totals)
-    after = ch.fit(sstats, LS.update_obs_driver)
+    after = ch.fit(sstats, update_obs_driver)
     assert after > before
     # e_log_prob are log-probabilities of a normalized-ish measure
     assert np.isfinite(ch.e_log_prob).all()
@@ -95,12 +114,12 @@ def _planted(spark, n_docs=24, vocab=10, slices=2):
     return postings, doc_times
 
 
-def test_fit_recovers_topics_and_matches_driver_mstep(spark):
+def test_fit_recovers_topics_and_matches_driver_mstep(spark, monkeypatch):
     postings, doc_times = _planted(spark)
     kw = dict(num_topics=2, num_terms=10, num_time_slices=2, passes=3,
               em_min_iter=1, em_max_iter=2, lda_inference_max_iter=10,
               random_seed=13)
-    m = LS.ldaseq_fit(postings, doc_times, distributed_mstep=True, **kw)
+    m = LS.ldaseq_fit(postings, doc_times, **kw)
     # per-slice topics split the vocabulary
     for t in range(2):
         topics = m.topics_at(t)
@@ -115,9 +134,11 @@ def test_fit_recovers_topics_and_matches_driver_mstep(spark):
     topic_of_even = np.argmax(sum(g[d] for d in range(0, 24, 2)))
     topic_of_odd = np.argmax(sum(g[d] for d in range(1, 24, 2)))
     assert topic_of_even != topic_of_odd
-    # the distributed per-word CG sweep is solve-for-solve identical to
-    # the sequential driver sweep
-    m2 = LS.ldaseq_fit(postings, doc_times, distributed_mstep=False, **kw)
+    # the Spark per-word CG sweep is solve-for-solve identical to the
+    # sequential driver sweep
+    monkeypatch.setattr(LS, "make_update_obs_spark",
+                        lambda spark: update_obs_driver)
+    m2 = LS.ldaseq_fit(postings, doc_times, **kw)
     for k in range(2):
         np.testing.assert_allclose(m.topic_chains[k].obs,
                                    m2.topic_chains[k].obs, atol=0)

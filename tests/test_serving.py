@@ -492,8 +492,7 @@ def test_span_served_fuzz_vs_distributed(spark, tmp_path):
     assert or_hits >= 2
 
 
-@pytest.mark.parametrize("preload_doclen", [True, False])
-def test_positional_server_empty_doclen(tmp_path, preload_doclen):
+def test_positional_server_empty_doclen(tmp_path):
     """An empty ``doclen/`` dataset (the half-appended-crash state, taken to
     its limit) yields no doclens instead of an IndexError."""
     import json
@@ -517,5 +516,5 @@ def test_positional_server_empty_doclen(tmp_path, preload_doclen):
     pq.write_table(pa.table({"doc_id": pa.array([], pa.int64()),
                              "dl": pa.array([], pa.int64())}),
                    store / "doclen" / "part-0.parquet")
-    srv = PositionalIndexServer(str(store), preload_doclen=preload_doclen)
+    srv = PositionalIndexServer(str(store))
     assert srv._doclens([0, 3, 7]) == {}

@@ -133,9 +133,17 @@ def test_streaming_incremental_build(spark, tmp_path):
     from gensim_spark.streaming.incremental import vocab_table
 
     snap_before = vocab_table(store).current_snapshot.snapshot_id
+    # every synthetic word is already in the vocab: each new page also
+    # carries "yotta" and one of three rotating words, all new tokens
+    novel = F.concat(
+        F.lit(" <p>yotta "),
+        F.element_at(F.array(F.lit("zeta"), F.lit("omega"), F.lit("kappa")),
+                     (F.col("doc_id") % 3 + 1).cast("int")),
+        F.lit(" </p></body>"))
     more = generate_pages(spark, 50, tokens_per_doc=30, partitions=1).withColumn(
         "doc_id", F.col("doc_id") + 200
-    )
+    ).withColumn("html", F.encode(F.regexp_replace(
+        F.decode("html", "utf-8"), "</body>", novel), "utf-8"))
     more.write.mode("append").parquet(src)
     q2 = start_incremental_build(
         spark,
@@ -144,10 +152,16 @@ def test_streaming_incremental_build(spark, tmp_path):
         store, ckpt,
     )
     q2.awaitTermination(120)
-    after = {r["token"]: r["term_id"]
-             for r in read_vocab(spark, store).collect()}
+    rows = read_vocab(spark, store).collect()
+    after = {r["token"]: r["term_id"] for r in rows}
     for tok, tid in before.items():
         assert after[tok] == tid
+    # the batch's new tokens take ids base_n… in (first_doc, token) order
+    fresh = sorted((r["first_doc"], r["token"], r["term_id"]) for r in rows
+                   if r["token"] not in before)
+    assert [t for _, t, _ in fresh] == ["kappa", "yotta", "zeta", "omega"]
+    assert [i for _, _, i in fresh] == list(range(len(before),
+                                                  len(before) + 4))
     # vocab history is time-travelable: the pre-extension snapshot still
     # serves the old vocabulary
     vt = vocab_table(store)

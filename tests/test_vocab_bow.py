@@ -23,17 +23,6 @@ def test_term_id_assignment_matches_reference(vocab_and_oracle):
     assert got == oracle.token2id
 
 
-def test_term_id_assignment_windowed_path(spark, common_texts):
-    from gensim_spark.operators import vocab as V
-
-    df = docs_df(spark, common_texts)
-    got = {
-        r["token"]: r["term_id"]
-        for r in V.build_vocab(df, distributed=False).collect()
-    }
-    assert got == PyDictionary(common_texts).token2id
-
-
 def test_df_cf_stats(vocab_and_oracle):
     _, vocab, oracle = vocab_and_oracle
     rows = {r["term_id"]: (r["df"], r["cf"]) for r in vocab.collect()}
