@@ -73,10 +73,13 @@ def assign_term_ids(stats: DataFrame) -> DataFrame:
 def build_vocab(docs: DataFrame, doc_col: str = "doc_id",
                 tokens_col: str = "tokens") -> DataFrame:
     """docs → vocab(token, term_id, df, cf, first_doc), id-compatible with
-    ``gensim.corpora.Dictionary(docs_in_doc_id_order)``."""
+    ``gensim.corpora.Dictionary(docs_in_doc_id_order)``. ``term_id`` is a
+    long: hashed sketches (``lsi.sign_cols``) key on its type too, so an
+    int id would draw a different Ω for the same term."""
     stats = term_stats(tokens_long(docs, doc_col, tokens_col), doc_col)
     return assign_term_ids(stats).select(
-        "token", "term_id", "df", "cf", "first_doc"
+        "token", F.col("term_id").cast(LongType()).alias("term_id"),
+        "df", "cf", "first_doc"
     )
 
 
